@@ -38,6 +38,22 @@ def _key_cols_from_envelope(wal: DataFrame) -> list[str]:
     return [f.name for f in before.fields]
 
 
+def _key_of(k: str) -> Column:
+    """Target key column ``k`` of each change: after-image for upserts,
+    before-image for deletes (delete's after is null,
+    replication.go:456-491)."""
+    return F.when(F.col("op") == "d", F.col(f"before.{k}")).otherwise(
+        F.col(f"after.{k}")
+    )
+
+
+def _with_target_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df`` plus one ``_key_{k}`` column per key (see :func:`_key_of`)."""
+    for k in keys:
+        df = df.withColumn(f"_key_{k}", _key_of(k))
+    return df
+
+
 def expand_ops(wal: DataFrame) -> DataFrame:
     """Normalize the op stream so each row targets exactly one key:
 
@@ -132,17 +148,7 @@ def latest_state(
             | (F.col("_lsn_num") > F.col("_trunc_lsn"))
         ).drop("_trunc_lsn")
 
-    df = expand_ops(df)
-
-    # Target key of each change: after-image for upserts, before-image for
-    # deletes (delete's after is null, replication.go:456-491).
-    for k in keys:
-        df = df.withColumn(
-            f"_key_{k}",
-            F.when(F.col("op") == "d", F.col(f"before.{k}")).otherwise(
-                F.col(f"after.{k}")
-            ),
-        )
+    df = _with_target_keys(expand_ops(df), keys)
 
     w = Window.partitionBy(*[F.col(f"_key_{k}") for k in keys]).orderBy(
         F.col("_lsn_num").desc(), F.col("_op_seq").desc()
@@ -228,14 +234,7 @@ def scd2_history(wal: DataFrame, key_cols: list[str] | None = None) -> DataFrame
     df = wal.filter(F.col("op") != "t").withColumn(
         "_lsn_num", lsn_num(F.col("source.lsn"))
     )
-    df = expand_ops(df)
-    for k in keys:
-        df = df.withColumn(
-            f"_key_{k}",
-            F.when(F.col("op") == "d", F.col(f"before.{k}")).otherwise(
-                F.col(f"after.{k}")
-            ),
-        )
+    df = _with_target_keys(expand_ops(df), keys)
     w = Window.partitionBy(*[F.col(f"_key_{k}") for k in keys]).orderBy(
         F.col("_lsn_num").asc(), F.col("_op_seq").asc()
     )
@@ -280,37 +279,10 @@ def incremental_latest_state(
     batches (the reference's truncate is equally global,
     replication.go:456-491)."""
     keys = key_cols or _key_cols_from_envelope(wal)
-    # Expand u_pk into single-key delete+insert legs BEFORE the split so a
-    # PK-changing update in the batch marks BOTH its old and new key as
-    # touched (and a prior u_pk replayed via its new key cannot re-emit the
-    # old key's delete into the replay leg — each expanded row targets
-    # exactly one key).  expand_ops is idempotent, so the inner
-    # latest_state calls leave the legs intact.
-    expanded = expand_ops(wal)
-    num = lsn_num(F.col("source.lsn"))
-    prior = expanded.filter(num <= F.lit(split_lsn_num))
-    batch = expanded.filter(num > F.lit(split_lsn_num))
-
-    state1 = latest_state(prior, keys, handle_toast=handle_toast)
-
-    key_of = lambda k: F.when(
-        F.col("op") == "d", F.col(f"before.{k}")
-    ).otherwise(F.col(f"after.{k}"))
-    touched = batch.select(*[key_of(k).alias(k) for k in keys]).distinct()
-
-    carried = state1.join(touched, keys, "left_anti")
-
-    prior_k = prior
-    for k in keys:
-        prior_k = prior_k.withColumn(f"_ik_{k}", key_of(k))
-    cond = [prior_k[f"_ik_{k}"] == touched[k] for k in keys]
-    replay_src = prior_k.join(touched, cond, "left_semi").drop(
-        *[f"_ik_{k}" for k in keys]
+    return _incremental(
+        wal, split_lsn_num, keys,
+        lambda changes: latest_state(changes, keys, handle_toast=handle_toast),
     )
-    replayed = latest_state(
-        replay_src.unionByName(batch), keys, handle_toast=handle_toast
-    )
-    return carried.unionByName(replayed)
 
 
 def incremental_scd2(
@@ -324,40 +296,45 @@ def incremental_scd2(
     log (closing the previously-open interval and appending versions);
     every untouched key's history is carried over unchanged.
 
-    Bit-identical to a full recompute by construction — the WAL is first
-    normalized with expand_ops so every row (including each leg of a
-    u_pk) targets exactly one key; both legs then run the same
-    scd2_history operator, and an expanded key's history depends only on
-    its OWN single-key changes (the per-key window), so the carried leg
-    cannot be affected by the batch.  Without the pre-split expansion a
-    batch u_pk's OLD key would never enter the touched set (its open
-    interval carried stale) and a prior u_pk replayed via its new key
-    would re-emit the old key's delete row into the replay leg.  Work ∝
-    |touched keys| exactly as in the MV case: touched keys broadcast
-    into an anti-join (carry) and a semi-join (replay); the state table
-    is never shuffled.  Same truncate limitation as
-    incremental_latest_state."""
+    Bit-identical to a full recompute by construction: an expanded
+    key's history depends only on its OWN single-key changes (the per-key
+    window), so the carried leg cannot be affected by the batch.  Same
+    work bound (∝ |touched keys|, the state never shuffled) and truncate
+    limitation as incremental_latest_state."""
     keys = key_cols or _key_cols_from_envelope(wal)
+    return _incremental(
+        wal, split_lsn_num, keys, lambda changes: scd2_history(changes, keys)
+    )
+
+
+def _incremental(wal, split_lsn_num, keys, per_key_op) -> DataFrame:
+    """Shared body of the incremental operators: ``per_key_op`` maps a
+    change log to per-key rows, where a key's rows depend only on its
+    own changes.  Its output over changes with lsn ≤ split is carried
+    for every key the batch does not touch (one anti-join against the
+    small touched-key set); touched keys are recomputed from their
+    prior changes (one semi-join) plus the batch."""
+    # Expand u_pk into single-key delete+insert legs BEFORE the split so a
+    # PK-changing update in the batch marks BOTH its old and new key as
+    # touched (and a prior u_pk replayed via its new key cannot re-emit the
+    # old key's delete into the replay leg — each expanded row targets
+    # exactly one key).  expand_ops is idempotent, so the inner
+    # operator calls leave the legs intact.
     expanded = expand_ops(wal)
     num = lsn_num(F.col("source.lsn"))
     prior = expanded.filter(num <= F.lit(split_lsn_num))
     batch = expanded.filter(num > F.lit(split_lsn_num))
 
-    hist1 = scd2_history(prior, keys)
-
-    key_of = lambda k: F.when(  # noqa: E731
-        F.col("op") == "d", F.col(f"before.{k}")
-    ).otherwise(F.col(f"after.{k}"))
-    touched = batch.select(*[key_of(k).alias(k) for k in keys]).distinct()
-
-    carried = hist1.join(touched, keys, "left_anti")
+    state1 = per_key_op(prior)
+    touched = batch.select(*[_key_of(k).alias(k) for k in keys]).distinct()
+    carried = state1.join(touched, keys, "left_anti")
 
     prior_k = prior
     for k in keys:
-        prior_k = prior_k.withColumn(f"_ik_{k}", key_of(k))
+        prior_k = prior_k.withColumn(f"_ik_{k}", _key_of(k))
     cond = [prior_k[f"_ik_{k}"] == touched[k] for k in keys]
     replay_src = prior_k.join(touched, cond, "left_semi").drop(
         *[f"_ik_{k}" for k in keys]
     )
-    replayed = scd2_history(replay_src.unionByName(batch), keys)
+    replayed = per_key_op(replay_src.unionByName(batch))
     return carried.unionByName(replayed)

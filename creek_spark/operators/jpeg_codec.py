@@ -473,6 +473,12 @@ def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
     vmax = max(c[2] for c in comps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
+    # The first scan to code an MCU spends at least one Huffman bit on
+    # it, so a frame claiming more MCUs than its scans hold bits is
+    # corrupt (a flipped SOF bit): refuse before the coefficient buffers
+    # and output planes are sized from the header's dimensions.
+    if mcus_x * mcus_y > 8 * sum(len(g) for scan in scans for g in scan[6]):
+        raise ValueError("JPEG frame larger than its entropy-coded data")
 
     if progressive:
         bufs = _decode_progressive(

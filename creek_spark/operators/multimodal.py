@@ -1589,6 +1589,7 @@ def decode_png_pixels(payload: bytes):
 
     Raises ValueError for non-PNG and malformed payloads."""
     import struct
+    import sys
     import zlib
 
     import numpy as np
@@ -1637,33 +1638,44 @@ def decode_png_pixels(payload: bytes):
         raise ValueError("empty PNG")
     ch = _PNG_CHANNELS[color_type]
     fstep = max(1, ch * bit_depth // 8)
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as e:
-        raise ValueError(f"corrupt PNG IDAT: {e}")
 
     def stride_of(width):
         return -(-width * ch * bit_depth // 8)
 
-    samples = np.zeros((h, w, ch), dtype=np.uint8)
+    # (x0, y0, dx, dy, width, height) of each non-empty sub-image: the
+    # whole image, or the Adam7 passes
+    passes = [(0, 0, 1, 1, w, h)] if interlace == 0 else [
+        (x0, y0, dx, dy, pw, ph)
+        for x0, y0, dx, dy in _ADAM7
+        if (pw := (w - x0 + dx - 1) // dx) and (ph := (h - y0 + dy - 1) // dy)
+    ]
+    # The header fixes the exact filtered-scanline byte count.  Inflate
+    # at most one byte past it and refuse any other length BEFORE sizing
+    # anything from the header: a forged dimension (a flipped height bit
+    # claims 2^31 rows) or a zip bomb can then allocate no more than the
+    # payload actually inflates to.
+    expected = sum(ph * (1 + stride_of(pw)) for *_, pw, ph in passes)
+    inflater = zlib.decompressobj()
+    try:
+        raw = inflater.decompress(
+            b"".join(idat), min(expected + 1, sys.maxsize)
+        )
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG IDAT: {e}")
+    if len(raw) != expected or not inflater.eof:
+        raise ValueError("PNG scanline length mismatch")
+
     if interlace == 0:
-        rows, end = _png_unfilter(raw, h, stride_of(w), fstep, 0)
-        if end != len(raw):
-            raise ValueError("PNG scanline length mismatch")
+        rows, _ = _png_unfilter(raw, h, stride_of(w), fstep, 0)
         samples = _png_unpack_samples(rows, w, ch, bit_depth)
-    else:  # Adam7: 7 independently-filtered sub-images
+    else:
+        samples = np.zeros((h, w, ch), dtype=np.uint8)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw == 0 or ph == 0:
-                continue
+        for x0, y0, dx, dy, pw, ph in passes:
             rows, off = _png_unfilter(raw, ph, stride_of(pw), fstep, off)
             samples[y0::dy, x0::dx] = _png_unpack_samples(
                 rows, pw, ch, bit_depth
             )
-        if off != len(raw):
-            raise ValueError("PNG scanline length mismatch")
 
     if color_type == 3:
         idx = samples[:, :, 0]

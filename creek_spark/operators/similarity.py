@@ -1025,79 +1025,6 @@ def pq_encode(
     )
 
 
-def pq_encode_fast(
-    df: DataFrame,
-    codebook: DataFrame,
-    side_id: str,
-    side_vec: str,
-    *,
-    dim: int = 64,
-    m: int = 8,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """``pq_encode`` with the per-subspace argmin vectorized in numpy
-    float64 inside an Arrow-batched ``mapInPandas`` stage — the encode
-    path for index BUILDS, where the interpreted decimal HOF fold's
-    per-row constant (~10×) is the whole build bill at corpus scale.
-
-    Same output contract as ``pq_encode`` (side_id, side_vec, *keep,
-    codes, _nrm), same tie-break (argmin returns the first minimum →
-    smallest code), still ZERO shuffle: the codebook is collected once
-    (one tiny 1-row job) and ships to executors inside the UDF closure;
-    encoding is a single map-side Python stage; ``_nrm`` stays the
-    JVM-side exact decimal dot so persisted norms are bit-identical to
-    the exact path.  Codes agree with ``pq_encode`` whenever no two
-    codewords are within float64 rounding of equidistant — gated on the
-    bench corpus by test_similarity (persisted-search == inline-exact).
-    The decimal fold remains the oracle path for the `similarity_pq` /
-    `similarity_ivfpq` catalog rows, which prove cross-engine
-    determinism row-for-row in ANSI SQL."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    cb_rows = codebook.first()["_cb"]
-    C = np.asarray([list(r["cvec"]) for r in cb_rows], dtype=np.float64)
-    sub = dim // m
-    src = df.select(side_id, side_vec, *keep)
-    out_schema = T.StructType(
-        list(src.schema.fields)
-        + [T.StructField("codes", T.ArrayType(T.IntegerType()))]
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf = pdf.copy()
-                pdf["codes"] = []
-                yield pdf
-                continue
-            V = np.vstack(pdf[side_vec].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for j in range(m):
-                Vj = V[:, j * sub : (j + 1) * sub]
-                Cj = C[:, j * sub : (j + 1) * sub]
-                # ||v-c||² expanded via BLAS: n×k from two rank-1 terms
-                # and one matmul — the float64 image of the exact metric
-                d = (
-                    (Vj * Vj).sum(axis=1)[:, None]
-                    - 2.0 * (Vj @ Cj.T)
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d.argmin(axis=1)
-            pdf = pdf.copy()
-            pdf["codes"] = [r.tolist() for r in codes]
-            yield pdf
-
-    return src.mapInPandas(encode, schema=out_schema).select(
-        F.col(side_id),
-        F.col(side_vec),
-        *[F.col(c) for c in keep],
-        F.col("codes"),
-        _exact_dot(F.col(side_vec), F.col(side_vec)).alias("_nrm"),
-    )
-
-
 def assign_encode_fast(
     df: DataFrame,
     cents: DataFrame,

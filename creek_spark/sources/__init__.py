@@ -189,34 +189,6 @@ def jdbc_options(
     return opts
 
 
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: str | None = None,
-    num_partitions: int = 16,
-    lower_bound=None,
-    upper_bound=None,
-    properties: dict | None = None,
-) -> DataFrame:
-    """JDBC scan (the snapshot `SELECT *` analog, snapshots.go:127).
-
-    With a partition column Spark issues `num_partitions` range-predicated
-    queries in parallel; without one the read is a single consistent
-    partition (exact but serial — the reference's own choice)."""
-    opts = jdbc_options(
-        url,
-        table,
-        partition_column=partition_column,
-        num_partitions=num_partitions,
-        lower_bound=lower_bound,
-        upper_bound=upper_bound,
-        properties=properties,
-    )
-    return spark.read.format("jdbc").options(**opts).load()
-
-
 # ---------------------------------------------------------------- snapshots
 
 

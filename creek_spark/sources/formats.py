@@ -133,12 +133,6 @@ def write_files(
     writer.options(**options).format(fmt).save(path)
 
 
-def roundtrip_schema(df: DataFrame) -> T.StructType:
-    """The schema to pass back into ``read_files`` for a lossless
-    csv/json round-trip of ``df`` (row formats carry no types)."""
-    return df.schema
-
-
 def read_with_quarantine(
     spark: SparkSession,
     path: str,

@@ -18,25 +18,20 @@ hash-bucketed parquet state directory (hive partitions on
 pmod(xxhash64(key), n_buckets)) — only buckets containing batch keys are
 rewritten per trigger, which keeps the same idempotence contract for tests
 while making per-batch cost O(|touched buckets|) instead of O(|state|).
-Visibility is transactional via a `_manifest.json` swap (Delta-log analog):
-each batch writes its touched buckets into a fresh version directory, then
-atomically replaces the manifest mapping bucket → version dir, so a
-concurrent reader sees the whole old state or the whole new state, never a
-mix; superseded files survive one extra generation before GC (vacuum
-analog) so in-flight readers of the previous manifest stay valid.
+Visibility is transactional: each batch writes its touched buckets into
+a fresh version directory and publishes them with an atomic
+`_manifest.json` swap (streaming/versioned.py, the Delta-log analog).
 """
 
 from __future__ import annotations
-
-import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from creek_spark import fsio
 from creek_spark.functions.lsn import lsn_num
 from creek_spark.operators.cdc import latest_state
+from creek_spark.streaming.versioned import VersionedStore, bounded_partition_values
 
 
 def read_envelope_stream(
@@ -56,30 +51,6 @@ def read_envelope_stream(
     return reader.parquet(path)
 
 
-def stream_wal_from(
-    stream: DataFrame, timestamp=None, lsn: str | None = None
-) -> DataFrame:
-    """StreamWALFrom (client.go:227-294) on the streaming DataFrame —
-    same predicates as the batch variant; Catalyst pushes them into the
-    file-source scan."""
-    out = stream
-    if timestamp is not None:
-        out = out.where(F.col("source.tx_at") >= F.lit(timestamp))
-    if lsn is not None:
-        out = out.where(lsn_num(F.col("source.lsn")) > lsn_num(F.lit(lsn)))
-    return out
-
-
-def dedup_stream(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """At-least-once → effectively-once on the stream: duplicates of the
-    same (source, op) — i.e. the same LSN redelivered — collapse within a
-    bounded-state watermark window, the MsgID-dedup analog
-    (internal/mq/nats.go:214)."""
-    return stream.withWatermark("sent_at", watermark).dropDuplicatesWithinWatermark(
-        ["source", "op"]
-    )
-
-
 class CdcApplier:
     """foreachBatch sink: maintains materialized table state under
     ``state_dir`` by merging each micro-batch of envelope rows.
@@ -92,7 +63,7 @@ class CdcApplier:
     ``creek_bucket = pmod(xxhash64(keys), n_buckets)`` hive partitions —
     and each micro-batch rewrites ONLY the buckets whose keys appear in
     the batch, into a fresh version directory published by an atomic
-    ``_manifest.json`` swap (see module docstring): readers always see a
+    ``_manifest.json`` swap (streaming/versioned.py): readers always see a
     consistent committed snapshot, concurrent with writes.  Per-batch
     cost is O(|touched buckets|), not O(|state|): a steady trickle of
     changes no longer re-shuffles the whole table every trigger; version
@@ -122,122 +93,18 @@ class CdcApplier:
         # NOT underscore-prefixed: Spark's file listing treats `_*` paths
         # as hidden metadata and would skip the partition directories.
         self._bucket_col = "creek_bucket"
+        self._store = VersionedStore(spark, state_dir, self._bucket_col)
 
     def _bucket_of(self, cols) -> F.Column:
         return F.pmod(F.xxhash64(*cols), F.lit(self.n_buckets)).cast("int")
 
-    # -- manifest-transactional state layout ---------------------------
-    # state_dir/_manifest.json        {"version": N, "buckets": {b: vdir}}
-    # state_dir/v000000N/creek_bucket=b/part-*.parquet
-    # Readers resolve buckets through the manifest only; writers publish a
-    # new version dir first and swap the manifest last (atomic
-    # Hadoop-FS rename via creek_spark.fsio, so state rides the same
-    # filesystem as the data — local, HDFS or object store), and an
-    # interleaved reader sees old-or-new, never a mix.
-
-    _MANIFEST = "_manifest.json"
-
-    def _read_manifest(self) -> dict | None:
-        m = fsio.read_json_or_none(
-            self.spark, fsio.join(self.state_dir, self._MANIFEST)
-        )
-        if m is None:
-            # pre-manifest layout (bucket dirs at the root): synthesize a
-            # manifest pointing at "." so old state keeps working
-            legacy = self._legacy_root_buckets()
-            if legacy:
-                return {"version": 0, "buckets": {str(b): "." for b in legacy}}
-        return m
-
-    def _legacy_root_buckets(self) -> list[int]:
-        prefix = self._bucket_col + "="
-        return [
-            int(name[len(prefix):])
-            for name in fsio.list_names(self.spark, self.state_dir)
-            if name.startswith(prefix)
-        ]
-
-    def _state_buckets(self) -> list[int]:
-        m = self._read_manifest()
-        return sorted(int(b) for b in m["buckets"]) if m else []
-
     def current_state(self) -> DataFrame | None:
         """The committed state as of the manifest this call reads — a
-        consistent snapshot regardless of concurrent apply_batch runs."""
-        m = self._read_manifest()
-        if not m or not m["buckets"]:
-            return None
-        by_ver: dict[str, list[int]] = {}
-        for b, v in m["buckets"].items():
-            by_ver.setdefault(v, []).append(int(b))
-        parts = []
-        for v, bs in sorted(by_ver.items()):
-            vdir = fsio.join(self.state_dir, v)
-            paths = [
-                fsio.join(vdir, f"{self._bucket_col}={b}") for b in sorted(bs)
-            ]
-            parts.append(
-                self.spark.read.option("basePath", vdir).parquet(*paths)
-            )
-        # allowMissingColumns: after a schema-widening restart, buckets
-        # rewritten since the widening carry the new column while
-        # untouched buckets persist under the old schema — the union
-        # fills the gap with NULLs (ADD COLUMN semantics) instead of
-        # refusing to read a half-migrated state
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        return df
-
-    def _publish(
-        self, old: dict | None, new_ver: str, present: set[int], touched: set[int]
-    ) -> None:
-        """Swap the manifest to the post-batch state, then GC bucket dirs
-        no manifest generation references.  Retention = one generation:
-        files the OLD manifest referenced stay on disk until the NEXT
-        publish, so a reader that resolved the old manifest can still open
-        its files (the vacuum analog)."""
-        old_map = dict(old["buckets"]) if old else {}
-        new_map = {
-            b: v for b, v in old_map.items() if int(b) not in touched
-        }
-        new_map.update({str(b): new_ver for b in present})
-        manifest = {
-            "version": (old["version"] + 1) if old else 1,
-            "buckets": new_map,
-            "retain": sorted(
-                {f"{v}/{self._bucket_col}={b}" for b, v in old_map.items()}
-            ),
-        }
-        fsio.write_json_atomic(
-            self.spark, fsio.join(self.state_dir, self._MANIFEST), manifest
-        )
-
-        # keep-set entries are state_dir-relative posix strings
-        # ("v0000001/creek_bucket=3", or "./creek_bucket=3" for the
-        # legacy root layout — normalized to drop the "./")
-        norm = lambda rel: posixpath.normpath(rel)  # noqa: E731
-        keep = {
-            norm(f"{v}/{self._bucket_col}={b}")
-            for b, v in new_map.items()
-        } | {norm(p) for p in manifest["retain"]}
-        for root in fsio.list_names(self.spark, self.state_dir):
-            rdir = fsio.join(self.state_dir, root)
-            if root.startswith(self._bucket_col + "="):  # legacy root bucket
-                if norm(root) not in keep:
-                    fsio.delete(self.spark, rdir)
-            elif root.startswith("v") and fsio.is_dir(self.spark, rdir):
-                subs = fsio.list_names(self.spark, rdir)
-                gone = 0
-                for sub in subs:
-                    if (
-                        sub.startswith(self._bucket_col + "=")
-                        and norm(f"{root}/{sub}") not in keep
-                    ):
-                        fsio.delete(self.spark, fsio.join(rdir, sub))
-                        gone += 1
-                if gone == len(subs):
-                    fsio.delete(self.spark, rdir)
+        consistent snapshot regardless of concurrent apply_batch runs.
+        After a schema-widening restart, buckets rewritten since the
+        widening carry the new column and untouched ones read it as NULL
+        (ADD COLUMN semantics) instead of refusing a half-migrated state."""
+        return self._store.read(self._store.manifest())
 
     def _state_as_wal(self, state: DataFrame) -> DataFrame:
         after_t = self.envelope_schema["after"].dataType
@@ -292,39 +159,35 @@ class CdcApplier:
                 F.col("before").isNotNull(),
                 self._bucket_of([F.col(f"before.{k}") for k in self.key_cols]),
             )
-            from creek_spark.streaming.rollup import bounded_partition_values
-
-            touched = bounded_partition_values(
-                batch.select(
-                    F.explode(F.array(b_after, b_before)).alias("b")
-                ).where(F.col("b").isNotNull()),
-                "b",
-                what="CdcApplier touched buckets",
-            )
+            touched = {
+                str(b)
+                for b in bounded_partition_values(
+                    batch.select(
+                        F.explode(F.array(b_after, b_before)).alias("b")
+                    ).where(F.col("b").isNotNull()),
+                    "b",
+                    what="CdcApplier touched buckets",
+                )
+            }
             # A truncate discards every older row in EVERY bucket.
             has_trunc = batch.where(F.col("op") == "t").limit(1).count() > 0
-            if has_trunc:
-                touched |= set(self._state_buckets())
-            if not touched:
+            if not (touched or has_trunc):
                 return
-
-            manifest = self._read_manifest()
-            # Compaction: when committed buckets are spread over too many
+            manifest = self._store.manifest()
+            committed = manifest["buckets"] if manifest else {}
+            # The truncate touches every committed bucket; so does
+            # compaction: when committed buckets are spread over too many
             # version dirs (long trickle of small batches), fold the whole
             # state into this batch's version — the inline OPTIMIZE analog
             # that bounds reader-side union width.
-            if (
-                manifest
-                and len(set(manifest["buckets"].values())) >= self.compact_versions
-            ):
-                touched |= {int(b) for b in manifest["buckets"]}
+            if has_trunc or len(set(committed.values())) >= self.compact_versions:
+                touched |= set(committed)
+            if not touched:
+                return
 
-            state = self.current_state()
-            if state is not None and state.columns:
-                subset = state.where(
-                    F.col(self._bucket_col).isin(list(touched))
-                ).drop(self._bucket_col)
-                sw = self._state_as_wal(subset)
+            subset = self._store.read(manifest, touched)
+            if subset is not None:
+                sw = self._state_as_wal(subset.drop(self._bucket_col))
                 wal_in = sw.unionByName(batch.select(*sw.columns))
             else:
                 wal_in = batch
@@ -355,25 +218,20 @@ class CdcApplier:
                 )
                 .persist()
             )
-            # Publish protocol: (1) write this batch's touched buckets
-            # into a FRESH version dir (never in place — untouched
-            # buckets' files stay byte-identical, asserted in tests);
-            # (2) atomically swap the manifest; (3) GC superseded bucket
-            # dirs with one generation of retention.  A crash between (1)
-            # and (2) leaves an orphan dir the next publish GCs; readers
-            # are consistent at every step.
-            new_ver = f"v{(manifest['version'] + 1) if manifest else 1:09d}"
+            # Publish protocol (streaming/versioned.py): write this
+            # batch's touched buckets into a fresh version dir, swap the
+            # manifest, GC with one generation of retention.  Buckets
+            # whose last key was deleted produce zero rows — they simply
+            # drop out of the manifest mapping.
             (
                 new_state.write.mode("overwrite")
                 .partitionBy(self._bucket_col)
-                .parquet(fsio.join(self.state_dir, new_ver))
+                .parquet(self._store.next_dir(manifest))
             )
-            # Buckets whose last key was deleted produce zero rows —
-            # they simply drop out of the manifest mapping.
             present = bounded_partition_values(
                 new_state, self._bucket_col, what="CdcApplier state buckets"
             )
-            self._publish(manifest, new_ver, present, touched)
+            self._store.publish(manifest, touched, {str(b) for b in present})
             new_state.unpersist()
         finally:
             batch.unpersist()

@@ -98,6 +98,7 @@ from creek_spark.operators.similarity import (
     ivfpq_index_build,
     ivfpq_search,
 )
+from creek_spark.streaming.fence import admit, content_fingerprint
 
 
 class StreamingAnnIndex:
@@ -285,38 +286,14 @@ class StreamingAnnIndex:
                     expect_version=0,
                 )
                 man = read_manifest(self.spark, self.path)
-        else:
-            max_bid = man.get("max_bid", 0)
-            if bid == max_bid:
-                # the one genuine Spark replay (triggers serialize; the
-                # checkpoint commit follows this sink commit, so only
-                # the LAST committed trigger can redeliver) — UNLESS a
-                # reset checkpoint's recycled id landed exactly on the
-                # fence, which the committed content fingerprint
-                # distinguishes (streaming/fence.py): same content =
-                # replay no-op, different content refuses loudly
-                from creek_spark.streaming.fence import check_on_fence
-
-                check_on_fence(
-                    batch, man.get("fence_print"), batch_id=bid,
-                    sink="StreamingAnnIndex", state_path=self.path,
-                )
-                return None
-            if bid < max_bid:
-                # committed bids are <= max_bid by construction, so
-                # this covers ids still in the live set too: a live id
-                # below the fence was committed MORE than one trigger
-                # ago, which serialized triggers can never redeliver
-                raise ValueError(
-                    f"batch id {bid} is below the index's committed "
-                    f"watermark (max_bid={max_bid}): triggers "
-                    "serialize, so this cannot be a Spark "
-                    "replay — the stream was restarted with a reset or "
-                    "relocated checkpoint and its recycled ids carry NEW "
-                    "rows that a replay no-op would silently discard; "
-                    "resume from the original checkpointLocation, or "
-                    "stream into a fresh index"
-                )
+        elif not admit(
+            batch, bid, man.get("max_bid", 0), man.get("fence_print"),
+            sink="the index", state_path=self.path,
+        ):
+            # the one genuine Spark replay; committed bids are <= max_bid
+            # by construction, so a live id below the fence (committed
+            # MORE than one trigger ago) raises like any recycled id
+            return None
         ivfpq_index_append(
             batch, self.path, id_col=self.id_col, vec_col=self.vec_col,
             dim=self.dim, m=self.m,
@@ -324,8 +301,6 @@ class StreamingAnnIndex:
             mode="overwrite",
             on_zero_norm=self.on_zero_norm,
         )
-        from creek_spark.streaming.fence import content_fingerprint
-
         committed = [*live, bid]
         write_manifest(
             self.spark, self.path, committed,

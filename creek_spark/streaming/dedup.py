@@ -4,8 +4,8 @@ micro-batch is compared against EVERYTHING ingested so far (plus
 itself), then its signatures join the persisted LSH index.  Cost per
 batch ∝ batch size; the corpus is never re-shingled.
 
-State layout mirrors AdditiveRollupSink's recipe (batch_id fencing +
-atomic manifest swap): the index is an append-only set of per-batch
+State is batch_id-fenced (streaming/fence.py) behind an atomic manifest
+swap: the index is an append-only set of per-batch
 band-signature parquet directories listed in ``_manifest.json``; pairs
 land under ``pairs/batch=<id>`` with overwrite semantics, so a replayed
 trigger rewrites identical content instead of duplicating it
@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from creek_spark import fsio
+from creek_spark.streaming.fence import admit, content_fingerprint
 
 _MANIFEST = "_manifest.json"
 
@@ -71,35 +72,14 @@ class StreamingDedup:
             minhash_lsh_candidates,
         )
 
-        from creek_spark.streaming.fence import (
-            check_on_fence,
-            content_fingerprint,
-        )
-
         m = self._read_manifest()
-        if m is not None and batch_id == m["last_batch_id"]:
-            # replayed trigger — state already reflects it; the content
-            # fingerprint distinguishes a genuine replay from a reset
-            # checkpoint whose recycled id landed ON the fence
-            # (streaming/fence.py), which carries NEW rows and raises
-            check_on_fence(
-                batch, m.get("fence_print"), batch_id=batch_id,
-                sink="StreamingDedup", state_path=self.state_dir,
-            )
-            return
-        if m is not None and batch_id < m["last_batch_id"]:
-            # triggers serialize and the checkpoint commit follows this
-            # sink commit, so only the LAST batch can genuinely replay:
-            # a lower id means a reset/relocated checkpoint whose
-            # recycled ids carry NEW rows — refusing beats silently
-            # dropping them until the ids catch up
-            raise ValueError(
-                f"batch id {batch_id} is below this index's committed "
-                f"fence (last_batch_id={m['last_batch_id']}): not a Spark "
-                "replay — the stream restarted with a reset or relocated "
-                "checkpoint; resume from the original checkpointLocation "
-                "or use a fresh state_dir"
-            )
+        fence = m or {}
+        if not admit(
+            batch, batch_id, fence.get("last_batch_id"),
+            fence.get("fence_print"),
+            sink="the index", state_path=self.state_dir,
+        ):
+            return  # replayed trigger — state already reflects it
         index = self._index(m)
         if index is None:
             pairs = minhash_lsh_candidates(

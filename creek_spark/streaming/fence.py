@@ -1,9 +1,14 @@
-"""Content fingerprint for batch-id-fenced sinks.
+"""The batch-id fence every foreachBatch sink commits through.
 
 Every fenced sink in this engine (StreamingAnnIndex, AdditiveRollupSink,
-StreamingDedup) commits a batch-id watermark: a replayed trigger
-(``batch_id == fence``) is a no-op, an id BELOW the fence raises (a
-reset/relocated checkpoint recycling ids — its batches carry NEW rows).
+StreamingDedup, stream_shard_writer) commits a batch-id watermark and
+asks :func:`admit` before applying a batch.  Triggers serialize and
+Spark's checkpoint commit FOLLOWS the sink commit, so only the LAST
+committed batch can genuinely replay: a replayed trigger
+(``batch_id == fence``) is a no-op — at-least-once delivery becomes
+effectively-once — and an id BELOW the fence raises (a reset/relocated
+checkpoint recycling ids — its batches carry NEW rows, which a no-op
+would silently drop until the ids caught up).
 That leaves one boundary the id alone cannot decide: a reset checkpoint
 whose recycled id lands EXACTLY on the fence is indistinguishable from a
 genuine replay, and its new rows would be silently no-opped — one batch
@@ -33,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["content_fingerprint", "check_on_fence", "FenceContentError"]
+__all__ = ["admit", "content_fingerprint", "FenceContentError"]
 
 
 class FenceContentError(ValueError):
@@ -58,29 +63,46 @@ def content_fingerprint(df: DataFrame) -> dict:
     }
 
 
-def check_on_fence(
-    incoming: DataFrame,
-    recorded: dict | None,
-    *,
+def admit(
+    batch: DataFrame,
     batch_id: int,
+    fence_id: int | None,
+    fence_print: dict | None,
+    *,
     sink: str,
     state_path: str,
-) -> None:
-    """Decide the on-fence case: silently return for a genuine replay
-    (fingerprints match, or no fingerprint was recorded — a pre-upgrade
-    manifest, where the legacy no-op is the only available semantics),
-    raise :class:`FenceContentError` when the content differs."""
-    if recorded is None:
-        return
-    seen = content_fingerprint(incoming)
-    if seen == recorded:
-        return
-    raise FenceContentError(
-        f"batch id {batch_id} equals {sink}'s committed fence at "
-        f"{state_path} but its content differs from the committed batch "
-        f"(committed {recorded}, incoming {seen}): not a Spark replay — "
-        "the stream was restarted with a reset or relocated checkpoint "
-        "whose recycled id landed exactly on the fence, and no-opping it "
-        "would silently drop this batch; resume from the original "
-        "checkpointLocation, or point the fresh stream at fresh state"
-    )
+) -> bool:
+    """True when ``batch`` must be applied: no fence yet, or an id past
+    it.  False for a genuine replay of the fenced batch.  Raises
+    ``ValueError`` for an id below the fence and
+    :class:`FenceContentError` for an on-fence batch whose content
+    differs from the committed one.  ``sink`` names the sink in those
+    messages ("this sink", "the index")."""
+    if fence_id is None or batch_id > fence_id:
+        return True
+    if batch_id < fence_id:
+        raise ValueError(
+            f"batch id {batch_id} is below {sink}'s committed fence "
+            f"(last batch id {fence_id}) at {state_path}: triggers "
+            "serialize, so this cannot be a Spark replay — the stream was "
+            "restarted with a reset or relocated checkpoint whose recycled "
+            "ids carry NEW rows; resume from the original "
+            "checkpointLocation, or point the fresh stream at fresh state"
+        )
+    # on the fence: a genuine replay re-delivers the committed content;
+    # with no recorded fingerprint (a manifest from before fingerprints)
+    # the replay no-op is the only available reading
+    if fence_print is not None:
+        seen = content_fingerprint(batch)
+        if seen != fence_print:
+            raise FenceContentError(
+                f"batch id {batch_id} equals {sink}'s committed fence at "
+                f"{state_path} but its content differs from the committed "
+                f"batch (committed {fence_print}, incoming {seen}): not a "
+                "Spark replay — the stream was restarted with a reset or "
+                "relocated checkpoint whose recycled id landed exactly on "
+                "the fence, and no-opping it would silently drop this "
+                "batch; resume from the original checkpointLocation, or "
+                "point the fresh stream at fresh state"
+            )
+    return False

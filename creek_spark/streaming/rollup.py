@@ -13,15 +13,16 @@ checkpoint commit follows this sink commit), so an id BELOW the fence
 means a reset/relocated checkpoint and raises instead of silently
 dropping the new rows it carries.
 
-Scale design mirrors CdcApplier: state is hive-partitioned on a caller
--chosen partition key (for time-tier rollups: the day of the bucket), a
+Scale design mirrors CdcApplier, and the state layout is the same
+store (streaming/versioned.py): state is hive-partitioned on a caller-
+chosen partition key (for time-tier rollups: the day of the bucket), a
 batch rewrites ONLY the partitions its rows touch (a trickle of fresh
-events touches today's partition, never the year of history), and each
-batch publishes a new version directory with an atomic manifest swap
-(Hadoop-FS rename via creek_spark.fsio, so state rides the same
-filesystem as the data — local, HDFS or object store) — readers always
-see one committed generation.  The only
-driver traffic is one bounded collect of touched partition values.
+events touches today's partition, never the year of history) into a new
+version directory published by an atomic manifest swap — readers always
+see one committed generation.  The fence (``last_batch_id`` and its
+content fingerprint, streaming/fence.py) rides in the same manifest, so
+the merge and the fence advance in one atomic publish.  The only driver
+traffic is one bounded collect of touched partition values.
 """
 
 from __future__ import annotations
@@ -30,32 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from creek_spark import fsio
-
-_MANIFEST = "_manifest.json"
-
-# Driver round-trips in the sinks collect the DISTINCT partition/bucket
-# values a batch touches — bounded by partition-key cardinality, not data
-# volume.  The cap turns a mis-chosen partition key (e.g. partitioning a
-# rollup by event id) into a loud error instead of a silent multi-million
-# row collect that stalls or OOMs the driver.
-MAX_DRIVER_PARTITION_VALUES = 100_000
-
-
-def bounded_partition_values(
-    df: DataFrame, col: str, *, what: str, cap: int = MAX_DRIVER_PARTITION_VALUES
-) -> set[str]:
-    """Collect the distinct values of ``col`` to the driver, raising with
-    guidance when cardinality exceeds ``cap`` (collects cap+1 rows max).
-    Values keep their native type; callers stringify as needed."""
-    rows = df.select(col).distinct().limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"{what}: over {cap} distinct {col!r} values in one batch — "
-            "this column is a driver-side partition key and must be low-"
-            "cardinality (a day/tier/bucket, not a row id); repartition "
-            "the state on a coarser key or raise the cap explicitly"
-        )
-    return {r[0] for r in rows}
+from creek_spark.streaming.fence import admit, content_fingerprint
+from creek_spark.streaming.versioned import VersionedStore, bounded_partition_values
 
 
 class AdditiveRollupSink:
@@ -97,6 +74,7 @@ class AdditiveRollupSink:
         self.key_cols = key_cols
         self.add_cols = list(self.kinds)
         self.partition_col = partition_col
+        self._store = VersionedStore(spark, state_dir, partition_col)
         fsio.mkdirs(spark, state_dir)
 
     def _merge_exprs(self):
@@ -104,61 +82,31 @@ class AdditiveRollupSink:
                "min": F.min, "max": F.max}
         return [fns[kind](c).alias(c) for c, kind in self.kinds.items()]
 
-    # -- manifest ------------------------------------------------------
-    # {"version": N, "parts": {pval: "v000000N"}, "last_batch_id": i}
-
-    def _read_manifest(self) -> dict | None:
-        return fsio.read_json_or_none(
-            self.spark, fsio.join(self.state_dir, _MANIFEST)
-        )
-
     def last_batch_id(self) -> int:
-        m = self._read_manifest()
+        m = self._store.manifest()
         return m["last_batch_id"] if m else -1
 
-    def current(self) -> DataFrame | None:
-        """The committed rollup as of the latest manifest generation."""
-        m = self._read_manifest()
-        if not m or not m["parts"]:
+    def _read(self, manifest: dict | None, parts=None) -> DataFrame | None:
+        df = self._store.read(manifest, parts)
+        if df is None:
             return None
-        by_ver: dict[str, list[str]] = {}
-        for pval, ver in m["parts"].items():
-            by_ver.setdefault(ver, []).append(pval)
-        parts = []
-        for ver, pvals in by_ver.items():
-            vdir = fsio.join(self.state_dir, ver)
-            paths = [
-                fsio.join(vdir, f"{self.partition_col}={v}") for v in pvals
-            ]
-            parts.append(
-                self.spark.read.option("basePath", vdir).parquet(*paths)
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            # allowMissingColumns: partitions rewritten since a metric
-            # column was added carry it; untouched ones read as NULL
-            out = out.unionByName(p, allowMissingColumns=True)
         # partition values round-trip through hive paths as strings
-        return out.withColumn(
+        return df.withColumn(
             self.partition_col, F.col(self.partition_col).cast("string")
         )
+
+    def current(self) -> DataFrame | None:
+        """The committed rollup as of the latest manifest generation;
+        partitions rewritten since a metric column was added carry it,
+        untouched ones read it as NULL."""
+        return self._read(self._store.manifest())
 
     # -- merge ---------------------------------------------------------
 
     def apply_batch(self, tier: DataFrame, batch_id: int) -> None:
-        """Merge one micro-batch's pre-aggregated tier rows.  A replayed
-        trigger is a no-op — at-least-once delivery becomes
-        effectively-once.  Triggers serialize and Spark's checkpoint
-        commit FOLLOWS this sink commit, so a genuine replay is exactly
-        ``batch_id == last_batch_id``; an id BELOW that means the stream
-        restarted with a reset/relocated checkpoint and its recycled ids
-        carry NEW rows — skipping them would silently drop data until
-        the ids caught up, and merging them would attribute them to the
-        wrong fence, so it raises instead.  The one case the id alone
-        cannot decide — a reset checkpoint recycling to EXACTLY the
-        fence — is closed by the content fingerprint committed beside
-        the fence (streaming/fence.py): on-fence + same content = the
-        replay no-op, on-fence + different content refuses loudly.
+        """Merge one micro-batch's pre-aggregated tier rows, fenced by
+        batch id (streaming/fence.py): a replayed trigger is a no-op, a
+        recycled id from a reset checkpoint raises.
 
         The tier plan is evaluated up to three times per trigger
         (fence fingerprint, touched-partition collect, merge/write) —
@@ -167,127 +115,62 @@ class AdditiveRollupSink:
         per pass, so the tier is persisted for the trigger's duration
         and unpersisted after the manifest publish: the decode stage
         runs ONCE per trigger."""
-        from creek_spark.streaming.fence import (
-            check_on_fence,
-            content_fingerprint,
-        )
-
-        old = self._read_manifest()
+        old = self._store.manifest()
         tier = tier.persist()
         try:
-            self._apply_batch_cached(
-                tier, batch_id, old, check_on_fence, content_fingerprint
-            )
+            fence = old or {}
+            if admit(
+                tier, batch_id, fence.get("last_batch_id"),
+                fence.get("fence_print"),
+                sink="this sink", state_path=self.state_dir,
+            ):
+                self._merge(tier, batch_id, old)
         finally:
             tier.unpersist()
 
-    def _apply_batch_cached(
-        self, tier, batch_id, old, check_on_fence, content_fingerprint
-    ):
-        if old is not None and batch_id == old["last_batch_id"]:
-            check_on_fence(
-                tier, old.get("fence_print"), batch_id=batch_id,
-                sink="AdditiveRollupSink", state_path=self.state_dir,
-            )
-            return
-        if old is not None and batch_id < old["last_batch_id"]:
-            raise ValueError(
-                f"batch id {batch_id} is below this sink's committed fence "
-                f"(last_batch_id={old['last_batch_id']}): triggers "
-                "serialize, so this cannot be a Spark replay — the stream "
-                "was restarted with a reset or relocated checkpoint; "
-                "resume from the original checkpointLocation, or point "
-                "the fresh stream at a fresh state_dir"
-            )
+    def _merge(self, tier: DataFrame, batch_id: int, old: dict | None) -> None:
         # fingerprint the PRE-aggregation rows: that is the view the
-        # on-fence check above sees on a replay (tier content is
+        # on-fence check sees on a replay (tier content is
         # deterministic under the sink contract — integer sums, order-
         # free min/max — so a genuine replay reproduces it bit-exact)
         fence_print = content_fingerprint(tier)
-        tier = tier.groupBy(*self.key_cols).agg(*self._merge_exprs())
+        merged = tier.groupBy(*self.key_cols).agg(*self._merge_exprs())
         touched = {
             str(v)
             for v in bounded_partition_values(
-                tier, self.partition_col, what="AdditiveRollupSink.apply_batch"
+                merged, self.partition_col, what="AdditiveRollupSink.apply_batch"
             )
         }
-        if not touched:
-            self._publish(old, None, touched, batch_id, fence_print)
-            return
-        merged = tier
-        old_parts = (old or {}).get("parts", {})
-        hit = [p for p in touched if p in old_parts]
-        if hit:
-            by_ver: dict[str, list[str]] = {}
-            for pval in hit:
-                by_ver.setdefault(old_parts[pval], []).append(pval)
-            for ver, pvals in by_ver.items():
-                vdir = fsio.join(self.state_dir, ver)
-                prev = self.spark.read.option("basePath", vdir).parquet(
-                    *[fsio.join(vdir, f"{self.partition_col}={v}") for v in pvals]
-                ).withColumn(
-                    self.partition_col, F.col(self.partition_col).cast("string")
+        prev = self._read(old, touched)
+        if prev is not None:
+            # Schema evolution (a metric column added to add_cols after
+            # state was persisted): stored partitions that predate the
+            # column contribute typed NULLs, which the merge aggregates
+            # ignore — "no prior contributions", the only additive
+            # reading of a metric that didn't exist yet.  Dropped
+            # metrics fall away because only the current columns are
+            # selected.
+            have = set(prev.columns)
+            merged = merged.unionByName(
+                prev.select(
+                    *[
+                        (
+                            F.col(c)
+                            if c in have
+                            else F.lit(None).cast(merged.schema[c].dataType)
+                        ).alias(c)
+                        for c in merged.columns
+                    ]
                 )
-                # Schema evolution (a metric column added to add_cols
-                # after state was persisted): stored partitions that
-                # predate the column contribute typed NULLs, which the
-                # merge aggregates ignore — "no prior contributions",
-                # the only additive reading of a metric that didn't
-                # exist yet.  Dropped metrics fall away because only
-                # the current columns are selected.
-                have = set(prev.columns)
-                merged = merged.unionByName(
-                    prev.select(
-                        *[
-                            (
-                                F.col(c)
-                                if c in have
-                                else F.lit(None).cast(
-                                    merged.schema[c].dataType
-                                )
-                            ).alias(c)
-                            for c in merged.columns
-                        ]
-                    )
-                )
-            merged = merged.groupBy(*self.key_cols).agg(*self._merge_exprs())
-        ver_n = (old["version"] + 1) if old else 1
-        new_ver = f"v{ver_n:07d}"
-        merged.write.partitionBy(self.partition_col).mode("overwrite").parquet(
-            fsio.join(self.state_dir, new_ver)
+            ).groupBy(*self.key_cols).agg(*self._merge_exprs())
+        if touched:
+            merged.write.partitionBy(self.partition_col).mode(
+                "overwrite"
+            ).parquet(self._store.next_dir(old))
+        self._store.publish(
+            old, touched, touched,
+            last_batch_id=batch_id, fence_print=fence_print,
         )
-        self._publish(old, new_ver, touched, batch_id, fence_print)
-
-    def _publish(
-        self,
-        old: dict | None,
-        new_ver: str | None,
-        touched: set,
-        batch_id: int,
-        fence_print: dict | None = None,
-    ) -> None:
-        parts = dict((old or {}).get("parts", {}))
-        if new_ver is not None:
-            parts.update({p: new_ver for p in touched})
-        manifest = {
-            "version": (old["version"] + 1) if old else 1,
-            "parts": parts,
-            "last_batch_id": batch_id,
-            "fence_print": fence_print,
-        }
-        fsio.write_json_atomic(
-            self.spark, fsio.join(self.state_dir, _MANIFEST), manifest
-        )
-        # GC: version dirs neither the new nor the previous generation
-        # references (1-generation retention for in-flight readers)
-        live = set(parts.values()) | set((old or {}).get("parts", {}).values())
-        for name in fsio.list_names(self.spark, self.state_dir):
-            if (
-                name.startswith("v")
-                and name not in live
-                and fsio.is_dir(self.spark, fsio.join(self.state_dir, name))
-            ):
-                fsio.delete(self.spark, fsio.join(self.state_dir, name))
 
     def foreach_batch(self, prepare):
         """Adapter for ``writeStream.foreachBatch``: ``prepare`` maps the

@@ -71,18 +71,3 @@ def envelope_schema(
         ]
     )
 
-
-def snapshot_header_schema() -> T.StructType:
-    """SnapshotHeader (messages.go:107-115; built in
-    internal/dao/snapshots.go:103-110)."""
-    return T.StructType(
-        [
-            T.StructField("topic", T.StringType(), False),
-            T.StructField("fingerprint", T.StringType(), False),
-            T.StructField("schema", T.StringType(), False),
-            T.StructField("tx_id", T.LongType(), False),
-            T.StructField("lsn", T.StringType(), False),
-            T.StructField("at", T.TimestampType(), False),
-            T.StructField("approx_rows", T.LongType(), False),
-        ]
-    )

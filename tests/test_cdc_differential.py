@@ -13,8 +13,6 @@ from __future__ import annotations
 
 import pytest
 
-pytestmark = pytest.mark.slow  # subprocess/fuzz/e2e tier - see pytest.ini
-
 import random
 
 from creek_spark.operators.cdc import latest_state
@@ -84,6 +82,7 @@ def _to_rows(events):
     ]
 
 
+@pytest.mark.slow
 def test_latest_state_matches_reference_interpreter(spark):
     rng = random.Random(42)
     for case in range(20):
@@ -140,6 +139,7 @@ def test_cdc_applier_matches_reference_interpreter(spark, tmp_path):
         assert got == expected, f"case {case}"
 
 
+@pytest.mark.slow
 def test_incremental_scd2_matches_full_on_random_scenarios(spark):
     """incremental_scd2's carry/replay split must be invisible: for
     random WALs (u_pk chains, dups, shuffled arrival) and random split
@@ -183,6 +183,7 @@ def _assert_inc_eq_full(spark, events, split):
     ) == key(latest_state(df, ["id"]).collect()), f"latest split={split}"
 
 
+@pytest.mark.slow
 def test_incremental_upk_in_batch_touches_old_key(spark):
     """Directed regression (round-4 advice): a batch u_pk must mark its
     OLD key touched — prior c(k=1) + batch u_pk 1→200 at split=1.
@@ -195,6 +196,7 @@ def test_incremental_upk_in_batch_touches_old_key(spark):
     _assert_inc_eq_full(spark, events, split=1)
 
 
+@pytest.mark.slow
 def test_incremental_prior_upk_replayed_via_new_key(spark):
     """Directed regression (round-4 advice): a PRIOR u_pk pulled into the
     replay leg via its NEW key must not re-emit the old key's delete row
@@ -208,6 +210,7 @@ def test_incremental_prior_upk_replayed_via_new_key(spark):
     _assert_inc_eq_full(spark, events, split=2)
 
 
+@pytest.mark.slow
 def test_incremental_upk_chain_across_split(spark):
     """u_pk chain 1→2 (prior) then 2→3 (batch): old key 2's history must
     be replayed, key 1's delete carried exactly once, and the final state

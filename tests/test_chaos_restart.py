@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import pytest
 
-pytestmark = pytest.mark.slow  # subprocess/fuzz/e2e tier - see pytest.ini
-
 import os
 import random
 
@@ -117,6 +115,7 @@ def _run_until_stopped(applier, spark, src, ckpt):
             q.stop()
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("mode", ["before", "after"])
 def test_kill_and_resume_no_loss_no_dup(spark, tmp_path, mode):
     """Kill the stream mid-run (before a batch / between the state write

@@ -201,3 +201,56 @@ def test_dispatch_decoder_refuses_noise_with_valueerror():
         payload = rng.randbytes(rng.randint(0, 150))
         with pytest.raises((ValueError, NotImplementedError)):
             decode_image_pixels(payload)
+
+
+def _forged_png_height(rows: int) -> bytes:
+    """A valid small PNG whose IHDR claims ``rows`` rows."""
+    import zlib
+
+    base = bytearray(png_bytes_gradient(20, 14, seed=1))
+    # signature (8) + IHDR length/tag (8) + width (4) → height at 20:24
+    base[20:24] = struct.pack(">I", rows)
+    base[29:33] = struct.pack(">I", zlib.crc32(bytes(base[12:29])))
+    return bytes(base)
+
+
+def _forged_jpeg_size(side: int, **kw) -> bytes:
+    """A valid small JPEG whose SOF claims ``side`` × ``side`` pixels."""
+    base = bytearray(
+        jpeg_from_array(np.zeros((16, 16, 3), dtype=np.uint8), **kw)
+    )
+    sof = max(base.find(b"\xff\xc0"), base.find(b"\xff\xc2"))
+    # marker (2) + length (2) + precision (1) → height, width
+    base[sof + 5 : sof + 9] = struct.pack(">HH", side, side)
+    return bytes(base)
+
+
+@pytest.mark.parametrize(
+    "decode, payload",
+    [
+        (decode_png_pixels, _forged_png_height(1 << 31)),
+        (decode_image_pixels, _forged_png_height(1 << 31)),
+        (decode_image_pixels, _forged_jpeg_size(65535)),
+        (decode_image_pixels, _forged_jpeg_size(65535, progressive=True)),
+    ],
+    ids=["png", "png_dispatch", "jpeg", "jpeg_progressive"],
+)
+def test_forged_dimensions_refuse_before_allocating(monkeypatch, decode, payload):
+    """A header claiming a huge image must be refused from the payload's
+    own size, not by attempting the allocation: whether a 100 GiB
+    ``np.zeros`` fails depends on the host's overcommit policy, and a
+    MemoryError would escape the decoders' ValueError contract."""
+    limit = 1 << 26
+
+    def bounded(alloc):
+        def wrapped(shape, *a, **kw):
+            n = int(np.prod(shape, dtype=object))
+            assert n <= limit, f"allocation of {n} elements sized from a header"
+            return alloc(shape, *a, **kw)
+
+        return wrapped
+
+    monkeypatch.setattr(np, "zeros", bounded(np.zeros))
+    monkeypatch.setattr(np, "empty", bounded(np.empty))
+    with pytest.raises(ValueError):
+        decode(payload)

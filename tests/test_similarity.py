@@ -274,11 +274,13 @@ def test_ivfpq_default_recall_gate(spark):
 
 
 def test_pq_encode_fast_matches_exact_codes(spark):
-    """The vectorized build encode must reproduce the decimal-fold
-    encode exactly on the bench corpus — codes AND norms — including
-    across a repartition (no partition-order dependence)."""
+    """The vectorized build encode (assign_encode_fast, the path default
+    index builds take) must reproduce the decimal-fold encode exactly on
+    the bench corpus — codes AND norms — including across a repartition
+    (no partition-order dependence)."""
     emb = read_table(spark, SF_DIR, "embeddings")
     cb = sim.pq_codebook(emb, n_codes=16)
+    cents = sim.ivf_centroids(emb)
     c = emb.select(
         F.col("vec_id").alias("n_id"), F.col("embedding").alias("c_vec")
     )
@@ -288,8 +290,8 @@ def test_pq_encode_fast_matches_exact_codes(spark):
     }
     fast = {
         r["n_id"]: (r["codes"], r["_nrm"])
-        for r in sim.pq_encode_fast(
-            c.repartition(7), cb, "n_id", "c_vec"
+        for r in sim.assign_encode_fast(
+            c.repartition(7), cents, cb, "n_id", "c_vec"
         ).collect()
     }
     assert fast == exact

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-pytestmark = pytest.mark.slow  # subprocess/fuzz/e2e tier - see pytest.ini
-
 import json
 import os
 
@@ -44,6 +42,7 @@ def _rows(df):
     return sorted(map(tuple, df.select(*KEYS, "n").collect()))
 
 
+@pytest.mark.slow
 def test_incremental_equals_batch_recompute(spark, sf_dir, tmp_path):
     ev = read_table(spark, sf_dir, "events")
     sink = _sink(spark, tmp_path)
@@ -93,14 +92,15 @@ def test_batch_rewrites_only_touched_partitions(spark, tmp_path):
     m1 = json.load(open(os.path.join(sink.state_dir, "_manifest.json")))
     sink.apply_batch(_tier(mk(2, 5)), 1)  # different day only
     m2 = json.load(open(os.path.join(sink.state_dir, "_manifest.json")))
-    assert m2["parts"]["2024-01-01"] == m1["parts"]["2024-01-01"], (
+    assert m2["buckets"]["2024-01-01"] == m1["buckets"]["2024-01-01"], (
         "untouched day was rewritten"
     )
-    assert m2["parts"]["2024-01-02"] != m1["parts"]["2024-01-01"]
+    assert m2["buckets"]["2024-01-02"] != m1["buckets"]["2024-01-01"]
     # both days' dirs exist and state is the sum of both batches
     assert sink.current().count() == _tier(mk(1, 5)).count() + _tier(mk(2, 5)).count()
 
 
+@pytest.mark.slow
 def test_quantiles_from_streamed_rollup_match_batch(spark, sf_dir, tmp_path):
     """End-to-end: quantiles computed from the streamed tier equal those
     from the one-shot batch sketch (the point of the whole exercise)."""
@@ -125,6 +125,7 @@ def test_quantiles_from_streamed_rollup_match_batch(spark, sf_dir, tmp_path):
     assert q(streamed) == q(direct)
 
 
+@pytest.mark.slow
 def test_empty_batch_advances_fence_only(spark, sf_dir, tmp_path):
     ev = read_table(spark, sf_dir, "events")
     sink = _sink(spark, tmp_path)
@@ -135,6 +136,7 @@ def test_empty_batch_advances_fence_only(spark, sf_dir, tmp_path):
     assert _rows(sink.current()) == before
 
 
+@pytest.mark.slow
 def test_streaming_zscore_flags_equal_batch(spark, sf_dir, tmp_path):
     """Round-4 verdict task: one detector proven incremental == batch.
     The z-score detector's moments stream through AdditiveRollupSink in
@@ -165,6 +167,7 @@ def test_streaming_zscore_flags_equal_batch(spark, sf_dir, tmp_path):
     assert again == want
 
 
+@pytest.mark.slow
 def test_streaming_growth_rates_equal_batch(spark, sf_dir, tmp_path):
     """Second incremental == batch proof: MoM/YoY growth from monthly
     cells streamed in three micro-batches (plus a replay) must equal the
@@ -187,6 +190,7 @@ def test_streaming_growth_rates_equal_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_streaming_forecast_backtest_equals_batch(spark, sf_dir, tmp_path):
     """Third incremental == batch proof: seasonal-naive MAE/bias from
     hourly cells streamed in three micro-batches equals the batch
@@ -208,6 +212,7 @@ def test_streaming_forecast_backtest_equals_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_streaming_cusum_equals_batch(spark, sf_dir, tmp_path):
     """Fourth incremental == batch proof: hourly-series CUSUM from
     maintained cells equals batch ts_cusum_hourly exactly — and the
@@ -238,6 +243,7 @@ def test_streaming_cusum_equals_batch(spark, sf_dir, tmp_path):
     assert key(bt.backtest()) == key(fb)
 
 
+@pytest.mark.slow
 def test_driver_partition_collect_is_capped(spark):
     """The sinks' only driver round-trip — distinct touched partition
     values — must be bounded: a mis-chosen high-cardinality partition key
@@ -257,6 +263,7 @@ def test_driver_partition_collect_is_capped(spark):
         bounded_partition_values(df, "pv", what="t", cap=10)
 
 
+@pytest.mark.slow
 def test_streaming_corpus_report_equals_batch(spark, sf_dir, tmp_path):
     """Fifth incremental == batch proof: the per-(source, lang) corpus
     report card maintained from document micro-batches equals the batch
@@ -284,6 +291,7 @@ def test_streaming_corpus_report_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_drift_equals_batch(spark, sf_dir, tmp_path):
     """Sixth incremental == batch proof: the (group, bin) drift state
     maintained from document micro-batches reproduces the batch
@@ -312,6 +320,7 @@ def test_streaming_drift_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_dim_stats_equals_batch(spark, sf_dir, tmp_path):
     """Seventh incremental == batch proof — and the first exercising the
     sink's kind-aware merge (min/max cells beside sums): per-dimension
@@ -337,6 +346,7 @@ def test_streaming_dim_stats_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_kind_aware_merge_hypothesis(spark, tmp_path):
     """Generative check of the sink's kind-aware merge: any partitioning
     of random cell rows into ordered batches merges to exactly the
@@ -397,6 +407,7 @@ def test_kind_aware_merge_hypothesis(spark, tmp_path):
     run()
 
 
+@pytest.mark.slow
 def test_streaming_cms_equals_batch(spark, sf_dir, tmp_path):
     """Eighth incremental == batch proof: the count-min cell grid and
     probe exact-counts maintained from document micro-batches reproduce
@@ -438,6 +449,7 @@ def test_streaming_cms_equals_batch(spark, sf_dir, tmp_path):
     assert det.cells.current().count() <= CMS_DEPTH * CMS_WIDTH
 
 
+@pytest.mark.slow
 def test_streaming_trend_equals_batch(spark, sf_dir, tmp_path):
     """Ninth incremental == batch proof: the (type, day) daily-cents
     grid maintained from event micro-batches reproduces the batch
@@ -466,6 +478,7 @@ def test_streaming_trend_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_bloom_equals_batch(spark, sf_dir, tmp_path):
     """Tenth incremental == batch proof: Bloom bit positions maintained
     from customer micro-batches reproduce the batch sketch_bloom_filter
@@ -502,6 +515,7 @@ def test_streaming_bloom_equals_batch(spark, sf_dir, tmp_path):
     assert det.bits_sink.current().count() <= BLOOM_M
 
 
+@pytest.mark.slow
 def test_streaming_acf_equals_batch(spark, sf_dir, tmp_path):
     """Eleventh incremental == batch proof: the (type, hour) count grid
     maintained from event micro-batches reproduces ts_autocorrelation
@@ -524,6 +538,7 @@ def test_streaming_acf_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_backlog_equals_batch(spark, sf_dir, tmp_path):
     """Twelfth incremental == batch proof — the incremental-MV member:
     per-order (od, close) state with extremum merges reproduces
@@ -551,6 +566,7 @@ def test_streaming_backlog_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_gini_equals_batch(spark, sf_dir, tmp_path):
     """Thirteenth incremental == batch proof: per-customer revenue cents
     merged additively reproduce customer_revenue_gini even when a
@@ -572,6 +588,7 @@ def test_streaming_gini_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_conversion_equals_batch(spark, sf_dir, tmp_path):
     """Fourteenth incremental == batch proof: per-user first-view /
     first-purchase tiers merged by MINIMUM reproduce
@@ -597,6 +614,7 @@ def test_streaming_conversion_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_streaming_vocab_equals_batch(spark, sf_dir, tmp_path):
     """Fifteenth incremental == batch proof: additive (source, token)
     counts reproduce text_vocab_hapax — including hapax counts, the
@@ -620,6 +638,7 @@ def test_streaming_vocab_equals_batch(spark, sf_dir, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_rollup_schema_evolution_new_metric_column(spark, tmp_path):
     """A metric column added to ``add_cols`` after state was persisted
     (the rollup-side twin of CdcApplier's ADD COLUMN case): the widened
@@ -659,6 +678,7 @@ def test_rollup_schema_evolution_new_metric_column(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_streaming_media_report_equals_batch(spark, tmp_path):
     """Sixteenth incremental == batch proof, and the first whose tier is
     a PYTHON decode stage (mapInPandas over the pure-stdlib codecs)
@@ -731,6 +751,7 @@ def test_streaming_media_report_equals_batch(spark, tmp_path):
     assert key(det.report()) == want
 
 
+@pytest.mark.slow
 def test_tier_python_stage_runs_once_per_trigger(spark, tmp_path):
     """The tier plan is referenced three times per trigger (fence
     fingerprint, touched-partition collect, merge/write).  For tiers
