@@ -106,6 +106,43 @@ def expand_ops(wal: DataFrame) -> DataFrame:
     )
 
 
+def with_rows(changes: DataFrame, rows: DataFrame, lsn: Column) -> DataFrame:
+    """``changes`` preceded by materialized ``rows`` as 'r' changes at
+    ``lsn`` — how stored state (CdcApplier) and snapshot rows
+    (sources.bootstrap) re-enter the per-key fold.  Both sides keep only
+    the five columns latest_state reads, ``source`` cut to
+    ``struct(lsn)``.
+
+    Schema evolution (upstream ADD COLUMN): ``changes`` can be WIDER
+    than ``rows`` — the reference publishes a new fingerprint and keeps
+    streaming (O10).  ``after`` fields the rows lack surface as typed
+    NULLs, Postgres's ADD COLUMN semantics for pre-existing rows;
+    dropped columns fall away because only the envelope's fields are
+    selected."""
+    have = set(rows.columns)
+    after_t = changes.schema["after"].dataType
+    as_changes = rows.select(
+        F.struct(lsn.alias("lsn")).alias("source"),
+        F.lit("r").alias("op"),
+        F.lit(None).cast(changes.schema["before"].dataType).alias("before"),
+        F.struct(
+            *[
+                (F.col(f.name) if f.name in have else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in after_t.fields
+            ]
+        ).alias("after"),
+        F.lit(None).cast("array<string>").alias("unchanged_toast"),
+    )
+    return as_changes.unionByName(
+        changes.select(
+            F.struct(F.col("source.lsn").alias("lsn")).alias("source"),
+            "op", "before", "after", "unchanged_toast",
+        )
+    )
+
+
 def latest_state(
     wal: DataFrame,
     key_cols: list[str] | None = None,
@@ -130,6 +167,21 @@ def latest_state(
     TOAST columns marked unchanged (replication.go:527-528 omission) are
     carried forward from the previous row version without a second shuffle.
     """
+    return latest_state_at_lsn(
+        wal, key_cols, handle_toast=handle_toast, handle_truncate=handle_truncate
+    ).drop("_lsn_num")
+
+
+def latest_state_at_lsn(
+    wal: DataFrame,
+    key_cols: list[str] | None = None,
+    *,
+    handle_toast: bool = True,
+    handle_truncate: bool = True,
+) -> DataFrame:
+    """:func:`latest_state` plus ``_lsn_num``, the LSN of each key's
+    winning (rank-1) change — the stream position a materialized row
+    re-enters the next fold at (CdcApplier)."""
     keys = key_cols or _key_cols_from_envelope(wal)
     df = wal.withColumn("_lsn_num", lsn_num(F.col("source.lsn")))
 
@@ -176,11 +228,14 @@ def latest_state(
             )
         final = resolved.filter((F.col("_rn") == 1) & (F.col("op") != "d"))
         return final.select(
-            *[F.col(f"_res_{c}").getField("v").alias(c) for c in after_fields]
+            *[F.col(f"_res_{c}").getField("v").alias(c) for c in after_fields],
+            "_lsn_num",
         )
 
     final = ranked.filter((F.col("_rn") == 1) & (F.col("op") != "d"))
-    return final.select(*[F.col(f"after.{c}").alias(c) for c in after_fields])
+    return final.select(
+        *[F.col(f"after.{c}").alias(c) for c in after_fields], "_lsn_num"
+    )
 
 
 def wal_from(wal: DataFrame, timestamp=None, lsn: str | None = None) -> DataFrame:

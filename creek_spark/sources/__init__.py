@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from creek_spark import fsio
-from creek_spark.functions.lsn import lsn_num
 from creek_spark.types.fingerprint import fingerprint_schema
 
 TABLES = (
@@ -288,43 +287,11 @@ def bootstrap(
     at the snapshot LSN, then running the standard latest-state apply — so
     every op semantics (d/u_pk/t/TOAST) behaves identically in bootstrap.
     """
-    from creek_spark.operators.cdc import latest_state, wal_from
+    from creek_spark.operators.cdc import latest_state, wal_from, with_rows
 
-    changes = wal_from(wal, lsn=header["lsn"])
-    before_t = changes.schema["before"].dataType
-    after_t = changes.schema["after"].dataType
-    snap_as_wal = snapshot_df.select(
-        F.lit(header["fingerprint"]).alias("fingerprint"),
-        F.struct(
-            F.lit("snapshot").alias("name"),
-            F.lit(header["at"]).cast("timestamp").alias("tx_at"),
-            F.lit("db").alias("db"),
-            F.lit("public").alias("schema"),
-            F.lit(header["topic"].split(".")[0]).alias("table"),
-            F.lit(header["tx_id"]).cast("long").alias("tx_id"),
-            F.lit(header["lsn"]).alias("lsn"),
-        ).alias("source"),
-        F.lit("r").alias("op"),
-        F.lit(header["at"]).cast("timestamp").alias("sent_at"),
-        F.lit(None).cast(before_t).alias("before"),
-        # Schema evolution: bootstrapping an old snapshot against a
-        # stream whose envelope gained columns since the snapshot was
-        # taken — snapshot rows surface the new columns as typed NULLs
-        # (Postgres ADD COLUMN semantics for pre-existing rows), the
-        # same widening rule as CdcApplier._state_as_wal
-        F.struct(
-            *[
-                (
-                    F.col(f.name)
-                    if f.name in snapshot_df.columns
-                    else F.lit(None)
-                )
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in after_t.fields
-            ]
-        ).alias("after"),
-        F.lit(None).cast("array<string>").alias("unchanged_toast"),
+    # An old snapshot against a stream that gained columns since surfaces
+    # them as typed NULLs (ADD COLUMN semantics, see with_rows).
+    full = with_rows(
+        wal_from(wal, lsn=header["lsn"]), snapshot_df, F.lit(header["lsn"])
     )
-    full = snap_as_wal.unionByName(changes.select(*snap_as_wal.columns))
     return latest_state(full, key_cols)

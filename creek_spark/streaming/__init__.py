@@ -6,8 +6,8 @@ The reference's consumer loop (client.go StreamWAL → apply) maps to:
 
 Correctness properties preserved (BASELINE.md):
   * resume-exactness: checkpointing + an idempotent, whole-state
-    recompute-free MERGE per micro-batch (at-least-once input collapses via
-    per-key LSN max).
+    recompute-free MERGE per micro-batch (at-least-once input collapses in
+    the per-key LSN ranking).
   * per-key ordering by numeric LSN survives any parallelism — each batch
     applies only changes newer than the key's current LSN.
   * snapshot+stream bootstrap joins at a single (lsn, tx_id) point
@@ -29,9 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from creek_spark.functions.lsn import lsn_num
-from creek_spark.operators.cdc import latest_state
+from creek_spark.functions.lsn import lsn_str
+from creek_spark.operators.cdc import latest_state_at_lsn, with_rows
 from creek_spark.streaming.versioned import VersionedStore, bounded_partition_values
+
+# Committed buckets spread over this many version dirs trigger an inline
+# fold of the whole state into the next version (see CdcApplier).
+_COMPACT_VERSIONS = 8
 
 
 def read_envelope_stream(
@@ -55,8 +59,10 @@ class CdcApplier:
     """foreachBatch sink: maintains materialized table state under
     ``state_dir`` by merging each micro-batch of envelope rows.
 
-    Merge = union(current state as 'r' ops @ their stored lsn, new batch)
-    → latest_state.  Re-delivered batches are no-ops (same lsn loses to
+    Merge = the stored rows of the touched buckets, re-entering as 'r'
+    changes at their stored LSN (operators.cdc.with_rows), folded with
+    the new batch by latest_state; each surviving key keeps its winning
+    change's LSN.  Re-delivered batches are no-ops (same lsn loses to
     itself), which is what makes at-least-once delivery safe.
 
     Scale design: state is hash-bucketed by key —
@@ -68,10 +74,15 @@ class CdcApplier:
     cost is O(|touched buckets|), not O(|state|): a steady trickle of
     changes no longer re-shuffles the whole table every trigger; version
     sprawl is bounded by an inline compaction fold every
-    ``compact_versions`` generations.  On a real cluster the same
+    ``_COMPACT_VERSIONS`` generations.  On a real cluster the same
     contract is Delta MERGE + OPTIMIZE; this layout keeps the incremental
-    property testable locally.  The only driver traffic is two bounded
-    collects of distinct bucket ids (≤ n_buckets ints)."""
+    property testable locally.  The only driver traffic is one bounded
+    collect of distinct bucket ids (≤ n_buckets ints) and one listing
+    of the version dir just written.
+
+    ``envelope_schema`` is not read: stored rows take the ``after``
+    shape of each batch (with_rows).  The argument stays so that
+    existing positional calls still bind."""
 
     def __init__(
         self,
@@ -81,14 +92,11 @@ class CdcApplier:
         envelope_schema: T.StructType,
         *,
         n_buckets: int = 64,
-        compact_versions: int = 8,
     ):
         self.spark = spark
         self.state_dir = state_dir
         self.key_cols = key_cols
-        self.envelope_schema = envelope_schema
         self.n_buckets = n_buckets
-        self.compact_versions = compact_versions
         self._lsn_col = "_creek_lsn"
         # NOT underscore-prefixed: Spark's file listing treats `_*` paths
         # as hidden metadata and would skip the partition directories.
@@ -106,51 +114,14 @@ class CdcApplier:
         (ADD COLUMN semantics) instead of refusing a half-migrated state."""
         return self._store.read(self._store.manifest())
 
-    def _state_as_wal(self, state: DataFrame) -> DataFrame:
-        after_t = self.envelope_schema["after"].dataType
-        before_t = self.envelope_schema["before"].dataType
-        # Schema evolution (upstream ADD COLUMN): the applier's envelope
-        # schema can be WIDER than the persisted state — the reference
-        # publishes a new fingerprint and keeps streaming (O10), so the
-        # restarted consumer replays new-schema batches onto old-schema
-        # state.  Fields the stored rows don't have surface as typed
-        # NULLs, exactly Postgres's ADD COLUMN semantics for
-        # pre-existing rows; dropped columns fall away because only the
-        # current envelope's fields are selected.
-        have = set(state.columns)
-        return state.select(
-            F.lit("state").alias("fingerprint"),
-            F.struct(
-                F.lit("state").alias("name"),
-                F.lit("1970-01-01").cast("timestamp").alias("tx_at"),
-                F.lit("db").alias("db"),
-                F.lit("public").alias("schema"),
-                F.lit("state").alias("table"),
-                F.lit(0).cast("long").alias("tx_id"),
-                F.col(self._lsn_col).alias("lsn"),
-            ).alias("source"),
-            F.lit("r").alias("op"),
-            F.lit("1970-01-01").cast("timestamp").alias("sent_at"),
-            F.lit(None).cast(before_t).alias("before"),
-            F.struct(
-                *[
-                    (F.col(f.name) if f.name in have else F.lit(None))
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    for f in after_t.fields
-                ]
-            ).alias("after"),
-            F.lit(None).cast("array<string>").alias("unchanged_toast"),
-        )
-
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from creek_spark.functions.lsn import lsn_str
-
         batch = batch.persist()
         try:
             # Buckets this batch touches: the after-image key (upserts) AND
             # the before-image key (deletes, and the delete leg of u_pk —
-            # whose old key can live in a different bucket than the new).
+            # whose old key can live in a different bucket than the new);
+            # -1 marks a truncate, which discards every older row in
+            # EVERY bucket.  One pass over the batch.
             b_after = F.when(
                 F.col("after").isNotNull(),
                 self._bucket_of([F.col(f"after.{k}") for k in self.key_cols]),
@@ -159,18 +130,16 @@ class CdcApplier:
                 F.col("before").isNotNull(),
                 self._bucket_of([F.col(f"before.{k}") for k in self.key_cols]),
             )
-            touched = {
-                str(b)
-                for b in bounded_partition_values(
-                    batch.select(
-                        F.explode(F.array(b_after, b_before)).alias("b")
-                    ).where(F.col("b").isNotNull()),
-                    "b",
-                    what="CdcApplier touched buckets",
-                )
-            }
-            # A truncate discards every older row in EVERY bucket.
-            has_trunc = batch.where(F.col("op") == "t").limit(1).count() > 0
+            b_trunc = F.when(F.col("op") == "t", F.lit(-1))
+            seen = bounded_partition_values(
+                batch.select(
+                    F.explode(F.array(b_after, b_before, b_trunc)).alias("b")
+                ).where(F.col("b").isNotNull()),
+                "b",
+                what="CdcApplier touched buckets",
+            )
+            has_trunc = -1 in seen
+            touched = {str(b) for b in seen if b != -1}
             if not (touched or has_trunc):
                 return
             manifest = self._store.manifest()
@@ -180,59 +149,39 @@ class CdcApplier:
             # version dirs (long trickle of small batches), fold the whole
             # state into this batch's version — the inline OPTIMIZE analog
             # that bounds reader-side union width.
-            if has_trunc or len(set(committed.values())) >= self.compact_versions:
+            if has_trunc or len(set(committed.values())) >= _COMPACT_VERSIONS:
                 touched |= set(committed)
             if not touched:
                 return
 
             subset = self._store.read(manifest, touched)
+            wal_in = batch
             if subset is not None:
-                sw = self._state_as_wal(subset.drop(self._bucket_col))
-                wal_in = sw.unionByName(batch.select(*sw.columns))
-            else:
-                wal_in = batch
-            # per-key max LSN — stored with the state so existing rows
-            # re-enter the next batch's merge at their true stream position
-            lsn_per_key = (
-                wal_in.withColumn("_l", lsn_num(F.col("source.lsn")))
-                .groupBy(
-                    *[
-                        F.coalesce(
-                            F.col(f"after.{k}"), F.col(f"before.{k}")
-                        ).alias(k)
-                        for k in self.key_cols
-                    ]
+                wal_in = with_rows(
+                    batch, subset.drop(self._bucket_col), F.col(self._lsn_col)
                 )
-                .agg(F.max("_l").alias("_lmax"))
-            )
+            # the winning change's LSN is stored with the state so existing
+            # rows re-enter the next batch's merge at their true position
             new_state = (
-                latest_state(wal_in, self.key_cols)
-                .join(lsn_per_key, self.key_cols, "left")
+                latest_state_at_lsn(wal_in, self.key_cols)
                 .withColumn(
-                    self._lsn_col, lsn_str(F.coalesce(F.col("_lmax"), F.lit(0)))
+                    self._lsn_col,
+                    lsn_str(F.coalesce(F.col("_lsn_num"), F.lit(0))),
                 )
-                .drop("_lmax")
+                .drop("_lsn_num")
                 .withColumn(
                     self._bucket_col,
                     self._bucket_of([F.col(k) for k in self.key_cols]),
                 )
-                .persist()
             )
             # Publish protocol (streaming/versioned.py): write this
             # batch's touched buckets into a fresh version dir, swap the
             # manifest, GC with one generation of retention.  Buckets
-            # whose last key was deleted produce zero rows — they simply
-            # drop out of the manifest mapping.
-            (
-                new_state.write.mode("overwrite")
-                .partitionBy(self._bucket_col)
-                .parquet(self._store.next_dir(manifest))
+            # whose last key was deleted produce zero rows — they are
+            # not in the written set and drop out of the manifest.
+            self._store.publish(
+                manifest, touched, self._store.write(new_state, manifest)
             )
-            present = bounded_partition_values(
-                new_state, self._bucket_col, what="CdcApplier state buckets"
-            )
-            self._store.publish(manifest, touched, {str(b) for b in present})
-            new_state.unpersist()
         finally:
             batch.unpersist()
 

@@ -165,6 +165,8 @@ class StreamingDedup:
             "last_batch_id": gen,
             "index_parts": [part],
             "stale_parts": [p for p in old_parts if p != part],
+            # what the last batch contained is unchanged by the fold
+            "fence_print": m.get("fence_print"),
         }
         fsio.write_json_atomic(
             self.spark, fsio.join(self.state_dir, _MANIFEST), manifest

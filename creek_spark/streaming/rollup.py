@@ -163,12 +163,8 @@ class AdditiveRollupSink:
                     ]
                 )
             ).groupBy(*self.key_cols).agg(*self._merge_exprs())
-        if touched:
-            merged.write.partitionBy(self.partition_col).mode(
-                "overwrite"
-            ).parquet(self._store.next_dir(old))
         self._store.publish(
-            old, touched, touched,
+            old, touched, self._store.write(merged, old) if touched else set(),
             last_batch_id=batch_id, fence_print=fence_print,
         )
 

@@ -218,9 +218,7 @@ class DynamicTables:
         for qname in self.subscribed():
             safe = qname.replace(".", "_")
             ckpt = os.path.join(self.base_dir, "ckpt", safe)
-            q = self._applier(qname).start(
-                self._table_stream(qname), ckpt, available_now=True
-            )
+            q = self._applier(qname).start(self._table_stream(qname), ckpt)
             queries.append(q)
         for q in queries:
             q.awaitTermination(timeout_s)
@@ -259,23 +257,14 @@ class DynamicTables:
 
     def state(self, name: str) -> DataFrame | None:
         """Materialized latest-state for a table (None before first run).
-        Works for removed tables too — their state is retained (the
-        envelope schema is resolved from the registry in that case)."""
+        Works for removed tables too — their state is retained."""
         qname = _qualify(name)
         safe = qname.replace(".", "_")
-        state_dir = os.path.join(self.base_dir, "state", safe)
-        env = self.envelope_schema
-        if env is None:
-            known = self.registry.last_for_source(qname)
-            if known is not None:
-                from creek_spark.types.envelope import envelope_schema as build_env
-
-                env = build_env(known[1])
         applier = CdcApplier(
             self.spark,
-            state_dir,
+            os.path.join(self.base_dir, "state", safe),
             self._tables.get(qname, {}).get("key_cols", []),
-            env,
+            self.envelope_schema,
             n_buckets=self.n_buckets,
         )
         return applier.current_state()

@@ -72,9 +72,15 @@ class VersionedStore:
         return f"{ver}/{self.part_col}={pval}"
 
     def manifest(self) -> dict | None:
-        return fsio.read_json_or_none(
-            self.spark, fsio.join(self.state_dir, MANIFEST)
-        )
+        m = fsio.read_json_or_none(self.spark, fsio.join(self.state_dir, MANIFEST))
+        if m is not None and "buckets" not in m:
+            raise ValueError(
+                f"{self.state_dir}/{MANIFEST} has no 'buckets' key: state "
+                "written in the older layout (key 'parts', v%07d version "
+                "dirs), which this store does not read — delete the state "
+                "dir and replay from the checkpoint"
+            )
+        return m
 
     def read(self, manifest: dict | None, parts=None) -> DataFrame | None:
         """The committed partitions of ``manifest`` — all of them, or
@@ -102,10 +108,26 @@ class VersionedStore:
             df = df.unionByName(f, allowMissingColumns=True)
         return df
 
-    def next_dir(self, manifest: dict | None) -> str:
-        """The version dir the next :meth:`publish` will point at — write
-        the batch's rewritten partitions here first."""
-        return fsio.join(self.state_dir, _vdir(self._next_version(manifest)))
+    def write(self, df: DataFrame, manifest: dict | None) -> set:
+        """Write ``df`` — the partitions a batch rewrites — into the
+        version dir the next :meth:`publish` will point at, and return
+        the partition values now present there (one listing).  Static
+        overwrite first clears whatever a crashed attempt left in that
+        dir, even when the session sets dynamic overwrite, so an orphan
+        partition is replaced, never published."""
+        path = fsio.join(self.state_dir, _vdir(self._next_version(manifest)))
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy(self.part_col)
+            .parquet(path)
+        )
+        prefix = self.part_col + "="
+        return {
+            unquote(sub[len(prefix):])
+            for sub in fsio.list_names(self.spark, path)
+            if sub.startswith(prefix)
+        }
 
     @staticmethod
     def _next_version(manifest: dict | None) -> int:
@@ -116,8 +138,8 @@ class VersionedStore:
     ) -> None:
         """Swap the manifest to the post-batch state: partitions in
         ``replaced`` drop their old entry, partitions in ``written`` map
-        to :meth:`next_dir` (a replaced partition the batch emptied just
-        drops out), ``extra`` keys ride along.  Then GC partition dirs
+        to the version dir :meth:`write` filled (a replaced partition the
+        batch emptied just drops out), ``extra`` keys ride along.  Then GC partition dirs
         that neither the new manifest nor its ``retain`` list name."""
         version = self._next_version(old)
         old_map = dict(old["buckets"]) if old else {}

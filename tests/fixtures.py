@@ -45,6 +45,33 @@ def wal_row(i, op, before=None, after=None, toast=None, fp="fp1"):
     )
 
 
+def interpret(events):
+    """The reference consumer's per-op rules (internal/dao/replication.go),
+    in memory: apply ``(lsn, op, before, after, toast)`` events in
+    (lsn, leg) order; truncate clears everything seen so far.  Returns
+    ``(state, last)``: each live key's ``data`` and the LSN of the change
+    that last wrote it."""
+    state: dict[int, str | None] = {}
+    last: dict[int, int] = {}
+    for lsn, op, before, after, toast in sorted(
+        events, key=lambda e: (e[0], 0 if e[1] == "t" else 1)
+    ):
+        if op == "t":
+            state.clear()
+            last.clear()
+        if op in ("u_pk", "d"):
+            state.pop(before[0], None)
+            last.pop(before[0], None)
+        if op in ("c", "r", "u", "u_pk"):
+            k = after[0]
+            if op == "u" and toast and "data" in toast:
+                state[k] = state.get(k)  # carry previous (None if absent)
+            else:
+                state[k] = after[1]
+            last[k] = lsn
+    return state, last
+
+
 def other_wal_events() -> list[tuple]:
     """The scripted change stream; expected final state in OTHER_EXPECTED."""
     rows = [

@@ -1,6 +1,6 @@
 """Differential CDC testing: random WAL scenarios applied two ways —
-a 10-line in-memory interpreter of the reference's per-op rules
-(internal/dao/replication.go) vs the distributed `latest_state`
+the in-memory interpreter of the reference's per-op rules
+(tests/fixtures.interpret) vs the distributed `latest_state`
 operator — must agree exactly.  Seeded RNG, so failures reproduce.
 
 This catches interaction bugs single-path fixtures miss: truncate
@@ -16,32 +16,7 @@ import pytest
 import random
 
 from creek_spark.operators.cdc import latest_state
-from tests.fixtures import ENV_SCHEMA, wal_row
-
-
-def _interpret(events):
-    """The reference consumer's semantics, in-memory: apply ops in
-    (lsn, leg) order; truncate clears everything seen so far."""
-    state: dict[int, str | None] = {}
-    for lsn, op, before, after, toast in sorted(
-        events, key=lambda e: (e[0], 0 if e[1] == "t" else 1)
-    ):
-        if op == "t":
-            state.clear()
-        elif op in ("c", "r"):
-            state[after[0]] = after[1]
-        elif op == "u":
-            k = after[0]
-            if toast and "data" in toast:
-                state[k] = state.get(k)  # carry previous (None if absent)
-            else:
-                state[k] = after[1]
-        elif op == "u_pk":
-            state.pop(before[0], None)
-            state[after[0]] = after[1]
-        elif op == "d":
-            state.pop(before[0], None)
-    return state
+from tests.fixtures import ENV_SCHEMA, _lsn, interpret, wal_row
 
 
 def _scenario(rng: random.Random, n_events: int):
@@ -87,7 +62,7 @@ def test_latest_state_matches_reference_interpreter(spark):
     rng = random.Random(42)
     for case in range(20):
         events = _scenario(rng, n_events=rng.randint(5, 30))
-        expected = _interpret(events)
+        expected, _ = interpret(events)
         df = spark.createDataFrame(_to_rows(events), schema=ENV_SCHEMA)
         got = {
             r["id"]: r["data"]
@@ -105,7 +80,7 @@ def test_cdc_applier_matches_reference_interpreter(spark, tmp_path):
     rng = random.Random(7)
     for case in range(4):
         events = _scenario(rng, n_events=rng.randint(10, 25))
-        expected = _interpret(events)
+        expected, last = interpret(events)
         src = str(tmp_path / f"wal{case}")
         state_dir = str(tmp_path / f"state{case}")
         ckpt = str(tmp_path / f"ckpt{case}")
@@ -132,11 +107,15 @@ def test_cdc_applier_matches_reference_interpreter(spark, tmp_path):
             q = applier.start(read_envelope_stream(spark, src, ENV_SCHEMA), ckpt)
             q.awaitTermination(120)
 
-        got = {}
+        got, got_lsn = {}, {}
         st = applier.current_state()
         if st is not None:
-            got = {r["id"]: r["data"] for r in st.select("id", "data").collect()}
+            for r in st.select("id", "data", "_creek_lsn").collect():
+                got[r["id"]] = r["data"]
+                got_lsn[r["id"]] = r["_creek_lsn"]
         assert got == expected, f"case {case}"
+        # each key re-enters the next merge at its winning change's LSN
+        assert got_lsn == {k: _lsn(v) for k, v in last.items()}, f"case {case}"
 
 
 @pytest.mark.slow

@@ -17,31 +17,7 @@ import random
 from pyspark.sql import functions as F
 
 from creek_spark.streaming import CdcApplier, read_envelope_stream
-from tests.fixtures import ENV_SCHEMA, wal_row
-
-
-def _interpret(events):
-    """Reference consumer semantics in-memory (see test_cdc_differential)."""
-    state: dict[int, str | None] = {}
-    for lsn, op, before, after, toast in sorted(
-        events, key=lambda e: (e[0], 0 if e[1] == "t" else 1)
-    ):
-        if op == "t":
-            state.clear()
-        elif op in ("c", "r"):
-            state[after[0]] = after[1]
-        elif op == "u":
-            k = after[0]
-            if toast and "data" in toast:
-                state[k] = state.get(k)
-            else:
-                state[k] = after[1]
-        elif op == "u_pk":
-            state.pop(before[0], None)
-            state[after[0]] = after[1]
-        elif op == "d":
-            state.pop(before[0], None)
-    return state
+from tests.fixtures import ENV_SCHEMA, interpret, wal_row
 
 
 def _random_wal(rng: random.Random, n_events: int):
@@ -150,9 +126,7 @@ def test_kill_and_resume_no_loss_no_dup(spark, tmp_path, mode):
     q = applier2.start(stream, ckpt)
     q.awaitTermination(240)
 
-    expected = {
-        k: v for k, v in _interpret(events).items() if v is not None
-    }
+    expected, _ = interpret(events)
     st = applier2.current_state()
     got = (
         {r["id"]: r["data"] for r in st.select("id", "data").collect()}
@@ -201,3 +175,48 @@ def test_reader_sees_committed_snapshot_never_a_mix(spark, tmp_path):
         r["id"]: r["data"]
         for r in applier.current_state().select("id", "data").collect()
     } == {1: "one-v2", 2: "two"}
+
+
+def test_orphan_next_version_dir_is_replaced_not_published(spark, tmp_path):
+    """A crashed attempt can leave files in the version dir the next
+    publish points at.  The store overwrites that dir statically (even
+    when the session defaults to dynamic partition overwrite), so a
+    stale bucket the new batch empties is neither listed nor read."""
+    import json
+
+    state_dir = str(tmp_path / "state")
+    applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=4)
+
+    def apply(events, batch_id):
+        rows = [wal_row(lsn, op, before=b, after=a) for lsn, op, b, a, _ in events]
+        applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), batch_id)
+
+    inserts = [(k, "c", None, (k, f"v{k}"), None) for k in range(1, 7)]
+    apply(inserts, 0)
+    by_bucket: dict[int, list[int]] = {}
+    for r in applier.current_state().select("id", "creek_bucket").collect():
+        by_bucket.setdefault(r["creek_bucket"], []).append(r["id"])
+    bucket, keys = sorted(by_bucket.items())[0]
+
+    with open(os.path.join(state_dir, "_manifest.json")) as f:
+        version = json.load(f)["version"]
+    orphan = os.path.join(state_dir, f"v{version + 1:09d}", f"creek_bucket={bucket}")
+    spark.createDataFrame(
+        [(99, "stale", "0/63")], "id int, data string, _creek_lsn string"
+    ).write.parquet(orphan)
+
+    deletes = [(10 + i, "d", (k,), None, None) for i, k in enumerate(keys)]
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "dynamic")
+    try:
+        apply(deletes, 1)
+    finally:
+        spark.conf.set(conf, prev)
+
+    with open(os.path.join(state_dir, "_manifest.json")) as f:
+        assert str(bucket) not in json.load(f)["buckets"]
+    expected, _ = interpret(inserts + deletes)
+    st = applier.current_state()
+    got = {} if st is None else {r["id"]: r["data"] for r in st.collect()}
+    assert got == expected

@@ -99,6 +99,13 @@ def test_dedup_on_fence_new_content_raises(spark, sf_dir, tmp_path):
         sd.apply_batch(b1, 0)
     sd.apply_batch(b1, 1)  # the correctly-fenced next batch proceeds
     assert sd.last_batch_id() == 1
+    # compaction folds the index parts but keeps the fence's content print
+    pairs = sd.candidates().count()
+    sd.compact()
+    sd.apply_batch(b1, 1)  # replay still no-ops
+    assert sd.last_batch_id() == 1 and sd.candidates().count() == pairs
+    with pytest.raises(FenceContentError, match="content differs"):
+        sd.apply_batch(b0, 1)
 
 
 # -- StreamingAnnIndex -------------------------------------------------------

@@ -341,7 +341,8 @@ def test_generative_wire_decode_matches_interpreter(spark):
 
     from creek_spark.operators.cdc import latest_state
     from creek_spark.types.envelope import envelope_schema
-    from tests.test_cdc_differential import _interpret, _scenario
+    from tests.fixtures import interpret
+    from tests.test_cdc_differential import _scenario
 
     def render(ev):
         lsn, op, before, after, toast = ev
@@ -369,7 +370,7 @@ def test_generative_wire_decode_matches_interpreter(spark):
     rng = random.Random(77)
     for case in range(6):
         events = _scenario(rng, n_events=rng.randint(6, 24))
-        expected = _interpret(events)
+        expected, _ = interpret(events)
         # wire order: pgoutput delivers in LSN order (the transport is
         # ordered); duplicates redeliver the same bytes at the same LSN
         dec = PgOutputDecoder()

@@ -100,6 +100,20 @@ def test_batch_rewrites_only_touched_partitions(spark, tmp_path):
     assert sink.current().count() == _tier(mk(1, 5)).count() + _tier(mk(2, 5)).count()
 
 
+def test_old_layout_manifest_fails_with_remedy(spark, tmp_path):
+    """State from the older rollup layout (key ``parts``, ``v%07d``
+    dirs) is not read: the error names it and says how to recover."""
+    sink = _sink(spark, tmp_path)
+    os.makedirs(sink.state_dir, exist_ok=True)
+    with open(os.path.join(sink.state_dir, "_manifest.json"), "w") as f:
+        json.dump(
+            {"version": 1, "parts": {"2024-01-01": "v0000001"}, "last_batch_id": 0},
+            f,
+        )
+    with pytest.raises(ValueError, match="'parts'.*replay from the checkpoint"):
+        sink.current()
+
+
 @pytest.mark.slow
 def test_quantiles_from_streamed_rollup_match_batch(spark, sf_dir, tmp_path):
     """End-to-end: quantiles computed from the streamed tier equal those
