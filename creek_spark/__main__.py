@@ -176,7 +176,7 @@ def main(argv: list[str] | None = None, env: dict | None = None) -> int:
         snap = listener.snapshot()
         print(
             f"metrics: {snap['active_queries']} active, "
-            f"{len(snap['batches'])} batches processed",
+            f"{sum(q['batches'] for q in snap['queries'].values())} batches processed",
             file=sys.stderr,
         )
     finally:

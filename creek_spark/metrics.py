@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import threading
+from collections import deque
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -39,13 +40,28 @@ def observe_changes(wal: DataFrame, name: str = "creek_reads") -> tuple[DataFram
     return observed, obs
 
 
+# progress records a StreamMetricsListener keeps: a long-running daemon
+# holds the last batches for the rate gauges, not its whole history
+MAX_BATCHES = 256
+
+
+def _tally(queries: dict, batch: dict) -> None:
+    q = queries.setdefault(batch["id"], {"batches": 0, "input_rows": 0})
+    q["batches"] += 1
+    q["input_rows"] += batch["numInputRows"] or 0
+
+
 class StreamMetricsListener(StreamingQueryListener):
     """Captures per-batch rows/sec and watermark/lag from every streaming
     query in the session — creek_producer_pg_behind_time's analog is the
-    batch's (now − max event time) which Spark reports as watermark delta."""
+    batch's (now − max event time) which Spark reports as watermark delta.
+
+    Memory is bounded: per-query counters (batches, input rows) plus the
+    last ``MAX_BATCHES`` progress records."""
 
     def __init__(self):
-        self.progress: list[dict] = []
+        self.progress: deque[dict] = deque(maxlen=MAX_BATCHES)
+        self.queries: dict[str, dict] = {}
         self.active: set[str] = set()
         self._lock = threading.Lock()
 
@@ -55,16 +71,16 @@ class StreamMetricsListener(StreamingQueryListener):
 
     def onQueryProgress(self, event):
         p = event.progress
+        batch = {
+            "id": str(p.id),
+            "batchId": p.batchId,
+            "numInputRows": p.numInputRows,
+            "inputRowsPerSecond": p.inputRowsPerSecond,
+            "processedRowsPerSecond": p.processedRowsPerSecond,
+        }
         with self._lock:
-            self.progress.append(
-                {
-                    "id": str(p.id),
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "inputRowsPerSecond": p.inputRowsPerSecond,
-                    "processedRowsPerSecond": p.processedRowsPerSecond,
-                }
-            )
+            self.progress.append(batch)
+            _tally(self.queries, batch)
 
     def onQueryTerminated(self, event):
         with self._lock:
@@ -74,10 +90,13 @@ class StreamMetricsListener(StreamingQueryListener):
         pass
 
     def snapshot(self) -> dict:
+        """``batches`` holds the last MAX_BATCHES progress records,
+        ``queries`` every query's counters since the listener started."""
         with self._lock:
             return {
                 "active_queries": len(self.active),
                 "batches": list(self.progress),
+                "queries": {q: dict(c) for q, c in self.queries.items()},
             }
 
 
@@ -106,20 +125,21 @@ class MetricsServer:
 
     def render(self) -> str:
         snap = self.listener.snapshot()
+        queries = snap.get("queries")
+        if queries is None:  # a snapshot without counters: tally its batches
+            queries = {}
+            for b in snap["batches"]:
+                _tally(queries, b)
         lines = [
             "# TYPE creek_active_queries gauge",
             f"creek_active_queries {snap['active_queries']}",
             "# TYPE creek_batches_total counter",
-            f"creek_batches_total {len(snap['batches'])}",
+            f"creek_batches_total {sum(q['batches'] for q in queries.values())}",
         ]
-        totals: dict[str, int] = {}
-        last: dict[str, dict] = {}
-        for b in snap["batches"]:
-            totals[b["id"]] = totals.get(b["id"], 0) + (b["numInputRows"] or 0)
-            last[b["id"]] = b
+        last = {b["id"]: b for b in snap["batches"]}
         lines.append("# TYPE creek_input_rows_total counter")
-        for qid, n in sorted(totals.items()):
-            lines.append(f'creek_input_rows_total{{query="{qid}"}} {n}')
+        for qid, q in sorted(queries.items()):
+            lines.append(f'creek_input_rows_total{{query="{qid}"}} {q["input_rows"]}')
         for metric, key in (
             ("creek_input_rows_per_second", "inputRowsPerSecond"),
             ("creek_processed_rows_per_second", "processedRowsPerSecond"),

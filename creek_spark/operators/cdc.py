@@ -95,14 +95,27 @@ def expand_ops(wal: DataFrame) -> DataFrame:
             )
         )
     )
-    exploded = wal.select("*", F.posexplode(legs).alias("_leg_pos", "_leg"))
-    return (
-        exploded.drop("op", "before", "after")
-        .withColumn("op", F.col("_leg.op"))
-        .withColumn("before", F.col("_leg.before"))
-        .withColumn("after", F.col("_leg.after"))
-        .withColumn("_op_seq", F.col("_leg_pos"))
-        .drop("_leg", "_leg_pos")
+    rest = [c for c in wal.columns if c not in ("op", "before", "after")]
+    return wal.select(
+        *rest, F.posexplode(legs).alias("_leg_pos", "_leg")
+    ).select(
+        *rest,
+        F.col("_leg.op").alias("op"),
+        F.col("_leg.before").alias("before"),
+        F.col("_leg.after").alias("after"),
+        F.col("_leg_pos").alias("_op_seq"),
+    )
+
+
+def fold_input(changes: DataFrame) -> DataFrame:
+    """``changes`` cut to the five columns latest_state reads —
+    ``source`` cut to ``struct(lsn)``, ``op``, ``before``, ``after``,
+    ``unchanged_toast`` — raw, not expanded, so TOAST, u_pk and
+    truncate still resolve in a later fold (with_rows, the CdcApplier's
+    delta runs)."""
+    return changes.select(
+        F.struct(F.col("source.lsn").alias("lsn")).alias("source"),
+        "op", "before", "after", "unchanged_toast",
     )
 
 
@@ -110,8 +123,7 @@ def with_rows(changes: DataFrame, rows: DataFrame, lsn: Column) -> DataFrame:
     """``changes`` preceded by materialized ``rows`` as 'r' changes at
     ``lsn`` — how stored state (CdcApplier) and snapshot rows
     (sources.bootstrap) re-enter the per-key fold.  Both sides keep only
-    the five columns latest_state reads, ``source`` cut to
-    ``struct(lsn)``.
+    the five columns latest_state reads (:func:`fold_input`).
 
     Schema evolution (upstream ADD COLUMN): ``changes`` can be WIDER
     than ``rows`` — the reference publishes a new fingerprint and keeps
@@ -135,12 +147,7 @@ def with_rows(changes: DataFrame, rows: DataFrame, lsn: Column) -> DataFrame:
         ).alias("after"),
         F.lit(None).cast("array<string>").alias("unchanged_toast"),
     )
-    return as_changes.unionByName(
-        changes.select(
-            F.struct(F.col("source.lsn").alias("lsn")).alias("source"),
-            "op", "before", "after", "unchanged_toast",
-        )
-    )
+    return as_changes.unionByName(fold_input(changes))
 
 
 def latest_state(
@@ -205,36 +212,37 @@ def latest_state_at_lsn(
     w = Window.partitionBy(*[F.col(f"_key_{k}") for k in keys]).orderBy(
         F.col("_lsn_num").desc(), F.col("_op_seq").desc()
     )
-    ranked = df.withColumn("_rn", F.row_number().over(w))
-
     after_fields = [f.name for f in wal.schema["after"].dataType.fields]
     if handle_toast and "unchanged_toast" in wal.columns:
         # Carry unchanged-TOAST values forward: wrap each column in a struct
         # (so a genuine NULL is distinct from "unchanged"), null the wrapper
-        # on unchanged rows, then last(ignoreNulls) over the ascending
-        # window.  Same partitioning as the ranking window → one shuffle.
-        wa = Window.partitionBy(*[F.col(f"_key_{k}") for k in keys]).orderBy(
-            F.col("_lsn_num").asc(), F.col("_op_seq").asc()
-        )
-        resolved = ranked
-        for c in after_fields:
-            wrapped = F.when(
-                F.col("unchanged_toast").isNotNull()
-                & F.array_contains(F.col("unchanged_toast"), c),
-                F.lit(None),
-            ).otherwise(F.struct(F.col(f"after.{c}").alias("v")))
-            resolved = resolved.withColumn(
-                f"_res_{c}", F.last(wrapped, ignorenulls=True).over(wa)
-            )
-        final = resolved.filter((F.col("_rn") == 1) & (F.col("op") != "d"))
-        return final.select(
-            *[F.col(f"_res_{c}").getField("v").alias(c) for c in after_fields],
-            "_lsn_num",
-        )
-
+        # on unchanged rows, then take the first non-null wrapper in rank
+        # order over the key's whole partition — the newest value actually
+        # sent.  Same partitioning and order as the ranking → one shuffle,
+        # one sort, one Window operator.
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        resolved = [
+            F.first(
+                F.when(
+                    F.col("unchanged_toast").isNotNull()
+                    & F.array_contains(F.col("unchanged_toast"), c),
+                    F.lit(None),
+                ).otherwise(F.struct(F.col(f"after.{c}").alias("v"))),
+                ignorenulls=True,
+            ).over(whole).getField("v")
+            for c in after_fields
+        ]
+    else:
+        resolved = [F.col(f"after.{c}") for c in after_fields]
+    ranked = df.select(
+        *[r.alias(f"_res_{c}") for r, c in zip(resolved, after_fields)],
+        "_lsn_num",
+        "op",
+        F.row_number().over(w).alias("_rn"),
+    )
     final = ranked.filter((F.col("_rn") == 1) & (F.col("op") != "d"))
     return final.select(
-        *[F.col(f"after.{c}").alias(c) for c in after_fields], "_lsn_num"
+        *[F.col(f"_res_{c}").alias(c) for c in after_fields], "_lsn_num"
     )
 
 

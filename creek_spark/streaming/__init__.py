@@ -5,36 +5,46 @@ The reference's consumer loop (client.go StreamWAL → apply) maps to:
     foreachBatch(apply_cdc_batch) → materialized table state
 
 Correctness properties preserved (BASELINE.md):
-  * resume-exactness: checkpointing + an idempotent, whole-state
-    recompute-free MERGE per micro-batch (at-least-once input collapses in
-    the per-key LSN ranking).
-  * per-key ordering by numeric LSN survives any parallelism — each batch
-    applies only changes newer than the key's current LSN.
+  * resume-exactness: checkpointing + an idempotent append per
+    micro-batch (at-least-once input collapses in the per-key LSN
+    ranking of the fold).
+  * per-key ordering by numeric LSN survives any parallelism — the fold
+    keeps only changes newer than the key's stored LSN.
   * snapshot+stream bootstrap joins at a single (lsn, tx_id) point
     (sources.bootstrap) — the stream side then starts from header.lsn.
 
-On a cluster the sink would be Delta MERGE; locally we maintain a
-hash-bucketed parquet state directory (hive partitions on
-pmod(xxhash64(key), n_buckets)) — only buckets containing batch keys are
-rewritten per trigger, which keeps the same idempotence contract for tests
-while making per-batch cost O(|touched buckets|) instead of O(|state|).
-Visibility is transactional: each batch writes its touched buckets into
-a fresh version directory and publishes them with an atomic
+On a cluster the sink would be Delta MERGE; locally the state is
+merge-on-read, the shape of Spark's own HDFS state store (one delta
+file per micro-batch, a snapshot every N versions): a hash-bucketed
+parquet *base* (hive partitions on pmod(xxhash64(key), n_buckets)) plus
+an ordered list of delta *runs*.  Each trigger appends its raw changes
+as one run — an O(batch) write with no state read, no shuffle and no
+driver collect — and a read folds the base with the pending runs
+through the same latest_state operator the batch catalog uses.  Every
+``_COMPACT_VERSIONS`` runs, compaction folds them into the buckets they
+touch.  Visibility is transactional: each run or compaction lands in a
+fresh version directory and is published with an atomic
 `_manifest.json` swap (streaming/versioned.py, the Delta-log analog).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from creek_spark.functions.lsn import lsn_str
-from creek_spark.operators.cdc import latest_state_at_lsn, with_rows
-from creek_spark.streaming.versioned import VersionedStore, bounded_partition_values
+from creek_spark.operators.cdc import (
+    _key_cols_from_envelope,
+    fold_input,
+    latest_state_at_lsn,
+    with_rows,
+)
+from creek_spark.streaming.versioned import VersionedStore
 
-# Committed buckets spread over this many version dirs trigger an inline
-# fold of the whole state into the next version (see CdcApplier).
+# Pending runs that trigger a compaction; at compaction, committed
+# buckets spread over this many version dirs are all folded into the
+# next version (see CdcApplier).
 _COMPACT_VERSIONS = 8
 
 
@@ -57,32 +67,42 @@ def read_envelope_stream(
 
 class CdcApplier:
     """foreachBatch sink: maintains materialized table state under
-    ``state_dir`` by merging each micro-batch of envelope rows.
+    ``state_dir`` from micro-batches of envelope rows, merge-on-read.
 
-    Merge = the stored rows of the touched buckets, re-entering as 'r'
-    changes at their stored LSN (operators.cdc.with_rows), folded with
-    the new batch by latest_state; each surviving key keeps its winning
-    change's LSN.  Re-delivered batches are no-ops (same lsn loses to
-    itself), which is what makes at-least-once delivery safe.
+    Write: each micro-batch becomes one unpartitioned delta run (its
+    raw changes cut to operators.cdc.fold_input's five columns)
+    appended to the manifest of a streaming/versioned.py store — an
+    O(batch) write with no read of the state, no shuffle and no driver
+    collect.  Re-delivered batches append a duplicate run that the fold
+    absorbs (same lsn ties with itself), which is what makes
+    at-least-once delivery safe.
 
-    Scale design: state is hash-bucketed by key —
-    ``creek_bucket = pmod(xxhash64(keys), n_buckets)`` hive partitions —
-    and each micro-batch rewrites ONLY the buckets whose keys appear in
-    the batch, into a fresh version directory published by an atomic
-    ``_manifest.json`` swap (streaming/versioned.py): readers always see a
-    consistent committed snapshot, concurrent with writes.  Per-batch
-    cost is O(|touched buckets|), not O(|state|): a steady trickle of
-    changes no longer re-shuffles the whole table every trigger; version
-    sprawl is bounded by an inline compaction fold every
-    ``_COMPACT_VERSIONS`` generations.  On a real cluster the same
-    contract is Delta MERGE + OPTIMIZE; this layout keeps the incremental
-    property testable locally.  The only driver traffic is one bounded
-    collect of distinct bucket ids (≤ n_buckets ints) and one listing
-    of the version dir just written.
+    Read: :meth:`current_state` folds the buckets of the hash-bucketed
+    base (``creek_bucket = pmod(xxhash64(keys), n_buckets)`` hive
+    partitions) that the pending runs touch — each row re-entering as
+    an 'r' change at its stored LSN through operators.cdc.with_rows —
+    with those runs by latest_state; each surviving key keeps its
+    winning change's LSN.  Untouched buckets are carried as stored, and
+    with no run pending the base is returned as is.
 
-    ``envelope_schema`` is not read: stored rows take the ``after``
-    shape of each batch (with_rows).  The argument stays so that
-    existing positional calls still bind."""
+    Compaction: once ``_COMPACT_VERSIONS`` runs are pending (or on
+    :meth:`compact`), the same fold runs over the buckets the runs
+    touch — every committed bucket when a run holds a truncate, or when
+    committed buckets are spread over ``_COMPACT_VERSIONS`` version
+    dirs — and its output replaces those buckets in a fresh version
+    dir, published with no runs pending.  No step collects to the
+    driver: the buckets a run touches (≤ n_buckets ints) and whether it
+    truncates are observed on the run's own write and kept in the
+    manifest; compaction lists only the version dir it wrote.  A
+    batch whose schema differs from the pending runs' (upstream ADD
+    COLUMN) compacts them first, so every pending run shares one
+    schema.  Readers always see one committed manifest, concurrent
+    with writes; on a cluster the same contract is Delta MERGE +
+    OPTIMIZE.
+
+    ``envelope_schema`` is not read: runs keep each batch's own
+    schema.  The argument stays so that existing positional calls
+    still bind."""
 
     def __init__(
         self,
@@ -111,79 +131,118 @@ class CdcApplier:
         consistent snapshot regardless of concurrent apply_batch runs.
         After a schema-widening restart, buckets rewritten since the
         widening carry the new column and untouched ones read it as NULL
-        (ADD COLUMN semantics) instead of refusing a half-migrated state."""
-        return self._store.read(self._store.manifest())
+        (ADD COLUMN semantics) instead of refusing a half-migrated state.
+        Only the buckets the pending runs touch are folded; the others
+        are carried as stored."""
+        manifest = self._store.manifest()
+        if not self._store.runs(manifest):
+            return self._store.read(manifest)
+        touched = self._touched(manifest)
+        folded = self._fold(manifest, touched)
+        carried = self._store.read(manifest, set(manifest["buckets"]) - touched)
+        if carried is None:
+            return folded
+        return carried.unionByName(folded, allowMissingColumns=True)
+
+    @staticmethod
+    def _touched(manifest: dict) -> set[str]:
+        """The committed buckets the pending runs of ``manifest`` can
+        change: those holding their keys — all of them when one of the
+        runs truncates."""
+        if manifest["truncate"]:
+            return set(manifest["touched"]) | set(manifest["buckets"])
+        return set(manifest["touched"])
+
+    def _fold(self, manifest: dict, buckets: set[str]) -> DataFrame:
+        """The base buckets of ``manifest`` named in ``buckets`` folded
+        with its pending runs — the one merge, shared by the read and by
+        compaction."""
+        runs = self._store.read_runs(manifest)
+        base = self._store.read(manifest, buckets)
+        wal = runs
+        if base is not None:
+            wal = with_rows(runs, base.drop(self._bucket_col), F.col(self._lsn_col))
+        keys = self.key_cols or _key_cols_from_envelope(runs)
+        # the winning change's LSN is stored with the state so existing
+        # rows re-enter the next fold at their true position; base rows
+        # are never truncates, so without a truncating run the fold
+        # skips its watermark pass
+        return (
+            latest_state_at_lsn(wal, keys, handle_truncate=manifest["truncate"])
+            .withColumns({
+                self._lsn_col: lsn_str(F.coalesce(F.col("_lsn_num"), F.lit(0))),
+                self._bucket_col: self._bucket_of([F.col(k) for k in keys]),
+            })
+            .drop("_lsn_num")
+        )
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            # Buckets this batch touches: the after-image key (upserts) AND
-            # the before-image key (deletes, and the delete leg of u_pk —
-            # whose old key can live in a different bucket than the new);
-            # -1 marks a truncate, which discards every older row in
-            # EVERY bucket.  One pass over the batch.
-            b_after = F.when(
-                F.col("after").isNotNull(),
-                self._bucket_of([F.col(f"after.{k}") for k in self.key_cols]),
-            )
-            b_before = F.when(
-                F.col("before").isNotNull(),
-                self._bucket_of([F.col(f"before.{k}") for k in self.key_cols]),
-            )
-            b_trunc = F.when(F.col("op") == "t", F.lit(-1))
-            seen = bounded_partition_values(
-                batch.select(
-                    F.explode(F.array(b_after, b_before, b_trunc)).alias("b")
-                ).where(F.col("b").isNotNull()),
-                "b",
-                what="CdcApplier touched buckets",
-            )
-            has_trunc = -1 in seen
-            touched = {str(b) for b in seen if b != -1}
-            if not (touched or has_trunc):
-                return
-            manifest = self._store.manifest()
-            committed = manifest["buckets"] if manifest else {}
-            # The truncate touches every committed bucket; so does
-            # compaction: when committed buckets are spread over too many
-            # version dirs (long trickle of small batches), fold the whole
-            # state into this batch's version — the inline OPTIMIZE analog
-            # that bounds reader-side union width.
-            if has_trunc or len(set(committed.values())) >= _COMPACT_VERSIONS:
-                touched |= set(committed)
-            if not touched:
-                return
+        run = fold_input(batch)
+        manifest = self._store.manifest()
+        pending = self._store.run_schema(manifest)
+        if pending is not None and pending.simpleString() != run.schema.simpleString():
+            manifest = self._compact(manifest)
+        keys = self.key_cols or _key_cols_from_envelope(run)
+        # The buckets the run touches — the after-image key (upserts) AND
+        # the before-image key (deletes, and the delete leg of u_pk, whose
+        # old key can live in a different bucket than the new) — and
+        # whether it truncates, observed on the run's own write (no second
+        # pass, no collect job).  Compaction reads them from the manifest.
+        seen = Observation()
+        name = self._store.write_run(
+            run.observe(
+                seen,
+                *[
+                    F.collect_set(
+                        F.when(
+                            F.col(img).isNotNull(),
+                            self._bucket_of([F.col(f"{img}.{k}") for k in keys]),
+                        )
+                    ).alias(img)
+                    for img in ("after", "before")
+                ],
+                F.max(F.col("op") == "t").alias("truncate"),
+            ),
+            manifest,
+        )
+        got = seen.get
+        prior = manifest or {}  # without pending runs: no touched, no truncate
+        touched = set(prior.get("touched", ())) | {
+            str(b) for b in got["after"] + got["before"]
+        }
+        manifest = self._store.publish(
+            manifest, set(), set(),
+            runs=self._store.runs(manifest) + [name],
+            run_schema=run.schema,
+            touched=sorted(touched, key=int),
+            truncate=bool(prior.get("truncate") or got["truncate"]),
+        )
+        if len(manifest["runs"]) >= _COMPACT_VERSIONS:
+            self._compact(manifest)
 
-            subset = self._store.read(manifest, touched)
-            wal_in = batch
-            if subset is not None:
-                wal_in = with_rows(
-                    batch, subset.drop(self._bucket_col), F.col(self._lsn_col)
-                )
-            # the winning change's LSN is stored with the state so existing
-            # rows re-enter the next batch's merge at their true position
-            new_state = (
-                latest_state_at_lsn(wal_in, self.key_cols)
-                .withColumn(
-                    self._lsn_col,
-                    lsn_str(F.coalesce(F.col("_lsn_num"), F.lit(0))),
-                )
-                .drop("_lsn_num")
-                .withColumn(
-                    self._bucket_col,
-                    self._bucket_of([F.col(k) for k in self.key_cols]),
-                )
-            )
-            # Publish protocol (streaming/versioned.py): write this
-            # batch's touched buckets into a fresh version dir, swap the
-            # manifest, GC with one generation of retention.  Buckets
-            # whose last key was deleted produce zero rows — they are
-            # not in the written set and drop out of the manifest.
-            self._store.publish(
-                manifest, touched, self._store.write(new_state, manifest)
-            )
-        finally:
-            batch.unpersist()
+    def compact(self) -> None:
+        """Fold the pending runs into the base now (apply_batch does so
+        every ``_COMPACT_VERSIONS`` runs)."""
+        self._compact(self._store.manifest())
+
+    def _compact(self, manifest: dict | None) -> dict | None:
+        if not self._store.runs(manifest):
+            return manifest
+        touched = self._touched(manifest)
+        committed = manifest["buckets"]
+        # A base spread over too many version dirs (a long trickle of
+        # small compactions) is folded whole into this version — the
+        # OPTIMIZE analog that bounds reader-side union width.
+        if len(set(committed.values())) >= _COMPACT_VERSIONS:
+            touched |= set(committed)
+        # Buckets whose last key was deleted produce zero rows — they
+        # are not in the written set and drop out of the manifest.
+        written = (
+            self._store.write(self._fold(manifest, touched), manifest)
+            if touched
+            else set()
+        )
+        return self._store.publish(manifest, touched, written, sweep=True)
 
     def start(
         self,

@@ -214,14 +214,18 @@ class DynamicTables:
         each query resumes from (or creates) its own checkpoint.  This is
         the 'restart with the new table set' step; a long-running
         deployment would call it after every handle_command."""
-        queries = []
+        appliers, queries = [], []
         for qname in self.subscribed():
             safe = qname.replace(".", "_")
             ckpt = os.path.join(self.base_dir, "ckpt", safe)
-            q = self._applier(qname).start(self._table_stream(qname), ckpt)
-            queries.append(q)
+            appliers.append(self._applier(qname))
+            queries.append(appliers[-1].start(self._table_stream(qname), ckpt))
         for q in queries:
             q.awaitTermination(timeout_s)
+        # a drained table's state is left compacted: no run pending, so a
+        # plain parquet read of its state dir sees all of it
+        for applier in appliers:
+            applier.compact()
 
     def run_continuous(self, trigger_seconds: int = 1) -> None:
         """Start (or restart) one continuously-triggered query per

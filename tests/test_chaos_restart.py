@@ -177,11 +177,38 @@ def test_reader_sees_committed_snapshot_never_a_mix(spark, tmp_path):
     } == {1: "one-v2", 2: "two"}
 
 
+def test_reader_resolved_before_compaction_keeps_its_snapshot(spark, tmp_path):
+    """A DataFrame resolved while runs are pending keeps reading that
+    snapshot after a compaction folds them away: the runs and replaced
+    buckets it names are retained one generation."""
+    state_dir = str(tmp_path / "state")
+    applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=4)
+
+    def apply(events, batch_id):
+        rows = [wal_row(lsn, op, before=b, after=a) for lsn, op, b, a, _ in events]
+        applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), batch_id)
+
+    apply([(1, "c", None, (1, "one"), None), (2, "c", None, (2, "two"), None)], 0)
+    applier.compact()
+    apply([(3, "u", (1,), (1, "one-v2"), None), (4, "c", None, (3, "three"), None)], 1)
+    old_reader = applier.current_state()  # base + one pending run
+    snapshot = {1: "one-v2", 2: "two", 3: "three"}
+
+    applier.compact()
+    assert {r["id"]: r["data"] for r in old_reader.select("id", "data").collect()} == snapshot
+    apply([(5, "d", (2,), None, None)], 2)
+    assert {
+        r["id"]: r["data"]
+        for r in applier.current_state().select("id", "data").collect()
+    } == {1: "one-v2", 3: "three"}
+
+
 def test_orphan_next_version_dir_is_replaced_not_published(spark, tmp_path):
     """A crashed attempt can leave files in the version dir the next
-    publish points at.  The store overwrites that dir statically (even
-    when the session defaults to dynamic partition overwrite), so a
-    stale bucket the new batch empties is neither listed nor read."""
+    publish points at.  A run publish names only its run, and compaction
+    overwrites the dir it writes statically (even when the session
+    defaults to dynamic partition overwrite), so a stale bucket is
+    neither listed nor read — with runs pending or after compaction."""
     import json
 
     state_dir = str(tmp_path / "state")
@@ -191,32 +218,49 @@ def test_orphan_next_version_dir_is_replaced_not_published(spark, tmp_path):
         rows = [wal_row(lsn, op, before=b, after=a) for lsn, op, b, a, _ in events]
         applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), batch_id)
 
+    def manifest():
+        with open(os.path.join(state_dir, "_manifest.json")) as f:
+            return json.load(f)
+
+    def state():
+        st = applier.current_state()
+        return {} if st is None else {r["id"]: r["data"] for r in st.collect()}
+
     inserts = [(k, "c", None, (k, f"v{k}"), None) for k in range(1, 7)]
     apply(inserts, 0)
+    applier.compact()
     by_bucket: dict[int, list[int]] = {}
     for r in applier.current_state().select("id", "creek_bucket").collect():
         by_bucket.setdefault(r["creek_bucket"], []).append(r["id"])
     bucket, keys = sorted(by_bucket.items())[0]
 
-    with open(os.path.join(state_dir, "_manifest.json")) as f:
-        version = json.load(f)["version"]
-    orphan = os.path.join(state_dir, f"v{version + 1:09d}", f"creek_bucket={bucket}")
-    spark.createDataFrame(
-        [(99, "stale", "0/63")], "id int, data string, _creek_lsn string"
-    ).write.parquet(orphan)
+    # stale buckets in the dir the run publish points at and in the one
+    # the compaction after it writes
+    version = manifest()["version"]
+    orphans = [
+        os.path.join(state_dir, f"v{version + n:09d}", f"creek_bucket={bucket}")
+        for n in (1, 2)
+    ]
+    for orphan in orphans:
+        spark.createDataFrame(
+            [(99, "stale", "0/63")], "id int, data string, _creek_lsn string"
+        ).write.parquet(orphan)
 
     deletes = [(10 + i, "d", (k,), None, None) for i, k in enumerate(keys)]
+    expected, _ = interpret(inserts + deletes)
     conf = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, "dynamic")
     try:
         apply(deletes, 1)
+        assert manifest()["buckets"][str(bucket)] == f"v{version:09d}"
+        assert len(manifest()["runs"]) == 1
+        assert state() == expected
+        applier.compact()
     finally:
         spark.conf.set(conf, prev)
 
-    with open(os.path.join(state_dir, "_manifest.json")) as f:
-        assert str(bucket) not in json.load(f)["buckets"]
-    expected, _ = interpret(inserts + deletes)
-    st = applier.current_state()
-    got = {} if st is None else {r["id"]: r["data"] for r in st.collect()}
-    assert got == expected
+    assert str(bucket) not in manifest()["buckets"]
+    assert manifest()["runs"] == []
+    assert state() == expected
+    assert not any(os.path.exists(o) for o in orphans)

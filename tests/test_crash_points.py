@@ -1,0 +1,320 @@
+"""Crash-point harness: a process dies at any filesystem step of a
+publish, restarts on the same state dir, re-applies the batch it was
+handling (at-least-once delivery), and must end with exactly the state
+of the reference interpreter — nothing lost, nothing doubled.
+
+``creek_spark.fsio`` is the only filesystem seam the state stores use, so
+raising in place of its k-th call (or after the last one: the crash
+between the publish and the checkpoint commit) covers every point
+between a version-dir write, the manifest swap and GC.  Hypothesis draws
+the op sequence, the batch split and the crash point; the explicit
+examples pin one crash at each fsio step of a run publish and of a
+compaction publish (CdcApplier) and of a rollup publish
+(AdditiveRollupSink, which commits through the same store)."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import tempfile
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
+from creek_spark import fsio
+from creek_spark.streaming import CdcApplier
+from creek_spark.streaming.rollup import AdditiveRollupSink
+from tests.fixtures import ENV_SCHEMA, _lsn, interpret, wal_row
+
+_SETTINGS = settings(
+    max_examples=10,
+    deadline=None,
+    derandomize=True,
+    database=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+)
+
+
+class _Crash(Exception):
+    pass
+
+
+class _CrashAt:
+    """While active, counts the outermost ``creek_spark.fsio`` calls
+    (``join`` is pure and not a step) and raises :class:`_Crash` in
+    place of the ``k``-th.  ``hit`` names the call it replaced."""
+
+    def __init__(self, k: int):
+        self.k = k
+        self.calls = 0
+        self.hit: str | None = None
+        self._depth = 0
+        self._orig: dict = {}
+
+    def _wrap(self, name, fn):
+        def wrapped(*a, **kw):
+            if self._depth == 0:
+                self.calls += 1
+                if self.calls == self.k:
+                    self.hit = name
+                    raise _Crash(name)
+            self._depth += 1
+            try:
+                return fn(*a, **kw)
+            finally:
+                self._depth -= 1
+
+        return wrapped
+
+    def __enter__(self):
+        for name in fsio.__all__:
+            if name != "join":
+                self._orig[name] = getattr(fsio, name)
+                setattr(fsio, name, self._wrap(name, self._orig[name]))
+        return self
+
+    def __exit__(self, *exc):
+        for name, fn in self._orig.items():
+            setattr(fsio, name, fn)
+        return False
+
+
+def _crash_during(k: int, op) -> str:
+    """Run ``op`` with a crash in place of its k-th fsio call, or right
+    after it returns when it makes fewer calls; returns the crashed
+    step ('after' for the latter)."""
+    crash = _CrashAt(k)
+    try:
+        with crash:
+            op()
+    except _Crash:
+        return crash.hit
+    return "after"
+
+
+def _manifest(state_dir: str) -> dict:
+    """The committed manifest; version 0 before the first publish."""
+    path = os.path.join(state_dir, "_manifest.json")
+    if not os.path.exists(path):
+        return {"version": 0}
+    with open(path) as f:
+        return json.load(f)
+
+
+def _dirs_outside(state_dir: str, manifest: dict, part_col: str) -> set[str]:
+    """Partition and run dirs on disk that ``manifest`` neither reads nor
+    retains — what a crash leaked and GC missed."""
+    keep = {f"{v}/{part_col}={p}" for p, v in manifest["buckets"].items()}
+    keep |= set(manifest.get("runs", ())) | set(manifest["retain"])
+    found = set()
+    for ver in os.listdir(state_dir):
+        if ver.startswith("v") and os.path.isdir(os.path.join(state_dir, ver)):
+            found |= {f"{ver}/{sub}" for sub in os.listdir(os.path.join(state_dir, ver))
+                      if sub != "_SUCCESS" and not sub.startswith(".")}
+    return found - keep
+
+
+# -- CdcApplier --------------------------------------------------------
+
+_OPS = st.lists(
+    st.tuples(
+        st.sampled_from(["c", "u", "toast", "d", "u_pk", "t", "dup"]),
+        st.integers(1, 4),
+        st.integers(1, 4),
+    ),
+    min_size=2,
+    max_size=10,
+)
+
+
+def _events(ops) -> list[tuple]:
+    """(lsn, op, before, after, toast) events; 'dup' re-delivers an
+    earlier event verbatim."""
+    events = []
+    for i, (kind, k, k2) in enumerate(ops):
+        lsn, v = i + 1, f"v{i + 1}"
+        if kind == "dup":
+            if events:
+                events.append(events[(k * k2) % len(events)])
+            continue
+        events.append({
+            "c": (lsn, "c", None, (k, v), None),
+            "u": (lsn, "u", (k,), (k, v), None),
+            "toast": (lsn, "u", (k,), (k, None), ["data"]),
+            "d": (lsn, "d", (k,), None, None),
+            "u_pk": (lsn, "u_pk", (k,), (k2 + 4, v), None),
+            "t": (lsn, "t", None, None, None),
+        }[kind])
+    return events
+
+
+def _split(events, cuts) -> list[list]:
+    bounds = sorted({c % len(events) for c in cuts} - {0}) + [len(events)]
+    out, prev = [], 0
+    for b in bounds:
+        out.append(events[prev:b])
+        prev = b
+    return out
+
+
+def _cdc_state(applier) -> tuple[dict, dict]:
+    st_ = applier.current_state()
+    if st_ is None:
+        return {}, {}
+    rows = st_.select("id", "data", "_creek_lsn").collect()
+    return {r["id"]: r["data"] for r in rows}, {r["id"]: r["_creek_lsn"] for r in rows}
+
+
+_BASE = [("c", 1, 1), ("c", 2, 1), ("c", 3, 1), ("u", 1, 1)]
+_TRUNC = _BASE + [("t", 1, 1), ("c", 4, 1)]
+
+
+@given(
+    ops=_OPS,
+    cuts=st.lists(st.integers(1, 20), max_size=3),
+    j=st.integers(0, 3),
+    compact_first=st.booleans(),
+    orphan=st.booleans(),
+    phase=st.sampled_from(["run", "compact"]),
+    k=st.integers(1, 8),
+    expect=st.none(),
+)
+# one crash at each fsio step: a run publish on a fresh store (manifest
+# read, manifest swap, orphan sweep) and after a compaction (GC delete)
+@example(ops=_BASE, cuts=[], j=0, compact_first=False, orphan=False,
+         phase="run", k=1, expect="read_json_or_none")
+@example(ops=_BASE, cuts=[], j=0, compact_first=False, orphan=False,
+         phase="run", k=2, expect="write_json_atomic")
+@example(ops=_BASE, cuts=[], j=0, compact_first=False, orphan=True,
+         phase="run", k=4, expect="list_names")
+@example(ops=_BASE + [("d", 2, 1)], cuts=[4], j=1, compact_first=True,
+         orphan=False, phase="run", k=3, expect="delete")
+@example(ops=_BASE + [("d", 2, 1)], cuts=[4], j=1, compact_first=True,
+         orphan=False, phase="run", k=4, expect="after")
+# ... and at each step of a compaction publish: manifest read, listing of
+# the dir just written, manifest swap, then the orphan sweep's listings
+# and deletes (of a dir an earlier crash leaked)
+@example(ops=_TRUNC, cuts=[3], j=1, compact_first=True, orphan=True,
+         phase="compact", k=1, expect="read_json_or_none")
+@example(ops=_TRUNC, cuts=[3], j=1, compact_first=True, orphan=True,
+         phase="compact", k=2, expect="list_names")
+@example(ops=_TRUNC, cuts=[3], j=1, compact_first=True, orphan=True,
+         phase="compact", k=3, expect="write_json_atomic")
+@example(ops=_TRUNC, cuts=[3], j=1, compact_first=True, orphan=True,
+         phase="compact", k=5, expect="list_names")
+@example(ops=_TRUNC, cuts=[3], j=1, compact_first=True, orphan=True,
+         phase="compact", k=6, expect="delete")
+@example(ops=_TRUNC, cuts=[3], j=1, compact_first=True, orphan=True,
+         phase="compact", k=99, expect="after")
+@_SETTINGS
+def test_cdc_applier_survives_a_crash_at_every_fsio_step(
+    spark, ops, cuts, j, compact_first, orphan, phase, k, expect
+):
+    events = _events(ops)
+    batches = _split(events, cuts)
+    j %= len(batches)
+    state_dir = tempfile.mkdtemp(prefix="crash_cdc_")
+    try:
+        def apply(applier, i):
+            rows = [wal_row(lsn, op, before=b, after=a, toast=t)
+                    for lsn, op, b, a, t in batches[i]]
+            applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), i)
+
+        applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=4)
+        for i in range(j):
+            apply(applier, i)
+        if compact_first:
+            applier.compact()
+        if orphan:
+            # a run dir no manifest names, leaked by an earlier crash
+            os.makedirs(os.path.join(state_dir, "v000000000", "_run"))
+        if phase == "run":
+            hit = _crash_during(k, lambda: apply(applier, j))
+        else:
+            apply(applier, j)
+            hit = _crash_during(k, applier.compact)
+        assert expect is None or hit == expect, (hit, expect)
+
+        # restart: a fresh applier on the same state dir, the crashed
+        # batch re-delivered, then the rest of the stream
+        applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=4)
+        for i in range(j, len(batches)):
+            apply(applier, i)
+        expected, last = interpret(events)
+        expected_lsn = {key: _lsn(lsn) for key, lsn in last.items()}
+        assert _cdc_state(applier) == (expected, expected_lsn)
+        applier.compact()
+        assert _cdc_state(applier) == (expected, expected_lsn)
+        manifest = _manifest(state_dir)
+        assert manifest["runs"] == []
+        assert not _dirs_outside(state_dir, manifest, "creek_bucket")
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)
+
+
+# -- AdditiveRollupSink ------------------------------------------------
+
+_DAYS = ["2024-01-01", "2024-01-02", "2024-01-03"]
+_CELLS = st.lists(
+    st.tuples(st.integers(0, 2), st.sampled_from(["a", "b"]), st.integers(1, 9)),
+    min_size=1,
+    max_size=4,
+)
+# three batches that all land on day 1: the third publish GCs the first
+_SAME_DAY = [[(0, "a", 1)], [(0, "a", 2)], [(0, "b", 3)]]
+
+
+@given(
+    batches=st.lists(_CELLS, min_size=1, max_size=3),
+    j=st.integers(0, 2),
+    k=st.integers(1, 6),
+    expect=st.none(),
+)
+# one crash at each fsio step of a rollup publish: manifest read, listing
+# of the dir just written, manifest swap, GC delete — and after it
+@example(batches=_SAME_DAY, j=2, k=1, expect="read_json_or_none")
+@example(batches=_SAME_DAY, j=2, k=2, expect="list_names")
+@example(batches=_SAME_DAY, j=2, k=3, expect="write_json_atomic")
+@example(batches=_SAME_DAY, j=2, k=4, expect="delete")
+@example(batches=_SAME_DAY, j=2, k=5, expect="after")
+@settings(_SETTINGS, max_examples=4)
+def test_rollup_sink_survives_a_crash_at_every_fsio_step(spark, batches, j, k, expect):
+    j %= len(batches)
+    state_dir = tempfile.mkdtemp(prefix="crash_rollup_")
+    try:
+        def apply(sink, i):
+            rows = [(_DAYS[d], key, n) for d, key, n in batches[i]]
+            sink.apply_batch(
+                spark.createDataFrame(rows, "day string, key string, n long"), i
+            )
+
+        def open_sink():
+            return AdditiveRollupSink(spark, state_dir, ["day", "key"], ["n"], "day")
+
+        sink = open_sink()
+        for i in range(j):
+            apply(sink, i)
+        hit = _crash_during(k, lambda: apply(sink, j))
+        assert expect is None or hit == expect, (hit, expect)
+
+        # restart: the re-delivered batch keeps its id, so the fence
+        # drops it when its publish had landed before the crash
+        sink = open_sink()
+        crashed_version = _manifest(state_dir)["version"]
+        for i in range(j, len(batches)):
+            apply(sink, i)
+        expected: dict = {}
+        for cells in batches:
+            for d, key, n in cells:
+                expected[(_DAYS[d], key)] = expected.get((_DAYS[d], key), 0) + n
+        got = {(r["day"], r["key"]): r["n"] for r in sink.current().collect()}
+        assert got == expected
+        assert sink.last_batch_id() == len(batches) - 1
+        manifest = _manifest(state_dir)
+        # a crash leaks dirs only until the restarted store's first
+        # publish sweeps them
+        if manifest["version"] > crashed_version:
+            assert not _dirs_outside(state_dir, manifest, "day")
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)

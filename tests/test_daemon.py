@@ -139,6 +139,45 @@ def test_metrics_server_prometheus_endpoint():
         srv.stop()
 
 
+def test_stream_metrics_listener_memory_is_bounded():
+    """A long-running daemon's listener keeps per-query counters plus the
+    last MAX_BATCHES progress records: 10k progress events leave its
+    memory and its snapshot() at a fixed size, and the counters exact."""
+    import tracemalloc
+    from types import SimpleNamespace
+
+    from creek_spark.metrics import MAX_BATCHES, MetricsServer, StreamMetricsListener
+
+    listener = StreamMetricsListener()
+
+    def feed(lo, hi):
+        for i in range(lo, hi):
+            listener.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+                id=f"q{i % 3}", batchId=i // 3, numInputRows=i % 7,
+                inputRowsPerSecond=1.0, processedRowsPerSecond=2.0,
+            )))
+
+    feed(0, 2 * MAX_BATCHES)
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        feed(2 * MAX_BATCHES, 10_000)
+        grown = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+    assert grown < 64 * 1024, grown
+
+    snap = listener.snapshot()
+    assert len(snap["batches"]) == MAX_BATCHES
+    assert snap["batches"][-1]["batchId"] == 9_999 // 3
+    assert sum(q["batches"] for q in snap["queries"].values()) == 10_000
+    assert sum(q["input_rows"] for q in snap["queries"].values()) == sum(
+        i % 7 for i in range(10_000)
+    )
+    body = MetricsServer(listener, port=0).render()
+    assert "creek_batches_total 10000" in body
+
+
 def test_daemon_transcript_ingestion_end_to_end(spark, tmp_path):
     """--transcript: the daemon ingests a recorded replication session
     (schema auto-derived from the stream's Relation declarations and

@@ -122,8 +122,11 @@ def _parquet_file_hashes(state_dir):
 
 
 def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
-    """Incremental state contract: a micro-batch touching one key leaves
-    every other bucket's parquet files byte-identical on disk."""
+    """Incremental state contract: a micro-batch adds exactly one delta
+    run and leaves every base file byte-identical on disk; compaction
+    then rewrites only the bucket the run touched."""
+    import json
+
     from tests.fixtures import wal_row
 
     src = str(tmp_path / "wal_b")
@@ -132,13 +135,23 @@ def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
     n_buckets = 8
     applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=n_buckets)
 
+    def manifest():
+        with open(os.path.join(state_dir, "_manifest.json")) as f:
+            return json.load(f)
+
+    def base_files():
+        return {k: v for k, v in _parquet_file_hashes(state_dir).items()
+                if "creek_bucket=" in k}
+
     _write_batch(spark, other_wal_events(), src)
     q = applier.start(read_envelope_stream(spark, src, ENV_SCHEMA), ckpt)
     q.awaitTermination(120)
+    applier.compact()
     st1 = state_dict(applier.current_state().select("id", "data"))
     assert st1 == OTHER_EXPECTED
 
-    before = _parquet_file_hashes(state_dir)
+    before = base_files()
+    before_all = set(_parquet_file_hashes(state_dir))
     # batch 2: update only id=1
     _write_batch(spark, [wal_row(20, "u", before=(1,), after=(1, "one-v4"))], src)
     q2 = applier.start(read_envelope_stream(spark, src, ENV_SCHEMA), ckpt)
@@ -146,7 +159,17 @@ def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
     st2 = state_dict(applier.current_state().select("id", "data"))
     assert st2 == {**OTHER_EXPECTED, 1: "one-v4"}
 
-    after = _parquet_file_hashes(state_dir)
+    # before compaction: every base file is byte-identical, and the
+    # batch's only new files are its one run
+    assert base_files() == before
+    (run,) = manifest()["runs"]
+    added = set(_parquet_file_hashes(state_dir)) - before_all
+    assert added and all(k.startswith(run + os.sep) for k in added)
+
+    applier.compact()
+    assert manifest()["runs"] == []
+    assert state_dict(applier.current_state().select("id", "data")) == st2
+    after = base_files()
     touched_bucket = spark.range(1).select(
         F.pmod(F.xxhash64(F.lit(1).cast("int")), F.lit(n_buckets)).cast("int")
     ).collect()[0][0]
@@ -159,6 +182,77 @@ def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
     assert {k: v for k, v in before.items() if prefix in k} != {
         k: v for k, v in after.items() if prefix in k
     }
+
+
+def test_cdc_truncate_inside_a_pending_run(spark, tmp_path):
+    """A truncate in a run that is not yet compacted discards every
+    older row — base rows and rows of earlier runs alike — on read, and
+    compaction agrees."""
+    from tests.fixtures import interpret, wal_row
+
+    applier = CdcApplier(spark, str(tmp_path / "state"), ["id"], ENV_SCHEMA, n_buckets=4)
+    batches = [
+        [(1, "c", None, (1, "one"), None), (2, "c", None, (2, "two"), None)],
+        [(3, "c", None, (3, "three"), None)],
+        [(4, "u", (2,), (2, "two-v2"), None), (5, "t", None, None, None),
+         (6, "c", None, (4, "four"), None)],
+        [(7, "c", None, (1, "one-again"), None)],
+    ]
+    for i, events in enumerate(batches):
+        rows = [wal_row(lsn, op, before=b, after=a) for lsn, op, b, a, _ in events]
+        applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), i)
+        if i == 0:
+            applier.compact()  # batch 0 is base, the rest pending runs
+    expected, _ = interpret([e for events in batches for e in events])
+    assert expected == {4: "four", 1: "one-again"}
+    assert state_dict(applier.current_state().select("id", "data")) == expected
+    applier.compact()
+    assert state_dict(applier.current_state().select("id", "data")) == expected
+
+
+def test_cdc_add_column_between_pending_runs(spark, tmp_path):
+    """Upstream ADD COLUMN between two pending runs: the widened batch
+    folds the narrower runs into the base before its own run is
+    published, so a read never drops the added column, and the rows
+    that predate it read it as NULL."""
+    import json
+
+    from creek_spark.types import envelope_schema
+    from creek_spark.types.pgtypes import PGColumn, PGRelation, pg_relation_to_struct
+    from tests.fixtures import wal_row
+
+    state_dir = str(tmp_path / "state")
+    applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=4)
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(1, "c", after=(1, "one")), wal_row(2, "c", after=(2, "two"))],
+        schema=ENV_SCHEMA,
+    ), 0)
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(3, "u", before=(1,), after=(1, "one-v2"))], schema=ENV_SCHEMA
+    ), 1)
+
+    env2 = envelope_schema(pg_relation_to_struct(PGRelation(
+        namespace="public", name="other",
+        columns=[PGColumn("id", "int4", flags=1), PGColumn("data", "text"),
+                 PGColumn("score", "int4")],
+    )))
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(4, "c", after=(3, "three", 30)),
+         wal_row(5, "u", before=(2,), after=(2, "two-v2", 20))],
+        schema=env2,
+    ), 2)
+    with open(os.path.join(state_dir, "_manifest.json")) as f:
+        manifest = json.load(f)
+    assert len(manifest["runs"]) == 1  # the narrower runs were compacted
+    expected = {1: ("one-v2", None), 2: ("two-v2", 20), 3: ("three", 30)}
+
+    def read():
+        return {r["id"]: (r["data"], r["score"]) for r in
+                applier.current_state().select("id", "data", "score").collect()}
+
+    assert read() == expected
+    applier.compact()
+    assert read() == expected
 
 
 def test_cdc_applier_delete_empties_bucket(spark, tmp_path):
