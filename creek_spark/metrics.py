@@ -45,12 +45,6 @@ def observe_changes(wal: DataFrame, name: str = "creek_reads") -> tuple[DataFram
 MAX_BATCHES = 256
 
 
-def _tally(queries: dict, batch: dict) -> None:
-    q = queries.setdefault(batch["id"], {"batches": 0, "input_rows": 0})
-    q["batches"] += 1
-    q["input_rows"] += batch["numInputRows"] or 0
-
-
 class StreamMetricsListener(StreamingQueryListener):
     """Captures per-batch rows/sec and watermark/lag from every streaming
     query in the session — creek_producer_pg_behind_time's analog is the
@@ -80,7 +74,9 @@ class StreamMetricsListener(StreamingQueryListener):
         }
         with self._lock:
             self.progress.append(batch)
-            _tally(self.queries, batch)
+            q = self.queries.setdefault(batch["id"], {"batches": 0, "input_rows": 0})
+            q["batches"] += 1
+            q["input_rows"] += batch["numInputRows"] or 0
 
     def onQueryTerminated(self, event):
         with self._lock:
@@ -125,11 +121,7 @@ class MetricsServer:
 
     def render(self) -> str:
         snap = self.listener.snapshot()
-        queries = snap.get("queries")
-        if queries is None:  # a snapshot without counters: tally its batches
-            queries = {}
-            for b in snap["batches"]:
-                _tally(queries, b)
+        queries = snap["queries"]
         lines = [
             "# TYPE creek_active_queries gauge",
             f"creek_active_queries {snap['active_queries']}",

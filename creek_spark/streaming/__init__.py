@@ -75,7 +75,8 @@ class CdcApplier:
     O(batch) write with no read of the state, no shuffle and no driver
     collect.  Re-delivered batches append a duplicate run that the fold
     absorbs (same lsn ties with itself), which is what makes
-    at-least-once delivery safe.
+    at-least-once delivery safe.  A batch that touches no key and does
+    not truncate publishes nothing.
 
     Read: :meth:`current_state` folds the buckets of the hash-bucketed
     base (``creek_bucket = pmod(xxhash64(keys), n_buckets)`` hive
@@ -206,10 +207,14 @@ class CdcApplier:
             manifest,
         )
         got = seen.get
+        hit = {str(b) for b in got["after"] + got["before"]}
+        if not (hit or got["truncate"]):
+            # nothing to fold (a batch of another table's WAL files, say):
+            # the unpublished run is overwritten by the next write or
+            # removed by the next sweep
+            return
         prior = manifest or {}  # without pending runs: no touched, no truncate
-        touched = set(prior.get("touched", ())) | {
-            str(b) for b in got["after"] + got["before"]
-        }
+        touched = set(prior.get("touched", ())) | hit
         manifest = self._store.publish(
             manifest, set(), set(),
             runs=self._store.runs(manifest) + [name],

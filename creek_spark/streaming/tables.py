@@ -220,12 +220,13 @@ class DynamicTables:
             ckpt = os.path.join(self.base_dir, "ckpt", safe)
             appliers.append(self._applier(qname))
             queries.append(appliers[-1].start(self._table_stream(qname), ckpt))
-        for q in queries:
-            q.awaitTermination(timeout_s)
         # a drained table's state is left compacted: no run pending, so a
-        # plain parquet read of its state dir sees all of it
-        for applier in appliers:
-            applier.compact()
+        # plain parquet read of its state dir sees all of it.  A query
+        # still running at the timeout keeps its pending runs: compacting
+        # beside its foreachBatch would race it for the next version dir.
+        for applier, q in zip(appliers, queries):
+            if q.awaitTermination(timeout_s):
+                applier.compact()
 
     def run_continuous(self, trigger_seconds: int = 1) -> None:
         """Start (or restart) one continuously-triggered query per

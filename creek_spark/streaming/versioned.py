@@ -36,6 +36,7 @@ the caller asks for it (CDC compaction).
 from __future__ import annotations
 
 import re
+import threading
 from contextlib import contextmanager
 from urllib.parse import unquote
 
@@ -74,22 +75,33 @@ def bounded_partition_values(
     return {r[0] for r in rows}
 
 
+_DISCOVERY_LOCK = threading.Lock()
+
+
 @contextmanager
 def _listing_on_driver(spark: SparkSession):
     """Reads opened inside list their paths on the driver.  A store read
     names every partition dir it opens — one per live partition, a few
     dozen for CDC buckets — and above Spark's parallel-discovery
     threshold (32 paths) the listing would run as a Spark job whose
-    scheduling costs more than the listing itself."""
-    prev = spark.conf.get(_DISCOVERY_THRESHOLD, None)
-    spark.conf.set(_DISCOVERY_THRESHOLD, str(MAX_DRIVER_PARTITION_VALUES))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_DISCOVERY_THRESHOLD)
-        else:
-            spark.conf.set(_DISCOVERY_THRESHOLD, prev)
+    scheduling costs more than the listing itself.
+
+    This mutates session state: the threshold is raised on ``spark``
+    for the duration and then put back.  Store reads from several
+    threads (one query per table, concurrent readers) serialize on a
+    lock so none saves another's raised value as the one to restore;
+    a read outside any store that runs meanwhile also lists on the
+    driver."""
+    with _DISCOVERY_LOCK:
+        prev = spark.conf.get(_DISCOVERY_THRESHOLD, None)
+        spark.conf.set(_DISCOVERY_THRESHOLD, str(MAX_DRIVER_PARTITION_VALUES))
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(_DISCOVERY_THRESHOLD)
+            else:
+                spark.conf.set(_DISCOVERY_THRESHOLD, prev)
 
 
 def _vdir(version: int) -> str:

@@ -120,6 +120,7 @@ def test_metrics_server_prometheus_endpoint():
                 {"id": "q1", "batchId": 1, "numInputRows": 7,
                  "inputRowsPerSecond": 3.5, "processedRowsPerSecond": 14.0},
             ],
+            "queries": {"q1": {"batches": 2, "input_rows": 17}},
         }
     )
     srv = MetricsServer(fake, port=0, extra=lambda: {"creek_subscriptions": 3})

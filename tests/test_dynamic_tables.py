@@ -99,6 +99,32 @@ def test_add_remove_table_mid_stream(spark, tmp_path):
     assert _as_dict(dyn.state("extra")) == {1: "x-one-v2", 2: "x-two"}
 
 
+def test_run_available_compacts_only_terminated_queries(spark, tmp_path, monkeypatch):
+    """A table whose query is still draining at the timeout is not
+    compacted: compaction beside a live foreachBatch would race it for
+    the next version dir.  A table whose query finished is."""
+    from types import SimpleNamespace
+
+    dyn = DynamicTables(spark, str(tmp_path / "wal"), str(tmp_path / "cdc"), ENV_SCHEMA)
+    dyn.add_table("public.done", ROW_SCHEMA, ["id"])
+    dyn.add_table("public.slow", ROW_SCHEMA, ["id"])
+    compacted = []
+
+    def applier(qname):
+        stopped = qname == "public.done"
+        return SimpleNamespace(
+            start=lambda stream, ckpt: SimpleNamespace(
+                awaitTermination=lambda timeout: stopped
+            ),
+            compact=lambda: compacted.append(qname),
+        )
+
+    monkeypatch.setattr(dyn, "_applier", applier)
+    monkeypatch.setattr(dyn, "_table_stream", lambda qname: None)
+    dyn.run_available(timeout_s=1)
+    assert compacted == ["public.done"]
+
+
 def test_command_parsing_and_persistence(spark, tmp_path):
     wal = str(tmp_path / "wal")
     base = str(tmp_path / "cdc")

@@ -255,6 +255,56 @@ def test_cdc_add_column_between_pending_runs(spark, tmp_path):
     assert read() == expected
 
 
+def test_cdc_empty_batch_leaves_manifest_unchanged(spark, tmp_path):
+    """A batch with no rows for this table (several tables share one WAL
+    dir, each query filtering by table) publishes nothing: the manifest
+    is byte-identical and no run is pending, and the next real batch
+    still lands on top of it."""
+    from tests.fixtures import wal_row
+
+    state_dir = str(tmp_path / "state")
+    applier = CdcApplier(spark, state_dir, ["id"], ENV_SCHEMA, n_buckets=4)
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(1, "c", after=(1, "one"))], schema=ENV_SCHEMA), 0)
+    applier.compact()
+    path = os.path.join(state_dir, "_manifest.json")
+    with open(path, "rb") as f:
+        before = f.read()
+
+    applier.apply_batch(spark.createDataFrame([], schema=ENV_SCHEMA), 1)
+    with open(path, "rb") as f:
+        assert f.read() == before
+    assert state_dict(applier.current_state().select("id", "data")) == {1: "one"}
+
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(2, "c", after=(2, "two"))], schema=ENV_SCHEMA), 2)
+    assert state_dict(applier.current_state().select("id", "data")) == {
+        1: "one", 2: "two"
+    }
+
+
+def test_concurrent_store_reads_restore_the_discovery_threshold(spark, tmp_path):
+    """Store reads raise Spark's parallel-discovery threshold while they
+    list; reads from several threads at once (one query per table,
+    concurrent readers) still leave the session's own value in place."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from creek_spark.streaming.versioned import _DISCOVERY_THRESHOLD
+    from tests.fixtures import wal_row
+
+    applier = CdcApplier(spark, str(tmp_path / "state"), ["id"], ENV_SCHEMA, n_buckets=4)
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(i, "c", after=(i, f"v{i}")) for i in range(1, 9)], schema=ENV_SCHEMA), 0)
+    applier.compact()
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(9, "u", before=(1,), after=(1, "v9"))], schema=ENV_SCHEMA), 1)
+    assert spark.conf.get(_DISCOVERY_THRESHOLD, None) is None
+    with ThreadPoolExecutor(4) as pool:
+        frames = list(pool.map(lambda _: applier.current_state(), range(12)))
+    assert spark.conf.get(_DISCOVERY_THRESHOLD, None) is None
+    assert state_dict(frames[-1].select("id", "data"))[1] == "v9"
+
+
 def test_cdc_applier_delete_empties_bucket(spark, tmp_path):
     """A batch deleting a bucket's last key must remove the bucket dir —
     dynamic partition overwrite alone would leave the stale rows."""
