@@ -213,7 +213,7 @@ def semantic_dedup(
     base = (
         df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
         .join(asg, "_id")
-        .withColumn("_norm_sq", _exact_dot(F.col("_vec"), F.col("_vec")))
+        .withColumn("_norm_sq", _exact_dot("_vec", "_vec"))
     )
     a = base.select(
         F.col("_id").alias("id_a"),
@@ -232,7 +232,7 @@ def semantic_dedup(
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cos_sim",
-            _exact_dot(F.col("_va"), F.col("_vb")).cast("double")
+            _exact_dot("_va", "_vb").cast("double")
             / (
                 F.sqrt(F.col("_na").cast("double"))
                 * F.sqrt(F.col("_nb").cast("double"))

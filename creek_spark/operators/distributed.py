@@ -240,7 +240,7 @@ def rank_pick(
         work = register_cache(work)
     # Everything below `work` runs on the ALIASED names (_sv/_tv/_bkt and
     # the group keys), so it is spelled as single-parse SQL expression
-    # strings (round 13, guide §5 — the wave-4 `_exact_dot_sql` move
+    # strings (round 13, guide §5 — the wave-4 `_EXACT_DOT` move
     # applied to the summary pipeline): the Column-API form cost one py4j
     # socket round trip PER expression node — ~1000 round trips ≈
     # 0.3–1.9 s of driver time per rank_pick call, rebuilt on every

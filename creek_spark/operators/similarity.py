@@ -19,7 +19,7 @@ shuffles the corpus once on bucket id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from creek_spark.functions.vectors import cosine_similarity
@@ -99,10 +99,10 @@ def cosine_topk(
         )
         .withColumn(
             "cos_sim",
-            _exact_dot(F.col("_qv"), F.col("_cv")).cast("double")
+            _exact_dot("_qv", "_cv").cast("double")
             / (
-                F.sqrt(_exact_dot(F.col("_qv"), F.col("_qv")).cast("double"))
-                * F.sqrt(_exact_dot(F.col("_cv"), F.col("_cv")).cast("double"))
+                F.sqrt(_exact_dot("_qv", "_qv").cast("double"))
+                * F.sqrt(_exact_dot("_cv", "_cv").cast("double"))
             ),
         )
     )
@@ -164,38 +164,36 @@ def cosine_topk_fast(
     )
 
 
-def _exact_dot(a, b):
-    """Exact decimal dot product of two float arrays, fully inside
-    whole-stage codegen (zip_with + aggregate fold, no explode/shuffle).
-    Decimal addition is associative/commutative, so the fold order does
-    not affect the result — bit-identical to an ANSI-SQL decimal SUM."""
-    prods = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast("decimal(25,12)")
-    )
-    # precision 25 (not 38): at 38, Spark's a+b yields (38,11) — a scale
-    # truncation; at 25 the sum is (26,12) exact and the cast back to
-    # (25,12) is lossless (13 integer digits ≫ any bounded-norm dot).
-    return F.aggregate(
-        prods,
-        F.lit(0).cast("decimal(25,12)"),
-        lambda acc, x: (acc + x).cast("decimal(25,12)"),
-    )
+# The exact decimal dot product of float arrays {a} and {b}: each product
+# quantized to DECIMAL(25,12), summed by an aggregate fold fully inside
+# whole-stage codegen (no explode/shuffle).  Decimal addition is
+# associative/commutative, so the fold order does not affect the result —
+# bit-identical to an ANSI-SQL decimal SUM.  Precision 25 (not 38): at 38,
+# Spark's a+b yields (38,11) — a scale truncation; at 25 the sum is
+# (26,12) exact and the cast back to (25,12) is lossless (13 integer
+# digits ≫ any bounded-norm dot).  Spelled as SQL because a Column-API
+# lambda tree costs one py4j round trip per node (the PQ LUT builds m of
+# these per search); one string is one round trip + JVM parse, and the
+# SQL-built expressions below embed it.
+_EXACT_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> "
+    "CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(25,12))), "
+    "CAST(0 AS DECIMAL(25,12)), "
+    "(acc, x) -> CAST(acc + x AS DECIMAL(25,12)))"
+)
 
 
-def _exact_dot_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`_exact_dot` — MUST stay in lockstep with
-    it (gated equal-result in tests/test_similarity.py).  Exists because
-    a Column-API lambda-HOF tree costs one py4j round trip per node and
-    the PQ LUT builds m of these per call (~0.6 s of driver time per
-    search); one ``F.expr`` string is a single round trip + JVM parse,
-    analyzed to the identical Catalyst expression (every intermediate is
-    explicitly CAST in both forms)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        "CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(25,12))), "
-        "CAST(0 AS DECIMAL(25,12)), "
-        "(acc, x) -> CAST(acc + x AS DECIMAL(25,12)))"
-    )
+def _exact_dot(a: str, b: str) -> Column:
+    """:data:`_EXACT_DOT` over the array columns (or SQL expressions)
+    named ``a`` and ``b``."""
+    return F.expr(_EXACT_DOT.format(a=a, b=b))
+
+
+def _cos_sql(dot: str, qn: str, cn: str) -> str:
+    """SQL cosine of a pair from its dot and its two norm-squares; NULL
+    when either norm is zero (see :func:`_pair_cos`)."""
+    denom = f"(SQRT(CAST({qn} AS DOUBLE)) * SQRT(CAST({cn} AS DOUBLE)))"
+    return f"CASE WHEN {denom} != 0.0D THEN CAST({dot} AS DOUBLE) / {denom} END"
 
 
 def embedding_near_dups(
@@ -221,7 +219,7 @@ def embedding_near_dups(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
         F.col(block_col).alias("_blk"),
-    ).withColumn("_norm_sq", _exact_dot(F.col("_vec"), F.col("_vec")))
+    ).withColumn("_norm_sq", _exact_dot("_vec", "_vec"))
     a = base.select(
         F.col("_id").alias("id_a"),
         F.col("_vec").alias("_va"),
@@ -239,7 +237,7 @@ def embedding_near_dups(
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cos_sim",
-            _exact_dot(F.col("_va"), F.col("_vb")).cast("double")
+            _exact_dot("_va", "_vb").cast("double")
             / (
                 F.sqrt(F.col("_na").cast("double"))
                 * F.sqrt(F.col("_nb").cast("double"))
@@ -297,10 +295,11 @@ def hyperplane_sign_bits(vec_col, dim: int, n_planes: int = 8):
     return sig.cast("int")
 
 
-def _pair_cos(qv, cv, qn, cn, exact: bool):
-    """Cosine of a pair.  exact=True: decimal dot over precomputed decimal
-    norm-squares — bit-reproducible in any ANSI-SQL engine.  exact=False:
-    double fold (fast path); qn/cn are ignored (None).
+def _pair_cos(qv: str, cv: str, qn: str | None, cn: str | None, exact: bool):
+    """Cosine of the pair of vector columns named ``qv``/``cv``.
+    exact=True: decimal dot over the precomputed decimal norm-squares
+    named ``qn``/``cn`` — bit-reproducible in any ANSI-SQL engine.
+    exact=False: double fold (fast path); qn/cn are ignored (None).
 
     A zero denominator (either side zero-norm) yields NULL — the
     documented exact-path semantics for undefined cosine ("zero rows
@@ -319,10 +318,7 @@ def _pair_cos(qv, cv, qn, cn, exact: bool):
     On any zero-free corpus the guard is value-invariant (the branch
     is never taken), so oracle bit-parity is untouched."""
     if exact:
-        denom = F.sqrt(qn.cast("double")) * F.sqrt(cn.cast("double"))
-        return F.when(
-            denom != F.lit(0.0), _exact_dot(qv, cv).cast("double") / denom
-        )
+        return F.expr(_cos_sql(_EXACT_DOT.format(a=qv, b=cv), qn, cn))
     return cosine_similarity(qv, cv)
 
 
@@ -346,7 +342,7 @@ def ivf_centroids(
         .withColumn("mkey", F.md5(F.col("cid").cast("string")))
         .orderBy("mkey", "cid")
         .limit(n_cells)
-        .withColumn("cnrm", _exact_dot(F.col("cvec"), F.col("cvec")))
+        .withColumn("cnrm", _exact_dot("cvec", "cvec"))
     )
     # NOT hinted here: consumers that JOIN wrap with F.broadcast at the
     # join site; index builds also write/collect this frame, and a hint
@@ -358,19 +354,20 @@ def ivf_centroids(
     )
 
 
-def _cent_sims(side_vec: str, nrm_col, exact: bool):
+def _cent_sims(side_vec: str, nrm: str | None, exact: bool):
     """array<struct(s,cid)>: cosine of this row's vector against every
-    centroid in the broadcast array, computed once per centroid."""
-
-    def one(c):
-        return F.struct(
-            _pair_cos(
-                F.col(side_vec), c["cvec"], nrm_col, c["cnrm"], exact
-            ).alias("s"),
+    centroid in the broadcast array, computed once per centroid.  The
+    exact form is SQL: its cosine names the centroid lambda variable."""
+    if exact:
+        s = _cos_sql(_EXACT_DOT.format(a=side_vec, b="c.cvec"), nrm, "c.cnrm")
+        return F.expr(f"transform(cents, c -> named_struct('s', {s}, 'cid', c.cid))")
+    return F.transform(
+        F.col("cents"),
+        lambda c: F.struct(
+            cosine_similarity(F.col(side_vec), c["cvec"]).alias("s"),
             c["cid"].alias("cid"),
-        )
-
-    return F.transform(F.col("cents"), one)
+        ),
+    )
 
 
 def ivf_cell_assignment(
@@ -459,7 +456,7 @@ def ivf_cell_assignment(
     # centroids; a NaN row vector NaN-poisons every double dot → all
     # band entries NULL-s → decimal pass (NULL on the decimal cast)
     # yields cell_id NULL, matching the full fold.
-    out = out.withColumn("_nrm", _exact_dot(F.col(side_vec), F.col(side_vec)))
+    out = out.withColumn("_nrm", _exact_dot(side_vec, side_vec))
 
     def _s_dbl(c):
         dot = F.aggregate(
@@ -498,18 +495,13 @@ def ivf_cell_assignment(
             .alias("cs"),
         ),
     )["cs"]
+    out = out.withColumn("_band", band)
 
-    def _dec(s):
-        c = F.element_at(F.col("cents"), s["i"] + 1)
-        return F.struct(
-            _pair_cos(
-                F.col(side_vec), c["cvec"], F.col("_nrm"), c["cnrm"], True
-            ).alias("s"),
-            s["i"].alias("i"),
-        )
-
+    # the band's decimal cosines, in SQL: they name the lambda variable
+    c = "element_at(cents, b.i + 1)"
+    dec = _cos_sql(_EXACT_DOT.format(a=side_vec, b=f"{c}.cvec"), "_nrm", f"{c}.cnrm")
     best_i = F.aggregate(
-        F.transform(band, _dec),
+        F.expr(f"transform(_band, b -> named_struct('s', {dec}, 'i', b.i))"),
         F.struct(F.lit(-2.0).alias("s"), F.lit(-1).alias("i")),
         lambda acc, x: F.when(x["s"] > acc["s"], x).otherwise(acc),
     )["i"]
@@ -570,9 +562,9 @@ def ivf_topk(
     # probe list is computed map-side even when Q is large.
     qx = q.crossJoin(F.broadcast(cents))
     if exact:
-        qx = qx.withColumn("_qnrm", _exact_dot(F.col("q_vec"), F.col("q_vec")))
+        qx = qx.withColumn("_qnrm", _exact_dot("q_vec", "q_vec"))
     scored_arr = F.transform(
-        _cent_sims("q_vec", F.col("_qnrm") if exact else None, exact),
+        _cent_sims("q_vec", "_qnrm" if exact else None, exact),
         lambda x, i: F.struct(x["s"].alias("s"), (-i).alias("negi"), x["cid"].alias("cid")),
     )
     # struct sort desc: s desc, then -i desc (= array position asc)
@@ -595,10 +587,10 @@ def ivf_topk(
         .withColumn(
             "cos_sim",
             _pair_cos(
-                F.col("q_vec"),
-                F.col("c_vec"),
-                F.col("_qnrm") if exact else None,
-                F.col("_nrm") if exact else None,
+                "q_vec",
+                "c_vec",
+                "_qnrm" if exact else None,
+                "_nrm" if exact else None,
                 exact,
             ),
         )
@@ -640,8 +632,8 @@ def lsh_bucket_topk(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), sig.alias("bucket")
     )
     if exact:
-        c = c.withColumn("_cn", _exact_dot(F.col("c_vec"), F.col("c_vec")))
-        q = q.withColumn("_qn", _exact_dot(F.col("q_vec"), F.col("q_vec")))
+        c = c.withColumn("_cn", _exact_dot("c_vec", "c_vec"))
+        q = q.withColumn("_qn", _exact_dot("q_vec", "q_vec"))
     q = F.broadcast(q)
     scored = (
         c.join(q, "bucket")
@@ -649,10 +641,10 @@ def lsh_bucket_topk(
         .withColumn(
             "cos_sim",
             _pair_cos(
-                F.col("q_vec"),
-                F.col("c_vec"),
-                F.col("_qn") if exact else None,
-                F.col("_cn") if exact else None,
+                "q_vec",
+                "c_vec",
+                "_qn" if exact else None,
+                "_cn" if exact else None,
                 exact,
             ),
         )
@@ -892,7 +884,7 @@ def pack_centroids(spark, C) -> DataFrame:
     rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(C)]
     df = spark.createDataFrame(rows, "cid bigint, cvec array<double>")
     df = df.withColumn("mkey", F.md5(F.col("cid").cast("string"))).withColumn(
-        "cnrm", _exact_dot(F.col("cvec"), F.col("cvec"))
+        "cnrm", _exact_dot("cvec", "cvec")
     )
     return df.agg(
         F.sort_array(
@@ -1015,7 +1007,7 @@ def pq_encode(
             lambda acc, x: F.when(x["d"] < acc["d"], x).otherwise(acc),
         )
         code_exprs.append(best["t"])
-    nv = F.col(nrm_vec if nrm_vec is not None else side_vec)
+    nv = nrm_vec if nrm_vec is not None else side_vec
     return out.select(
         F.col(side_id),
         F.col(side_vec),
@@ -1114,7 +1106,7 @@ def assign_encode_fast(
             yield pdf
 
     return src.mapInPandas(fused, schema=out_schema).withColumn(
-        "_nrm", _exact_dot(F.col(side_vec), F.col(side_vec))
+        "_nrm", _exact_dot(side_vec, side_vec)
     )
 
 
@@ -1129,12 +1121,12 @@ def _pq_query_lut(queries: DataFrame, codebook: DataFrame, dim: int, m: int) -> 
     qx = queries.crossJoin(F.broadcast(codebook.select("_cb")))
     # one parsed SQL expression for the whole m-subspace LUT array (and
     # one for the norm) instead of m Column-API lambda-HOF trees — see
-    # _exact_dot_sql for why (driver-side build cost, guide §5)
+    # _EXACT_DOT for why (driver-side build cost, guide §5)
     luts = ", ".join(
         "transform(_cb, c -> "
-        + _exact_dot_sql(
-            f"slice(q_vec, {j * sub + 1}, {sub})",
-            f"slice(c.cvec, {j * sub + 1}, {sub})",
+        + _EXACT_DOT.format(
+            a=f"slice(q_vec, {j * sub + 1}, {sub})",
+            b=f"slice(c.cvec, {j * sub + 1}, {sub})",
         )
         + ")"
         for j in range(m)
@@ -1142,7 +1134,7 @@ def _pq_query_lut(queries: DataFrame, codebook: DataFrame, dim: int, m: int) -> 
     return qx.select(
         "q_id",
         "q_vec",
-        F.expr(_exact_dot_sql("q_vec", "q_vec")).alias("_qnrm"),
+        _exact_dot("q_vec", "q_vec").alias("_qnrm"),
         F.expr(f"array({luts})").alias("_lut"),
     )
 
@@ -1158,7 +1150,7 @@ def _adc_sim_col(m: int, *, with_cdot: bool = False):
     during probe selection, NOT per candidate).  Decimal addition is
     exact, so the sum is order-free and reproduces in ANSI SQL."""
     # one parsed SQL expression instead of ~5m chained py4j Column calls
-    # (driver-side build cost, guide §5; same move as _exact_dot_sql) —
+    # (driver-side build cost, guide §5; same move as _EXACT_DOT) —
     # the string spells out exactly the tree the Column form built:
     # element_at chain per subspace, a CAST(.. AS DECIMAL(25,12)) after
     # every add, the NULL-on-zero-denominator CASE
@@ -1170,7 +1162,6 @@ def _adc_sim_col(m: int, *, with_cdot: bool = False):
     adc = "_cdot" if with_cdot else terms.pop(0)
     for t_ in terms:
         adc = f"CAST({adc} + {t_} AS DECIMAL(25,12))"
-    denom = "(SQRT(CAST(_qnrm AS DOUBLE)) * SQRT(CAST(_nrm AS DOUBLE)))"
     # zero-norm side (possible only under on_zero_norm='allow') → NULL
     # similarity, ranked last — matching the exact path's NULL on
     # undefined cosine; without the guard ANSI mode fails EVERY search
@@ -1180,9 +1171,7 @@ def _adc_sim_col(m: int, *, with_cdot: bool = False):
     # in desc sorts, so the guard is right either way).  Value-
     # invariant on zero-free corpora (the branch never taken), so
     # oracle bit-parity holds.
-    return F.expr(
-        f"CASE WHEN {denom} != 0.0D THEN CAST({adc} AS DOUBLE) / {denom} END"
-    )
+    return F.expr(_cos_sql(adc, "_qnrm", "_nrm"))
 
 
 def _probe_frame(qlut: DataFrame, cents: DataFrame, nprobe: int, *, with_cdot: bool):
@@ -1194,7 +1183,7 @@ def _probe_frame(qlut: DataFrame, cents: DataFrame, nprobe: int, *, with_cdot: b
     probed cell here, never per candidate."""
     qx = qlut.crossJoin(F.broadcast(cents.select("cents")))
     # one parsed SQL expression for the probe-selection array (guide §5
-    # driver-build cost; see _exact_dot_sql).  Spelled to match the
+    # driver-build cost; see _EXACT_DOT).  Spelled to match the
     # Column-API tree it replaces node for node: per centroid a struct of
     # the exact cosine (_pair_cos exact=True — NULL on a zero
     # denominator), the -i index tie-break, the cell id, and (residual
@@ -1203,12 +1192,8 @@ def _probe_frame(qlut: DataFrame, cents: DataFrame, nprobe: int, *, with_cdot: b
     # Column form built the cosine via _cent_sims + a zip_with + a
     # re-struct transform; the single indexed transform here produces the
     # same final structs (s, negi, cid[, cdot]) with the same types.
-    dot = _exact_dot_sql("q_vec", "c.cvec")
-    denom = "(SQRT(CAST(_qnrm AS DOUBLE)) * SQRT(CAST(c.cnrm AS DOUBLE)))"
-    s_field = (
-        f"CASE WHEN {denom} != 0.0D "
-        f"THEN CAST({dot} AS DOUBLE) / {denom} END AS s"
-    )
+    dot = _EXACT_DOT.format(a="q_vec", b="c.cvec")
+    s_field = _cos_sql(dot, "_qnrm", "c.cnrm") + " AS s"
     fields = [s_field, "-i AS negi", "c.cid AS cid"] + (
         [f"{dot} AS cdot"] if with_cdot else []
     )
@@ -1292,9 +1277,7 @@ def pq_topk(
     )
     rescored = cands.withColumn(
         "cos_sim",
-        _pair_cos(
-            F.col("q_vec"), F.col("c_vec"), F.col("_qnrm"), F.col("_nrm"), True
-        ),
+        _pair_cos("q_vec", "c_vec", "_qnrm", "_nrm", True),
     )
     w2 = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id").asc())
     return (
@@ -1420,9 +1403,7 @@ def ivfpq_topk(
     )
     rescored = cands.join(qv, "q_id").withColumn(
         "cos_sim",
-        _pair_cos(
-            F.col("q_vec"), F.col("c_vec"), F.col("_qnrm"), F.col("_nrm"), True
-        ),
+        _pair_cos("q_vec", "c_vec", "_qnrm", "_nrm", True),
     )
     w2 = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("n_id").asc()
@@ -1966,13 +1947,7 @@ def ivfpq_search(
             .join(qv, "q_id")
             .withColumn(
                 "cos_sim",
-                _pair_cos(
-                    F.col("q_vec"),
-                    F.col("c_vec"),
-                    F.col("_qnrm"),
-                    F.col("_nrm"),
-                    True,
-                ),
+                _pair_cos("q_vec", "c_vec", "_qnrm", "_nrm", True),
             )
         )
     else:
@@ -1998,13 +1973,7 @@ def ivfpq_search(
             .join(qv, "q_id")
             .withColumn(
                 "cos_sim",
-                _pair_cos(
-                    F.col("q_vec"),
-                    F.col("c_vec"),
-                    F.col("_qnrm"),
-                    F.col("_nrm"),
-                    True,
-                ),
+                _pair_cos("q_vec", "c_vec", "_qnrm", "_nrm", True),
             )
         )
     w2 = Window.partitionBy("q_id").orderBy(

@@ -62,17 +62,18 @@ def _nano_ts_columns(path: str) -> list[str]:
         return []
 
 
-# Plan-handle memo for read_table: (session id, path, dir mtime) → the
-# normalized DataFrame.  A DataFrame is an immutable logical plan, so
-# handing the same object back is semantically identical to rebuilding
-# it — but rebuilding costs ~0.1 s of driver work PER CALL (two runtime
-# conf round-trips, a pyarrow footer read, Spark's own schema resolution
-# + file listing, and the normalization withColumns), which multiplied
-# across every query's 1-6 table reads dominated DataFrame construction
-# time in the round-12 profile.  NO DATA is cached — every action still
-# scans the parquet.  The mtime key re-reads after an in-place rewrite;
-# the session object is kept strongly so a dead session's id is never
-# reused for a live one.
+# Plan-handle memo for read_table: (session id, path) → (session, dir
+# mtime, the normalized DataFrame).  A DataFrame is an immutable logical
+# plan, so handing the same object back is semantically identical to
+# rebuilding it — but rebuilding costs ~0.1 s of driver work PER CALL
+# (two runtime conf round-trips, a pyarrow footer read, Spark's own
+# schema resolution + file listing, and the normalization withColumns),
+# which multiplied across every query's 1-6 table reads dominated
+# DataFrame construction time in the round-12 profile.  NO DATA is
+# cached — every action still scans the parquet.  An in-place rewrite
+# (new mtime) replaces the entry; a stopped session's entries are
+# dropped on the next insert.  The session object is kept strongly
+# until then, so its id is never reused for a live one meanwhile.
 _READ_MEMO: dict[tuple, tuple] = {}
 
 
@@ -83,12 +84,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         mtime = None
-    key = (id(spark), path, mtime)
+    key = (id(spark), path)
     hit = _READ_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    if hit is not None and hit[1] == mtime:
+        return hit[2]
     df = _read_table_uncached(spark, path, name)
-    _READ_MEMO[key] = (spark, df)
+    for k in [k for k, v in _READ_MEMO.items() if v[0].sparkContext._jsc is None]:
+        del _READ_MEMO[k]
+    _READ_MEMO[key] = (spark, mtime, df)
     return df
 
 

@@ -63,10 +63,6 @@ class StreamingZScore:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.moments_tier(batch), batch_id)
 
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch``."""
-        return self.sink.foreach_batch(self.moments_tier)
-
     # -- scoring -------------------------------------------------------
 
     def moments(self) -> DataFrame | None:
@@ -142,9 +138,6 @@ class StreamingGrowthRates:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.revenue_tier(batch), batch_id)
 
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.revenue_tier)
-
     def rates(self) -> DataFrame:
         """Growth rows from the maintained cells — same arithmetic as
         the batch query (decimal recombine, one final double cast, lag
@@ -207,9 +200,6 @@ class StreamingForecastBacktest:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.hourly_tier(batch), batch_id)
 
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.hourly_tier)
-
     def backtest(self) -> DataFrame:
         """MAE/bias of the this-hour-equals-last-week predictor over the
         maintained series — same decimal-exact error sums as the batch
@@ -263,9 +253,6 @@ class StreamingCusum:
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.hourly_tier(batch), batch_id)
-
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.hourly_tier)
 
     def changepoints(self) -> DataFrame:
         from pyspark.sql import Window
@@ -389,9 +376,6 @@ class StreamingCorpusReport:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.report_tier(batch), batch_id)
 
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.report_tier)
-
     def report(self) -> DataFrame:
         """The corpus_report frame over everything streamed so far —
         column-for-column and bit-for-bit the batch query's output."""
@@ -471,9 +455,6 @@ class StreamingDriftMonitor:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.cells_tier(batch), batch_id)
 
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.cells_tier)
-
     def report(self) -> DataFrame:
         """The quality_drift_tvd frame over everything streamed so far —
         bit-for-bit the batch operator's output (integer cells, shared
@@ -529,9 +510,6 @@ class StreamingDimStats:
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.cells_tier(batch), batch_id)
-
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.cells_tier)
 
     def report(self) -> DataFrame:
         """The embedding_dim_stats frame over everything streamed so far
@@ -613,12 +591,6 @@ class StreamingCms:
             batch_id,
         )
 
-    def foreach_batch(self):
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch, batch_id)
-
-        return _apply
-
     def report(self) -> DataFrame:
         """The sketch_cms_counts frame over everything streamed so far —
         bit-for-bit the batch operator's output (integer cells, shared
@@ -686,9 +658,6 @@ class StreamingTrend:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.cells_tier(batch), batch_id)
 
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.cells_tier)
-
     def report(self) -> DataFrame:
         """The ts_linear_trend frame over everything streamed so far —
         bit-for-bit the batch operator's output."""
@@ -755,12 +724,6 @@ class StreamingBloom:
             batch_id,
         )
 
-    def foreach_batch(self):
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch, batch_id)
-
-        return _apply
-
     def bits(self) -> DataFrame:
         cur = self.bits_sink.current()
         if cur is None:
@@ -798,12 +761,6 @@ class StreamingAcf:
         from creek_spark.queries_r6c import acf_cells
 
         self.cells.apply_batch(acf_cells(batch), batch_id)
-
-    def foreach_batch(self):
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch, batch_id)
-
-        return _apply
 
     def report(self) -> DataFrame:
         from creek_spark.queries_r6c import acf_from_cells
@@ -905,12 +862,6 @@ class StreamingGini:
         )
         self.cells.apply_batch(cells, batch_id)
 
-    def foreach_batch(self):
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch, batch_id)
-
-        return _apply
-
     def report(self) -> DataFrame:
         from creek_spark.queries_r6c import gini_from_revenue
 
@@ -962,12 +913,6 @@ class StreamingConversion:
             batch_id,
         )
 
-    def foreach_batch(self):
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch, batch_id)
-
-        return _apply
-
     def report(self) -> DataFrame:
         from creek_spark.queries_r6c import conversion_from_firsts
 
@@ -1002,12 +947,6 @@ class StreamingVocab:
         from creek_spark.queries_r6c import vocab_tf_cells
 
         self.cells.apply_batch(vocab_tf_cells(batch), batch_id)
-
-    def foreach_batch(self):
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch, batch_id)
-
-        return _apply
 
     def report(self) -> DataFrame:
         from creek_spark.queries_r6c import vocab_from_tf
@@ -1062,9 +1001,6 @@ class StreamingMediaReport:
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.sink.apply_batch(self.report_tier(batch), batch_id)
-
-    def foreach_batch(self):
-        return self.sink.foreach_batch(self.report_tier)
 
     def report(self) -> DataFrame:
         """The media_report frame over everything streamed so far —

@@ -167,12 +167,3 @@ class AdditiveRollupSink:
             old, touched, self._store.write(merged, old) if touched else set(),
             last_batch_id=batch_id, fence_print=fence_print,
         )
-
-    def foreach_batch(self, prepare):
-        """Adapter for ``writeStream.foreachBatch``: ``prepare`` maps the
-        raw micro-batch to tier rows (key_cols + add_cols)."""
-
-        def _fn(batch: DataFrame, batch_id: int) -> None:
-            self.apply_batch(prepare(batch), batch_id)
-
-        return _fn

@@ -1,5 +1,5 @@
-"""Versioned-partition state store: the on-disk layout the CDC and
-rollup sinks commit through.
+"""Versioned-partition state store: the on-disk layout the CDC, rollup
+and dedup sinks commit through.
 
     state_dir/_manifest.json       {"version": N, "buckets": {p: vdir},
                                     "runs": ["vdir/_run", ...],
@@ -10,12 +10,13 @@ rollup sinks commit through.
 
 State is a *base* hive-partitioned on one caller-chosen column, plus an
 ordered list of unpartitioned delta *runs* the caller folds into it on
-read (merge-on-read; the rollup sink keeps no runs).  A writer puts new
-files into a FRESH version directory (never in place — untouched
-partitions and earlier runs stay byte-identical), then publishes a new
-manifest naming, per partition, the version dir holding its current
-files, and the runs in append order (atomic Hadoop-FS rename via
-creek_spark.fsio, so state rides the same filesystem as the data —
+read (merge-on-read; the rollup sink keeps no runs, the dedup sink no
+base).  A writer puts new files into a FRESH version directory (never
+in place — untouched partitions and earlier runs stay byte-identical),
+then publishes a new manifest naming, per partition, the version dir
+holding its current files, and the runs in append order (atomic
+Hadoop-FS rename via creek_spark.fsio, so state rides the same
+filesystem as the data —
 local, HDFS or object store).  Readers resolve files through the
 manifest only, so a reader sees the whole old state or the whole new
 state, never a mix, and an orphan version dir left by a crash between
@@ -30,7 +31,7 @@ GC is manifest-driven: a publish deletes exactly the partition and run
 dirs the old manifest kept (live or retained) and the new one keeps in
 neither list — no listing.  The full orphan sweep, which lists every
 version dir, runs on a store's first publish (after a restart) and when
-the caller asks for it (CDC compaction).
+the caller asks for it (CDC and dedup compaction).
 """
 
 from __future__ import annotations
@@ -125,11 +126,12 @@ class VersionedStore:
     def manifest(self) -> dict | None:
         m = fsio.read_json_or_none(self.spark, fsio.join(self.state_dir, MANIFEST))
         if m is not None and "buckets" not in m:
+            found = ", ".join(map(repr, sorted(m)))
             raise ValueError(
-                f"{self.state_dir}/{MANIFEST} has no 'buckets' key: state "
-                "written in the older layout (key 'parts', v%07d version "
-                "dirs), which this store does not read — delete the state "
-                "dir and replay from the checkpoint"
+                f"{self.state_dir}/{MANIFEST} has no 'buckets' key (found "
+                f"{found}): state written in an older layout, which this "
+                "store does not read — delete the state dir and replay from "
+                "the checkpoint"
             )
         return m
 

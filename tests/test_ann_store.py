@@ -93,7 +93,7 @@ def test_adc_over_store_matches_inline_path(spark, tmp_path):
     )
     qx = qlut.crossJoin(cents)
     scored_arr = F.transform(
-        sim._cent_sims("q_vec", F.col("_qnrm"), True),
+        sim._cent_sims("q_vec", "_qnrm", True),
         lambda x, i: F.struct(x["s"].alias("s"), (-i).alias("negi"), x["cid"].alias("cid")),
     )
     top_cells = F.slice(F.sort_array(scored_arr, asc=False), 1, 3)

@@ -9,8 +9,10 @@ between the publish and the checkpoint commit) covers every point
 between a version-dir write, the manifest swap and GC.  Hypothesis draws
 the op sequence, the batch split and the crash point; the explicit
 examples pin one crash at each fsio step of a run publish and of a
-compaction publish (CdcApplier) and of a rollup publish
-(AdditiveRollupSink, which commits through the same store)."""
+compaction publish (CdcApplier, StreamingDedup) and of a rollup publish
+(AdditiveRollupSink) — every fenced sink that commits through the
+versioned store.  A StreamingDedup batch costs seconds of Spark jobs,
+so its harness runs the explicit examples only."""
 
 from __future__ import annotations
 
@@ -19,11 +21,13 @@ import os
 import shutil
 import tempfile
 
-from hypothesis import HealthCheck, example, given, settings
+import pytest
+from hypothesis import HealthCheck, Phase, example, given, settings
 from hypothesis import strategies as st
 
 from creek_spark import fsio
 from creek_spark.streaming import CdcApplier
+from creek_spark.streaming.dedup import StreamingDedup
 from creek_spark.streaming.rollup import AdditiveRollupSink
 from tests.fixtures import ENV_SCHEMA, _lsn, interpret, wal_row
 
@@ -316,5 +320,102 @@ def test_rollup_sink_survives_a_crash_at_every_fsio_step(spark, batches, j, k, e
         # publish sweeps them
         if manifest["version"] > crashed_version:
             assert not _dirs_outside(state_dir, manifest, "day")
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)
+
+
+# -- StreamingDedup ----------------------------------------------------
+
+_FOX = "the quick brown fox jumps over the lazy dog near the old river bank"
+_FENCE = "each micro batch commits its index run and its fence in one swap"
+# near-duplicates within and across batches: exact copies (certain
+# candidates), one-word edits and one unrelated doc
+_DOC_BATCHES = [
+    [(1, _FOX), (4, _FENCE)],
+    [(2, _FOX), (5, _FENCE.replace("swap", "publish")), (6, "parquet files")],
+    [(3, _FOX.replace("fox", "cat"))],
+]
+
+
+def _doc_pairs(df) -> list[tuple]:
+    return sorted(map(tuple, df.select("doc_a", "doc_b").collect()))
+
+
+@pytest.fixture(scope="module")
+def dedup_prefix(spark, tmp_path_factory):
+    """The batches, a store that committed the first two of them (each
+    example starts from a copy — a batch costs seconds of Spark jobs),
+    and the full-corpus candidate pairs."""
+    from creek_spark.operators.dedup import minhash_lsh_candidates
+
+    frames = [
+        spark.createDataFrame(docs, "doc_id long, text string")
+        for docs in _DOC_BATCHES
+    ]
+    state_dir = str(tmp_path_factory.mktemp("dedup_prefix"))
+    sd = StreamingDedup(spark, state_dir)
+    for i in (0, 1):
+        sd.apply_batch(frames[i], i)
+    corpus = frames[0].unionByName(frames[1]).unionByName(frames[2])
+    want = _doc_pairs(minhash_lsh_candidates(corpus, "text", "doc_id"))
+    assert (1, 2) in want and (1, 3) in want  # within and across batches
+    return frames, state_dir, want
+
+
+@given(
+    phase=st.sampled_from(["batch", "compact"]),
+    orphan=st.booleans(),
+    k=st.integers(1, 6),
+    expect=st.none(),
+)
+# one crash at each fsio step of a batch publish (manifest read, manifest
+# swap, GC delete of the inputs of the compaction before it) ...
+@example(phase="batch", orphan=False, k=1, expect="read_json_or_none")
+@example(phase="batch", orphan=False, k=2, expect="write_json_atomic")
+@example(phase="batch", orphan=False, k=3, expect="delete")
+# ... and of a compaction publish: manifest read, manifest swap, the
+# sweep's listing and its delete of a dir an earlier crash leaked — and
+# right after it
+@example(phase="compact", orphan=True, k=1, expect="read_json_or_none")
+@example(phase="compact", orphan=True, k=2, expect="write_json_atomic")
+@example(phase="compact", orphan=True, k=3, expect="list_names")
+@example(phase="compact", orphan=True, k=5, expect="delete")
+@example(phase="compact", orphan=True, k=99, expect="after")
+@settings(_SETTINGS, phases=[Phase.explicit])
+def test_streaming_dedup_survives_a_crash_at_every_fsio_step(
+    spark, dedup_prefix, phase, orphan, k, expect
+):
+    frames, prefix, want = dedup_prefix
+    state_dir = tempfile.mkdtemp(prefix="crash_dedup_")
+    try:
+        shutil.copytree(prefix, state_dir, dirs_exist_ok=True)
+        sd = StreamingDedup(spark, state_dir)
+        if orphan:
+            # a run dir no manifest names, leaked by an earlier crash
+            os.makedirs(os.path.join(state_dir, "v000000000", "_run"))
+        if phase == "batch":
+            # the store's first publish sweeps; the crashed one then GCs
+            sd.compact()
+            j = 2
+            hit = _crash_during(k, lambda: sd.apply_batch(frames[j], j))
+        else:
+            j = 1
+            hit = _crash_during(k, sd.compact)
+        assert expect is None or hit == expect, (hit, expect)
+
+        # restart: a fresh store on the same dir, the crashed batch
+        # re-delivered under its id, then the rest of the stream
+        sd = StreamingDedup(spark, state_dir)
+        crashed_version = _manifest(state_dir)["version"]
+        for i in range(j, len(frames)):
+            sd.apply_batch(frames[i], i)
+        assert sd.last_batch_id() == len(frames) - 1
+        # a crash leaks dirs only until the restarted store's first
+        # publish sweeps them
+        if _manifest(state_dir)["version"] > crashed_version:
+            assert not _dirs_outside(state_dir, _manifest(state_dir), "band")
+        sd.compact()  # a publish even when the re-delivery was fenced
+        assert not _dirs_outside(state_dir, _manifest(state_dir), "band")
+        assert _doc_pairs(sd.candidates()) == want
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)

@@ -456,43 +456,14 @@ def test_prefilter_divergence_bound(spark):
         .crossJoin(q)
         .where(F.col("q_id") != F.col("n_id"))
     )
-    cos_dec = _exact_dot(F.col("_qv"), F.col("_cv")).cast("double") / (
-        F.sqrt(_exact_dot(F.col("_qv"), F.col("_qv")).cast("double"))
-        * F.sqrt(_exact_dot(F.col("_cv"), F.col("_cv")).cast("double"))
+    cos_dec = _exact_dot("_qv", "_cv").cast("double") / (
+        F.sqrt(_exact_dot("_qv", "_qv").cast("double"))
+        * F.sqrt(_exact_dot("_cv", "_cv").cast("double"))
     )
     cos_dbl = cosine_similarity(F.col("_qv"), F.col("_cv"))
     e = pairs.select(F.max(F.abs(cos_dbl - cos_dec)).alias("e")).first()["e"]
     assert e <= 1e-8
     assert 2 * e <= PREFILTER_EPS / 100
-
-
-def test_exact_dot_sql_lockstep(spark):
-    """_exact_dot_sql must stay the exact SQL-string twin of _exact_dot
-    (it exists only to cut driver-side py4j expression-build cost): the
-    two forms must analyze to the same result on every driver embedding
-    pair — decimal-for-decimal, including the NULL-free fold seed."""
-    from creek_spark.operators.similarity import _exact_dot, _exact_dot_sql
-
-    emb = read_table(spark, SF_DIR, "embeddings")
-    q = F.broadcast(
-        emb.where(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("a")
-        )
-    )
-    pairs = emb.select(
-        F.col("vec_id").alias("n_id"), F.col("embedding").alias("b")
-    ).crossJoin(q)
-    diff = pairs.select(
-        _exact_dot(F.col("a"), F.col("b")).alias("col_form"),
-        F.expr(_exact_dot_sql("a", "b")).alias("sql_form"),
-    )
-    assert diff.schema["col_form"].dataType == diff.schema["sql_form"].dataType
-    n_bad = diff.where(
-        ~(F.col("col_form") == F.col("sql_form"))
-        | F.col("col_form").isNull()
-        | F.col("sql_form").isNull()
-    ).count()
-    assert n_bad == 0
 
 
 def _pq_encode_full_decimal_ref(df, codebook, side_id, side_vec, *, dim, m):
@@ -530,7 +501,7 @@ def _pq_encode_full_decimal_ref(df, codebook, side_id, side_vec, *, dim, m):
     return out.select(
         F.col(side_id),
         F.array(*code_exprs).alias("codes"),
-        _exact_dot(F.col(side_vec), F.col(side_vec)).alias("_nrm"),
+        _exact_dot(side_vec, side_vec).alias("_nrm"),
     )
 
 
@@ -638,8 +609,8 @@ def _ivf_assign_full_decimal_ref(df, cents, side_id, side_vec, *, keep_cvec=Fals
     from creek_spark.operators.similarity import _cent_sims, _exact_dot
 
     out = df.crossJoin(F.broadcast(cents))
-    out = out.withColumn("_nrm", _exact_dot(F.col(side_vec), F.col(side_vec)))
-    scored = _cent_sims(side_vec, F.col("_nrm"), True)
+    out = out.withColumn("_nrm", _exact_dot(side_vec, side_vec))
+    scored = _cent_sims(side_vec, "_nrm", True)
     if keep_cvec:
         scored = F.zip_with(
             scored,
@@ -676,6 +647,7 @@ def test_ivf_prefilter_divergence_bound(spark):
     Measure it on the driver corpus and gate it two orders of magnitude
     under the band."""
     from creek_spark.operators.similarity import (
+        _EXACT_DOT,
         IVF_PREFILTER_EPS,
         _exact_dot,
         ivf_centroids,
@@ -686,10 +658,18 @@ def test_ivf_prefilter_divergence_bound(spark):
     out = (
         emb.select(F.col("embedding").alias("v"))
         .crossJoin(F.broadcast(cents))
-        .withColumn("_n", _exact_dot(F.col("v"), F.col("v")))
+        .withColumn("_n", _exact_dot("v", "v"))
     )
 
-    def _div(c):
+    # per centroid, the decimal dot as a double (SQL: it names the
+    # centroid lambda variable)
+    dot_x = F.expr(
+        "transform(cents, c -> CAST("
+        + _EXACT_DOT.format(a="v", b="c.cvec")
+        + " AS DOUBLE))"
+    )
+
+    def _div(c, dot_e):
         dot_d = F.aggregate(
             F.zip_with(
                 F.col("v"), c["cvec"],
@@ -701,13 +681,11 @@ def test_ivf_prefilter_divergence_bound(spark):
         denom = F.sqrt(F.col("_n").cast("double")) * F.sqrt(
             c["cnrm"].cast("double")
         )
-        return F.abs(
-            dot_d - _exact_dot(F.col("v"), c["cvec"]).cast("double")
-        ) / denom
+        return F.abs(dot_d - dot_e) / denom
 
     e = (
         out.select(
-            F.array_max(F.transform(F.col("cents"), _div)).alias("e")
+            F.array_max(F.zip_with(F.col("cents"), dot_x, _div)).alias("e")
         )
         .agg(F.max("e"))
         .first()[0]
@@ -759,7 +737,7 @@ def test_ivf_assignment_prefilter_lockstep_and_ties(spark):
     cent_src = spark.createDataFrame(
         [(f"{i:02d}", 100 + i, v) for i, v in enumerate(cvecs)],
         "mkey string, cid bigint, cvec array<double>",
-    ).withColumn("cnrm", _exact_dot(F.col("cvec"), F.col("cvec")))
+    ).withColumn("cnrm", _exact_dot("cvec", "cvec"))
     adv_cents = cent_src.agg(
         F.sort_array(
             F.collect_list(F.struct("mkey", "cid", "cvec", "cnrm"))

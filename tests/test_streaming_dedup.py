@@ -46,7 +46,7 @@ def test_streaming_dedup_replay_fenced(spark, sf_dir, tmp_path):
 
 
 def test_compact_preserves_candidates(spark, sf_dir, tmp_path):
-    """Compaction folds the per-batch index parts into one; candidate
+    """Compaction folds the per-batch index runs into one; candidate
     generation for the NEXT batch is unchanged."""
     from creek_spark.operators.dedup import minhash_lsh_candidates
 
@@ -55,22 +55,22 @@ def test_compact_preserves_candidates(spark, sf_dir, tmp_path):
     sd.apply_batch(docs.where(F.col("doc_id") % 3 == 0), 0)
     sd.apply_batch(docs.where(F.col("doc_id") % 3 == 1), 1)
     sd.compact()
-    m = sd._read_manifest()
-    assert len(m["index_parts"]) == 1 and m["last_batch_id"] == 1
-    # 1-generation retention: this compaction's inputs survive until the
-    # NEXT compaction (a reader on the old manifest stays valid)
+    m = sd._store.manifest()
+    assert len(m["runs"]) == 1 and m["last_batch_id"] == 1
+    # 1-generation retention: this compaction's inputs survive one more
+    # publish (a reader on the old manifest stays valid)
     import os
 
-    assert all(
+    assert len(m["retain"]) == 2 and all(
         os.path.isdir(os.path.join(str(tmp_path / "cstate"), p))
-        for p in m["stale_parts"]
+        for p in m["retain"]
     )
     sd.apply_batch(docs.where(F.col("doc_id") % 3 == 2), 2)
     got = _pairs(sd.candidates())
     want = _pairs(minhash_lsh_candidates(docs, "text", "doc_id"))
     assert got == want
-    stale_before = m["stale_parts"]
-    sd.compact()
+    stale_before = m["retain"]
+    # ... and that publish deletes them
     assert not any(
         os.path.isdir(os.path.join(str(tmp_path / "cstate"), p))
         for p in stale_before
@@ -88,14 +88,17 @@ def test_crash_before_manifest_swap_is_invisible(spark, sf_dir, tmp_path):
     b0 = docs.where(F.col("doc_id") % 2 == 0)
     b1 = docs.where(F.col("doc_id") % 2 == 1)
     sd.apply_batch(b0, 0)
-    committed = sd._read_manifest()
-    # simulate the torn write: batch 1's dirs exist, manifest still at 0
+    committed = sd._store.manifest()
+    # simulate the torn write: batch 1's index run exists in the version
+    # dir the next publish would name, manifest still at 0
     from creek_spark.operators.dedup import minhash_index
 
     minhash_index(b1, "text", "doc_id").write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path / "xstate"), "idx/b1")
+        os.path.join(
+            str(tmp_path / "xstate"), f"v{committed['version'] + 1:09d}", "_run"
+        )
     )
-    assert sd._read_manifest() == committed  # crash point: manifest old
+    assert sd._store.manifest() == committed  # crash point: manifest old
     assert sd.last_batch_id() == 0
     # recovery = the stream replays batch 1; state converges
     sd.apply_batch(b1, 1)
@@ -104,6 +107,27 @@ def test_crash_before_manifest_swap_is_invisible(spark, sf_dir, tmp_path):
     assert _pairs(sd.candidates()) == _pairs(
         minhash_lsh_candidates(docs, "text", "doc_id")
     )
+
+
+def test_old_layout_manifest_raises_with_remedy(spark, tmp_path):
+    """A state dir from the older dedup layout (its own manifest with
+    ``index_parts``) is refused, naming what it found and how to
+    recover — not silently treated as an empty index."""
+    import json
+    import os
+
+    import pytest
+
+    state = str(tmp_path / "old")
+    os.makedirs(state)
+    with open(os.path.join(state, "_manifest.json"), "w") as f:
+        json.dump(
+            {"last_batch_id": 0, "index_parts": ["idx/b0"], "stale_parts": []}, f
+        )
+    sd = StreamingDedup(spark, state)
+    batch = spark.createDataFrame([(1, "a near duplicate")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="'index_parts'.*replay from the checkpoint"):
+        sd.apply_batch(batch, 1)
 
 
 def test_detector_restart_resumes_from_state(spark, sf_dir, tmp_path):

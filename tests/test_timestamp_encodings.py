@@ -71,3 +71,33 @@ def test_date_columns_survive_timestamp_drift(spark, tmp_path):
     df = read_table(spark, str(tmp_path), "orders")
     assert isinstance(df.schema["o_orderdate"].dataType, DateType)
     assert sorted(r["o_orderdate"] for r in df.collect()) == dates
+
+
+def test_read_memo_keeps_one_entry_per_live_session_and_path(
+    spark, tmp_path, monkeypatch
+):
+    """read_table's plan memo: an unchanged file hits (same object), a
+    rewritten one replaces its entry, and a stopped session's entries
+    go on the next insert."""
+    import os
+    import types
+
+    from creek_spark import sources
+
+    monkeypatch.setattr(sources, "_READ_MEMO", {})
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    first = read_table(spark, str(tmp_path), "t")
+    assert read_table(spark, str(tmp_path), "t") is first
+    pq.write_table(pa.table({"id": [1, 2, 3]}), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert read_table(spark, str(tmp_path), "t").count() == 3
+    stopped = types.SimpleNamespace(sparkContext=types.SimpleNamespace(_jsc=None))
+    sources._READ_MEMO[(id(stopped), path)] = (stopped, 0, None)
+    pq.write_table(pa.table({"id": [4]}), str(tmp_path / "u.parquet"))
+    read_table(spark, str(tmp_path), "u")
+    assert set(sources._READ_MEMO) == {
+        (id(spark), path),
+        (id(spark), str(tmp_path / "u.parquet")),
+    }
