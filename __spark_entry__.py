@@ -5,8 +5,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-The catalog itself lives in creek_spark.queries / queries_ext /
-queries_northstar — importing them populates the registry.
+The catalog itself lives in creek_spark.queries and its parts
+(queries_ext, queries_northstar, ...); ``creek_spark.queries.catalog()``
+imports them in order, populating the registry.
 """
 
 from __future__ import annotations
@@ -15,21 +16,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _catalog():
-    import creek_spark.queries as q
-    import creek_spark.queries_ext  # noqa: F401 — registers part 2
-    import creek_spark.queries_northstar  # noqa: F401 — registers part 3
-    import creek_spark.queries_tpch  # noqa: F401 — registers part 4
-    import creek_spark.queries_analytics  # noqa: F401 — registers part 5
-    import creek_spark.queries_graph  # noqa: F401 — registers part 6
-    import creek_spark.queries_r4  # noqa: F401 — registers part 7
-    import creek_spark.queries_r6  # noqa: F401 — registers part 8
-    import creek_spark.queries_r6b  # noqa: F401 — registers part 9
-    import creek_spark.queries_r6c  # noqa: F401 — registers part 10
-    import creek_spark.queries_r11  # noqa: F401 — registers part 11
-
-    return q.QUERIES
+from creek_spark.queries import catalog as _catalog
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -2,8 +2,12 @@
 
 A user of the reference interacts with: WAL streams, snapshots, schema
 registry, and (downstream) the relational operations they build on the
-data.  Engine groups those entry points; every method returns a plain
-DataFrame so the whole pyspark.sql surface composes."""
+data.  Engine carries the session, the data directory and the schema
+registry, and exposes only the entry points that use them; every
+operator, streaming sink and catalog query keeps its one spelling in
+its own module (``query(name)`` runs a catalog query by name).  Every
+method returns a plain DataFrame so the whole pyspark.sql surface
+composes."""
 
 from __future__ import annotations
 
@@ -13,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from creek_spark import sources
 from creek_spark.operators import asof_join, latest_state, wal_from
+from creek_spark.queries import catalog
 from creek_spark.sources.registry import SchemaRegistry
 
 
@@ -39,6 +44,11 @@ class Engine:
     def sql(self, query: str) -> DataFrame:
         return self.spark.sql(query)
 
+    def query(self, name: str, sf_dir: str | None = None) -> DataFrame:
+        """The catalog query ``name`` over ``sf_dir`` (default: this
+        engine's data directory)."""
+        return catalog()[name].fn(self.spark, sf_dir or self.data_dir)
+
     def snapshot(self, df: DataFrame, base_dir: str, table: str, **kw) -> str:
         return sources.write_snapshot(df, base_dir, table, **kw)
 
@@ -47,16 +57,6 @@ class Engine:
 
     def list_snapshots(self, base_dir: str, table: str):
         return sources.list_snapshots(base_dir, table)
-
-    def snapshot_exporter(self, host: str, port: int, **kw):
-        """Coordinator for a CONSISTENT PARALLEL JDBC snapshot
-        (pg_export_snapshot + per-partition SET TRANSACTION SNAPSHOT —
-        sources/snapshot_export.py): a context manager whose
-        ``jdbc_options(...)`` feed a partitioned spark.read.jdbc where
-        every partition sees the same MVCC point-in-time."""
-        from creek_spark.sources.snapshot_export import SnapshotExporter
-
-        return SnapshotExporter(host, port, **kw)
 
     def snapshot_jdbc(
         self,
@@ -116,795 +116,3 @@ class Engine:
 
     def asof_join(self, left, right, on, left_time, right_time, **kw) -> DataFrame:
         return asof_join(left, right, on, left_time, right_time, **kw)
-
-    # ------------------------------------------------- file-format connectors
-    def read_files(self, path: str, fmt: str = "parquet", **kw) -> DataFrame:
-        from creek_spark.sources.formats import read_files
-
-        return read_files(self.spark, path, fmt, **kw)
-
-    def write_files(self, df: DataFrame, path: str, fmt: str = "parquet", **kw):
-        from creek_spark.sources.formats import write_files
-
-        write_files(df, path, fmt, **kw)
-
-    # ------------------------------------------- training-data-pipeline ops
-    def dedup_exact(self, df, content_col: str, id_col: str) -> DataFrame:
-        from creek_spark.operators.dedup import exact_dedup
-
-        return exact_dedup(df, content_col, id_col)
-
-    def dedup_minhash(self, df, text_col: str, id_col: str, **kw) -> DataFrame:
-        from creek_spark.operators.dedup import minhash_lsh_candidates
-
-        return minhash_lsh_candidates(df, text_col, id_col, **kw)
-
-    def dedup_clusters(self, pairs, **kw) -> DataFrame:
-        from creek_spark.operators.dedup import connected_components
-
-        return connected_components(pairs, **kw)
-
-    def dedup_embeddings(self, df, **kw) -> DataFrame:
-        from creek_spark.operators.similarity import embedding_near_dups
-
-        return embedding_near_dups(df, **kw)
-
-    def similarity_topk(self, corpus, queries, *, exact=True, **kw) -> DataFrame:
-        from creek_spark.operators.similarity import cosine_topk_fast, ivf_topk
-
-        fn = cosine_topk_fast if exact else ivf_topk
-        return fn(corpus, queries, **kw)
-
-    def text_quality(self, df, text_col: str, id_col: str) -> DataFrame:
-        from creek_spark.operators.text import quality_scores
-
-        return quality_scores(df, text_col, id_col)
-
-    def text_lang_id(self, df, text_col: str, id_col: str) -> DataFrame:
-        from creek_spark.operators.text import lang_id
-
-        return lang_id(df, text_col, id_col)
-
-    def media_features(self, media, **kw) -> DataFrame:
-        from creek_spark.operators.multimodal import extract_features
-
-        return extract_features(media, **kw)
-
-    # ---------------------------------------------------- training pipeline
-
-    def sample(self, df, id_col: str, rate_pct: int, salt: str = "") -> DataFrame:
-        from creek_spark.operators.pipeline import deterministic_sample
-
-        return deterministic_sample(df, id_col, rate_pct, salt)
-
-    def scrub_pii(self, df, text_col: str, **kw) -> DataFrame:
-        from creek_spark.operators.pipeline import scrub_pii
-
-        return scrub_pii(df, text_col, **kw)
-
-    def pack_sequences(self, df, id_col: str, len_col: str, **kw) -> DataFrame:
-        from creek_spark.operators.pipeline import pack_sequences
-
-        return pack_sequences(df, id_col, len_col, **kw)
-
-    def mix_sources(self, sources, id_col: str, **kw) -> DataFrame:
-        from creek_spark.operators.pipeline import mix_sources
-
-        return mix_sources(sources, id_col, **kw)
-
-    # ------------------------------------------------------------ CDC wire
-
-    def encode_wal(self, env_df, row_struct, codec: str = "json") -> DataFrame:
-        from creek_spark.sources.wire import encode_envelope
-
-        return encode_envelope(env_df, row_struct, codec)
-
-    def decode_wal(self, frames, registry, codec: str = "json", **kw):
-        from creek_spark.sources.wire import decode_envelope
-
-        return decode_envelope(frames, registry, codec, **kw)
-
-    def dynamic_tables(self, wal_dir: str, base_dir: str, envelope_schema, **kw):
-        """O18 orchestrator: runtime ADD/REMOVE of subscribed tables."""
-        from creek_spark.streaming.tables import DynamicTables
-
-        return DynamicTables(self.spark, wal_dir, base_dir, envelope_schema, **kw)
-
-    # ------------------------------------------------------ sketch rollups
-
-    def sketch_rollup(self, df, value_col: str, **kw) -> DataFrame:
-        from creek_spark.operators.sketches import sketch_rollup
-
-        return sketch_rollup(df, value_col, **kw)
-
-    def estimate_range(self, rollup, start, end, **kw) -> DataFrame:
-        from creek_spark.operators.sketches import estimate_range
-
-        return estimate_range(rollup, start, end, **kw)
-
-    def merge_rollups(self, fine, bucket: str = "month") -> DataFrame:
-        from creek_spark.operators.sketches import merge_rollups
-
-        return merge_rollups(fine, bucket)
-
-    # --------------------------------------------- profiling / ANN / hygiene
-
-    def profile(self, df, columns=None, *, approx: bool = False) -> DataFrame:
-        """ANALYZE-style per-column stats in one pass; approx=True is the
-        HLL++ petabyte path (operators/profile.py)."""
-        from creek_spark.operators.profile import profile_columns
-
-        return profile_columns(df, columns, approx=approx)
-
-    def ann_topk(self, corpus, queries, *, method: str = "ivfpq", **kw) -> DataFrame:
-        """Approximate nearest neighbors: method in lsh | ivf | pq | ivfpq
-        (operators/similarity.py; exact path is similarity_topk)."""
-        from creek_spark.operators import similarity as sim
-
-        fns = {
-            "lsh": sim.lsh_bucket_topk,
-            "ivf": sim.ivf_topk,
-            "pq": sim.pq_topk,
-            "ivfpq": sim.ivfpq_topk,
-        }
-        if method not in fns:
-            raise ValueError(f"method must be one of {sorted(fns)}")
-        return fns[method](corpus, queries, **kw)
-
-    def contamination(self, corpus, bench, text_col: str, id_col: str, **kw) -> DataFrame:
-        """Eval-set contamination scan (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import contamination_overlap
-
-        return contamination_overlap(corpus, bench, text_col, id_col, **kw)
-
-    def dedup_passages(self, df, text_col: str, id_col: str, **kw) -> DataFrame:
-        """Passage-level exact dedup: repeated aligned token windows
-        across documents (operators/dedup.py)."""
-        from creek_spark.operators.dedup import repeated_passages
-
-        return repeated_passages(df, text_col, id_col, **kw)
-
-    def corpus_report(self, df, text_col: str, id_col: str, by: list[str]) -> DataFrame:
-        """Per-group quality rollup (n_docs, token totals, mean quality)
-        in a single scan via text_metrics passthrough columns."""
-        from creek_spark.operators.text import text_metrics
-
-        m = text_metrics(df, text_col, id_col, keep=tuple(by))
-        from pyspark.sql import functions as F
-
-        return m.groupBy(*by).agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            (
-                F.sum(F.col("quality_score").cast("decimal(18,12)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("mean_quality"),
-        )
-
-    # -------------------------------------------------- round-4 surface
-
-    def search_bm25(self, docs, text_col: str, id_col: str, query_terms, **kw) -> DataFrame:
-        """BM25 keyword retrieval, rational-idf variant (operators/text.py)."""
-        from creek_spark.operators.text import bm25_topk
-
-        return bm25_topk(docs, text_col, id_col, list(query_terms), **kw)
-
-    def histogram_rollup(self, df, value_col: str, **kw) -> DataFrame:
-        """Mergeable fixed-width histogram tier (operators/sketches.py)."""
-        from creek_spark.operators.sketches import histogram_sketch
-
-        return histogram_sketch(df, value_col, **kw)
-
-    def histogram_quantiles(self, hist, quantiles, **kw) -> DataFrame:
-        """Quantile estimates from merged histogram tiers."""
-        from creek_spark.operators.sketches import histogram_quantiles
-
-        return histogram_quantiles(hist, list(quantiles), **kw)
-
-    def incremental_state(self, wal, split_lsn_num: int, key_cols=None, **kw) -> DataFrame:
-        """latest_state maintained incrementally across a batch boundary
-        (recompute-touched-keys + carry; operators/cdc.py)."""
-        from creek_spark.operators.cdc import incremental_latest_state
-
-        return incremental_latest_state(wal, split_lsn_num, key_cols, **kw)
-
-    def interval_join(self, left, right, on, *, left_bounds, right_bounds, **kw) -> DataFrame:
-        """Cell-bucketed interval-overlap join (operators/intervals.py)."""
-        from creek_spark.operators.intervals import interval_overlap_join
-
-        return interval_overlap_join(
-            left, right, on, left_bounds=left_bounds, right_bounds=right_bounds, **kw
-        )
-
-    def stratified_sample(self, df, group_cols, id_col: str, fraction: float, **kw) -> DataFrame:
-        """Exact-count stratified sample (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import stratified_exact_sample
-
-        return stratified_exact_sample(df, list(group_cols), id_col, fraction, **kw)
-
-    def dsir_score(self, df, text_col: str, id_col: str, is_target_col: str, **kw) -> DataFrame:
-        """DSIR-style importance contrast vs a target subset (operators/text.py)."""
-        from creek_spark.operators.text import dsir_contrast
-
-        return dsir_contrast(df, text_col, id_col, is_target_col, **kw)
-
-    def bpe_pairs(self, df, text_col: str, **kw) -> DataFrame:
-        """One BPE merge step: top adjacent char pairs (operators/text.py)."""
-        from creek_spark.operators.text import bpe_pair_counts
-
-        return bpe_pair_counts(df, text_col, **kw)
-
-    def stream_shard_sink(self, path: str, id_col: str, **kw):
-        """foreachBatch sink growing the stable-shard layout (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import stream_shard_writer
-
-        return stream_shard_writer(path, id_col, **kw)
-
-    def dedup_index(self, df, text_col: str, id_col: str, **kw) -> DataFrame:
-        """Persisted-LSH dedup index rows (operators/dedup.py minhash_index)."""
-        from creek_spark.operators.dedup import minhash_index
-
-        return minhash_index(df, text_col, id_col, **kw)
-
-    def dedup_incremental(self, new_df, index, text_col: str, id_col: str, **kw) -> DataFrame:
-        """New-batch near-dup pairs vs a persisted index plus itself
-        (operators/dedup.py incremental_lsh_candidates)."""
-        from creek_spark.operators.dedup import incremental_lsh_candidates
-
-        return incremental_lsh_candidates(new_df, index, text_col, id_col, **kw)
-
-    def semantic_dedup(self, df, id_col: str, vec_col: str, **kw) -> DataFrame:
-        """SemDeDup: k-means blocking + in-cluster cosine keep-earliest
-        (operators/clustering.py)."""
-        from creek_spark.operators.clustering import semantic_dedup
-
-        return semantic_dedup(df, id_col, vec_col, **kw)
-
-    def token_budget_sample(self, df, *, budget: int, **kw) -> DataFrame:
-        """Per-stratum token-budget prefix sample (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import token_budget_sample
-
-        return token_budget_sample(df, budget=budget, **kw)
-
-    def export_shards(self, df, path: str, id_col: str, **kw) -> None:
-        """Write the corpus as stable md5-prefix shards (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import write_shards
-
-        return write_shards(df, path, id_col, **kw)
-
-    def shard_manifest(self, df, **kw) -> DataFrame:
-        """Per-shard balance stats for an export (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import shard_stats
-
-        return shard_stats(df, **kw)
-
-    def cms_sketch(self, df, value_col: str, **kw) -> DataFrame:
-        """Count-min sketch build (operators/sketches.py)."""
-        from creek_spark.operators.sketches import cms_build
-
-        return cms_build(df, value_col, **kw)
-
-    def cms_probe(self, sketch, probes, probe_col: str, **kw) -> DataFrame:
-        """Count-min point estimates, est ≥ exact (operators/sketches.py)."""
-        from creek_spark.operators.sketches import cms_estimate
-
-        return cms_estimate(sketch, probes, probe_col, **kw)
-
-    def quarantine_read(self, path: str, fmt: str, schema, quarantine_path=None, **kw) -> DataFrame:
-        """csv/json read with corrupt rows routed to a sidecar (sources/formats.py)."""
-        from creek_spark.sources.formats import read_with_quarantine
-
-        return read_with_quarantine(
-            self.spark, path, fmt, schema, quarantine_path, **kw
-        )
-
-    def av_headers(self, media, **kw) -> DataFrame:
-        """WAV/MP4 container metadata decode (operators/multimodal.py)."""
-        from creek_spark.operators.multimodal import decode_av_headers
-
-        return decode_av_headers(media, **kw)
-
-    def rollup_sink(self, state_dir: str, key_cols, add_cols, partition_col: str):
-        """Streaming additive-rollup maintenance sink (histogram tiers,
-        counter cubes): batch_id-fenced, partition-local, manifest-atomic
-        (streaming/rollup.py)."""
-        from creek_spark.streaming.rollup import AdditiveRollupSink
-
-        return AdditiveRollupSink(
-            self.spark, state_dir, list(key_cols), list(add_cols), partition_col
-        )
-
-    def running_aggregates(self, df, part_cols, seg_col, order_cols, specs) -> DataFrame:
-        """Distributed prefix sum/min/max/row_number over a total order —
-        bounded within-segment windows + broadcast per-segment offsets
-        (operators/distributed.py)."""
-        from creek_spark.operators.distributed import segmented_running
-
-        return segmented_running(df, part_cols, seg_col, order_cols, specs)
-
-    def rank_select(self, df, part_cols, sort_col, tie_col, bucket_col, ranks_fn) -> DataFrame:
-        """Exact (value, tie) tuple at arbitrary per-group ranks without a
-        per-group sort — two-level bucketed counting
-        (operators/distributed.py)."""
-        from creek_spark.operators.distributed import rank_pick
-
-        return rank_pick(df, part_cols, sort_col, tie_col, bucket_col, ranks_fn)
-
-    def percentile_exact(self, df, part_cols, value_col, bucket_col, p=0.5) -> DataFrame:
-        """Exact discrete per-group percentile via rank_select
-        (operators/distributed.py)."""
-        from creek_spark.operators.distributed import discrete_percentile
-
-        return discrete_percentile(df, part_cols, value_col, bucket_col, p)
-
-    def streaming_zscore(self, state_dir: str, threshold: float = 2.5):
-        """Incrementally-maintained z-score detector, batch-identical by
-        construction (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingZScore
-
-        return StreamingZScore(self.spark, state_dir, threshold)
-
-    def decode_pgoutput_capture(self, path: str, **kw) -> list[dict]:
-        """Envelope rows from a recorded pgoutput hex capture
-        (sources/pgoutput.py)."""
-        from creek_spark.sources.pgoutput import decode_capture_file
-
-        return decode_capture_file(path, **kw)
-
-    def streaming_growth_rates(self, state_dir: str):
-        """Incrementally-maintained MoM/YoY growth rates, batch-identical
-        (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingGrowthRates
-
-        return StreamingGrowthRates(self.spark, state_dir)
-
-    def streaming_forecast_backtest(self, state_dir: str):
-        """Incrementally-maintained seasonal-naive backtest,
-        batch-identical (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingForecastBacktest
-
-        return StreamingForecastBacktest(self.spark, state_dir)
-
-    def ann_index_append(self, corpus, path: str, **kw) -> None:
-        """Append a batch to a persisted IVFADC index under its frozen
-        quantizers — cost ∝ batch, bit-exact associative (see
-        operators/similarity.py ivfpq_index_append)."""
-        from creek_spark.operators.similarity import ivfpq_index_append
-
-        ivfpq_index_append(corpus, path, **kw)
-
-    def ann_index_build(self, corpus, path: str, **kw) -> None:
-        """Persist the cell-partitioned IVFADC index
-        (operators/similarity.py)."""
-        from creek_spark.operators.similarity import ivfpq_index_build
-
-        ivfpq_index_build(corpus, path, **kw)
-
-    def ann_search(self, path: str, queries, **kw) -> DataFrame:
-        """Search a persisted IVFADC index with cell partition pruning;
-        manifest-managed (streaming) indexes read only committed batch
-        directories (operators/similarity.py)."""
-        from creek_spark.operators.similarity import ivfpq_search
-
-        return ivfpq_search(self.spark, path, queries, **kw)
-
-    def streaming_ann_index(self, path: str, **kw):
-        """Continuously-maintained IVFADC index with the full lifecycle:
-        manifest-committed foreachBatch appends, bit-exact compaction,
-        vacuum, and the recall-drift retrain signal (streaming/ann.py)."""
-        from creek_spark.streaming.ann import StreamingAnnIndex
-
-        return StreamingAnnIndex(self.spark, path, **kw)
-
-    def ann_index_retrain_online(
-        self, path: str, corpus=None, *, index_kw: dict | None = None, **kw
-    ) -> int:
-        """Retrain a streaming index's quantizers WITHOUT pausing
-        ingest: the double-encode window — new epoch builds and catches
-        up while triggers keep committing under the old one, then one
-        fenced atomic manifest flip cuts over
-        (streaming/ann.py `StreamingAnnIndex.retrain_online`).  Returns
-        the number of catch-up rounds.  Requires a store_vectors
-        index.
-
-        ``index_kw`` carries the index's CONSTRUCTOR configuration
-        (dim, m, id_col, vec_col, on_zero_norm) and must match how the
-        index was built — the defaults fit `streaming_ann_index(path)`
-        with no overrides, but an index created at e.g. dim=128/m=16
-        re-encoded under the defaults would silently slice vectors to
-        64 dims (review finding).  Remaining ``**kw`` goes to
-        `retrain_online` (max_rounds, vacuum, training build_kw)."""
-        from creek_spark.streaming.ann import StreamingAnnIndex
-
-        idx = StreamingAnnIndex(self.spark, path, **(index_kw or {}))
-        return idx.retrain_online(corpus, **kw)
-
-    def ann_index_compact(self, path: str, *, vacuum: bool = False) -> int:
-        """Fold a streaming index's committed batch directories into one
-        generation — bit-exact under the frozen quantizers
-        (operators/ann_maintenance.py)."""
-        from creek_spark.operators.ann_maintenance import ivfpq_index_compact
-
-        return ivfpq_index_compact(self.spark, path, vacuum=vacuum)
-
-    def ann_drift_report(self, path: str, recent, **kw) -> dict:
-        """Recall-drift probe of recent data against the index's
-        bootstrap baseline: the retrain-recommended signal
-        (operators/ann_maintenance.py)."""
-        from creek_spark.operators.ann_maintenance import ann_drift_report
-
-        return ann_drift_report(self.spark, path, recent, **kw)
-
-    def ann_index_vacuum(
-        self, path: str, *, reclaim_pending: bool = False
-    ) -> list[int]:
-        """Reclaim a streaming index's dead generations, superseded
-        quantizer epochs, and over-retention manifest versions — run
-        after the reader grace period (operators/ann_maintenance.py).
-        Possibly-in-flight directories (above the manifest's watermark)
-        are skipped unless ``reclaim_pending=True``."""
-        from creek_spark.operators.ann_maintenance import ivfpq_index_vacuum
-
-        return ivfpq_index_vacuum(
-            self.spark, path, reclaim_pending=reclaim_pending
-        )
-
-    def ann_index_adopt(self, path: str) -> int:
-        """Losslessly migrate a static ann_index_build layout into the
-        manifest-managed streaming layout (fs rename into batch=0 +
-        manifest v1) so a stream can safely append to it
-        (operators/ann_maintenance.py adopt_static_layout)."""
-        from creek_spark.operators.ann_maintenance import adopt_static_layout
-
-        return adopt_static_layout(self.spark, path)
-
-    def streaming_dedup(self, state_dir: str, text_col: str = "text", id_col: str = "doc_id", **kw):
-        """Continuous near-dedup against an append-only persisted LSH
-        index, batch_id-fenced (streaming/dedup.py)."""
-        from creek_spark.streaming.dedup import StreamingDedup
-
-        return StreamingDedup(self.spark, state_dir, text_col, id_col, **kw)
-
-    def streaming_corpus_report(self, state_dir: str):
-        """Incrementally-maintained per-(source, lang) corpus report
-        card, batch-identical (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingCorpusReport
-
-        return StreamingCorpusReport(self.spark, state_dir)
-
-    def replication_session(self, transcript_path: str, state_dir: str, **kw):
-        """Walsender session over a recorded transcript: keepalive/status
-        protocol, resume from the persisted confirmed-LSN analog
-        (sources/walsender.py)."""
-        from creek_spark.sources.walsender import (
-            TranscriptTransport,
-            WalSenderSession,
-        )
-
-        return WalSenderSession(
-            TranscriptTransport(transcript_path), state_dir, **kw
-        )
-
-    def reference_schema(self, relation) -> dict:
-        """The reference-exact publish_message Avro schema for a relation
-        (sources/golden.py; byte-equal to the reference's golden)."""
-        from creek_spark.sources.golden import publish_message_schema
-
-        return publish_message_schema(relation)
-
-    def reference_wire_codec(self, relation):
-        """Byte-level creek-compatible WAL frame codec for a relation
-        (sources/creek_wire.py)."""
-        from creek_spark.sources.creek_wire import ReferenceWireCodec
-
-        return ReferenceWireCodec(relation)
-
-    def leakage_safe_split(self, docs, pairs, id_col, fractions, **kw):
-        """Cluster-aware train/val/test split: near-duplicate components
-        share one split (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import leakage_safe_split
-
-        return leakage_safe_split(docs, pairs, id_col, fractions, **kw)
-
-    def temperature_mix(self, df, stratum_col, id_col, *, budget, **kw):
-        """Temperature-(τ=0.5) mixture sampling with integer quotas and
-        md5-rank selection (operators/pipeline.py)."""
-        from creek_spark.operators.pipeline import temperature_mix_sample
-
-        return temperature_mix_sample(
-            df, stratum_col, id_col, budget=budget, **kw
-        )
-
-    def distribution_drift(self, df, group_col, value_col, **kw):
-        """Per-group total-variation drift vs the corpus distribution
-        (operators/quality.py)."""
-        from creek_spark.operators.quality import distribution_drift
-
-        return distribution_drift(df, group_col, value_col, **kw)
-
-    def embedding_dim_stats(self, df, vec_col="embedding"):
-        """Per-dimension embedding statistics (operators/profile.py)."""
-        from creek_spark.operators.profile import embedding_dim_stats
-
-        return embedding_dim_stats(df, vec_col)
-
-    def streaming_drift_monitor(self, state_dir: str, **kw):
-        """Incrementally-maintained distribution-drift monitor, batch-
-        identical to quality_drift_tvd (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingDriftMonitor
-
-        return StreamingDriftMonitor(self.spark, state_dir, **kw)
-
-    def ngram_novelty(self, df, text_col="text", id_col="doc_id", *, k=3):
-        """Per-document k-gram novelty score (operators/text.py)."""
-        from creek_spark.operators.text import ngram_novelty
-
-        return ngram_novelty(df, text_col, id_col, k=k)
-
-    def seasonal_decompose(self, sf_dir: str | None = None):
-        """Hourly trend/seasonal/residual decomposition per event type
-        (queries_r6.ts_seasonal_decompose)."""
-        from creek_spark.queries_r6 import ts_seasonal_decompose
-
-        return ts_seasonal_decompose(self.spark, sf_dir or self.data_dir)
-
-    def cohort_ltv(self, sf_dir: str | None = None):
-        """Revenue-cohort lifetime-value triangle
-        (queries_r6.orders_cohort_ltv)."""
-        from creek_spark.queries_r6 import orders_cohort_ltv
-
-        return orders_cohort_ltv(self.spark, sf_dir or self.data_dir)
-
-    def streaming_dim_stats(self, state_dir: str, **kw):
-        """Incrementally-maintained per-dimension embedding statistics,
-        batch-identical to embedding_dim_stats (streaming/detectors.py;
-        first tier on the sink's kind-aware min/max merge)."""
-        from creek_spark.streaming.detectors import StreamingDimStats
-
-        return StreamingDimStats(self.spark, state_dir, **kw)
-
-    def xyz_variability(self, sf_dir: str | None = None):
-        """XYZ demand-variability classification per part
-        (queries_r6.parts_xyz_variability)."""
-        from creek_spark.queries_r6 import parts_xyz_variability
-
-        return parts_xyz_variability(self.spark, sf_dir or self.data_dir)
-
-    def streaming_cms(self, state_dir: str, *, probes, **kw):
-        """Incrementally-maintained count-min frequency sketch with probe
-        exact-counts, batch-identical (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingCms
-
-        return StreamingCms(self.spark, state_dir, probes=probes, **kw)
-
-    def streaming_trend(self, state_dir: str):
-        """Incrementally-maintained per-key OLS trend over additive
-        daily cells, batch-identical (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingTrend
-
-        return StreamingTrend(self.spark, state_dir)
-
-    def pixel_stats(self, media, *, strict: bool = False) -> DataFrame:
-        """Per-image pixel statistics through the REAL pure-stdlib
-        codecs — PNG (incl. palette/low-depth/Adam7), JPEG (baseline +
-        progressive), BMP, GIF (operators/multimodal.py,
-        operators/jpeg_codec.py, operators/media_codecs.py)."""
-        from creek_spark.operators.multimodal import pixel_stats
-
-        return pixel_stats(media, strict=strict)
-
-    def resize_media(self, media, *, width: int = 224, height: int = 224, **kw) -> DataFrame:
-        """Image resize: REAL decode→NN→re-encode in the source
-        container for PNG/JPEG/BMP/GIF, injected codec or plumbing-fake
-        for the rest (operators/multimodal.py)."""
-        from creek_spark.operators.multimodal import resize_images
-
-        return resize_images(media, width=width, height=height, **kw)
-
-    def audio_stats(self, media, *, strict: bool = False) -> DataFrame:
-        """Per-clip exact-integer amplitude/energy statistics from REAL
-        decoded WAV PCM samples — the sample-level twin of pixel_stats
-        (operators/multimodal.py audio_stats)."""
-        from creek_spark.operators.multimodal import audio_stats
-
-        return audio_stats(media, strict=strict)
-
-    def media_report(self, media, *, day_col: str = "day") -> DataFrame:
-        """Per-(format, day) media ingest report from real decoded
-        content — exact-integer cells, undecodable payloads counted as
-        arrived-but-undecoded (operators/multimodal.py media_report)."""
-        from creek_spark.operators.multimodal import media_report
-
-        return media_report(media, day_col=day_col)
-
-    def image_headers(self, media, *, strict: bool = False) -> DataFrame:
-        """Container-truth image geometry from REAL pure-stdlib header
-        decode — PNG/JPEG/GIF/BMP/WebP/TIFF/AVIF/HEIC — including the
-        n_channels vs n_channels_decoded split that marks formats
-        outside the pixel decoders' profile
-        (operators/multimodal.py decode_image_headers)."""
-        from creek_spark.operators.multimodal import decode_image_headers
-
-        return decode_image_headers(media, strict=strict)
-
-    def frame_stats(self, media, *, frame_decoder, **kw) -> DataFrame:
-        """Per-frame exact-integer pixel stats through the video
-        decode INJECTION CONTRACT: the task plan, one-decoder-call-
-        per-video batching and contract validation are real; the codec
-        (PyAV/ffmpeg in production) is the one injected part
-        (operators/multimodal.py frame_decode_stats)."""
-        from creek_spark.operators.multimodal import frame_decode_stats
-
-        return frame_decode_stats(media, frame_decoder=frame_decoder, **kw)
-
-    def streaming_media_report(self, state_dir: str):
-        """Continuously-maintained media ingest report, bit-identical
-        to media_report over the streamed union — Python decode stage
-        feeding the fenced additive rollup sink
-        (streaming/detectors.py StreamingMediaReport)."""
-        from creek_spark.streaming.detectors import StreamingMediaReport
-
-        return StreamingMediaReport(self.spark, state_dir)
-
-    def skyline(self, sf_dir: str | None = None):
-        """Per-brand Pareto frontier on (price ↓, size ↑)
-        (queries_r6c.parts_skyline)."""
-        from creek_spark.queries_r6c import parts_skyline
-
-        return parts_skyline(self.spark, sf_dir or self.data_dir)
-
-    def triangle_counts(self, sf_dir: str | None = None):
-        """Degree-oriented triangle participation on the co-purchase
-        graph (queries_r6c.graph_triangles)."""
-        from creek_spark.queries_r6c import graph_triangles
-
-        return graph_triangles(self.spark, sf_dir or self.data_dir)
-
-    def bloom_membership(self, sf_dir: str | None = None):
-        """Deterministic Bloom-filter build/probe summary with measured
-        false positives (queries_r6c.sketch_bloom_filter)."""
-        from creek_spark.queries_r6c import sketch_bloom_filter
-
-        return sketch_bloom_filter(self.spark, sf_dir or self.data_dir)
-
-    def time_weighted_avg(self, sf_dir: str | None = None):
-        """Per-type TWAP on exact µs holding spans
-        (queries_r6c.ts_time_weighted_avg)."""
-        from creek_spark.queries_r6c import ts_time_weighted_avg
-
-        return ts_time_weighted_avg(self.spark, sf_dir or self.data_dir)
-
-    def vocab_stats(self, sf_dir: str | None = None):
-        """Per-source vocabulary/hapax profile
-        (queries_r6c.text_vocab_hapax)."""
-        from creek_spark.queries_r6c import text_vocab_hapax
-
-        return text_vocab_hapax(self.spark, sf_dir or self.data_dir)
-
-    def benford_screen(self, sf_dir: str | None = None):
-        """Benford first-digit DQ screen on order totals
-        (queries_r6c.dq_benford)."""
-        from creek_spark.queries_r6c import dq_benford
-
-        return dq_benford(self.spark, sf_dir or self.data_dir)
-
-    def discount_response(self, sf_dir: str | None = None):
-        """Per-brand OLS of quantity on discount points
-        (queries_r6c.discount_qty_response)."""
-        from creek_spark.queries_r6c import discount_qty_response
-
-        return discount_qty_response(self.spark, sf_dir or self.data_dir)
-
-    def open_backlog(self, sf_dir: str | None = None):
-        """Daily open-order backlog timeline
-        (queries_r6c.orders_open_backlog)."""
-        from creek_spark.queries_r6c import orders_open_backlog
-
-        return orders_open_backlog(self.spark, sf_dir or self.data_dir)
-
-    def autocorrelation(self, sf_dir: str | None = None):
-        """Lag-1/lag-24 hourly-series ACF per event type
-        (queries_r6c.ts_autocorrelation)."""
-        from creek_spark.queries_r6c import ts_autocorrelation
-
-        return ts_autocorrelation(self.spark, sf_dir or self.data_dir)
-
-    def common_neighbors(self, sf_dir: str | None = None):
-        """Common-neighbor/Jaccard link prediction on the co-purchase
-        graph (queries_r6c.graph_common_neighbors)."""
-        from creek_spark.queries_r6c import graph_common_neighbors
-
-        return graph_common_neighbors(self.spark, sf_dir or self.data_dir)
-
-    def conversion_latency(self, sf_dir: str | None = None):
-        """First-view → first-purchase conversion rate and exact
-        discrete latency percentiles
-        (queries_r6c.events_conversion_latency)."""
-        from creek_spark.queries_r6c import events_conversion_latency
-
-        return events_conversion_latency(self.spark, sf_dir or self.data_dir)
-
-    def pca_top_component(self, df, id_col="vec_id", vec_col="embedding", **kw):
-        """Top principal direction by integer-quantized power iteration
-        (operators/clustering.py)."""
-        from creek_spark.operators.clustering import pca_power_top_component
-
-        return pca_power_top_component(df, id_col, vec_col, **kw)
-
-    def streaming_bloom(self, state_dir: str, **kw):
-        """Incrementally-maintained Bloom membership filter,
-        batch-identical to sketch_bloom_filter (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingBloom
-
-        return StreamingBloom(self.spark, state_dir, **kw)
-
-    def streaming_acf(self, state_dir: str):
-        """Incrementally-maintained hourly autocorrelation,
-        batch-identical to ts_autocorrelation (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingAcf
-
-        return StreamingAcf(self.spark, state_dir)
-
-    def streaming_backlog(self, state_dir: str):
-        """Incrementally-maintained open-order backlog (per-order
-        extremum-merged state — the incremental-MV mirror),
-        batch-identical to orders_open_backlog (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingBacklog
-
-        return StreamingBacklog(self.spark, state_dir)
-
-    def supplier_hhi(self, sf_dir: str | None = None):
-        """Per-nation supplier revenue concentration (HHI)
-        (queries_r6c.supplier_concentration_hhi)."""
-        from creek_spark.queries_r6c import supplier_concentration_hhi
-
-        return supplier_concentration_hhi(self.spark, sf_dir or self.data_dir)
-
-    def pixel_dedup(self, sf_dir: str | None = None):
-        """Content-addressed pixel-level image dedup through the real
-        PNG codec (queries_r6c.multimodal_pixel_dedup)."""
-        from creek_spark.queries_r6c import multimodal_pixel_dedup
-
-        return multimodal_pixel_dedup(self.spark, sf_dir or self.data_dir)
-
-    def collocations(self, sf_dir: str | None = None):
-        """Top bigram collocations by lift
-        (queries_r6c.text_collocations)."""
-        from creek_spark.queries_r6c import text_collocations
-
-        return text_collocations(self.spark, sf_dir or self.data_dir)
-
-    def revenue_gini(self, sf_dir: str | None = None):
-        """Exact customer-revenue Gini coefficient
-        (queries_r6c.customer_revenue_gini)."""
-        from creek_spark.queries_r6c import customer_revenue_gini
-
-        return customer_revenue_gini(self.spark, sf_dir or self.data_dir)
-
-    def streaming_gini(self, state_dir: str):
-        """Incrementally-maintained revenue Gini, batch-identical to
-        customer_revenue_gini (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingGini
-
-        return StreamingGini(self.spark, state_dir)
-
-    def mode_per_group(self, sf_dir: str | None = None):
-        """Exact modal aggregate (queries_r6c.agg_mode)."""
-        from creek_spark.queries_r6c import agg_mode
-
-        return agg_mode(self.spark, sf_dir or self.data_dir)
-
-    def streaming_conversion(self, state_dir: str):
-        """Incrementally-maintained conversion-latency report,
-        batch-identical to events_conversion_latency
-        (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingConversion
-
-        return StreamingConversion(self.spark, state_dir)
-
-    def streaming_vocab(self, state_dir: str):
-        """Incrementally-maintained vocabulary/hapax profile,
-        batch-identical to text_vocab_hapax (streaming/detectors.py)."""
-        from creek_spark.streaming.detectors import StreamingVocab
-
-        return StreamingVocab(self.spark, state_dir)

@@ -45,6 +45,8 @@ from __future__ import annotations
 import json
 import logging
 
+from creek_spark import fsio
+
 log = logging.getLogger("creek_spark.ann")
 
 _MANIFEST_DIR = "_manifest"
@@ -87,8 +89,6 @@ RETRAIN_MARKER = "_retrain_pending.json"
 
 
 def pending_retrain_epoch(spark, path: str) -> int | None:
-    from creek_spark import fsio
-
     m = fsio.read_json_or_none(spark, f"{path}/{RETRAIN_MARKER}")
     return m.get("epoch") if isinstance(m, dict) else None
 
@@ -135,23 +135,6 @@ class ManifestConflictError(RuntimeError):
     class) or pair codes with the wrong quantizer epoch."""
 
 
-# -- hadoop-fs plumbing: promoted to creek_spark.fsio (round-12) so the
-# rollup/dedup/CDC/shard-writer sinks share the same object-store-safe
-# state IO this manifest has always used; the private aliases keep this
-# module's call sites and their tests unchanged.
-from creek_spark.fsio import _fs  # noqa: E402
-from creek_spark.fsio import list_names as _list_names  # noqa: E402
-from creek_spark.fsio import read_file_or_none as _read_file_or_none  # noqa: E402
-from creek_spark.fsio import write_file_atomic as _write_file_atomic  # noqa: E402
-
-
-def _read_file(spark, path: str) -> bytes:
-    data = _read_file_or_none(spark, path)
-    if data is None:
-        raise IOError(f"no such file: {path}")
-    return data
-
-
 # -- manifest ------------------------------------------------------------
 
 
@@ -170,7 +153,7 @@ def read_manifest(spark, path: str) -> dict | None:
     non-empty manifest directory must never degrade to the
     static-layout fallback, which would read torn batch directories."""
     for _ in range(3):
-        names = _list_names(spark, f"{path}/{_MANIFEST_DIR}")
+        names = fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}")
         versions = sorted(
             (
                 int(n[1:-5])
@@ -182,11 +165,14 @@ def read_manifest(spark, path: str) -> dict | None:
         if not versions:
             return None
         for v in versions:
+            data = fsio.read_file_or_none(
+                spark, f"{path}/{_MANIFEST_DIR}/v{v:08d}.json"
+            )
+            if data is None:  # vanished: pruned since the listing
+                continue
             try:
-                man = json.loads(
-                    _read_file(spark, f"{path}/{_MANIFEST_DIR}/v{v:08d}.json")
-                )
-            except Exception:  # vanished (pruned) or torn mid-publish
+                man = json.loads(data)
+            except ValueError:  # torn mid-publish
                 continue
             if isinstance(man, dict) and "live" in man:
                 man["version"] = v
@@ -245,7 +231,7 @@ def write_manifest(
             man[k] = prev[k]
     man["live"] = sorted(set(int(b) for b in live))
     man["version"] = version
-    _write_file_atomic(
+    fsio.write_file_atomic(
         spark,
         f"{path}/{_MANIFEST_DIR}/v{version:08d}.json",
         json.dumps(man, sort_keys=True).encode(),
@@ -257,17 +243,13 @@ def write_manifest(
 def _prune_manifests(spark, path: str, *, keep_from: int) -> list[int]:
     """Delete manifest versions older than ``keep_from`` (non-atomic and
     crash-tolerant: a missed delete is retried by the next publish)."""
-    fs, _, jvm = _fs(spark, path)
     pruned = []
-    for n in _list_names(spark, f"{path}/{_MANIFEST_DIR}"):
+    for n in fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}"):
         if not (n.startswith("v") and n.endswith(".json")):
             continue
         v = int(n[1:-5])
         if v < keep_from:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{path}/{_MANIFEST_DIR}/{n}"),
-                False,
-            )
+            fsio.delete(spark, f"{path}/{_MANIFEST_DIR}/{n}", recursive=False)
             pruned.append(v)
     return sorted(pruned)
 
@@ -319,7 +301,11 @@ def read_codes(spark, path: str, man: dict | None = _UNREAD):
 # compaction and retrain publishes a new version), else the local mtimes
 # of the codes/centroids/codebook directories (any rebuild rewrites
 # files, bumping the dir mtime).  Non-local paths (no os.stat) skip the
-# memo entirely and behave exactly as before.
+# memo entirely and behave exactly as before.  One entry per (session,
+# path): a new snapshot replaces it, and a stopped session's entries are
+# dropped on the next insert — so a streaming index that publishes a new
+# version per trigger pins one set of JVM plan objects, not one per
+# version.
 _INDEX_MEMO: dict[tuple, tuple] = {}
 
 
@@ -348,22 +334,22 @@ def read_index(spark, path: str):
             _local_mtime(p) for p in (f"{path}/codes", cents_dir, cb_dir)
         )
         snap = None if None in mts else ("mt",) + mts
-    key = (id(spark), path, snap)
+    key = (id(spark), path)
     if snap is not None:
         hit = _INDEX_MEMO.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
+        if hit is not None and hit[1] == snap:
+            return hit[2]
     frames = (
         read_codes(spark, path, man),
         spark.read.parquet(cents_dir),
         spark.read.parquet(cb_dir),
     )
     if snap is not None:
-        if len(_INDEX_MEMO) > 64:
-            # bound the handle cache: a streaming index publishes a new
-            # version per trigger and each entry pins JVM plan objects
-            _INDEX_MEMO.clear()
-        _INDEX_MEMO[key] = (spark, frames)
+        for k in [
+            k for k, v in _INDEX_MEMO.items() if v[0].sparkContext._jsc is None
+        ]:
+            del _INDEX_MEMO[k]
+        _INDEX_MEMO[key] = (spark, snap, frames)
     return frames
 
 
@@ -389,7 +375,7 @@ def adopt_static_layout(spark, path: str) -> int:
     root files is a state adopt never creates and refuses as ambiguous."""
     if read_manifest(spark, path) is not None:
         raise ValueError(f"index at {path} is already manifest-managed")
-    names = _list_names(spark, f"{path}/codes")
+    names = fsio.list_names(spark, f"{path}/codes")
     batches = {n for n in names if n.startswith("batch=")}
     names = [n for n in names if n not in batches]
     if batches - {"batch=0"}:
@@ -400,12 +386,9 @@ def adopt_static_layout(spark, path: str) -> int:
         )
     if not names and not batches:
         raise ValueError(f"no codes at {path}/codes: nothing to adopt")
-    fs, _, jvm = _fs(spark, path)
-    P = jvm.org.apache.hadoop.fs.Path
-    dest = P(f"{path}/codes/batch=0")
-    fs.mkdirs(dest)
+    fsio.mkdirs(spark, f"{path}/codes/batch=0")
     for n in names:
-        if not fs.rename(P(f"{path}/codes/{n}"), P(f"{path}/codes/batch=0/{n}")):
+        if not fsio.rename(spark, f"{path}/codes/{n}", f"{path}/codes/batch=0/{n}"):
             raise IOError(f"adopt: rename of codes/{n} failed")
     return write_manifest(spark, path, [0], expect_version=0)
 
@@ -499,11 +482,9 @@ def ivfpq_index_vacuum(
     max_bid = man.get("max_bid", 0)
     version = man["version"]
     marker_epoch = pending_retrain_epoch(spark, path)
-    fs, _, jvm = _fs(spark, path)
-    P = jvm.org.apache.hadoop.fs.Path
     deleted = []
     skipped = []
-    for name in _list_names(spark, f"{path}/codes"):
+    for name in fsio.list_names(spark, f"{path}/codes"):
         if not name.startswith("batch="):
             continue
         bid = int(name.split("=", 1)[1])
@@ -515,7 +496,7 @@ def ivfpq_index_vacuum(
         if pending and not reclaim_pending:
             skipped.append(f"codes/{name}")
             continue
-        fs.delete(P(f"{path}/codes/{name}"), True)
+        fsio.delete(spark, f"{path}/codes/{name}")
         deleted.append(bid)
     # dead quantizer generations: every epoch dir except the live one,
     # and — once an epoch IS live — the superseded root frames (readers
@@ -526,7 +507,7 @@ def ivfpq_index_vacuum(
     # in-flight frames and is skipped unless reclaim_pending.
     epoch = man.get("quantizers")
     live_epoch = epoch.rsplit("/", 1)[-1] if epoch else None
-    for name in _list_names(spark, f"{path}/quantizers"):
+    for name in fsio.list_names(spark, f"{path}/quantizers"):
         if name == live_epoch:
             continue
         try:
@@ -537,14 +518,12 @@ def ivfpq_index_vacuum(
         if pending and not reclaim_pending:
             skipped.append(f"quantizers/{name}")
             continue
-        fs.delete(P(f"{path}/quantizers/{name}"), True)
+        fsio.delete(spark, f"{path}/quantizers/{name}")
     if live_epoch is not None:
         for stale in ("centroids", "codebook"):
-            fs.delete(P(f"{path}/{stale}"), True)
+            fsio.delete(spark, f"{path}/{stale}")
     if reclaim_pending and marker_epoch is not None:
         # the owner vouched no retrain is in flight — clear its marker
-        from creek_spark import fsio
-
         fsio.delete(spark, f"{path}/{RETRAIN_MARKER}")
     _prune_manifests(spark, path, keep_from=man["version"] - MANIFEST_RETAIN + 1)
     if skipped:
@@ -661,9 +640,9 @@ def ann_drift_report(
     under ``'filter'`` the index excludes zero-norm rows by design, so
     they are dropped from ``recent_df`` before probing — counting them
     as recall misses would inflate drift and trip
-    ``retrain_recommended`` spuriously.  This makes every entry point
-    (`StreamingAnnIndex.drift_report`, this function, the Engine
-    facade) probe the same view of the same index.
+    ``retrain_recommended`` spuriously.  This makes both entry points
+    (`StreamingAnnIndex.drift_report` and this function) probe the
+    same view of the same index.
     ``retrain_recommended`` trips when recall fell more than
     ``tolerance`` below baseline — the signal to rebuild (retrain
     quantizers) instead of appending forever, i.e. Faiss's
@@ -680,8 +659,7 @@ def ann_drift_report(
     base = probe.get("recall")
     if base is None:
         step = (
-            "run adopt_static_layout(spark, path) (or "
-            "engine.ann_index_adopt) once, then "
+            "run adopt_static_layout(spark, path) once, then "
             "StreamingAnnIndex.rebaseline()"
             if man is None
             else "publish a baseline once with "

@@ -181,16 +181,35 @@ def minhash_lsh_candidates(
     # more than the persist+join it removes; both forms share the same
     # |bucket|² fan-out bound, so the join form stays.)
     banded = _persist(lsh_bands(sigs, bands=bands, rows_per_band=rows_per_band))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, on=["band", "sig"])
+    return lsh_band_pairs(banded)
+
+
+def lsh_band_pairs(nb: DataFrame, index: DataFrame | None = None) -> DataFrame:
+    """Candidate pairs (doc_a < doc_b) from precomputed banded rows
+    (doc, band, sig): the self-join of ``nb`` and, given a persisted
+    ``index`` of the same shape, the join of ``nb`` against it.  Both
+    joins key on (band, sig), so fan-out stays bucket-bounded.  ``nb``
+    is read by both legs; the caller persists it."""
+    nn = (
+        nb.alias("a")
+        .join(nb.alias("b"), on=["band", "sig"])
         .where(F.col("a.doc") < F.col("b.doc"))
         .select(
             F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
         )
-        .distinct()
     )
+    if index is None:
+        return nn.distinct()
+    ne = (
+        nb.alias("n")
+        .join(index.alias("e"), on=["band", "sig"])
+        .where(F.col("n.doc") != F.col("e.doc"))
+        .select(
+            F.least(F.col("n.doc"), F.col("e.doc")).alias("doc_a"),
+            F.greatest(F.col("n.doc"), F.col("e.doc")).alias("doc_b"),
+        )
+    )
+    return ne.unionByName(nn).distinct()
 
 
 def connected_components(
@@ -453,34 +472,13 @@ def incremental_lsh_candidates(
     a pre-computed (doc, band, sig) scan.  Both joins key on (band, sig)
     so fan-out stays bucket-bounded; cost ∝ batch, not corpus — the
     production crawl-over-crawl dedup loop."""
-    rows_per_band = n_hashes // bands
     nb = _persist(
-        lsh_bands(
-            minhash_signatures(
-                new_df, text_col, id_col,
-                n_hashes=n_hashes, shingle_k=shingle_k,
-            ),
-            bands=bands, rows_per_band=rows_per_band,
+        minhash_index(
+            new_df, text_col, id_col,
+            n_hashes=n_hashes, bands=bands, shingle_k=shingle_k,
         )
     )
-    ne = (
-        nb.alias("n")
-        .join(index.alias("e"), on=["band", "sig"])
-        .where(F.col("n.doc") != F.col("e.doc"))
-        .select(
-            F.least(F.col("n.doc"), F.col("e.doc")).alias("doc_a"),
-            F.greatest(F.col("n.doc"), F.col("e.doc")).alias("doc_b"),
-        )
-    )
-    nn = (
-        nb.alias("a")
-        .join(nb.alias("b"), on=["band", "sig"])
-        .where(F.col("a.doc") < F.col("b.doc"))
-        .select(
-            F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
-        )
-    )
-    return ne.unionByName(nn).distinct()
+    return lsh_band_pairs(nb, index)
 
 
 def banded_record_pairs(

@@ -53,6 +53,23 @@ def register(name: str, oracle: str | None, category: str, headline: bool = Fals
     return deco
 
 
+def catalog() -> dict[str, Query]:
+    """The whole catalog.  This module holds part 1; importing each
+    later part registers its queries, so QUERIES fills in this order."""
+    import creek_spark.queries_ext  # noqa: F401 — part 2
+    import creek_spark.queries_northstar  # noqa: F401 — part 3
+    import creek_spark.queries_tpch  # noqa: F401 — part 4
+    import creek_spark.queries_analytics  # noqa: F401 — part 5
+    import creek_spark.queries_graph  # noqa: F401 — part 6
+    import creek_spark.queries_r4  # noqa: F401 — part 7
+    import creek_spark.queries_r6  # noqa: F401 — part 8
+    import creek_spark.queries_r6b  # noqa: F401 — part 9
+    import creek_spark.queries_r6c  # noqa: F401 — part 10
+    import creek_spark.queries_r11  # noqa: F401 — part 11
+
+    return QUERIES
+
+
 def _t(spark, sf_dir, name):
     return read_table(spark, sf_dir, name)
 

@@ -86,6 +86,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from creek_spark import fsio
 from creek_spark.operators.ann_maintenance import (
     ann_drift_report,
     ivfpq_index_compact,
@@ -160,7 +161,7 @@ class StreamingAnnIndex:
         )
         # the junk policy rides in the manifest so EVERY drift entry
         # point (this object, a fresh StreamingAnnIndex, the bare
-        # ann_drift_report, the Engine facade) probes the same view —
+        # ann_drift_report) probes the same view —
         # otherwise the same index yields different drift numbers and
         # can trip retrain_recommended spuriously (round-11 ADVICE)
         write_manifest(
@@ -250,11 +251,9 @@ class StreamingAnnIndex:
         man = read_manifest(self.spark, self.path)
         live = None if man is None else man["live"]
         if live is None:
-            from creek_spark.operators.ann_maintenance import _list_names
-
             names = [
                 n
-                for n in _list_names(self.spark, f"{self.path}/codes")
+                for n in fsio.list_names(self.spark, f"{self.path}/codes")
                 if not n.startswith((".", "_"))
             ]
             loose = [n for n in names if not n.startswith("batch=")]
@@ -564,7 +563,6 @@ class StreamingAnnIndex:
         # staged codes out from under this retrain (review finding).
         # The marker keeps every dir of this epoch pending until the
         # flip; a crashed attempt leaves it for reclaim_pending.
-        from creek_spark import fsio
         from creek_spark.operators.ann_maintenance import RETRAIN_MARKER
 
         fsio.write_json_atomic(
@@ -750,8 +748,8 @@ class StreamingAnnIndex:
         counting them as recall misses would inflate drift and trip
         the retrain signal spuriously.  The filtering itself lives in
         `ann_drift_report`, which resolves the policy from the manifest
-        (recorded at bootstrap/retrain/rebaseline), so this method, the
-        bare function, and the Engine facade probe the identical view;
+        (recorded at bootstrap/retrain/rebaseline), so this method and the
+        bare function probe the identical view;
         pass ``on_zero_norm=`` explicitly to override.  For a
         PRE-UPGRADE state dir whose manifest predates the
         'on_zero_norm' key, this index object's own configured policy

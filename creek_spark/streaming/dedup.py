@@ -55,11 +55,7 @@ class StreamingDedup:
     # -- ingestion -----------------------------------------------------
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from creek_spark.operators.dedup import (
-            incremental_lsh_candidates,
-            minhash_index,
-            minhash_lsh_candidates,
-        )
+        from creek_spark.operators.dedup import lsh_band_pairs, minhash_index
 
         m = self._store.manifest()
         fence = m or {}
@@ -69,26 +65,24 @@ class StreamingDedup:
             sink="the index", state_path=self.state_dir,
         ):
             return  # replayed trigger — state already reflects it
-        index = self._store.read_runs(m)
-        if index is None:
-            pairs = minhash_lsh_candidates(
-                batch, self.text_col, self.id_col, **self.lsh_kw
+        # one signature pass: the batch's band rows feed both the pairs
+        # and the index run, and are released once the run is published
+        sigs = minhash_index(
+            batch, self.text_col, self.id_col, **self.lsh_kw
+        ).persist()
+        try:
+            lsh_band_pairs(sigs, self._store.read_runs(m)).write.mode(
+                "overwrite"
+            ).parquet(fsio.join(self.state_dir, f"pairs/batch={batch_id}"))
+            self._store.publish(
+                m, set(), set(),
+                runs=self._store.runs(m) + [self._store.write_run(sigs, m)],
+                run_schema=sigs.schema,
+                last_batch_id=batch_id,
+                fence_print=content_fingerprint(batch),
             )
-        else:
-            pairs = incremental_lsh_candidates(
-                batch, index, self.text_col, self.id_col, **self.lsh_kw
-            )
-        pairs.write.mode("overwrite").parquet(
-            fsio.join(self.state_dir, f"pairs/batch={batch_id}")
-        )
-        sigs = minhash_index(batch, self.text_col, self.id_col, **self.lsh_kw)
-        self._store.publish(
-            m, set(), set(),
-            runs=self._store.runs(m) + [self._store.write_run(sigs, m)],
-            run_schema=sigs.schema,
-            last_batch_id=batch_id,
-            fence_print=content_fingerprint(batch),
-        )
+        finally:
+            sigs.unpersist()
 
     # -- results -------------------------------------------------------
 

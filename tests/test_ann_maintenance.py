@@ -675,43 +675,46 @@ def test_build_polices_zero_norm_rows(spark, tmp_path, parts):
     assert len(_key(sim.ivfpq_search(spark, clean, parts["queries"]))) > 0
 
 
-def test_engine_facade_drives_full_ann_lifecycle(spark, tmp_path, parts):
-    """The Engine surface a reference user would script against: static
-    build → adopt into the streaming layout → streamed commit → search
-    → compact → drift probe → vacuum, all through engine methods (the
-    round-10 facades ann_index_adopt / ann_index_vacuum included)."""
-    from creek_spark.engine import Engine
+def test_public_surface_drives_full_ann_lifecycle(spark, tmp_path, parts):
+    """The public functions a reference user would script against:
+    static build → adopt into the streaming layout → streamed commit →
+    search → compact → drift probe → vacuum → online retrain."""
+    from creek_spark.operators.ann_maintenance import (
+        adopt_static_layout,
+        ann_drift_report,
+        ivfpq_index_compact,
+        ivfpq_index_vacuum,
+    )
 
-    eng = Engine(spark, data_dir=str(tmp_path))
     p = str(tmp_path / "idx")
-    eng.ann_index_build(parts["seed"], p)
-    n0 = eng.ann_search(p, parts["queries"]).count()
+    sim.ivfpq_index_build(parts["seed"], p)
+    n0 = sim.ivfpq_search(spark, p, parts["queries"]).count()
 
-    eng.ann_index_adopt(p)
-    idx = eng.streaming_ann_index(p)
+    adopt_static_layout(spark, p)
+    idx = StreamingAnnIndex(spark, p)
     idx.apply_batch(parts["b"][0], 0)
-    assert eng.ann_search(p, parts["queries"]).count() == n0  # same k·|q|
+    assert sim.ivfpq_search(spark, p, parts["queries"]).count() == n0  # same k·|q|
 
-    v = eng.ann_index_compact(p)
+    v = ivfpq_index_compact(spark, p)
     assert v == read_manifest(spark, p)["version"]
     # an ADOPTED index has no drift baseline: probing against nothing
     # refuses (silent retrain_recommended=False would disable the
     # signal forever) until rebaseline() publishes one
     with pytest.raises(ValueError, match="rebaseline"):
-        eng.ann_drift_report(p, parts["b"][1])
+        ann_drift_report(spark, p, parts["b"][1])
     idx.rebaseline()
-    rep = eng.ann_drift_report(p, parts["b"][1])
+    rep = ann_drift_report(spark, p, parts["b"][1])
     assert "retrain_recommended" in rep
-    dead = eng.ann_index_vacuum(p)
+    dead = ivfpq_index_vacuum(spark, p)
     assert dead  # pre-compaction generations reclaimed
-    assert eng.ann_search(p, parts["queries"]).count() == n0
+    assert sim.ivfpq_search(spark, p, parts["queries"]).count() == n0
 
-    # the round-12 no-pause retrain, through the same facade
-    rounds = eng.ann_index_retrain_online(p)
+    # the no-pause retrain, on a fresh handle to the same index
+    rounds = StreamingAnnIndex(spark, p).retrain_online()
     assert rounds == 0  # no stream committed mid-retrain here
     man = read_manifest(spark, p)
     assert man["quantizers"].startswith("quantizers/v")
-    assert eng.ann_search(p, parts["queries"]).count() == n0
+    assert sim.ivfpq_search(spark, p, parts["queries"]).count() == n0
 
 
 def test_adopt_resumes_after_mid_rename_crash(spark, tmp_path, parts):

@@ -119,3 +119,32 @@ def test_adc_over_store_matches_inline_path(spark, tmp_path):
     assert set(got) == set(expected)
     for key in expected:
         assert abs(got[key] - expected[key]) < 1e-12
+
+
+def test_index_memo_keeps_one_entry_per_live_session_and_path(spark, tmp_path):
+    """read_index's plan-handle memo holds one entry per live (session,
+    path): a new manifest version replaces the entry, a stopped session's
+    entries go on the next insert, and a repeat read of an unchanged
+    snapshot hands back the same frames."""
+    from types import SimpleNamespace
+
+    from creek_spark.operators import ann_maintenance as am
+
+    p = str(tmp_path / "idx")
+    for sub in ("codes/batch=0", "centroids", "codebook"):
+        spark.range(2).write.parquet(f"{p}/{sub}")
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+    am._INDEX_MEMO[(id(stopped), p)] = (stopped, ("v", 1), ())
+
+    def entries():
+        return [k for k in am._INDEX_MEMO if k[1] == p]
+
+    am.write_manifest(spark, p, [0])
+    first = am.read_index(spark, p)
+    assert am.read_index(spark, p) is first  # unchanged snapshot
+    assert entries() == [(id(spark), p)]  # the stopped session's is gone
+    am.write_manifest(spark, p, [0])  # a second committed version
+    second = am.read_index(spark, p)
+    assert second is not first
+    assert entries() == [(id(spark), p)]
+    assert am._INDEX_MEMO[(id(spark), p)][1] == ("v", 2)

@@ -9,10 +9,11 @@ between the publish and the checkpoint commit) covers every point
 between a version-dir write, the manifest swap and GC.  Hypothesis draws
 the op sequence, the batch split and the crash point; the explicit
 examples pin one crash at each fsio step of a run publish and of a
-compaction publish (CdcApplier, StreamingDedup) and of a rollup publish
+compaction publish (CdcApplier, StreamingDedup), of a rollup publish
 (AdditiveRollupSink) — every fenced sink that commits through the
-versioned store.  A StreamingDedup batch costs seconds of Spark jobs,
-so its harness runs the explicit examples only."""
+versioned store — and of a StreamingAnnIndex manifest commit.  A
+StreamingDedup or StreamingAnnIndex batch costs seconds of Spark jobs,
+so their harnesses run the explicit examples only."""
 
 from __future__ import annotations
 
@@ -27,6 +28,7 @@ from hypothesis import strategies as st
 
 from creek_spark import fsio
 from creek_spark.streaming import CdcApplier
+from creek_spark.streaming.ann import StreamingAnnIndex
 from creek_spark.streaming.dedup import StreamingDedup
 from creek_spark.streaming.rollup import AdditiveRollupSink
 from tests.fixtures import ENV_SCHEMA, _lsn, interpret, wal_row
@@ -419,3 +421,65 @@ def test_streaming_dedup_survives_a_crash_at_every_fsio_step(
         assert _doc_pairs(sd.candidates()) == want
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
+
+
+# -- StreamingAnnIndex -------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def ann_prefix(spark, tmp_path_factory):
+    """A bootstrapped index (each example starts from a copy — bootstrap
+    trains quantizers), the streamed batch, and the seed's ids.  Ten
+    more manifest versions make the index long-running: every commit
+    then also prunes the version that falls out of retention."""
+    from pyspark.sql import functions as F
+
+    from creek_spark.operators.ann_maintenance import write_manifest
+    from creek_spark.sources import read_table
+    from tests.conftest import SF_DIR
+
+    emb = read_table(spark, SF_DIR, "embeddings")
+    seed = emb.where(F.col("vec_id") % 4 == 0)
+    batch = emb.where(F.col("vec_id") % 4 == 1)
+    path = str(tmp_path_factory.mktemp("ann_prefix") / "idx")
+    StreamingAnnIndex(spark, path).bootstrap(seed)
+    for _ in range(10):
+        write_manifest(spark, path, [0])
+    seed_ids = [r["vec_id"] for r in seed.select("vec_id").collect()]
+    return path, batch, seed_ids
+
+
+@given(k=st.integers(1, 9), expect=st.none())
+# one crash at each fsio step of the manifest commit that ends
+# apply_batch (the commit's manifest read, the version write, the
+# retention listing and its delete), and right after it
+@example(k=5, expect="list_names")
+@example(k=6, expect="read_file_or_none")
+@example(k=7, expect="write_file_atomic")
+@example(k=8, expect="list_names")
+@example(k=9, expect="delete")
+@example(k=99, expect="after")
+@settings(_SETTINGS, phases=[Phase.explicit])
+def test_streaming_ann_index_survives_a_crash_at_every_fsio_step(
+    spark, ann_prefix, k, expect
+):
+    from creek_spark.operators.ann_maintenance import read_codes, read_manifest
+
+    prefix, batch, seed_ids = ann_prefix
+    root = tempfile.mkdtemp(prefix="crash_ann_")
+    path = os.path.join(root, "idx")
+    try:
+        shutil.copytree(prefix, path)
+        idx = StreamingAnnIndex(spark, path)
+        hit = _crash_during(k, lambda: idx.apply_batch(batch, 0))
+        assert expect is None or hit == expect, (hit, expect)
+
+        # restart: a fresh index handle on the same dir, the crashed
+        # batch re-delivered under its id
+        StreamingAnnIndex(spark, path).apply_batch(batch, 0)
+        batch_ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
+        got = [r["n_id"] for r in read_codes(spark, path).select("n_id").collect()]
+        assert sorted(got) == sorted(seed_ids + batch_ids)
+        assert read_manifest(spark, path)["max_bid"] == 1
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

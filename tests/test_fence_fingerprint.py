@@ -6,8 +6,8 @@
    fingerprint committed beside the fence (streaming/fence.py) makes the
    sink no-op the true replay and refuse the imposter loudly.
 2. ANN drift entry-point coherence: the junk policy rides in the
-   manifest, so StreamingAnnIndex.drift_report, bare ann_drift_report,
-   and the Engine facade all probe the identical view.
+   manifest, so StreamingAnnIndex.drift_report and bare
+   ann_drift_report probe the identical view.
 3. vacuum names the possibly-in-flight directories it deliberately
    skips (WARNING on logger creek_spark.ann) instead of leaving a
    silent disk leak.
@@ -177,9 +177,7 @@ def test_drift_report_same_view_through_every_entry_point(
     spark, tmp_path, emb_parts
 ):
     """A filter-policy index must not count its by-design-excluded junk
-    rows as recall misses through ANY entry point (round-11 ADVICE: the
-    engine facade bypassed the _probe_view filtering)."""
-    from creek_spark.engine import Engine
+    rows as recall misses through ANY entry point."""
     from creek_spark.operators.ann_maintenance import (
         ann_drift_report,
         read_manifest,
@@ -198,8 +196,7 @@ def test_drift_report_same_view_through_every_entry_point(
     recent = emb_parts["b"][0].select("vec_id", "embedding").unionByName(junk)
     via_index = idx.drift_report(recent)
     via_fn = ann_drift_report(spark, p, recent)
-    via_engine = Engine(spark).ann_drift_report(p, recent)
-    assert via_index == via_fn == via_engine
+    assert via_index == via_fn
     # the resolved-policy path is equivalent to filtering by hand —
     # i.e. the junk row is provably excluded from the probed view
     from creek_spark.operators.similarity import _zero_norm_cond

@@ -216,21 +216,20 @@ def _tiff_bytes(
     )
 
 
-def test_engine_media_header_facades(spark):
-    """The Engine facade surface for the header tier: image_headers
-    and frame_stats delegate to the real operators with identical
-    results (the operators themselves carry the deep tests)."""
+def test_media_header_operators(spark):
+    """The header tier end to end on one mixed frame: decode_image_headers
+    and frame_decode_stats (the operators' own tests go deeper)."""
     import numpy as np
 
-    from creek_spark import Engine
     from creek_spark.operators.multimodal import (
         MEDIA_SCHEMA,
+        decode_image_headers,
+        frame_decode_stats,
         mp4_bytes,
         tiff_bytes,
         webp_bytes,
     )
 
-    eng = Engine(spark, data_dir="/root/testdata/sf0.001")
     media = spark.createDataFrame(
         [
             (1, "image", bytearray(webp_bytes(64, 32)), None, None, {}),
@@ -240,7 +239,7 @@ def test_engine_media_header_facades(spark):
         ],
         schema=MEDIA_SCHEMA,
     )
-    hdrs = {r["media_id"]: r for r in eng.image_headers(media).collect()}
+    hdrs = {r["media_id"]: r for r in decode_image_headers(media).collect()}
     assert (hdrs[1]["format"], hdrs[1]["width"]) == ("webp", 64)
     assert (hdrs[2]["format"], hdrs[2]["height"]) == ("tiff", 60)
     assert hdrs[3]["format"] is None  # video payload: not an image
@@ -248,7 +247,7 @@ def test_engine_media_header_facades(spark):
     def codec(payload, ts):
         return [np.zeros((2, 2), dtype=np.uint8) for _ in ts]
 
-    rows = eng.frame_stats(media, frame_decoder=codec).collect()
+    rows = frame_decode_stats(media, frame_decoder=codec).collect()
     assert {r["frame_ts"] for r in rows} == {0, 5}  # 6 s / every 5 s
     assert all(r["sum_px"] == 0 and r["n_values"] == 4 for r in rows)
 

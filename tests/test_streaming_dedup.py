@@ -26,6 +26,34 @@ def test_streamed_candidates_equal_full_corpus(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_one_signature_pass_per_batch_and_no_leaked_cache(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Each apply_batch shingles and minhashes its batch once — the band
+    rows feed both the pairs and the index run — and releases them after
+    the publish instead of leaving them in the operator cache registry."""
+    from creek_spark.operators import cachereg
+    from creek_spark.operators import dedup as dedup_ops
+
+    calls = []
+    real = dedup_ops.minhash_signatures
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(dedup_ops, "minhash_signatures", spy)
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text").limit(60)
+    sd = StreamingDedup(spark, str(tmp_path / "spystate"))
+    cached = len(cachereg._CACHES)
+    for i, r in enumerate((0, 1)):  # first batch: no index; then one
+        calls.clear()
+        sd.apply_batch(docs.where(F.col("doc_id") % 2 == r), i)
+        assert len(calls) == 1
+        assert len(cachereg._CACHES) == cached
+    assert sd.last_batch_id() == 1
+
+
 def test_streaming_dedup_replay_fenced(spark, sf_dir, tmp_path):
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text").limit(300)
     sd = StreamingDedup(spark, str(tmp_path / "rdstate"))
