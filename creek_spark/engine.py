@@ -44,10 +44,9 @@ class Engine:
     def sql(self, query: str) -> DataFrame:
         return self.spark.sql(query)
 
-    def query(self, name: str, sf_dir: str | None = None) -> DataFrame:
-        """The catalog query ``name`` over ``sf_dir`` (default: this
-        engine's data directory)."""
-        return catalog()[name].fn(self.spark, sf_dir or self.data_dir)
+    def query(self, name: str) -> DataFrame:
+        """The catalog query ``name`` over this engine's data directory."""
+        return catalog()[name].fn(self.spark, self.data_dir)
 
     def snapshot(self, df: DataFrame, base_dir: str, table: str, **kw) -> str:
         return sources.write_snapshot(df, base_dir, table, **kw)

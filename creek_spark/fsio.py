@@ -138,8 +138,9 @@ def _is_missing(exc) -> bool:
 def _read_bytes(fs, jvm, jpath) -> bytes | None:
     """Missing-tolerant read: an exists() pre-check keeps the common
     no-state probe cheap (no Java exception construction), and the
-    open() catch closes the TOCTOU hole for a file deleted between the
-    two calls (another writer's swap, manifest pruning)."""
+    open() and read catches close the TOCTOU hole for a file deleted
+    after the check (another writer's swap, manifest pruning) — on an
+    object store open() can succeed and only the later GET fail."""
     if not fs.exists(jpath):
         return None
     try:
@@ -150,6 +151,10 @@ def _read_bytes(fs, jvm, jpath) -> bytes | None:
         raise
     try:
         return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(inp))
+    except Exception as exc:
+        if _is_missing(exc):
+            return None
+        raise
     finally:
         inp.close()
 

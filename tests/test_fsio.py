@@ -31,6 +31,36 @@ def test_join_is_scheme_safe():
     assert fsio.join("") == "."
 
 
+def test_file_vanishing_mid_read_reads_as_missing():
+    """On an object store open() can succeed and only the later GET
+    fail: a FileNotFoundException from the byte read reads as missing,
+    any other read error propagates, and the stream is closed."""
+    from types import SimpleNamespace as NS
+
+    from py4j.protocol import Py4JJavaError
+
+    def read_failing_with(text):
+        java_exc = type("JavaExc", (), {"__str__": lambda _: text})()
+        java_exc._target_id = "o0"
+        closed = []
+
+        def to_bytes(inp):
+            raise Py4JJavaError("read", java_exc)
+
+        stream = NS(close=lambda: closed.append(1))
+        fs = NS(exists=lambda p: True, open=lambda p: stream)
+        io = NS(IOUtils=NS(toByteArray=to_bytes))
+        jvm = NS(org=NS(apache=NS(commons=NS(io=io))))
+        try:
+            return fsio._read_bytes(fs, jvm, "p")
+        finally:
+            assert closed == [1]
+
+    assert read_failing_with("java.io.FileNotFoundException: p") is None
+    with pytest.raises(Py4JJavaError):
+        read_failing_with("java.io.IOException: connection reset")
+
+
 def test_primitives_roundtrip_on_scheme_path(spark, tmp_path):
     root = f"file:{tmp_path}/fsio"
     assert not fsio.exists(spark, root)
