@@ -147,15 +147,15 @@ def main() -> None:
     # Ambient-speed calibration, frozen-plan form (round-12 fix of the
     # twice-deferred r10 item 2): ~2 s of pure chained-hash compute +
     # one shuffle over spark.range — no IO, no data dependence, plan
-    # frozen forever.  The old 0.15 s scan-agg row (kept below for
-    # series continuity) measured task-scheduling overhead, not ambient
-    # speed: r8→r11 it stayed flat (or moved OPPOSITE) while every
-    # query moved ~20% together.  This row is big enough that CPU
-    # contention on the shared host shows up proportionally, which is
-    # the quantity a cross-round reader must divide out.  Both the
-    # min-of-3 (same estimator as the per-query timings) and the
-    # median-of-3 (robust central ambient) are emitted; BASELINE.md §2
-    # records the normalization formula and the reference value.
+    # frozen forever.  A 0.15 s scan-aggregate measures task-scheduling
+    # overhead, not ambient speed: r8→r11 one stayed flat (or moved
+    # OPPOSITE) while every query moved ~20% together.  This row is big
+    # enough that CPU contention on the shared host shows up
+    # proportionally, which is the quantity a cross-round reader must
+    # divide out.  Both the min-of-3 (same estimator as the per-query
+    # timings) and the median-of-3 (robust central ambient) are
+    # emitted; BASELINE.md §2 records the normalization formula and the
+    # reference value.
     try:
         from pyspark.sql import functions as F  # noqa: PLC0415
 
@@ -188,25 +188,6 @@ def main() -> None:
     except Exception:
         pass
 
-    # Ambient-speed calibration, legacy scan-agg form: a fixed
-    # scan-aggregate whose plan never changes across rounds.  Kept so
-    # the r8→r12 series stays comparable, but see above — it under-
-    # measures ambient speed; use calibration_frozen_sec for rounds
-    # that carry it.
-    try:
-        calib = (
-            spark.read.parquet(os.path.join(raw_sf_dir, "lineitem.parquet"))
-            .groupBy("l_returnflag")
-            .agg({"l_quantity": "sum", "l_extendedprice": "avg"})
-        )
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            calib.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        extras["calibration_scan_agg_sec"] = round(best, 3)
-    except Exception:
-        pass
     try:
         ivfpq_fn = catalog["similarity_ivfpq"].fn
         best = float("inf")
@@ -373,19 +354,15 @@ def main() -> None:
 
     wall = round(time.perf_counter() - t_all, 3)
 
-    # Regression gate: compare per-query times against the previous round's
+    # Regression gate: compare per-query times against the newest
     # recorded bench (the operative baseline — BASELINE.md: the reference
-    # publishes no numbers).  >2× slower is a loud warning on stderr and a
-    # "regressions" key in the JSON; renamed queries are mapped.
-    renames = {
-        "window_running_lag": "window_running",
-        "text_metrics": "text_quality",
-        "stream_windows": "stream_tumbling_window",
-    }
+    # publishes no numbers; SPARK_GRAFT_BENCH_BASELINE names another).
+    # >2× slower is a loud warning on stderr and a "regressions" key in
+    # the JSON.
     regressions: dict[str, list[float]] = {}
     base_path = os.environ.get(
         "SPARK_GRAFT_BENCH_BASELINE",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r01.json"),
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r13.json"),
     )
     try:
         with open(base_path) as f:
@@ -393,7 +370,7 @@ def main() -> None:
         # the driver's BENCH_r{N}.json nests the bench line under "parsed"
         base = data.get("queries") or data.get("parsed", {}).get("queries", {})
         for name, sec in timings.items():
-            prev = base.get(name) or base.get(renames.get(name, ""))
+            prev = base.get(name)
             if prev and sec > 2.0 * prev:
                 regressions[name] = [prev, sec]
                 print(

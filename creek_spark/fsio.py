@@ -1,8 +1,8 @@
 """Sink-state filesystem IO through the Hadoop FileSystem API.
 
 Every fenced sink in this engine keeps metadata-sized state beside its
-data: a manifest (`_manifest.json`, `_manifest/vNNN.json`), a fence
-(`_fence.json`), versioned state directories.  Driver-local
+data: a manifest (`_manifest.json`), a fence (`_fence.json`), versioned
+state directories.  Driver-local
 ``open``/``os.replace`` binds that state to the driver's POSIX
 filesystem — fine under local[n] tests, wrong on a cluster where the
 state dir is an object-store URI (``s3a://…``, ``hdfs://…``) right next
@@ -13,18 +13,18 @@ promoted to a shared home so the rollup, dedup, CDC-state and
 shard-writer sinks resolve their state through the SAME filesystem
 abstraction their data writes use (scheme-qualified URIs and
 scheme-less local paths alike — local paths resolve against
-``fs.defaultFS`` exactly as DataFrame reads do).
+``fs.defaultFS`` exactly as DataFrame reads do).  Every sink, the ANN
+index included, commits by swapping one such file with
+:func:`write_json_atomic`.
 
 All calls are driver-side (foreachBatch bodies, maintenance ops) and
 metadata-sized: one JVM round-trip each, O(1) per trigger — nothing
 here touches row data.
 
-Atomicity note (mirrors the ANN manifest's contract): tmp-write +
-rename is atomic on HDFS and local filesystems; object stores rename by
-copy, so sinks that need torn-read-proof publishes on S3 pair this with
-new-file-per-version naming (the manifest-directory layout) rather than
-in-place swaps — both layouts exist in this package and both route
-through here.
+Atomicity note: tmp-write + rename is atomic on HDFS and local
+filesystems.  Object stores rename by copy; :func:`read_json_or_none`
+covers the window in which the destination is missing by reading the
+tmp file, whose parse check rejects a partial write.
 """
 
 from __future__ import annotations
@@ -40,7 +40,6 @@ __all__ = [
     "rename",
     "mkdirs",
     "delete",
-    "read_file_or_none",
     "read_json_or_none",
     "write_file_atomic",
     "write_json_atomic",
@@ -139,7 +138,7 @@ def _read_bytes(fs, jvm, jpath) -> bytes | None:
     """Missing-tolerant read: an exists() pre-check keeps the common
     no-state probe cheap (no Java exception construction), and the
     open() and read catches close the TOCTOU hole for a file deleted
-    after the check (another writer's swap, manifest pruning) — on an
+    after the check (another writer's swap) — on an
     object store open() can succeed and only the later GET fail."""
     if not fs.exists(jpath):
         return None
@@ -157,19 +156,6 @@ def _read_bytes(fs, jvm, jpath) -> bytes | None:
         raise
     finally:
         inp.close()
-
-
-def read_file_or_none(spark, path: str) -> bytes | None:
-    """Read ``path``, None when missing — ONE probe, no tmp fallback.
-
-    This bytes variant is for files written once and never swapped in
-    place (the ANN manifest's per-version files): a raw read of a swap
-    target's tmp could observe a truncated mid-write prefix with no
-    way to validate it, so swap-aware reads are the JSON variant's job
-    (`read_json_or_none`, whose parser doubles as the completeness
-    check)."""
-    fs, jpath, jvm = _fs(spark, path)
-    return _read_bytes(fs, jvm, jpath)
 
 
 def read_json_or_none(spark, path: str):

@@ -9,11 +9,12 @@ torn-read finding for `streaming.ann.StreamingAnnIndex`:
   idempotent on replay but leaves READERS exposed: a search concurrent
   with an in-flight (or crashed-and-not-yet-replayed) trigger would
   discover the partially-written directory and silently rank over torn
-  data.  The manifest records the committed batch ids; `ivfpq_search`
-  reads ONLY manifest-listed directories.  Manifest versions are
-  numbered files written tmp-then-rename (the same recipe as Spark's
-  own streaming HDFSMetadataLog), so a reader sees either the old or
-  the new version, never a half-written one.
+  data.  The manifest, ``<index>/_manifest.json``, records the committed
+  batch ids and its own ``version``; `ivfpq_search` reads ONLY
+  manifest-listed directories.  A commit swaps the file with
+  `fsio.write_json_atomic` — the one swap every fenced sink commits
+  through — so a reader sees either the old or the new version, never a
+  half-written one.
 
 * **Compaction** — a 1-minute trigger accretes ~1,440 batch directories
   a day, each holding up-to-n_cells files; partition discovery pays the
@@ -42,45 +43,31 @@ Readers are always safe: they only ever see committed versions.
 
 from __future__ import annotations
 
-import json
 import logging
 
 from creek_spark import fsio
 
 log = logging.getLogger("creek_spark.ann")
 
-_MANIFEST_DIR = "_manifest"
+MANIFEST = "_manifest.json"
 
-# Manifest retention: every commit publishes v{n+1} and then deletes
-# versions older than the last MANIFEST_RETAIN — the HDFSMetadataLog
-# purge recipe.  Without it a 1-minute trigger accretes ~525k JSON
-# files/year and read_manifest lists ALL of them on every search: the
-# component built to bound codes-directory growth would itself grow
-# without bound (round-9 verdict `weak`).  K=10 keeps listing O(K)
-# while leaving a deep window for readers mid-listing; the reference
-# bounds every unbounded structure it owns the same way (LRU 256,
-# internal/dao/schemas.go:16).
-MANIFEST_RETAIN = 10
+# Retrain writes its staging generations as
+# ``batch=-(epoch*RETRAIN_GEN_STRIDE + round)`` — an id SPACE disjoint
+# from compaction generations (magnitude = version, tiny next to the
+# stride) so a stream-side auto-compaction interleaving the catch-up
+# rounds can never allocate the same directory and overwrite staged
+# codes with old-epoch rows.  The stride keeps the epoch recoverable
+# from the id (``gen_epoch``), which is what the vacuum pending-guard
+# keys on.  10^12 versions at one manifest commit per millisecond is
+# ~31 years of uptime — versions cannot cross the stride in practice.
+RETRAIN_GEN_STRIDE = 10**12
 
-# Online retrain writes its staging generations as
-# ``batch=-(epoch*ONLINE_GEN_STRIDE + round)`` — an id SPACE disjoint
-# from compaction/offline-retrain generations (magnitude = epoch ≤
-# version+1, tiny next to the stride) so a stream-side auto-compaction
-# interleaving the catch-up rounds can never allocate the same
-# directory and overwrite staged codes with old-epoch rows.  The stride
-# keeps the epoch recoverable from the id (``gen_epoch``), which is
-# what the vacuum pending-guard keys on.  10^12 versions at one
-# manifest commit per millisecond is ~31 years of uptime — versions
-# cannot cross the stride in practice.
-ONLINE_GEN_STRIDE = 10**12
-
-# Root-level marker an ONLINE retrain holds while its staging
-# generations exist but are not yet live.  The epoch-vs-version
-# pending rule alone expires the moment one concurrent trigger commits
-# (version catches up to epoch while the retrain is still catching up
-# — precisely the regime retrain_online exists for), so vacuum treats
-# any directory of the marker's epoch as pending regardless of the
-# version.  A crashed retrain leaves the marker: its dirs stay pending
+# Root-level marker a retrain holds while its staging generations exist
+# but are not yet live.  The epoch-vs-version pending rule alone expires
+# the moment one concurrent trigger commits (version catches up to
+# epoch while the retrain is still catching up), so vacuum treats any
+# directory of the marker's epoch as pending regardless of the version.
+# A crashed retrain leaves the marker: its dirs stay pending
 # (WARNING-logged) until the owner reclaims with reclaim_pending=True,
 # which also clears the marker; a NEW retrain at a later epoch
 # overwrites it, releasing the crashed epoch's dirs to the normal
@@ -93,32 +80,27 @@ def pending_retrain_epoch(spark, path: str) -> int | None:
     return m.get("epoch") if isinstance(m, dict) else None
 
 
-
 def gen_epoch(magnitude: int) -> int:
     """The quantizer epoch a negative generation id belongs to:
-    compaction/offline-retrain ids carry it directly, online-retrain
-    staging ids carry it multiplied by ONLINE_GEN_STRIDE."""
+    compaction ids carry it directly, retrain staging ids carry it
+    multiplied by RETRAIN_GEN_STRIDE."""
     return (
-        magnitude // ONLINE_GEN_STRIDE
-        if magnitude >= ONLINE_GEN_STRIDE
+        magnitude // RETRAIN_GEN_STRIDE
+        if magnitude >= RETRAIN_GEN_STRIDE
         else magnitude
     )
 
+
 # Keys that describe the INDEX rather than one commit, carried forward
 # manifest-to-manifest unless a writer overrides them: the drift-probe
-# baseline, the quantizer-epoch pointer (retrain publishes new
-# quantizers under quantizers/v<epoch> — a per-batch commit must not
-# silently revert readers to the stale root quantizers), and the
+# baseline; the quantizer-epoch pointer (a per-batch commit must not
+# silently revert readers to the stale root quantizers); the
 # streaming-batch high-watermark (compaction/retrain fold committed
-# batch ids out of `live`; without the watermark a replayed trigger
-# whose directory was folded would re-append rows the fold already
-# contains — silent duplication).
-# index-level keys that ride forward across manifest versions unless a
-# publish overrides them: the drift baseline, the quantizer-epoch
-# pointer, the streaming-batch watermark, the watermark batch's content
-# fingerprint (streaming/fence.py — compaction/retrain don't change what
-# the last committed batch CONTAINED, so it rides), and the index's junk
-# policy (so every drift entry point probes the same view)
+# batch ids out of `live`, and without it a replayed trigger whose
+# directory was folded would re-append rows the fold already contains);
+# the watermark batch's content fingerprint (streaming/fence.py — a fold
+# does not change what that batch CONTAINED); and the index's junk
+# policy (so every drift entry point probes the same view).
 _PERSISTENT_KEYS = (
     "probe", "quantizers", "max_bid", "fence_print", "on_zero_norm"
 )
@@ -139,49 +121,24 @@ class ManifestConflictError(RuntimeError):
 
 
 def read_manifest(spark, path: str) -> dict | None:
-    """Latest committed manifest of the index at ``path``, or None when
-    the index has no manifest (a static `ivfpq_index_build` layout —
-    searches then read the codes root directly, unchanged).  Scans
-    versions descending and returns the first that parses, so a crash
-    mid-publish can never wedge readers.
+    """The committed manifest of the index at ``path``, or None when the
+    index has none (a static `ivfpq_index_build` layout — searches then
+    read the codes root directly, unchanged).
 
-    Retention makes a version file vanishing between the listing and the
-    read a NORMAL event (the owner pruned it) — such versions are
-    skipped, never errors.  The degenerate race where EVERY listed
-    version was pruned before this reader opened one (the reader stalled
-    for > MANIFEST_RETAIN commits mid-call) re-lists and retries: a
-    non-empty manifest directory must never degrade to the
-    static-layout fallback, which would read torn batch directories."""
-    for _ in range(3):
-        names = fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}")
-        versions = sorted(
-            (
-                int(n[1:-5])
-                for n in names
-                if n.startswith("v") and n.endswith(".json")
-            ),
-            reverse=True,
+    An index whose manifest is a ``_manifest/`` directory of numbered
+    version files (the layout before ``_manifest.json``) is refused: the
+    gated reader cannot see what it committed, and reading the codes
+    root instead would expose uncommitted batch directories."""
+    man = fsio.read_json_or_none(spark, f"{path}/{MANIFEST}")
+    if man is None and fsio.exists(spark, f"{path}/_manifest"):
+        raise ValueError(
+            f"index at {path} keeps its manifest as _manifest/v*.json "
+            "version files, an older layout this reader does not read: "
+            f"move the newest one to {path}/{MANIFEST} (it carries its "
+            "version) and delete _manifest/, or rebuild the index with "
+            "bootstrap() at a fresh path"
         )
-        if not versions:
-            return None
-        for v in versions:
-            data = fsio.read_file_or_none(
-                spark, f"{path}/{_MANIFEST_DIR}/v{v:08d}.json"
-            )
-            if data is None:  # vanished: pruned since the listing
-                continue
-            try:
-                man = json.loads(data)
-            except ValueError:  # torn mid-publish
-                continue
-            if isinstance(man, dict) and "live" in man:
-                man["version"] = v
-                return man
-    raise IOError(
-        f"manifest directory at {path}/{_MANIFEST_DIR} is non-empty but no "
-        "version could be read after retries — refusing the static-layout "
-        "fallback (it would expose uncommitted batch directories)"
-    )
+    return man
 
 
 def write_manifest(
@@ -190,16 +147,12 @@ def write_manifest(
     live: list[int],
     *,
     extra: dict | None = None,
-    retain: int = MANIFEST_RETAIN,
     expect_version: int | None = None,
 ) -> int:
-    """Publish the next manifest version listing the LIVE batch ids,
-    then prune versions older than the last ``retain`` (publish first,
-    prune after — a reader always finds at least the newest version).
-    Index-level keys (probe baseline, quantizer-epoch pointer,
-    streaming-batch watermark) ride forward from the previous version
-    unless ``extra`` overrides them.  Returns the published version
-    number.
+    """Publish the next manifest version listing the LIVE batch ids.
+    Index-level keys (`_PERSISTENT_KEYS`) ride forward from the previous
+    version unless ``extra`` overrides them.  Returns the published
+    version number.
 
     ``expect_version`` is the optimistic-concurrency fence every
     read-modify-write caller should pass: the manifest version its
@@ -213,7 +166,7 @@ def write_manifest(
     contract that is exact (one writer at a time, the fence catches
     SEQUENCING mistakes like maintenance racing a live stream); two
     truly simultaneous writers are out of contract on any
-    filesystem-backed log without a lock service."""
+    filesystem-backed manifest without a lock service."""
     prev = read_manifest(spark, path)
     if expect_version is not None:
         found = prev["version"] if prev else 0
@@ -224,39 +177,14 @@ def write_manifest(
                 "redo against current state (publishing would drop or "
                 "mis-pair that commit)"
             )
-    version = (prev["version"] + 1) if prev else 1
     man = dict(extra or {})
     for k in _PERSISTENT_KEYS:
         if prev and k in prev and k not in man:
             man[k] = prev[k]
     man["live"] = sorted(set(int(b) for b in live))
-    man["version"] = version
-    fsio.write_file_atomic(
-        spark,
-        f"{path}/{_MANIFEST_DIR}/v{version:08d}.json",
-        json.dumps(man, sort_keys=True).encode(),
-    )
-    _prune_manifests(spark, path, keep_from=version - retain + 1)
-    return version
-
-
-def _prune_manifests(spark, path: str, *, keep_from: int) -> list[int]:
-    """Delete manifest versions older than ``keep_from`` (non-atomic and
-    crash-tolerant: a missed delete is retried by the next publish)."""
-    pruned = []
-    for n in fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}"):
-        if not (n.startswith("v") and n.endswith(".json")):
-            continue
-        v = int(n[1:-5])
-        if v < keep_from:
-            fsio.delete(spark, f"{path}/{_MANIFEST_DIR}/{n}", recursive=False)
-            pruned.append(v)
-    return sorted(pruned)
-
-
-def committed_batches(spark, path: str) -> list[int] | None:
-    man = read_manifest(spark, path)
-    return None if man is None else list(man["live"])
+    man["version"] = (prev["version"] + 1) if prev else 1
+    fsio.write_json_atomic(spark, f"{path}/{MANIFEST}", man)
+    return man["version"]
 
 
 _UNREAD = object()  # sentinel: "read the manifest yourself"
@@ -276,11 +204,10 @@ def read_codes(spark, path: str, man: dict | None = _UNREAD):
     """The committed code rows of the index at ``path``: with a manifest,
     ONLY the live ``codes/batch=<id>`` directories (torn/uncommitted
     batch dirs are invisible — the reader half of exactly-once); without
-    one, the codes root as before (static layout, and pre-manifest
-    streaming layouts keep working).  Pass ``man`` when the caller
-    already read the manifest, so codes and quantizers come from the
-    SAME version (one snapshot, no torn read across a concurrent
-    publish)."""
+    one, the codes root as before (static layout).  Pass ``man`` when
+    the caller already read the manifest, so codes and quantizers come
+    from the SAME version (one snapshot, no torn read across a
+    concurrent publish)."""
     if man is _UNREAD:
         man = read_manifest(spark, path)
     if man is None:
@@ -381,8 +308,7 @@ def adopt_static_layout(spark, path: str) -> int:
     if batches - {"batch=0"}:
         raise ValueError(
             f"index at {path} already has codes/batch=* generations "
-            f"({sorted(batches)[:3]}): not a static layout (a pre-manifest "
-            "streaming index is adopted by apply_batch itself)"
+            f"({sorted(batches)[:3]}): not a static layout"
         )
     if not names and not batches:
         raise ValueError(f"no codes at {path}/codes: nothing to adopt")
@@ -418,29 +344,18 @@ def ivfpq_index_compact(spark, path: str, *, vacuum: bool = False) -> int:
             f"no manifest at {path}: compaction applies to the streaming "
             "(manifested) layout; a static index is already one generation"
         )
-    live = man["live"]
-    dirs = [f"{path}/codes/batch={b}" for b in live]
-    rows = spark.read.option("basePath", f"{path}/codes").parquet(*dirs)
-    version = man["version"] + 1
-    gen = -version
-    cols = [c for c in rows.columns if c != "batch"]
-    rows.select(*cols).write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/codes/batch={gen}"
-    )
+    gen = -(man["version"] + 1)
+    read_codes(spark, path, man).drop("batch").write.mode(
+        "overwrite"
+    ).partitionBy("cell_id").parquet(f"{path}/codes/batch={gen}")
     # fenced on the version the fold was computed from: a stream batch
     # committed during the fold makes this publish raise rather than
-    # silently drop that batch from every future search.  The watermark
-    # advances to cover every folded streaming id EXPLICITLY (not via
-    # key persistence) so pre-watermark manifests gain one here — vacuum
-    # treats ids above it as possibly-pending and won't reclaim them.
-    folded = max((b for b in live if b > 0), default=0)
+    # silently drop that batch from every future search.  The max_bid
+    # watermark rides forward: apply_batch raised it over every positive
+    # id it committed, folded ones included.
     published = write_manifest(
-        spark, path, [gen],
-        extra={"max_bid": max(folded, man.get("max_bid", 0))},
-        expect_version=man["version"],
+        spark, path, [gen], expect_version=man["version"]
     )
-    # write_manifest rereads the latest version itself; under the
-    # single-writer contract it equals `version`
     if vacuum:
         ivfpq_index_vacuum(spark, path)
     return published
@@ -452,11 +367,10 @@ def ivfpq_index_vacuum(
     """Delete code directories of batches NOT in the latest manifest
     (dead generations after compaction/retrain), quantizer epochs the
     latest manifest no longer points at (including the root
-    centroids/codebook once an epoch superseded them), and manifest
-    versions beyond the retention window.  Run only once no reader can
-    still hold an older manifest version — same grace-period discipline
-    as any snapshot-isolated table format.  Returns the deleted batch
-    ids.
+    centroids/codebook once an epoch superseded them).  Run only once no
+    reader can still hold an older manifest version — same grace-period
+    discipline as any snapshot-isolated table format.  Returns the
+    deleted batch ids.
 
     A non-live directory is only PROVABLY dead when the manifest
     vouches it was superseded: a positive batch id at or below the
@@ -525,7 +439,6 @@ def ivfpq_index_vacuum(
     if reclaim_pending and marker_epoch is not None:
         # the owner vouched no retrain is in flight — clear its marker
         fsio.delete(spark, f"{path}/{RETRAIN_MARKER}")
-    _prune_manifests(spark, path, keep_from=man["version"] - MANIFEST_RETAIN + 1)
     if skipped:
         # deliberately left behind, not forgotten: an abandoned stream's
         # torn dirs / a crashed retrain's staging dirs sit above the
@@ -617,6 +530,10 @@ def ann_recall_probe(
 
 DRIFT_SALT = "drift-baseline"
 
+# The recall probe's parameters, stored beside every baseline so that
+# drift_report measures recent data like-for-like.
+PROBE_PARAMS = {"sample": 512, "n_queries": 64, "k": 5, "salt": DRIFT_SALT}
+
 
 def ann_drift_report(
     spark,
@@ -628,7 +545,6 @@ def ann_drift_report(
     m: int = 8,
     tolerance: float = 0.15,
     on_zero_norm: str | None = None,
-    fallback_on_zero_norm: str = "raise",
 ) -> dict:
     """Compare recent data's simulated recall with the baseline the
     bootstrap recorded in the manifest, measured with the SAME probe
@@ -636,11 +552,11 @@ def ann_drift_report(
     baseline), so the two numbers are like-for-like.
 
     ``on_zero_norm=None`` (default) resolves the index's OWN junk
-    policy from the manifest (recorded at bootstrap/retrain/rebaseline):
-    under ``'filter'`` the index excludes zero-norm rows by design, so
-    they are dropped from ``recent_df`` before probing — counting them
-    as recall misses would inflate drift and trip
-    ``retrain_recommended`` spuriously.  This makes both entry points
+    policy from the manifest (recorded beside every baseline, at
+    bootstrap/retrain/rebaseline): under ``'filter'`` the index
+    excludes zero-norm rows by design, so they are dropped from
+    ``recent_df`` before probing — counting them as recall misses would
+    inflate drift and trip ``retrain_recommended`` spuriously.  This makes both entry points
     (`StreamingAnnIndex.drift_report` and this function) probe the
     same view of the same index.
     ``retrain_recommended`` trips when recall fell more than
@@ -648,8 +564,8 @@ def ann_drift_report(
     quantizers) instead of appending forever, i.e. Faiss's
     train-vs-add decision made measurable.
 
-    An index whose manifest carries NO baseline (adopted from a
-    pre-manifest/static layout — neither adoption path probes) raises
+    An index whose manifest carries NO baseline (adopted from a static
+    layout — `adopt_static_layout` does not probe) raises
     rather than comparing against nothing: drift=None would make
     ``retrain_recommended`` permanently False, silently disabling the
     one signal this probe exists to produce.  Publish a baseline once
@@ -672,31 +588,14 @@ def ann_drift_report(
             "to 'no drift' would silently disable the retrain signal — "
             + step
         )
-    # resolution order: explicit caller override > the policy the
-    # manifest recorded at bootstrap/retrain/rebaseline > the caller's
-    # fallback.  The fallback matters for PRE-UPGRADE state dirs whose
-    # manifest predates the 'on_zero_norm' key: an index object
-    # configured with 'filter' passes that here, so its junk rows are
-    # not counted as recall misses just because the manifest is old —
-    # the exact spurious retrain_recommended the filtering prevents.
-    policy = (
-        on_zero_norm
-        if on_zero_norm is not None
-        else (man or {}).get("on_zero_norm", fallback_on_zero_norm)
-    )
+    policy = on_zero_norm if on_zero_norm is not None else man["on_zero_norm"]
     if policy == "filter":
         from creek_spark.operators.similarity import _zero_norm_cond
 
         recent_df = recent_df.where(~_zero_norm_cond(vec_col))
-    params = {
-        "sample": probe.get("sample", 512),
-        "n_queries": probe.get("n_queries", 64),
-        "k": probe.get("k", 5),
-        "salt": probe.get("salt", DRIFT_SALT),
-    }
     recall = ann_recall_probe(
         spark, path, recent_df, id_col=id_col, vec_col=vec_col, m=m,
-        **params,
+        **{k: probe[k] for k in PROBE_PARAMS},
     )
     drift = base - recall
     return {

@@ -1763,7 +1763,7 @@ def ivfpq_index_append(corpus: DataFrame, path: str, *,
 
     ``quantizers`` overrides the frame directory (a dir holding
     ``centroids``/``codebook``), mirroring `ann_recall_probe`: the
-    ONLINE retrain's catch-up rounds encode gap rows under the freshly
+    retrain's catch-up rounds encode gap rows under the freshly
     built epoch BEFORE the manifest flip publishes it.  Default: the
     index's own frames, resolved through the manifest like every other
     reader."""
@@ -1781,9 +1781,9 @@ def ivfpq_index_append(corpus: DataFrame, path: str, *,
     if codes_dir is None and man is not None:
         raise ValueError(
             f"index at {path} is manifest-managed: a bare append to "
-            "codes/ would be invisible to the gated reader; use "
-            "StreamingAnnIndex.apply_batch or pass codes_dir and "
-            "commit the batch via ann_maintenance.write_manifest"
+            "codes/ would be invisible to the gated reader; append "
+            "through StreamingAnnIndex.apply_batch, which writes a fenced "
+            "batch directory and commits it to the index's _manifest.json"
         )
     # quantizers + layout probe resolve through the SAME manifest read:
     # a retrained index's frames live in their epoch directory, and the

@@ -15,15 +15,15 @@ Exactly-once discipline — BOTH halves of it:
   ``codes/batch=<id>`` directory, so a replayed trigger after a failure
   rewrites that one directory and nothing else.
 * **Reader half** (the round-9 hardening): a commit MANIFEST
-  (`operators/ann_maintenance`) records which batch directories are
-  committed; `ivfpq_search` reads only those, so a search concurrent
-  with an in-flight (or crashed) trigger can never list a
-  partially-written directory and silently rank over torn data.  A
-  replayed trigger whose batch id is already committed SKIPS the write
-  entirely (codes are deterministic under the frozen quantizers, so the
-  committed content already equals what the replay would produce) —
-  replays are true no-ops, with no rewrite window for readers to tear
-  on.
+  (`operators/ann_maintenance`, ``_manifest.json`` swapped like every
+  other sink's) records which batch directories are committed;
+  `ivfpq_search` reads only those, so a search concurrent with an
+  in-flight (or crashed) trigger can never list a partially-written
+  directory and silently rank over torn data.  A replayed trigger whose
+  batch id is already committed SKIPS the write entirely (codes are
+  deterministic under the frozen quantizers, so the committed content
+  already equals what the replay would produce) — replays are true
+  no-ops, with no rewrite window for readers to tear on.
 
 Operational lifecycle (the round-8 verdict's `weak`, closed across
 rounds 9–10):
@@ -32,23 +32,20 @@ rounds 9–10):
   generation — bit-exact, search results identical — bounding partition-
   discovery cost no matter how long the stream runs; ``vacuum()``
   removes dead generations after the reader grace period.
-* Manifest RETENTION (round 10): every commit prunes manifest versions
-  beyond `ann_maintenance.MANIFEST_RETAIN`, so `_manifest/` stays O(K)
-  and every search's manifest listing is O(K) — the metadata log can't
-  become the unbounded structure it was built to bound.
 * ``drift_report(recent)`` measures simulated recall of recent data
   under the FROZEN quantizers against the baseline recorded at
   bootstrap, yielding the "retrain recommended" signal: when the data
   distribution has left the quantizers behind, rebuild (retrain), don't
   keep appending.
-* ``retrain()`` (round 10) rebuilds into FRESH paths — codes under a
-  negative epoch batch id, quantizer frames under
-  ``quantizers/v<epoch>`` — and flips the manifest atomically, so a
-  reader holding any older manifest version keeps a fully intact
-  snapshot until an explicit post-grace ``vacuum()``.  The manifest's
-  ``quantizers`` pointer rides forward through later per-batch commits,
-  and all readers (search, append, probe) resolve codes AND quantizers
-  through one manifest read.
+* ``retrain()`` rebuilds into FRESH paths — quantizer frames under
+  ``quantizers/v<epoch>``, codes under negative staging batch ids —
+  while triggers keep committing under the old epoch, re-encodes what
+  they committed meanwhile, and flips the manifest in one fenced
+  publish, so a reader holding any older manifest version keeps a fully
+  intact snapshot until an explicit post-grace ``vacuum()``.  The
+  manifest's ``quantizers`` pointer rides forward through later
+  per-batch commits, and all readers (search, append, probe) resolve
+  codes AND quantizers through one manifest read.
 
     idx = StreamingAnnIndex(spark, path)
     idx.bootstrap(seed_corpus, train="kmeans")        # train + batch=0
@@ -57,23 +54,16 @@ rounds 9–10):
     ...
     idx.search(queries, k=5)                   # safe concurrent w/ stream
     if idx.drift_report(recent)["retrain_recommended"]:
-        # preferred: no ingest pause — build the new epoch while
-        # triggers keep committing under the old, converge by
-        # re-encoding the gap, flip atomically (round 12)
-        idx.retrain_online(train="kmeans")
-        # or the stop-the-world form:
-        q.stop()                      # owner op: pause ingest first
-        idx.retrain(train="kmeans")   # fresh generation + manifest flip
-        q = ...restart the stream from its checkpoint...
+        idx.retrain(train="kmeans")   # no ingest pause; one manifest flip
         idx.vacuum()                  # after the reader grace period
-    idx.compact(vacuum=True)          # likewise between triggers
+    idx.compact(vacuum=True)          # between triggers
 
-Maintenance ops (retrain/compact) are OWNER operations under the
-single-writer contract: run them with the stream stopped or between
-triggers — EXCEPT ``retrain_online()``, which is designed to run
-concurrently with a live stream (its staging directories live in an id
-space no trigger or auto-compaction can allocate, and its final flip is
-fenced; see its docstring).  Every manifest publish is fenced on the version it read
+compact() and vacuum() are OWNER operations under the single-writer
+contract: run them with the stream stopped or between triggers.
+``retrain()`` may run concurrently with a live stream (its staging
+directories live in an id space no trigger or auto-compaction can
+allocate, and its final flip is fenced; see its docstring).  Every
+manifest publish is fenced on the version it read
 (`ManifestConflictError`), so violating that sequencing fails loudly —
 a racing trigger or maintenance flip can no longer silently drop a
 committed batch or mis-pair codes with a newer quantizer epoch.
@@ -88,9 +78,15 @@ from pyspark.sql import functions as F
 
 from creek_spark import fsio
 from creek_spark.operators.ann_maintenance import (
+    PROBE_PARAMS,
+    RETRAIN_GEN_STRIDE,
+    RETRAIN_MARKER,
+    ManifestConflictError,
     ann_drift_report,
+    ann_recall_probe,
     ivfpq_index_compact,
     ivfpq_index_vacuum,
+    read_codes,
     read_manifest,
     write_manifest,
 )
@@ -100,6 +96,11 @@ from creek_spark.operators.similarity import (
     ivfpq_search,
 )
 from creek_spark.streaming.fence import admit, content_fingerprint
+
+# Catch-up rounds a retrain runs before it gives up: each round's gap is
+# one round's worth of ingest, so a retrain that has not converged by
+# then is being outpaced by the stream.
+_MAX_CATCH_UP_ROUNDS = 10
 
 
 class StreamingAnnIndex:
@@ -132,11 +133,6 @@ class StreamingAnnIndex:
         refuses and points at `retrain()`, which builds the new
         generation in fresh directories and flips the manifest
         atomically."""
-        from creek_spark.operators.ann_maintenance import (
-            DRIFT_SALT,
-            ann_recall_probe,
-        )
-
         if read_manifest(self.spark, self.path) is not None:
             raise ValueError(
                 f"index at {self.path} is already manifest-managed: "
@@ -149,42 +145,62 @@ class StreamingAnnIndex:
             dim=self.dim, m=self.m,
             codes_dir=f"{self.path}/codes/batch=0", **build_kw,
         )
-        # baseline on a SALTED draw: at real scale those rows are
-        # disjoint from the (unsalted md5-prefix) training sample, so
-        # the baseline is held-out recall, not recall-on-trained-rows;
-        # the probe params ride in the manifest so drift_report measures
-        # recent data like-for-like
-        params = {"sample": 512, "n_queries": 64, "k": 5, "salt": DRIFT_SALT}
-        base = ann_recall_probe(
-            self.spark, self.path, self._probe_view(corpus, build_kw),
-            id_col=self.id_col, vec_col=self.vec_col, m=self.m, **params,
-        )
         # the junk policy rides in the manifest so EVERY drift entry
         # point (this object, a fresh StreamingAnnIndex, the bare
         # ann_drift_report) probes the same view —
         # otherwise the same index yields different drift numbers and
         # can trip retrain_recommended spuriously (round-11 ADVICE)
+        policy = build_kw["on_zero_norm"]
         write_manifest(
             self.spark, self.path, [0],
             extra={
-                "probe": {"recall": base, **params},
-                "on_zero_norm": build_kw.get(
-                    "on_zero_norm", self.on_zero_norm
-                ),
+                "probe": self._baseline(self._probe_view(corpus, policy)),
+                "on_zero_norm": policy,
             },
             expect_version=0,
         )
 
-    def _probe_view(self, corpus: DataFrame, build_kw: dict) -> DataFrame:
+    def _probe_view(self, corpus: DataFrame, policy: str) -> DataFrame:
         """The corpus as the recall probe should see it: under the
         ``filter`` policy the junk rows were dropped before indexing, so
         probing them would measure recall of rows the index by design
         does not contain."""
-        if build_kw.get("on_zero_norm", self.on_zero_norm) == "filter":
+        if policy == "filter":
             from creek_spark.operators.similarity import _zero_norm_cond
 
             return corpus.where(~_zero_norm_cond(self.vec_col))
         return corpus
+
+    def _baseline(
+        self, corpus: DataFrame, quantizers: str | None = None
+    ) -> dict:
+        """The drift baseline to store in the manifest: simulated recall
+        of ``corpus`` under the index's quantizers (or the frames under
+        ``quantizers``) on a SALTED draw — at real scale those rows are
+        disjoint from the unsalted md5-prefix training sample, so this
+        is held-out recall — beside the probe parameters, so
+        drift_report measures recent data like-for-like."""
+        recall = ann_recall_probe(
+            self.spark, self.path, corpus, id_col=self.id_col,
+            vec_col=self.vec_col, m=self.m, quantizers=quantizers,
+            **PROBE_PARAMS,
+        )
+        return {"recall": recall, **PROBE_PARAMS}
+
+    def _stored_corpus(self, man: dict, remedy: str) -> DataFrame:
+        """The vectors committed under ``man`` as an (id_col, vec_col)
+        corpus, read back from the codes; ``remedy`` ends the error an
+        index built without stored vectors raises."""
+        stored = read_codes(self.spark, self.path, man)
+        if "c_vec" not in stored.columns:
+            raise ValueError(
+                f"index at {self.path} stores no vectors (it was built "
+                f"with store_vectors=False): {remedy}"
+            )
+        return stored.select(
+            F.col("n_id").alias(self.id_col),
+            F.col("c_vec").alias(self.vec_col),
+        )
 
     def apply_batch(
         self, batch: DataFrame, batch_id: int
@@ -195,104 +211,55 @@ class StreamingAnnIndex:
         pure no-op (its content is already durable and, codes being
         deterministic, identical).
 
-        First commit on a PRE-MANIFEST index: the v1 manifest must list
-        everything already on disk, or the gated reader silently drops
-        the seed corpus forever (the worst failure class).  A
-        pre-manifest STREAMING layout (only ``codes/batch=*``
-        directories) is adopted by seeding the manifest from the
-        directory listing; a STATIC layout (code rows at the codes
-        root, from a plain `ivfpq_index_build`) cannot be listed into a
-        batch manifest and refuses loudly — run
-        `ann_maintenance.adopt_static_layout` once, or bootstrap().
+        The index must already have a manifest: bootstrap() starts one,
+        and `ann_maintenance.adopt_static_layout` gives a static
+        `ivfpq_index_build` layout one.  A first manifest published here
+        would list only this batch and hide everything already on disk
+        from every gated search, so an index without one raises.
 
-        One listing-seeded directory is NOT trusted: ``batch=<bid>``
-        itself.  A pre-manifest stream that crashed mid-write left that
-        directory torn, and the replayed trigger that adopts the index
-        is exactly the one that must repair it — so the adoption
-        manifest is published WITHOUT ``bid`` before anything reads the
-        index (append's store_vectors sniff included: un-gated it would
-        read the torn directory), then the normal path rewrites ``bid``
-        (bit-exact if it was in fact complete, codes being
-        deterministic; repaired if it was torn) and commits it.  Older
-        directories can't be distinguished from committed ones without
-        the stream's checkpoint and are seeded as-is.
-
-        Replay detection is two-layer: ``bid in live`` (the directory
-        is itself still listed) OR ``bid == max_bid`` (the manifest's
-        streaming-batch high-watermark — compaction/retrain FOLD
+        Replay detection is the manifest's streaming-batch high-watermark
+        ``max_bid`` (`fence.admit`), which this method raises with every
+        commit and compaction/retrain carry forward — they FOLD
         committed directories into a new generation and drop their ids
-        from ``live``, and without the watermark a replayed trigger
-        whose batch was folded would re-append rows the fold already
-        contains: silent duplication).  Triggers serialize and the
-        checkpoint commit FOLLOWS this sink commit, so at most ONE
-        batch can ever be sink-committed but not checkpoint-committed:
-        a genuine Spark replay is exactly ``bid == max_bid`` (or a
-        still-listed ``bid in live``).  ``bid < max_bid`` outside
-        ``live`` is therefore NOT a replay — it is a stream restarted
-        against a RESET/RELOCATED checkpoint (batch ids restarted from
-        0), carrying genuinely NEW rows under recycled ids; treating
-        it as a replay would silently discard every such batch until
-        the ids catch up, so it raises instead (resume from the
-        original checkpoint, or point the fresh stream at a fresh
-        index).
+        from ``live``, so ``live`` alone would let a replayed trigger
+        whose batch was folded re-append rows the fold already contains.
+        Triggers serialize and the checkpoint commit FOLLOWS this sink
+        commit, so at most ONE batch can ever be sink-committed but not
+        checkpoint-committed: a genuine Spark replay is exactly ``bid ==
+        max_bid``.  ``bid < max_bid`` is therefore NOT a replay — it is
+        a stream restarted against a RESET/RELOCATED checkpoint (batch
+        ids restarted from 0), carrying genuinely NEW rows under
+        recycled ids; treating it as a replay would silently discard
+        every such batch until the ids catch up, so it raises instead
+        (resume from the original checkpoint, or point the fresh stream
+        at a fresh index).
 
-        Both manifest publishes are fenced on the version this call
-        read (`ManifestConflictError` on interleave): a maintenance op
-        (compact/retrain) racing a live trigger fails the trigger
-        LOUDLY, Spark replays it, and the replay re-reads current
-        state — re-encoding under the current quantizer epoch —
-        instead of committing codes encoded under a superseded epoch
-        into a manifest whose ``quantizers`` pointer has moved on.
+        The manifest publish is fenced on the version this call read
+        (`ManifestConflictError` on interleave): a maintenance op
+        racing a live trigger fails the trigger LOUDLY, Spark replays
+        it, and the replay re-reads current state — re-encoding under
+        the current quantizer epoch — instead of committing codes
+        encoded under a superseded epoch into a manifest whose
+        ``quantizers`` pointer has moved on.
 
         Returns the committed live list, or None when the call was a
         replay no-op (`foreach_batch` uses it to trigger auto-
         compaction without re-reading the manifest)."""
         bid = batch_id + 1
         man = read_manifest(self.spark, self.path)
-        live = None if man is None else man["live"]
-        if live is None:
-            names = [
-                n
-                for n in fsio.list_names(self.spark, f"{self.path}/codes")
-                if not n.startswith((".", "_"))
-            ]
-            loose = [n for n in names if not n.startswith("batch=")]
-            if loose:
-                raise ValueError(
-                    f"index at {self.path} has code rows at the codes root "
-                    f"(static ivfpq_index_build layout: {loose[:3]}...): "
-                    "publishing a first manifest here would hide the whole "
-                    "seed corpus from every gated search; run "
-                    "ann_maintenance.adopt_static_layout(spark, path) once "
-                    "to absorb it as batch=0, or start from bootstrap()"
-                )
-            live = [
-                b
-                for n in names
-                if (b := int(n.split("=", 1)[1])) != bid
-            ]
-            if live:
-                # adoption publish: from here on every reader (the
-                # append below included) is manifest-gated, so a torn
-                # bid directory can never be read or committed as-is.
-                # The seeded ids are committed-as-of-adoption, so they
-                # seed the watermark too — all but bid, which is about
-                # to be (re)written and committed by the normal path.
-                write_manifest(
-                    self.spark, self.path, live,
-                    extra={"max_bid": max(
-                        (b for b in live if b > 0), default=0)},
-                    expect_version=0,
-                )
-                man = read_manifest(self.spark, self.path)
-        elif not admit(
+        if man is None:
+            raise ValueError(
+                f"index at {self.path} has no manifest, and a first one "
+                "published here would hide every code row already on disk "
+                "from gated searches: start the index with bootstrap(), or "
+                "run ann_maintenance.adopt_static_layout(spark, path) once "
+                "to absorb a static ivfpq_index_build layout as batch=0"
+            )
+        if not admit(
             batch, bid, man.get("max_bid", 0), man.get("fence_print"),
             sink="the index", state_path=self.path,
         ):
-            # the one genuine Spark replay; committed bids are <= max_bid
-            # by construction, so a live id below the fence (committed
-            # MORE than one trigger ago) raises like any recycled id
-            return None
+            return None  # the one genuine Spark replay
         ivfpq_index_append(
             batch, self.path, id_col=self.id_col, vec_col=self.vec_col,
             dim=self.dim, m=self.m,
@@ -300,17 +267,17 @@ class StreamingAnnIndex:
             mode="overwrite",
             on_zero_norm=self.on_zero_norm,
         )
-        committed = [*live, bid]
+        committed = [*man["live"], bid]
         write_manifest(
             self.spark, self.path, committed,
             extra={
-                "max_bid": max(bid, (man or {}).get("max_bid", 0)),
+                "max_bid": bid,
                 # fingerprint of THIS batch's raw input, recorded beside
                 # the fence it advances: the on-fence check above
                 # compares a redelivery of this id against it
                 "fence_print": content_fingerprint(batch),
             },
-            expect_version=man["version"] if man else 0,
+            expect_version=man["version"],
         )
         return committed
 
@@ -354,134 +321,24 @@ class StreamingAnnIndex:
     def retrain(
         self, corpus: DataFrame | None = None, *, vacuum: bool = False,
         **build_kw,
-    ) -> None:
-        """The action behind the drift signal: re-train the quantizers
-        and re-encode — Faiss's 'rebuild when add stops being enough' —
-        WITHOUT ever rewriting a directory a reader can hold.  The new
-        generation lands in fresh paths (codes under a negative epoch
-        batch id, disjoint from streaming ids like compaction's; the
-        quantizer frames under ``quantizers/v<epoch>``), the drift
-        baseline is re-probed against the NEW quantizers, and one atomic
-        manifest flip publishes all of it.  A reader holding any older
-        manifest version keeps reading the old generation untouched.
-
-        ``vacuum=False`` (default) leaves the old generation on disk for
-        exactly that reader — reclaim later with `vacuum()` once the
-        grace period passed, mirroring ``compact(vacuum=...)``; the
-        repo's own concurrency test proves an eager vacuum kills live
-        readers with FAILED_READ_FILE.
-
-        With ``corpus=None`` the index's own stored vectors are used
-        (requires a store_vectors index); they are read from the
-        COMMITTED generations, which this retrain never writes to, so no
-        staging copy is needed.  Those rows were already ADMITTED, so
-        the rebuild defaults to ``on_zero_norm='allow'`` — an index
-        built or streamed under the ``allow`` policy must not find its
-        only retrain path wedged by a row it accepted earlier (an
-        explicit ``corpus`` gets the index's own policy, like any other
-        build; both are overridable through ``build_kw``).
-
-        The manifest flip is fenced on the version this retrain read:
-        a stream batch committed during the rebuild raises
-        `ManifestConflictError` instead of silently vanishing from
-        ``live`` — retrain is an OWNER operation, run it with the
-        stream stopped (between triggers), and on conflict re-run it
-        against current state."""
-        from creek_spark.operators.ann_maintenance import (
-            DRIFT_SALT,
-            ann_recall_probe,
-            read_codes,
-        )
-
-        man = read_manifest(self.spark, self.path)
-        if man is None:
-            raise ValueError(
-                f"index at {self.path} has no manifest: retrain applies to "
-                "the streaming layout; rebuild a static index with "
-                "ivfpq_index_build"
-            )
-        if corpus is None:
-            build_kw.setdefault("on_zero_norm", "allow")
-            stored = read_codes(self.spark, self.path, man)
-            if "c_vec" not in stored.columns:
-                raise ValueError(
-                    "retrain(corpus=None) needs a store_vectors index to "
-                    "read the vectors back from; pass the corpus explicitly"
-                )
-            corpus = stored.select(
-                F.col("n_id").alias(self.id_col),
-                F.col("c_vec").alias(self.vec_col),
-            )
-        else:
-            build_kw.setdefault("on_zero_norm", self.on_zero_norm)
-        # under the single-writer contract write_manifest will publish
-        # version+1; derive the fresh directory names from it so a
-        # crashed attempt retries into the SAME (unpublished, hence
-        # unread) paths idempotently
-        epoch = man["version"] + 1
-        gen = -epoch
-        qdir = f"quantizers/v{epoch:08d}"
-        ivfpq_index_build(
-            corpus, self.path, id_col=self.id_col, vec_col=self.vec_col,
-            dim=self.dim, m=self.m,
-            codes_dir=f"{self.path}/codes/batch={gen}",
-            centroids_dir=f"{self.path}/{qdir}/centroids",
-            codebook_dir=f"{self.path}/{qdir}/codebook",
-            **build_kw,
-        )
-        params = {"sample": 512, "n_queries": 64, "k": 5, "salt": DRIFT_SALT}
-        base = ann_recall_probe(
-            self.spark, self.path, self._probe_view(corpus, build_kw),
-            id_col=self.id_col, vec_col=self.vec_col, m=self.m,
-            quantizers=f"{self.path}/{qdir}", **params,
-        )
-        write_manifest(
-            self.spark, self.path, [gen],
-            extra={
-                "probe": {"recall": base, **params},
-                "quantizers": qdir,
-                # the rebuilt generation's effective junk policy (may
-                # differ from bootstrap's: fresh-path retrain defaults
-                # to 'allow') — keeps every drift entry point probing
-                # the view THIS generation indexes
-                "on_zero_norm": build_kw.get(
-                    "on_zero_norm", self.on_zero_norm
-                ),
-                # advance the watermark over every folded streaming id
-                # explicitly (pre-watermark manifests have no key to
-                # persist) — vacuum relies on it to tell dead from
-                # pending directories
-                "max_bid": max(
-                    max((b for b in man["live"] if b > 0), default=0),
-                    man.get("max_bid", 0),
-                ),
-            },
-            expect_version=man["version"],
-        )
-        if vacuum:
-            self.vacuum()
-
-    def retrain_online(
-        self, corpus: DataFrame | None = None, *, max_rounds: int = 10,
-        vacuum: bool = False, **build_kw,
     ) -> int:
-        """`retrain()` WITHOUT pausing ingest (round-12; r10 verdict
-        item 5): the double-encode window.  A 100 TB deployment cannot
-        schedule the one thing `retrain()` demands — a stopped stream
-        for the duration of a full re-encode — so this variant builds
-        the new quantizer epoch while triggers keep committing under
-        the OLD epoch, then converges by re-encoding the gap:
+        """The action behind the drift signal: re-train the quantizers
+        and re-encode the index — Faiss's 'rebuild when add stops being
+        enough' — WITHOUT pausing ingest and without ever rewriting a
+        directory a reader can hold.  The new quantizer epoch is built
+        while triggers keep committing under the OLD epoch; the gap is
+        then re-encoded until the index converges:
 
         1. **Build** (concurrent with the stream): snapshot the
            committed corpus at manifest version v0, train new
-           quantizers into ``quantizers/v<v0+1>``, and re-encode the
+           quantizers into ``quantizers/v<v0+1>``, and encode the
            snapshot into a staging generation
-           ``batch=-( (v0+1)·ONLINE_GEN_STRIDE )``.  Nothing is
+           ``batch=-( (v0+1)·RETRAIN_GEN_STRIDE )``.  Nothing is
            published; every reader and every trigger still resolves the
            old epoch.  The stride puts staging ids in a space disjoint
-           from compaction/offline-retrain generations (magnitude =
-           version+1), so a stream-side auto-compaction interleaving
-           this build can never allocate the same directory.
+           from compaction generations (magnitude = version), so a
+           stream-side auto-compaction interleaving this build can
+           never allocate the same directory.
         2. **Catch-up rounds**: re-read the manifest; rows committed
            since the snapshot (found by an id anti-join of the
            committed corpus against the staged generations — id-based,
@@ -489,154 +346,125 @@ class StreamingAnnIndex:
            directories) are re-encoded under the NEW epoch into
            ``batch=-(epoch·STRIDE + round)``.  Each round's gap is the
            ingest of one round's wall clock, so gaps shrink
-           geometrically whenever encode outpaces ingest.
+           geometrically whenever encode outpaces ingest.  With the
+           stream stopped the first round finds no gap.
         3. **Flip**: when a round finds no gap, ONE atomic manifest
-           publish flips live set, ``quantizers`` pointer, drift
-           baseline and watermark together, fenced on the version the
-           empty gap was computed from (`expect_version`).  A trigger
-           that commits between that read and the flip makes the flip
-           raise `ManifestConflictError` — caught here, and the loop
-           simply catches up with that batch and retries.  A trigger
-           in flight AT the flip fails its own fenced publish instead,
-           Spark replays it, and the replay re-reads current state and
-           re-encodes under the NEW epoch — the exact loud-retry
-           semantics the fence was built for.  Readers are never
-           paused: any manifest version they hold is a complete
-           generation.
+           publish flips live set, ``quantizers`` pointer and drift
+           baseline together, fenced on the version the empty gap was
+           computed from (`expect_version`); the ``max_bid`` watermark
+           rides forward.  A trigger that commits between that read and
+           the flip makes the flip raise `ManifestConflictError` —
+           caught here, and the loop simply catches up with that batch
+           and retries.  A trigger in flight AT the flip fails its own
+           fenced publish instead, Spark replays it, and the replay
+           re-reads current state and re-encodes under the NEW epoch.
+           Readers are never paused: any manifest version they hold is
+           a complete generation.
 
-        Requires a ``store_vectors`` index (the catch-up rounds read
-        gap vectors back from the committed codes — same requirement as
-        ``retrain(corpus=None)``); rows are assumed uniquely keyed by
-        ``id_col`` (the id anti-join treats a re-streamed duplicate id
-        as already covered).  ``corpus`` (optional) overrides the
-        TRAINING corpus only; the staged content is always the
-        committed corpus.  Raises after ``max_rounds`` non-converging
-        rounds — if ingest durably outpaces a round's re-encode, no
-        cutover scheme converges; widen the trigger interval or fall
-        back to `retrain()`.  Do not run compact()/vacuum()/retrain()
-        from ANOTHER process concurrently — the stream (apply_batch +
+        ``corpus`` (optional) is the TRAINING corpus only: the staged
+        content is always the committed corpus — staging ``corpus``
+        would publish never-committed rows that later re-arrive from
+        the stream as duplicates.  With ``corpus=None`` the quantizers
+        train on the committed vectors, which were already ADMITTED, so
+        the rebuild defaults to ``on_zero_norm='allow'`` — an index
+        built or streamed under the ``allow`` policy must not find its
+        retrain wedged by a row it accepted earlier (an explicit
+        ``corpus`` gets the index's own policy, like any other build;
+        both are overridable through ``build_kw``).
+
+        Requires a ``store_vectors`` index (the default): the snapshot
+        and the catch-up rounds read the vectors back from the
+        committed codes.  An index built without stored vectors is
+        rebuilt with bootstrap() at a fresh path.  Rows are assumed
+        uniquely keyed by ``id_col`` (the id anti-join treats a
+        re-streamed duplicate id as already covered).
+
+        ``vacuum=False`` (default) leaves the old generation on disk for
+        readers still holding an older manifest version — reclaim later
+        with `vacuum()` once the grace period passed, mirroring
+        ``compact(vacuum=...)``; the repo's own concurrency test proves
+        an eager vacuum kills live readers with FAILED_READ_FILE.
+
+        Raises after ``_MAX_CATCH_UP_ROUNDS`` non-converging rounds — if
+        ingest durably outpaces a round's re-encode, no cutover scheme
+        converges.  Do not run compact()/vacuum()/retrain() from
+        ANOTHER process concurrently — the stream (apply_batch +
         auto-compaction) is the one sanctioned concurrent writer.
 
         Returns the number of catch-up rounds that re-encoded a gap."""
-        from creek_spark.operators.ann_maintenance import (
-            DRIFT_SALT,
-            ONLINE_GEN_STRIDE,
-            ManifestConflictError,
-            ann_recall_probe,
-            read_codes,
-        )
-
         man0 = read_manifest(self.spark, self.path)
         if man0 is None:
             raise ValueError(
-                f"index at {self.path} has no manifest: online retrain "
-                "applies to the streaming layout; rebuild a static index "
-                "with ivfpq_index_build"
+                f"index at {self.path} has no manifest: retrain applies to "
+                "the streaming layout; rebuild a static index with "
+                "ivfpq_index_build"
             )
-        stored0 = read_codes(self.spark, self.path, man0)
-        if "c_vec" not in stored0.columns:
-            raise ValueError(
-                "retrain_online needs a store_vectors index: the catch-up "
-                "rounds read the gap rows' vectors back from the "
-                "committed codes; pause the stream and use retrain() with "
-                "an explicit corpus instead"
-            )
-        snapshot = stored0.select(
-            F.col("n_id").alias(self.id_col),
-            F.col("c_vec").alias(self.vec_col),
+        remedy = (
+            "retrain() reads the committed vectors back; rebuild the index "
+            "with bootstrap() at a fresh path instead"
         )
+        snapshot = self._stored_corpus(man0, remedy)
         if corpus is None:
-            # stored rows were already admitted — do not re-litigate
-            # their junk policy (same default as retrain(corpus=None))
             build_kw.setdefault("on_zero_norm", "allow")
             corpus = snapshot
         else:
             build_kw.setdefault("on_zero_norm", self.on_zero_norm)
         epoch = man0["version"] + 1
         qdir = f"quantizers/v{epoch:08d}"
-        gen0 = -(epoch * ONLINE_GEN_STRIDE)
+        quantizers = f"{self.path}/{qdir}"
+        gen0 = -(epoch * RETRAIN_GEN_STRIDE)
         # publish the in-progress marker BEFORE any staging write: the
         # epoch-vs-version pending rule alone stops protecting these
         # dirs the moment one concurrent trigger commits (version
         # catches up to epoch mid-catch-up — the normal regime here),
         # and a stream-side auto-compaction's vacuum would then delete
-        # staged codes out from under this retrain (review finding).
-        # The marker keeps every dir of this epoch pending until the
-        # flip; a crashed attempt leaves it for reclaim_pending.
-        from creek_spark.operators.ann_maintenance import RETRAIN_MARKER
-
+        # staged codes out from under this retrain.  The marker keeps
+        # every dir of this epoch pending until the flip; a crashed
+        # attempt leaves it for reclaim_pending.
         fsio.write_json_atomic(
             self.spark, f"{self.path}/{RETRAIN_MARKER}", {"epoch": epoch}
         )
-        # phase 1 — concurrent build: fresh dirs only, no publish
+        # build: fresh dirs only, no publish
         ivfpq_index_build(
             corpus, self.path, id_col=self.id_col, vec_col=self.vec_col,
             dim=self.dim, m=self.m,
             codes_dir=f"{self.path}/codes/batch={gen0}",
-            centroids_dir=f"{self.path}/{qdir}/centroids",
-            codebook_dir=f"{self.path}/{qdir}/codebook",
+            centroids_dir=f"{quantizers}/centroids",
+            codebook_dir=f"{quantizers}/codebook",
             **build_kw,
         )
         if corpus is not snapshot:
-            # an override corpus shapes the QUANTIZERS only — the
-            # staged generation must hold the COMMITTED snapshot, or
-            # never-committed training rows would go live at the flip
-            # and re-arrive later as stream duplicates (review
-            # finding).  The build above encoded the training corpus
-            # into gen0 as a side effect; replace it with the snapshot
-            # re-encoded under the new epoch (static overwrite clears
-            # the dir).
-            ivfpq_index_append(
-                snapshot, self.path, id_col=self.id_col,
-                vec_col=self.vec_col, dim=self.dim, m=self.m,
-                codes_dir=f"{self.path}/codes/batch={gen0}",
-                mode="overwrite", on_zero_norm="allow",
-                quantizers=f"{self.path}/{qdir}",
-            )
-        params = {"sample": 512, "n_queries": 64, "k": 5, "salt": DRIFT_SALT}
+            # the build encoded the training corpus into gen0 as a side
+            # effect; replace it with the committed snapshot re-encoded
+            # under the new epoch (static overwrite clears the dir)
+            self._encode(snapshot, gen0, quantizers)
         # the drift baseline describes what the INDEX will contain —
         # the snapshot — not the training corpus
-        base = ann_recall_probe(
-            self.spark, self.path, self._probe_view(snapshot, build_kw),
-            id_col=self.id_col, vec_col=self.vec_col, m=self.m,
-            quantizers=f"{self.path}/{qdir}", **params,
+        probe = self._baseline(
+            self._probe_view(snapshot, build_kw["on_zero_norm"]), quantizers
         )
         new_live = [gen0]
         rounds = 0
-        for attempt in range(max_rounds):
-            self._retrain_online_round(attempt)  # test seam (no-op)
+        for attempt in range(_MAX_CATCH_UP_ROUNDS):
+            self._retrain_round(attempt)  # test seam (no-op)
             man = read_manifest(self.spark, self.path)
-            committed = read_codes(self.spark, self.path, man)
-            staged_ids = self.spark.read.option(
-                "basePath", f"{self.path}/codes"
-            ).parquet(
-                *[f"{self.path}/codes/batch={g}" for g in new_live]
-            ).select("n_id")
-            gap = (
-                committed.select("n_id", "c_vec")
-                .join(staged_ids, "n_id", "left_anti")
-                .select(
-                    F.col("n_id").alias(self.id_col),
-                    F.col("c_vec").alias(self.vec_col),
-                )
+            staged = read_codes(self.spark, self.path, {"live": new_live})
+            gap = self._stored_corpus(man, remedy).join(
+                staged.select(F.col("n_id").alias(self.id_col)),
+                self.id_col, "left_anti",
             )
             if gap.isEmpty():
                 try:
                     write_manifest(
                         self.spark, self.path, new_live,
                         extra={
-                            "probe": {"recall": base, **params},
+                            "probe": probe,
                             "quantizers": qdir,
-                            "on_zero_norm": build_kw.get(
-                                "on_zero_norm", self.on_zero_norm
-                            ),
-                            "max_bid": max(
-                                max(
-                                    (b for b in man["live"] if b > 0),
-                                    default=0,
-                                ),
-                                man.get("max_bid", 0),
-                            ),
+                            # the rebuilt generation's effective junk
+                            # policy (corpus=None defaults to 'allow'):
+                            # every drift entry point probes the view
+                            # THIS generation indexes
+                            "on_zero_norm": build_kw["on_zero_norm"],
                         },
                         expect_version=man["version"],
                     )
@@ -649,41 +477,39 @@ class StreamingAnnIndex:
                     self.vacuum()
                 return rounds
             rounds += 1
-            gen_i = -(epoch * ONLINE_GEN_STRIDE + rounds)
-            ivfpq_index_append(
-                gap, self.path, id_col=self.id_col, vec_col=self.vec_col,
-                dim=self.dim, m=self.m,
-                codes_dir=f"{self.path}/codes/batch={gen_i}",
-                mode="overwrite", on_zero_norm="allow",
-                quantizers=f"{self.path}/{qdir}",
-            )
+            gen_i = -(epoch * RETRAIN_GEN_STRIDE + rounds)
+            self._encode(gap, gen_i, quantizers)
             new_live.append(gen_i)
         raise RuntimeError(
-            f"retrain_online did not converge after {max_rounds} catch-up "
-            "rounds: ingest is outpacing the per-round re-encode, so no "
-            "cutover scheme converges — widen the trigger interval, "
-            "raise max_rounds, or pause the stream and use retrain()"
+            f"retrain did not converge after {_MAX_CATCH_UP_ROUNDS} "
+            "catch-up rounds: ingest is outpacing the per-round re-encode, "
+            "so no cutover scheme converges — widen the trigger interval, "
+            "or pause the stream and re-run retrain()"
         )
 
-    def _retrain_online_round(self, attempt: int) -> None:
+    def _encode(self, rows: DataFrame, gen: int, quantizers: str) -> None:
+        """Encode committed ``rows`` under the staged quantizer epoch at
+        ``quantizers`` into staging generation ``batch=<gen>``; they were
+        already admitted, so no junk policy is re-applied."""
+        ivfpq_index_append(
+            rows, self.path, id_col=self.id_col, vec_col=self.vec_col,
+            dim=self.dim, m=self.m,
+            codes_dir=f"{self.path}/codes/batch={gen}",
+            mode="overwrite", on_zero_norm="allow", quantizers=quantizers,
+        )
+
+    def _retrain_round(self, attempt: int) -> None:
         """Test seam: called at the top of every catch-up/flip round so
         deterministic tests can interleave concurrent stream commits at
         exact points.  No-op in production."""
 
     def rebaseline(self, corpus: DataFrame | None = None) -> float:
         """Probe and publish the drift baseline on an index whose
-        manifest has none — the state both ADOPTION paths (static-layout
-        `adopt_static_layout`, pre-manifest `apply_batch` seeding)
-        leave behind, on which `drift_report` refuses to compare
-        against nothing.  With ``corpus=None`` the stored vectors are
-        probed (requires store_vectors); the publish keeps ``live``
-        unchanged and is fenced on the version read."""
-        from creek_spark.operators.ann_maintenance import (
-            DRIFT_SALT,
-            ann_recall_probe,
-            read_codes,
-        )
-
+        manifest has none — the state `adopt_static_layout` leaves
+        behind, on which `drift_report` refuses to compare against
+        nothing.  With ``corpus=None`` the stored vectors are probed
+        (requires store_vectors); the publish keeps ``live`` unchanged
+        and is fenced on the version read."""
         man = read_manifest(self.spark, self.path)
         if man is None:
             raise ValueError(
@@ -691,36 +517,23 @@ class StreamingAnnIndex:
                 "manifest-managed indexes carry a drift baseline"
             )
         if corpus is None:
-            stored = read_codes(self.spark, self.path, man)
-            if "c_vec" not in stored.columns:
-                raise ValueError(
-                    "rebaseline(corpus=None) needs a store_vectors index "
-                    "to read the vectors back from; pass a corpus"
-                )
-            corpus = stored.select(
-                F.col("n_id").alias(self.id_col),
-                F.col("c_vec").alias(self.vec_col),
-            )
+            corpus = self._stored_corpus(man, "pass rebaseline() a corpus")
         else:
             # the filter policy drops junk rows before indexing — the
             # baseline must not count rows the index by design excludes
-            corpus = self._probe_view(corpus, {})
-        params = {"sample": 512, "n_queries": 64, "k": 5, "salt": DRIFT_SALT}
-        base = ann_recall_probe(
-            self.spark, self.path, corpus,
-            id_col=self.id_col, vec_col=self.vec_col, m=self.m, **params,
-        )
+            corpus = self._probe_view(corpus, self.on_zero_norm)
+        probe = self._baseline(corpus)
         write_manifest(
             self.spark, self.path, man["live"],
             extra={
-                "probe": {"recall": base, **params},
+                "probe": probe,
                 # adopted manifests carry no junk policy; record this
                 # object's so bare ann_drift_report probes the same view
                 "on_zero_norm": man.get("on_zero_norm", self.on_zero_norm),
             },
             expect_version=man["version"],
         )
-        return base
+        return probe["recall"]
 
     def compact(self, *, vacuum: bool = False) -> int:
         """Fold the live batch directories into one generation
@@ -750,12 +563,7 @@ class StreamingAnnIndex:
         `ann_drift_report`, which resolves the policy from the manifest
         (recorded at bootstrap/retrain/rebaseline), so this method and the
         bare function probe the identical view;
-        pass ``on_zero_norm=`` explicitly to override.  For a
-        PRE-UPGRADE state dir whose manifest predates the
-        'on_zero_norm' key, this index object's own configured policy
-        is the fallback — not 'raise' — so a 'filter' index keeps
-        filtering instead of counting junk as drift."""
-        kw.setdefault("fallback_on_zero_norm", self.on_zero_norm)
+        pass ``on_zero_norm=`` explicitly to override."""
         return ann_drift_report(
             self.spark, self.path, recent,
             id_col=self.id_col, vec_col=self.vec_col, m=self.m, **kw,

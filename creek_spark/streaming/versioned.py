@@ -186,12 +186,14 @@ class VersionedStore:
         """The pending runs of ``manifest`` as one DataFrame, in no
         particular row order (the caller's fold orders rows); None when
         there are none.  Read with the stored schema: no footer is
-        opened to infer it."""
+        opened to infer it.  Spark is handed each run's part files, not
+        its dir: a root path named ``_run`` is hidden from its listing,
+        which it reports as a warning on every read."""
         schema = self.run_schema(manifest)
         if schema is None:
             return None
         return self.spark.read.schema(schema).parquet(
-            *[fsio.join(self.state_dir, r) for r in manifest["runs"]]
+            *[fsio.join(self.state_dir, r, "*.parquet") for r in manifest["runs"]]
         )
 
     def write_run(self, df: DataFrame, manifest: dict | None) -> str:

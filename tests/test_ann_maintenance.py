@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from creek_spark.operators import similarity as sim
 from creek_spark.operators.ann_maintenance import (
-    committed_batches,
+    RETRAIN_GEN_STRIDE,
     read_manifest,
 )
 from creek_spark.sources import read_table
@@ -61,7 +61,7 @@ def test_search_reads_only_committed_batches(spark, tmp_path, parts):
         parts["b"][1], p, codes_dir=f"{p}/codes/batch=99", mode="overwrite"
     )
     assert "batch=99" in _batch_dirs(p)  # the dir IS there...
-    assert 99 not in committed_batches(spark, p)  # ...but not committed
+    assert 99 not in read_manifest(spark, p)["live"]  # ...but not committed
     assert _key(idx.search(parts["queries"])) == committed
 
     # the replayed trigger commits it; only then does search see it
@@ -164,9 +164,9 @@ def test_vacuum_removes_torn_uncommitted_dirs(spark, tmp_path, parts):
     assert "batch=9" not in _batch_dirs(p)
     assert _key(idx.search(parts["queries"])) == after_commit
 
-    # same protection on the negative axis: a retrain mid-build writes
-    # its next generation at -(version+1) BEFORE publishing — vacuum
-    # must not reclaim it out from under the build
+    # same protection on the negative axis: a compaction mid-build
+    # writes its next generation at -(version+1) BEFORE publishing —
+    # vacuum must not reclaim it out from under the build
     gen = -(read_manifest(spark, p)["version"] + 1)
     sim.ivfpq_index_append(
         parts["b"][2], p, codes_dir=f"{p}/codes/batch={gen}", mode="overwrite"
@@ -358,7 +358,7 @@ def test_retrain_cycle_after_drift(spark, tmp_path):
     """The action behind the drift signal: drift flags, the owner calls
     retrain(), and the index is rebuilt from its OWN stored vectors.
     The round-10 contract under test: the new generation lands in FRESH
-    directories (codes under a negative epoch batch id, quantizer
+    directories (codes under a negative staging batch id, quantizer
     frames under quantizers/v<epoch>) and one manifest flip publishes
     it — the old generation stays on disk for in-flight readers until
     an EXPLICIT vacuum (retrain never reclaims eagerly; the concurrency
@@ -387,11 +387,12 @@ def test_retrain_cycle_after_drift(spark, tmp_path):
     idx.apply_batch(shifted1, 0)
     assert idx.drift_report(shifted1)["retrain_recommended"]
 
-    idx.retrain(train="kmeans", sample=512)
+    assert idx.retrain(train="kmeans", sample=512) == 0  # stream stopped
     man = read_manifest(spark, p)
     # fresh generation published; the old one still on disk (grace)
-    assert man["live"] == [-3] and man["quantizers"] == "quantizers/v00000003"
-    assert _batch_dirs(p) == ["batch=-3", "batch=0", "batch=1"]
+    gen = -(3 * RETRAIN_GEN_STRIDE)
+    assert man["live"] == [gen] and man["quantizers"] == "quantizers/v00000003"
+    assert _batch_dirs(p) == [f"batch={gen}", "batch=0", "batch=1"]
     assert os.path.isdir(os.path.join(p, "quantizers", "v00000003"))
     new_base = man["probe"]["recall"]
     assert new_base != old_base  # baseline re-measured on the new corpus
@@ -399,7 +400,7 @@ def test_retrain_cycle_after_drift(spark, tmp_path):
     # explicit reclamation after the grace period: only the retrained
     # generation and its quantizer epoch survive
     assert sorted(idx.vacuum()) == [0, 1]
-    assert _batch_dirs(p) == ["batch=-3"]
+    assert _batch_dirs(p) == [f"batch={gen}"]
     assert not os.path.exists(os.path.join(p, "centroids"))  # stale roots
     assert os.listdir(os.path.join(p, "quantizers")) == ["v00000003"]
 
@@ -474,22 +475,16 @@ def test_concurrent_reads_never_see_torn_state(spark, tmp_path, parts):
     assert read_codes(spark, p).count() == sizes[-1]
 
 
-def test_manifest_retention_bounds_directory_o_k_listing(spark, tmp_path, parts):
-    """The round-9 verdict's `weak`: every commit published v{n+1} and
-    nothing ever pruned _manifest/ — ~525k files/year at a 1-minute
-    trigger, with read_manifest listing ALL of them per search.  After
-    200+ commits the directory must hold ≤ MANIFEST_RETAIN files, the
-    latest version must still win, index-level keys (the drift-probe
-    baseline) must ride through every prune, and a reader hammering
-    read_manifest concurrently must never error and never observe a
-    version going backwards (publish-then-prune ordering + vanished-
-    version skip)."""
+def test_concurrent_manifest_reader_sees_versions_only_move_forward(
+    spark, tmp_path, parts
+):
+    """A reader hammering read_manifest while the owner publishes 220
+    commits must never error, never see no manifest, and never observe
+    a version going backwards; the latest version wins, and index-level
+    keys (the drift-probe baseline) ride through every commit."""
     import threading
 
-    from creek_spark.operators.ann_maintenance import (
-        MANIFEST_RETAIN,
-        write_manifest,
-    )
+    from creek_spark.operators.ann_maintenance import write_manifest
 
     p = str(tmp_path / "idx")
     idx = StreamingAnnIndex(spark, p)
@@ -516,50 +511,12 @@ def test_manifest_retention_bounds_directory_o_k_listing(spark, tmp_path, parts)
     assert not errors, errors
     assert len(seen) >= 3, "reader never got going"
     assert seen == sorted(seen), "reader observed a version regression"
-    files = [n for n in os.listdir(os.path.join(p, "_manifest"))
-             if n.endswith(".json")]
-    assert len(files) <= MANIFEST_RETAIN, files
     man = read_manifest(spark, p)
     assert man["version"] == 221
-    assert man["probe"] == base_probe  # baseline survived 220 prunes
+    assert man["probe"] == base_probe  # baseline survived 220 commits
     # and the index still works end-to-end on top of the churn
     idx.apply_batch(parts["b"][0], 500)
     assert len(_key(idx.search(parts["queries"]))) > 0
-
-
-def test_apply_batch_adopts_premanifest_streaming_layout(
-    spark, tmp_path, parts
-):
-    """The round-9 advice (medium): apply_batch on a pre-manifest
-    STREAMING layout used to publish a v1 manifest listing only the new
-    batch — silently hiding batch=0 and every previously ingested batch,
-    and a later vacuum would delete them as 'dead'.  The first commit
-    must seed the manifest from the existing codes/batch=* listing."""
-    p = str(tmp_path / "idx")
-    # how a round-8 (pre-manifest) streaming index looks on disk
-    sim.ivfpq_index_build(parts["seed"], p, codes_dir=f"{p}/codes/batch=0")
-    sim.ivfpq_index_append(
-        parts["b"][0], p, codes_dir=f"{p}/codes/batch=1", mode="overwrite"
-    )
-    assert read_manifest(spark, p) is None
-
-    idx = StreamingAnnIndex(spark, p)
-    idx.apply_batch(parts["b"][1], 41)  # first manifest commit
-    man = read_manifest(spark, p)
-    assert man["live"] == [0, 1, 42]  # seeded, not just [42]
-
-    # nothing hidden: equals a one-shot build+append of the same rows
-    ref = str(tmp_path / "ref")
-    sim.ivfpq_index_build(parts["seed"], ref)
-    sim.ivfpq_index_append(
-        parts["b"][0].unionByName(parts["b"][1]), ref
-    )
-    assert _key(idx.search(parts["queries"])) == _key(
-        sim.ivfpq_search(spark, ref, parts["queries"])
-    )
-    # and vacuum finds nothing 'dead' to destroy
-    assert idx.vacuum() == []
-    assert len(_batch_dirs(p)) == 3
 
 
 def test_apply_batch_refuses_static_layout_and_adopt_migrates(
@@ -678,7 +635,7 @@ def test_build_polices_zero_norm_rows(spark, tmp_path, parts):
 def test_public_surface_drives_full_ann_lifecycle(spark, tmp_path, parts):
     """The public functions a reference user would script against:
     static build → adopt into the streaming layout → streamed commit →
-    search → compact → drift probe → vacuum → online retrain."""
+    search → compact → drift probe → vacuum → retrain."""
     from creek_spark.operators.ann_maintenance import (
         adopt_static_layout,
         ann_drift_report,
@@ -709,8 +666,8 @@ def test_public_surface_drives_full_ann_lifecycle(spark, tmp_path, parts):
     assert dead  # pre-compaction generations reclaimed
     assert sim.ivfpq_search(spark, p, parts["queries"]).count() == n0
 
-    # the no-pause retrain, on a fresh handle to the same index
-    rounds = StreamingAnnIndex(spark, p).retrain_online()
+    # the retrain, on a fresh handle to the same index
+    rounds = StreamingAnnIndex(spark, p).retrain()
     assert rounds == 0  # no stream committed mid-retrain here
     man = read_manifest(spark, p)
     assert man["quantizers"].startswith("quantizers/v")
@@ -774,49 +731,7 @@ def test_adopt_refuses_ambiguous_multi_generation_hybrid(
         adopt_static_layout(spark, p)
 
 
-def test_adoption_repairs_torn_replay_batch(spark, tmp_path, parts):
-    """A pre-manifest stream that crashed mid-write left its last batch
-    directory TORN on disk — and the replayed trigger that first adopts
-    the index is exactly that batch.  Seeding the manifest straight from
-    the directory listing would commit the torn directory and the replay
-    shortcut would skip the rewrite: torn data committed forever, the
-    silent-wrong-answers class.  The seeding path must instead treat the
-    replayed bid as uncommitted — rewrite it (bit-exact when it was in
-    fact complete, repaired when torn) before the first manifest commits
-    it."""
-    p = str(tmp_path / "idx")
-    # round-8 (pre-manifest) layout: committed batches 0 and 1 ...
-    sim.ivfpq_index_build(parts["seed"], p, codes_dir=f"{p}/codes/batch=0")
-    sim.ivfpq_index_append(
-        parts["b"][0], p, codes_dir=f"{p}/codes/batch=1", mode="overwrite"
-    )
-    # ... and a TORN batch=2 from the crashed trigger (batch_id=1)
-    torn = os.path.join(p, "codes", "batch=2")
-    os.makedirs(torn)
-    with open(os.path.join(torn, "part-00000.snappy.parquet"), "wb") as f:
-        f.write(b"PAR1 torn mid-write, not a valid footer")
-
-    idx = StreamingAnnIndex(spark, p)
-    idx.apply_batch(parts["b"][1], 1)  # the replay of the crashed trigger
-    man = read_manifest(spark, p)
-    assert man["live"] == [0, 1, 2]
-
-    # committed content equals a one-shot build+append of the same rows —
-    # the torn file is gone, not ranked over
-    ref = str(tmp_path / "ref")
-    sim.ivfpq_index_build(parts["seed"], ref)
-    sim.ivfpq_index_append(
-        parts["b"][0].unionByName(parts["b"][1]), ref
-    )
-    assert _key(idx.search(parts["queries"])) == _key(
-        sim.ivfpq_search(spark, ref, parts["queries"])
-    )
-    # and once manifest-managed, the replay shortcut IS a pure no-op
-    idx.apply_batch(parts["b"][1], 1)
-    assert read_manifest(spark, p)["version"] == man["version"]
-
-
-def test_retrain_online_converges_with_concurrent_commits(
+def test_retrain_converges_with_concurrent_commits(
     spark, tmp_path, parts
 ):
     """The double-encode window (round 12; r10 verdict item 5): the new
@@ -828,10 +743,7 @@ def test_retrain_online_converges_with_concurrent_commits(
     duplicated, quantizers pointer + baseline + watermark flip in ONE
     publish, the stream continues exactly-once afterwards, and vacuum
     reclaims the old epoch while keeping every staged generation."""
-    from creek_spark.operators.ann_maintenance import (
-        ONLINE_GEN_STRIDE,
-        read_codes,
-    )
+    from creek_spark.operators.ann_maintenance import read_codes
 
     emb = parts["emb"]
     slices = [emb.where(F.col("vec_id") % 8 == r) for r in range(8)]
@@ -849,14 +761,14 @@ def test_retrain_online_converges_with_concurrent_commits(
             idx.apply_batch(slices[state["bid"] + 1], state["bid"])
             state["bid"] += 1
 
-    idx._retrain_online_round = interleave
-    rounds = idx.retrain_online()
+    idx._retrain_round = interleave
+    rounds = idx.retrain()
     assert rounds == 2  # both interleaved commits were caught up
 
     man = read_manifest(spark, p)
     assert man["quantizers"] == f"quantizers/v{epoch:08d}"
     assert man["live"] == sorted(
-        -(epoch * ONLINE_GEN_STRIDE + i) for i in range(3)
+        -(epoch * RETRAIN_GEN_STRIDE + i) for i in range(3)
     )
     assert man["max_bid"] == 3 and man["probe"]["recall"] > 0
 
@@ -887,12 +799,12 @@ def test_retrain_online_converges_with_concurrent_commits(
     assert os.listdir(os.path.join(p, "quantizers")) == [f"v{epoch:08d}"]
 
 
-def test_retrain_online_flip_window_conflict_retries(
+def test_retrain_flip_window_conflict_retries(
     spark, tmp_path, parts, monkeypatch
 ):
     """The one race the catch-up loop cannot see coming: a trigger
     commits BETWEEN the empty-gap read and the flip publish.  The
-    fenced publish raises ManifestConflictError, retrain_online catches
+    fenced publish raises ManifestConflictError, retrain catches
     it, catches up with that batch, and the retried flip succeeds —
     loud-retry, never silent loss of the interleaved commit."""
     import creek_spark.streaming.ann as ann_mod
@@ -917,7 +829,7 @@ def test_retrain_online_flip_window_conflict_retries(
         return real(spark_, path_, live_, **kw)
 
     monkeypatch.setattr(ann_mod, "write_manifest", racy)
-    rounds = idx.retrain_online()
+    rounds = idx.retrain()
     assert fired["n"] == 1 and rounds == 1  # conflicted, caught up, flipped
 
     ingested = {
@@ -932,19 +844,16 @@ def test_retrain_online_flip_window_conflict_retries(
     assert man["quantizers"] and man["max_bid"] == 2
 
 
-def test_retrain_online_staging_ids_never_collide_with_autocompact(
+def test_retrain_staging_ids_never_collide_with_autocompact(
     spark, tmp_path, parts
 ):
     """An auto-compaction folding between catch-up rounds allocates
-    gen=-(version+1); the online staging ids live at -(epoch*STRIDE+i)
+    gen=-(version+1); the retrain staging ids live at -(epoch*STRIDE+i)
     — disjoint by construction, so the interleaved fold can never
     overwrite staged new-epoch codes.  Also proves the id anti-join
     catch-up survives the fold (batch ids vanish from live mid-retrain)
     and the vacuum pending-guard understands the stride encoding."""
-    from creek_spark.operators.ann_maintenance import (
-        ONLINE_GEN_STRIDE,
-        read_codes,
-    )
+    from creek_spark.operators.ann_maintenance import read_codes
 
     emb = parts["emb"]
     slices = [emb.where(F.col("vec_id") % 8 == r) for r in range(8)]
@@ -960,8 +869,8 @@ def test_retrain_online_staging_ids_never_collide_with_autocompact(
             state["bid"] = 2
             idx.compact()  # the stream's auto-compaction fires mid-retrain
 
-    idx._retrain_online_round = interleave
-    idx.retrain_online()
+    idx._retrain_round = interleave
+    idx.retrain()
     ingested = {
         r["vec_id"]
         for s in slices[:3]
@@ -975,7 +884,7 @@ def test_retrain_online_staging_ids_never_collide_with_autocompact(
     # is PENDING (skipped by default vacuum), then provably dead once
     # the version catches up
     man = read_manifest(spark, p)
-    ghost = -( (man["version"] + 1) * ONLINE_GEN_STRIDE )
+    ghost = -( (man["version"] + 1) * RETRAIN_GEN_STRIDE )
     os.makedirs(os.path.join(p, "codes", f"batch={ghost}"))
     assert ghost not in idx.vacuum()  # pending: version too low
     assert os.path.isdir(os.path.join(p, "codes", f"batch={ghost}"))
@@ -988,7 +897,7 @@ def test_vacuum_mid_retrain_spares_staging_after_version_catchup(
     spark, tmp_path, parts
 ):
     """Review finding: the epoch-vs-version pending rule stops
-    protecting online-retrain staging the moment ONE concurrent
+    protecting retrain staging the moment ONE concurrent
     trigger commits (version catches up to the epoch) — and a
     stream-side auto-compaction with vacuum, the explicitly sanctioned
     concurrent writer, would then delete the staged codes and
@@ -1015,11 +924,11 @@ def test_vacuum_mid_retrain_spares_staging_after_version_catchup(
             assert pending_retrain_epoch(spark, p) is not None
             hit["ran"] = True
 
-    idx._retrain_online_round = interleave
+    idx._retrain_round = interleave
     try:
-        idx.retrain_online()
+        idx.retrain()
     finally:
-        del idx._retrain_online_round
+        del idx._retrain_round
     assert hit["ran"]
     expected = {
         r["vec_id"]
@@ -1033,10 +942,10 @@ def test_vacuum_mid_retrain_spares_staging_after_version_catchup(
     assert pending_retrain_epoch(spark, p) is None  # released at flip
 
 
-def test_retrain_online_override_corpus_shapes_quantizers_only(
+def test_retrain_override_corpus_shapes_quantizers_only(
     spark, tmp_path, parts
 ):
-    """Review finding: retrain_online(corpus=X) must stage the
+    """Review finding: retrain(corpus=X) must stage the
     COMMITTED snapshot under the new quantizers, not X — staging the
     training corpus would publish never-committed rows that re-arrive
     later as stream duplicates.  The override corpus here carries ids
@@ -1056,7 +965,7 @@ def test_retrain_online_override_corpus_shapes_quantizers_only(
     }
     # training corpus includes b[1]'s rows — NOT committed yet
     train = parts["seed"].unionByName(parts["b"][1])
-    idx.retrain_online(train)
+    idx.retrain(train)
     got = {r["n_id"] for r in read_codes(spark, p).select("n_id").collect()}
     assert got == committed  # no training-only rows leaked into live
     # the stream later delivers b[1]: appended exactly once
@@ -1068,12 +977,12 @@ def test_retrain_online_override_corpus_shapes_quantizers_only(
     assert idx.search(parts["queries"]).count() > 0
 
 
-def test_retrain_online_requires_store_vectors(spark, tmp_path, parts):
+def test_retrain_requires_store_vectors(spark, tmp_path, parts):
     p = str(tmp_path / "idx")
     idx = StreamingAnnIndex(spark, p)
     idx.bootstrap(parts["seed"], store_vectors=False)
     with pytest.raises(ValueError, match="store_vectors"):
-        idx.retrain_online()
+        idx.retrain()
 
 
 @pytest.mark.parametrize(
@@ -1091,16 +1000,15 @@ def test_randomized_lifecycle_fuzz_holds_invariants(
     as a count (nothing duplicated: a replay landing after a random
     sequence of folds is where watermark bugs would double rows) —
     search keeps answering, the manifest version only moves forward,
-    and `_manifest/` stays inside the retention window no matter how
-    the ops interleave.  Seeded, so a failure replays deterministically;
+    every positive live id stays at or below the ``max_bid`` watermark
+    (compaction and retrain carry it instead of recomputing it), and the
+    index root keeps one ``_manifest.json`` no matter how the ops
+    interleave.  Seeded, so a failure replays deterministically;
     soak runs widen the sweep via ANN_LIFECYCLE_FUZZ_SEEDS (comma list)
     and ANN_LIFECYCLE_FUZZ_STEPS without touching the default suite."""
     import random
 
-    from creek_spark.operators.ann_maintenance import (
-        MANIFEST_RETAIN,
-        read_codes,
-    )
+    from creek_spark.operators.ann_maintenance import read_codes
 
     rng = random.Random(seed)
     p = str(tmp_path / "idx")
@@ -1113,7 +1021,7 @@ def test_randomized_lifecycle_fuzz_holds_invariants(
     next_bid, last_version = 0, read_manifest(spark, p)["version"]
     ops = [
         "apply", "apply", "apply", "replay", "compact", "retrain",
-        "vacuum", "drift", "imposter", "reset", "retrain_online",
+        "vacuum", "drift", "imposter", "reset", "retrain",
     ]
     n_steps = int(os.environ.get("ANN_LIFECYCLE_FUZZ_STEPS", "16"))
     for step in range(n_steps):
@@ -1148,8 +1056,6 @@ def test_randomized_lifecycle_fuzz_holds_invariants(
         elif op == "compact":
             idx.compact(vacuum=rng.random() < 0.5)
         elif op == "retrain":
-            idx.retrain(vacuum=rng.random() < 0.5)
-        elif op == "retrain_online":
             # the NO-PAUSE retrain, with stream commits randomly
             # interleaved into its catch-up rounds through the test
             # seam — the composition the double-encode window exists
@@ -1173,11 +1079,11 @@ def test_randomized_lifecycle_fuzz_holds_invariants(
                     # now keeps them pending)
                     idx.compact(vacuum=rng.random() < 0.5)
 
-            idx._retrain_online_round = interleave
+            idx._retrain_round = interleave
             try:
-                idx.retrain_online(vacuum=rng.random() < 0.5)
+                idx.retrain(vacuum=rng.random() < 0.5)
             finally:
-                del idx._retrain_online_round
+                del idx._retrain_round
             for ids in pending:
                 ingested |= ids
         elif op == "vacuum":
@@ -1196,16 +1102,17 @@ def test_randomized_lifecycle_fuzz_holds_invariants(
         assert len(rows) == len(ingested), (step, op, len(rows))
         # invariant 2: search keeps answering over the committed snapshot
         assert idx.search(parts["queries"]).count() > 0, (step, op)
-        # invariant 3: versions only move forward; retention holds
+        # invariant 3: versions only move forward
         man = read_manifest(spark, p)
         assert man["version"] >= last_version, (step, op)
         last_version = man["version"]
-        files = [
-            n
-            for n in os.listdir(os.path.join(p, "_manifest"))
-            if n.endswith(".json")
-        ]
-        assert len(files) <= MANIFEST_RETAIN, (step, op, len(files))
+        # invariant 4: the watermark covers every positive live id
+        assert all(
+            b <= man.get("max_bid", 0) for b in man["live"] if b > 0
+        ), (step, op, man["live"], man.get("max_bid"))
+        # invariant 5: one manifest file, no version directory
+        assert os.path.isfile(os.path.join(p, "_manifest.json")), (step, op)
+        assert not os.path.exists(os.path.join(p, "_manifest")), (step, op)
 
 
 def test_write_manifest_expect_version_fences_interleaves(
@@ -1288,18 +1195,17 @@ def test_replay_after_retrain_is_noop_not_duplicate(spark, tmp_path, parts):
     assert read_codes(spark, p).count() > n
 
 
-def test_retrain_racing_stream_commit_fails_loudly(spark, tmp_path, parts):
+def test_retrain_catches_up_a_stream_commit_landing_mid_build(
+    spark, tmp_path, parts, monkeypatch
+):
     """A stream batch committed DURING a retrain's rebuild must not
     silently vanish from `live` when the retrain flips the manifest
     (exactly-once would become zero-once, and vacuum would then delete
-    the batch directory as dead).  The fence turns the race into a loud
-    ManifestConflictError, the interleaved commit survives, and the
-    owner re-runs the retrain against current state."""
+    the batch directory as dead).  The catch-up round finds it by id,
+    re-encodes it under the new epoch, and the flip keeps it: every row
+    committed once, the watermark unchanged by the flip."""
     import creek_spark.streaming.ann as ann_mod
-    from creek_spark.operators.ann_maintenance import (
-        ManifestConflictError,
-        read_codes,
-    )
+    from creek_spark.operators.ann_maintenance import read_codes
 
     p = str(tmp_path / "idx")
     idx = StreamingAnnIndex(spark, p)
@@ -1314,28 +1220,22 @@ def test_retrain_racing_stream_commit_fails_loudly(spark, tmp_path, parts):
         # read) commits a batch while the retrain is mid-rebuild
         StreamingAnnIndex(spark, p).apply_batch(parts["b"][1], 1)
 
-    ann_mod.ivfpq_index_build = build_with_interleaved_commit
-    try:
-        with pytest.raises(ManifestConflictError):
-            idx.retrain()
-    finally:
-        ann_mod.ivfpq_index_build = real_build
+    monkeypatch.setattr(
+        ann_mod, "ivfpq_index_build", build_with_interleaved_commit
+    )
+    assert idx.retrain() == 1  # one catch-up round re-encoded the commit
 
-    # the interleaved commit is intact: live, searchable, undamaged
     man = read_manifest(spark, p)
-    assert 2 in man["live"] and man["max_bid"] == 2
-    ids = {r["n_id"] for r in read_codes(spark, p).select("n_id").collect()}
+    assert man["max_bid"] == 2 and all(b < 0 for b in man["live"])
+    rows = read_codes(spark, p).select("n_id").collect()
     want = {
         r["vec_id"]
         for part in (parts["seed"], parts["b"][0], parts["b"][1])
         for r in part.select("vec_id").collect()
     }
-    assert ids == want
-    # and the re-run against current state succeeds and keeps all rows
-    idx.retrain()
-    assert {
-        r["n_id"] for r in read_codes(spark, p).select("n_id").collect()
-    } == want
+    assert {r["n_id"] for r in rows} == want and len(rows) == len(want)
+    # a replay of the interleaved trigger stays a no-op after the flip
+    assert idx.apply_batch(parts["b"][1], 1) is None
 
 
 def test_drift_report_requires_baseline_and_rebaseline_publishes_one(
@@ -1447,54 +1347,6 @@ def test_retrain_stored_vectors_not_wedged_by_allowed_junk(
     idx.bootstrap(parts["seed"].select("vec_id", "embedding").unionByName(zero))
     idx.retrain()  # would raise without the allow default
     assert idx.search(parts["queries"]).count() > 0
-
-
-def test_drift_report_filter_survives_pre_upgrade_manifest(
-    spark, tmp_path, parts
-):
-    """A state dir whose manifest predates the 'on_zero_norm' key must
-    not silently flip a 'filter' index's drift probe to 'raise': junk
-    rows in `recent` would then count as recall misses — the exact
-    spurious retrain_recommended the filter policy exists to prevent.
-    The index object's own configured policy is the fallback."""
-    import json
-
-    p = str(tmp_path / "idx")
-    idx = StreamingAnnIndex(spark, p, on_zero_norm="filter")
-    idx.bootstrap(parts["seed"])
-    clean = parts["seed"].select("vec_id", "embedding")
-    rep_clean = idx.drift_report(clean)
-
-    # simulate the pre-upgrade manifest: strip the key from the newest
-    # version in place (same version number — an OLD writer wrote it)
-    mdir = os.path.join(p, "_manifest")
-    name = sorted(n for n in os.listdir(mdir) if not n.startswith("."))[-1]
-    newest = os.path.join(mdir, name)
-    with open(newest) as fh:
-        man = json.load(fh)
-    assert man.pop("on_zero_norm") == "filter"
-    with open(newest, "w") as fh:
-        json.dump(man, fh)
-    crc = os.path.join(mdir, f".{name}.crc")
-    if os.path.exists(crc):  # hadoop LocalFS checksum of the old bytes
-        os.remove(crc)
-
-    junk = spark.createDataFrame(
-        [(888_100 + i, [0.0] * 64) for i in range(200)],
-        "vec_id bigint, embedding array<double>",
-    )
-    dirty = clean.unionByName(junk)
-    # fallback = the object's 'filter': junk drops, so the probe sees
-    # exactly the clean frame again — bit-identical report
-    rep = idx.drift_report(dirty)
-    assert rep == rep_clean
-    assert not rep["retrain_recommended"]
-    # explicit override still wins over the fallback
-    assert idx.drift_report(dirty, on_zero_norm="filter") == rep_clean
-    # the test bites: without filtering ('allow' override) the junk
-    # rows enter the probe view and the salted sample draw shifts —
-    # the report cannot be identical to the clean one
-    assert idx.drift_report(dirty, on_zero_norm="allow") != rep_clean
 
 
 def test_foreach_batch_auto_compaction_bounds_directories(

@@ -148,3 +148,62 @@ def test_index_memo_keeps_one_entry_per_live_session_and_path(spark, tmp_path):
     assert second is not first
     assert entries() == [(id(spark), p)]
     assert am._INDEX_MEMO[(id(spark), p)][1] == ("v", 2)
+
+
+def _skeleton_index(spark, p: str) -> None:
+    """Code, centroid and codebook dirs — no real quantizers: every
+    entry point below must refuse before it reads any of them."""
+    for sub in ("codes/batch=0", "centroids", "codebook"):
+        spark.range(2).write.parquet(f"{p}/{sub}")
+
+
+def test_manifest_version_directory_is_refused_with_remedy(spark, tmp_path):
+    """An index whose manifest is a `_manifest/` directory of numbered
+    version files (the layout before `_manifest.json`) is refused by
+    every reader and writer, with the remedy named, instead of being
+    read as a static index whose codes root exposes uncommitted
+    batch dirs."""
+    import pytest
+
+    from creek_spark.operators import ann_maintenance as am
+    from creek_spark.streaming.ann import StreamingAnnIndex
+
+    p = str(tmp_path / "idx")
+    _skeleton_index(spark, p)
+    os.makedirs(f"{p}/_manifest")
+    with open(f"{p}/_manifest/v00000001.json", "w") as f:
+        f.write('{"live": [0], "version": 1}')
+    remedy = "move the newest one to .*_manifest.json"
+    with pytest.raises(ValueError, match=remedy):
+        am.read_manifest(spark, p)
+    idx = StreamingAnnIndex(spark, p)
+    batch = spark.range(1)
+    for op in (
+        lambda: sim.ivfpq_search(spark, p, batch),
+        lambda: idx.apply_batch(batch, 0),
+        lambda: am.ivfpq_index_compact(spark, p),
+        lambda: am.ivfpq_index_vacuum(spark, p),
+        lambda: am.ann_drift_report(spark, p, batch),
+    ):
+        with pytest.raises(ValueError, match=remedy):
+            op()
+    assert not os.path.exists(f"{p}/_manifest.json")
+
+
+def test_apply_batch_without_manifest_names_bootstrap_and_adopt(
+    spark, tmp_path
+):
+    """A first manifest published by apply_batch would list only its own
+    batch and hide every code dir already on disk from gated searches:
+    an index with no manifest is refused, naming both ways in, and
+    nothing is committed."""
+    import pytest
+
+    from creek_spark.streaming.ann import StreamingAnnIndex
+
+    p = str(tmp_path / "idx")
+    _skeleton_index(spark, p)
+    idx = StreamingAnnIndex(spark, p)
+    with pytest.raises(ValueError, match=r"bootstrap\(\).*adopt_static_layout"):
+        idx.apply_batch(spark.range(1), 0)
+    assert not os.path.exists(f"{p}/_manifest.json")

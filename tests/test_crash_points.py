@@ -11,9 +11,10 @@ the op sequence, the batch split and the crash point; the explicit
 examples pin one crash at each fsio step of a run publish and of a
 compaction publish (CdcApplier, StreamingDedup), of a rollup publish
 (AdditiveRollupSink) — every fenced sink that commits through the
-versioned store — and of a StreamingAnnIndex manifest commit.  A
-StreamingDedup or StreamingAnnIndex batch costs seconds of Spark jobs,
-so their harnesses run the explicit examples only."""
+versioned store — of a StreamingAnnIndex manifest commit, compaction and
+retrain flip, and of a stream_shard_writer fence commit.  A
+StreamingDedup, StreamingAnnIndex or shard-writer batch costs seconds of
+Spark jobs, so their harnesses run the explicit examples only."""
 
 from __future__ import annotations
 
@@ -429,12 +430,9 @@ def test_streaming_dedup_survives_a_crash_at_every_fsio_step(
 @pytest.fixture(scope="module")
 def ann_prefix(spark, tmp_path_factory):
     """A bootstrapped index (each example starts from a copy — bootstrap
-    trains quantizers), the streamed batch, and the seed's ids.  Ten
-    more manifest versions make the index long-running: every commit
-    then also prunes the version that falls out of retention."""
+    trains quantizers), the streamed batch, and the seed's ids."""
     from pyspark.sql import functions as F
 
-    from creek_spark.operators.ann_maintenance import write_manifest
     from creek_spark.sources import read_table
     from tests.conftest import SF_DIR
 
@@ -443,27 +441,43 @@ def ann_prefix(spark, tmp_path_factory):
     batch = emb.where(F.col("vec_id") % 4 == 1)
     path = str(tmp_path_factory.mktemp("ann_prefix") / "idx")
     StreamingAnnIndex(spark, path).bootstrap(seed)
-    for _ in range(10):
-        write_manifest(spark, path, [0])
     seed_ids = [r["vec_id"] for r in seed.select("vec_id").collect()]
     return path, batch, seed_ids
 
 
-@given(k=st.integers(1, 9), expect=st.none())
+@pytest.fixture(scope="module")
+def ann_streamed(spark, ann_prefix, tmp_path_factory):
+    """A copy of ``ann_prefix`` that committed the batch as batch id 0,
+    and the ids the index must hold: the seed's and the batch's."""
+    prefix, batch, seed_ids = ann_prefix
+    path = str(tmp_path_factory.mktemp("ann_streamed") / "idx")
+    shutil.copytree(prefix, path)
+    StreamingAnnIndex(spark, path).apply_batch(batch, 0)
+    batch_ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
+    return path, batch, sorted(seed_ids + batch_ids)
+
+
+def _ann_ids(spark, path) -> list:
+    from creek_spark.operators.ann_maintenance import read_codes
+
+    return sorted(
+        r["n_id"] for r in read_codes(spark, path).select("n_id").collect()
+    )
+
+
+@given(k=st.integers(1, 5), expect=st.none())
 # one crash at each fsio step of the manifest commit that ends
-# apply_batch (the commit's manifest read, the version write, the
-# retention listing and its delete), and right after it
-@example(k=5, expect="list_names")
-@example(k=6, expect="read_file_or_none")
-@example(k=7, expect="write_file_atomic")
-@example(k=8, expect="list_names")
-@example(k=9, expect="delete")
+# apply_batch (the commit's manifest read and the swap), at the batch's
+# first manifest read, and right after the commit
+@example(k=1, expect="read_json_or_none")
+@example(k=3, expect="read_json_or_none")
+@example(k=4, expect="write_json_atomic")
 @example(k=99, expect="after")
 @settings(_SETTINGS, phases=[Phase.explicit])
 def test_streaming_ann_index_survives_a_crash_at_every_fsio_step(
     spark, ann_prefix, k, expect
 ):
-    from creek_spark.operators.ann_maintenance import read_codes, read_manifest
+    from creek_spark.operators.ann_maintenance import read_manifest
 
     prefix, batch, seed_ids = ann_prefix
     root = tempfile.mkdtemp(prefix="crash_ann_")
@@ -478,8 +492,119 @@ def test_streaming_ann_index_survives_a_crash_at_every_fsio_step(
         # batch re-delivered under its id
         StreamingAnnIndex(spark, path).apply_batch(batch, 0)
         batch_ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
-        got = [r["n_id"] for r in read_codes(spark, path).select("n_id").collect()]
-        assert sorted(got) == sorted(seed_ids + batch_ids)
+        assert _ann_ids(spark, path) == sorted(seed_ids + batch_ids)
         assert read_manifest(spark, path)["max_bid"] == 1
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _ann_maintenance_crash(spark, ann_streamed, k, op):
+    """Crash ``op`` (compact or retrain on an index handle) at its k-th
+    fsio call, restart on a fresh handle and re-run it; the committed
+    ids stay the seed plus the batch exactly once, the watermark stays
+    at the batch, and a replay of the batch is a no-op.  Returns the
+    crashed step."""
+    from creek_spark.operators.ann_maintenance import (
+        pending_retrain_epoch,
+        read_manifest,
+    )
+
+    prefix, batch, want = ann_streamed
+    root = tempfile.mkdtemp(prefix="crash_ann_maint_")
+    path = os.path.join(root, "idx")
+    try:
+        shutil.copytree(prefix, path)
+        hit = _crash_during(k, lambda: op(StreamingAnnIndex(spark, path)))
+        idx = StreamingAnnIndex(spark, path)
+        op(idx)
+        assert _ann_ids(spark, path) == want
+        assert read_manifest(spark, path)["max_bid"] == 1
+        assert pending_retrain_epoch(spark, path) is None
+        assert idx.apply_batch(batch, 0) is None
+        assert _ann_ids(spark, path) == want
+        return hit
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@given(k=st.integers(1, 4), expect=st.none())
+# one crash at each fsio step of a compaction: its manifest read, the
+# commit's manifest read, the swap — and right after it
+@example(k=1, expect="read_json_or_none")
+@example(k=2, expect="read_json_or_none")
+@example(k=3, expect="write_json_atomic")
+@example(k=99, expect="after")
+@settings(_SETTINGS, phases=[Phase.explicit])
+def test_ann_compaction_survives_a_crash_at_every_fsio_step(
+    spark, ann_streamed, k, expect
+):
+    hit = _ann_maintenance_crash(spark, ann_streamed, k, lambda i: i.compact())
+    assert expect is None or hit == expect, (hit, expect)
+
+
+@given(k=st.integers(1, 7), expect=st.none())
+# one crash at each fsio step of a retrain: its manifest read, the
+# pending marker's write, the catch-up round's manifest read, the flip's
+# manifest read and swap, the marker's delete — and right after it
+@example(k=1, expect="read_json_or_none")
+@example(k=2, expect="write_json_atomic")
+@example(k=3, expect="read_json_or_none")
+@example(k=4, expect="read_json_or_none")
+@example(k=5, expect="write_json_atomic")
+@example(k=6, expect="delete")
+@example(k=99, expect="after")
+@settings(_SETTINGS, phases=[Phase.explicit])
+def test_ann_retrain_survives_a_crash_at_every_fsio_step(
+    spark, ann_streamed, k, expect
+):
+    hit = _ann_maintenance_crash(spark, ann_streamed, k, lambda i: i.retrain())
+    assert expect is None or hit == expect, (hit, expect)
+
+
+# -- stream_shard_writer -----------------------------------------------
+
+_SHARD_DOCS = 30
+
+
+@given(k=st.integers(1, 3), expect=st.none())
+# one crash at each fsio step of a batch commit: the fence read, the
+# fence write — and right after it
+@example(k=1, expect="read_json_or_none")
+@example(k=2, expect="write_json_atomic")
+@example(k=99, expect="after")
+@settings(_SETTINGS, phases=[Phase.explicit])
+def test_stream_shard_writer_survives_a_crash_at_every_fsio_step(
+    spark, k, expect
+):
+    from pyspark.sql import functions as F
+
+    from creek_spark.operators.pipeline import stream_shard_writer
+
+    docs = spark.range(_SHARD_DOCS).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("d"), "id").alias("text")
+    )
+    batches = [docs.where(F.col("doc_id") % 3 == r) for r in range(3)]
+    path = tempfile.mkdtemp(prefix="crash_shards_")
+    try:
+        stream_shard_writer(path, "doc_id")(batches[0], 0)
+        j = 1
+        write = stream_shard_writer(path, "doc_id")
+        hit = _crash_during(k, lambda: write(batches[j], j))
+        assert expect is None or hit == expect, (hit, expect)
+
+        # restart: a fresh writer, the crashed batch re-delivered under
+        # its id, then the rest of the stream
+        write = stream_shard_writer(path, "doc_id")
+        for i in range(j, len(batches)):
+            write(batches[i], i)
+        rows = spark.read.option("basePath", path).parquet(path).collect()
+        assert sorted((r["batch"], r["doc_id"]) for r in rows) == sorted(
+            (d % 3, d) for d in range(_SHARD_DOCS)
+        )
+        for b in range(len(batches)):
+            subs = os.listdir(os.path.join(path, f"batch={b}"))
+            assert any(s.startswith("shard=") for s in subs), subs
+        with open(os.path.join(path, "_fence.json")) as f:
+            assert json.load(f)["last_batch_id"] == len(batches) - 1
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

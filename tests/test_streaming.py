@@ -210,6 +210,35 @@ def test_cdc_truncate_inside_a_pending_run(spark, tmp_path):
     assert state_dict(applier.current_state().select("id", "data")) == expected
 
 
+def test_read_runs_hands_spark_no_hidden_root_path(spark, tmp_path, monkeypatch):
+    """Spark warns "All paths were ignored" for a root path whose last
+    segment starts with "_" or "." — every `vN/_run` dir.  The store
+    hands it each run's part files instead, and the fold still sees
+    every pending run."""
+    from pyspark.sql import DataFrameReader
+
+    from tests.fixtures import wal_row
+
+    seen = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        seen.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    applier = CdcApplier(spark, str(tmp_path / "state"), ["id"], ENV_SCHEMA, n_buckets=4)
+    for i in range(2):  # two pending runs, no base
+        applier.apply_batch(spark.createDataFrame(
+            [wal_row(i + 1, "c", after=(i + 1, f"v{i}"))], schema=ENV_SCHEMA
+        ), i)
+    seen.clear()
+    assert state_dict(applier.current_state().select("id", "data")) == {1: "v0", 2: "v1"}
+    runs = [p for p in seen if "/_run" in p]
+    assert len(runs) == 2, seen
+    assert not [p for p in seen if p.rstrip("/").rsplit("/", 1)[-1][:1] in "_."], seen
+
+
 def test_cdc_add_column_between_pending_runs(spark, tmp_path):
     """Upstream ADD COLUMN between two pending runs: the widened batch
     folds the narrower runs into the base before its own run is

@@ -417,7 +417,7 @@ def lifecycle_probes(spark, sf_dir: str) -> dict[str, dict[int, float]]:
         Scans nprobe/n_cells of the stored codes → linear in corpus
         (top_ratio ≈ 4), bounded by the same ≤6 gate as every other
         linear shape.
-      * ann_retrain_online — the round-12 no-pause retrain, with a
+      * ann_retrain       — the no-pause retrain, with a
         FIXED 2k-row stream commit interleaved into catch-up round 0
         through the test seam.  Retrain re-encodes the corpus, so the
         expected curve is LINEAR (top_ratio ≈ 4, same ≤6 gate); the
@@ -458,7 +458,7 @@ def lifecycle_probes(spark, sf_dir: str) -> dict[str, dict[int, float]]:
             ).save()
             stimes.append(time.time() - t0)
         t_srch[k] = round(min(stimes[1:]), 3)
-        # online retrain with one interleaved stream commit per run
+        # retrain with one interleaved stream commit per run
         # (distinct ids/batch ids per injection: a replayed id would
         # time the no-op fast path, not the catch-up)
         inj = {"n": 0}
@@ -472,18 +472,18 @@ def lifecycle_probes(spark, sf_dir: str) -> dict[str, dict[int, float]]:
                 idx.apply_batch(b, 3 + inj["n"])
                 inj["n"] += 1
 
-        idx._retrain_online_round = interleave
+        idx._retrain_round = interleave
         rtimes = []
         for _ in range(2):
             t0 = time.time()
-            idx.retrain_online()
+            idx.retrain()
             rtimes.append(time.time() - t0)
         t_ret[k] = round(min(rtimes), 3)
         shutil.rmtree(root)
     return {
         "ann_append_flat": t_app,
         "ann_search_pruned": t_srch,
-        "ann_retrain_online": t_ret,
+        "ann_retrain": t_ret,
     }
 
 
