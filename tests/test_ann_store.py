@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from creek_spark.operators import similarity as sim
@@ -163,8 +164,6 @@ def test_manifest_version_directory_is_refused_with_remedy(spark, tmp_path):
     every reader and writer, with the remedy named, instead of being
     read as a static index whose codes root exposes uncommitted
     batch dirs."""
-    import pytest
-
     from creek_spark.operators import ann_maintenance as am
     from creek_spark.streaming.ann import StreamingAnnIndex
 
@@ -197,8 +196,6 @@ def test_apply_batch_without_manifest_names_bootstrap_and_adopt(
     batch and hide every code dir already on disk from gated searches:
     an index with no manifest is refused, naming both ways in, and
     nothing is committed."""
-    import pytest
-
     from creek_spark.streaming.ann import StreamingAnnIndex
 
     p = str(tmp_path / "idx")
