@@ -945,8 +945,8 @@ def test_vacuum_mid_retrain_spares_staging_after_version_catchup(
 def test_retrain_override_corpus_shapes_quantizers_only(
     spark, tmp_path, parts
 ):
-    """Review finding: retrain(corpus=X) must stage the
-    COMMITTED snapshot under the new quantizers, not X — staging the
+    """retrain(corpus=X) must stage the COMMITTED snapshot under the
+    new quantizers, not X — staging the
     training corpus would publish never-committed rows that re-arrive
     later as stream duplicates.  The override corpus here carries ids
     the stream has NOT ingested; after the flip the index holds
