@@ -1555,8 +1555,6 @@ def ivfpq_index_build(
     sample: int = 4096,
     iters: int = 10,
     codes_dir: str | None = None,
-    centroids_dir: str | None = None,
-    codebook_dir: str | None = None,
     encode: str = "fast",
     on_zero_norm: str = "raise",
 ) -> None:
@@ -1623,16 +1621,38 @@ def ivfpq_index_build(
     pre-round-10 behavior) for corpora where the caller owns the
     junk-filtering upstream.  `ivfpq_index_append` polices the same
     policy on the continuous-ingest path."""
+    if encode not in ("fast", "exact"):
+        raise ValueError(f"encode must be 'fast' or 'exact', got {encode!r}")
+    corpus = _police_zero_norm(
+        corpus, id_col, vec_col, on_zero_norm, site="build"
+    )
+    cents, cb, residual = _ivfpq_train(
+        corpus, id_col=id_col, vec_col=vec_col, m=m, n_codes=n_codes,
+        n_cells=n_cells, residual=residual, train=train, sample=sample,
+        iters=iters,
+    )
+    _ivfpq_write(
+        corpus, cents, cb, residual, id_col=id_col, vec_col=vec_col,
+        dim=dim, m=m, store_vectors=store_vectors, encode=encode,
+        codes_dir=codes_dir or f"{path}/codes",
+        centroids_dir=f"{path}/centroids", codebook_dir=f"{path}/codebook",
+    )
+
+
+def _ivfpq_train(corpus: DataFrame, *, id_col: str, vec_col: str, m: int,
+                 n_codes: int = 64, n_cells: int = 16,
+                 residual: bool | None = None, train: str = "sample",
+                 sample: int = 4096, iters: int = 10):
+    """The training half of `ivfpq_index_build`: the coarse centroids
+    and the PQ codebook trained on ``corpus`` → (centroids frame,
+    codebook frame, residual), not yet written.  The options are the
+    build's; ``StreamingAnnIndex.retrain`` trains on one corpus here and
+    encodes another through `_ivfpq_write`."""
     import numpy as np
 
     if train not in ("sample", "kmeans"):
         raise ValueError(f"train must be 'sample' or 'kmeans', got {train!r}")
-    if encode not in ("fast", "exact"):
-        raise ValueError(f"encode must be 'fast' or 'exact', got {encode!r}")
     spark = corpus.sparkSession
-    corpus = _police_zero_norm(
-        corpus, id_col, vec_col, on_zero_norm, site="build"
-    )
     S = CC = None
     if train == "kmeans" or residual is None:
         # the probe simulates recall on this draw — full `sample` size
@@ -1677,7 +1697,21 @@ def ivfpq_index_build(
         )
     else:
         cb = pq_codebook(corpus, id_col=id_col, vec_col=vec_col, n_codes=n_codes)
-    c = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("c_vec"))
+    return cents, cb, residual
+
+
+def _ivfpq_write(rows: DataFrame, cents: DataFrame, cb: DataFrame,
+                 residual: bool, *, id_col: str, vec_col: str, dim: int,
+                 m: int, codes_dir: str, centroids_dir: str,
+                 codebook_dir: str, store_vectors: bool = True,
+                 encode: str = "fast") -> None:
+    """The encoding half of `ivfpq_index_build`: encode ``rows`` under
+    the quantizers `_ivfpq_train` returned and write the code rows
+    (partitioned by cell_id), the centroids and the codebook.  A
+    retrain (streaming/ann.py) writes its frames into a fresh
+    quantizer-epoch directory, so a live index is never overwritten
+    under concurrent readers."""
+    c = rows.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("c_vec"))
     # default builds take the fused vectorized assignment+encode (numpy
     # argmax/argmin in one Arrow stage); the decimal-fold
     # ivf_cell_assignment + pq_encode remain available as encode="exact"
@@ -1713,14 +1747,10 @@ def ivfpq_index_build(
         ["c_vec"] if store_vectors else []
     )
     enc.select(*cols).write.mode("overwrite").partitionBy("cell_id").parquet(
-        codes_dir or f"{path}/codes"
+        codes_dir
     )
-    # centroids_dir/codebook_dir route a RETRAIN's frames into a fresh
-    # quantizer-epoch directory (streaming/ann.py) so a live index is
-    # never overwritten under concurrent readers; default builds keep
-    # the root layout
-    cents.write.mode("overwrite").parquet(centroids_dir or f"{path}/centroids")
-    cb.write.mode("overwrite").parquet(codebook_dir or f"{path}/codebook")
+    cents.write.mode("overwrite").parquet(centroids_dir)
+    cb.write.mode("overwrite").parquet(codebook_dir)
 
 
 def ivfpq_index_append(corpus: DataFrame, path: str, *,

@@ -46,12 +46,13 @@ Per-op envelope rules replicate the reference exactly
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import re
 import struct
 from dataclasses import dataclass, field
-from decimal import Decimal
+from decimal import ROUND_HALF_UP, Context, Decimal
 
-from creek_spark.types.pgtypes import PGColumn, PGRelation
+from creek_spark.types.pgtypes import PGColumn, PGRelation, pg_type_to_spark
 
 _PG_EPOCH = _dt.datetime(2000, 1, 1, tzinfo=_dt.timezone.utc)
 
@@ -86,51 +87,116 @@ def _pg_ts(micros: int) -> _dt.datetime:
     return (_PG_EPOCH + _dt.timedelta(microseconds=micros)).replace(tzinfo=None)
 
 
+_TZ_OFFSET = re.compile(r"([+-])(\d{2})(?::?(\d{2}))?(?::?(\d{2}))?$")
+
+
+def _timestamp_strptime(s: str) -> _dt.datetime:
+    """The regex + strptime parse, kept for any text that
+    ``datetime.fromisoformat`` rejects."""
+    base, offset = s, None
+    if base.endswith("Z"):
+        base, offset = base[:-1], _dt.timedelta(0)
+    else:
+        m = _TZ_OFFSET.search(base)
+        if m and ("-" in base[10:] or "+" in base[10:]):
+            sign = -1 if m.group(1) == "-" else 1
+            offset = sign * _dt.timedelta(
+                hours=int(m.group(2)),
+                minutes=int(m.group(3) or 0),
+                seconds=int(m.group(4) or 0),
+            )
+            base = base[: m.start()]
+    fmt = "%Y-%m-%d %H:%M:%S.%f" if "." in base else "%Y-%m-%d %H:%M:%S"
+    ts = _dt.datetime.strptime(base.strip(), fmt)
+    return ts - offset if offset is not None else ts
+
+
+def _timestamp(s: str):
+    # Postgres renders timestamptz with the server's UTC offset —
+    # '+HH[:MM[:SS]]' east of UTC, '-HH[:MM[:SS]]' west (a US server
+    # prints '... -08'), or 'Z'.  Convert to UTC, then drop tzinfo
+    # (envelope timestamps are naive UTC); naive 'timestamp' values pass
+    # through unchanged.
+    if s in ("infinity", "-infinity"):
+        return s
+    try:
+        ts = _dt.datetime.fromisoformat(s)
+    except ValueError:
+        return _timestamp_strptime(s)
+    off = ts.utcoffset()
+    return ts if off is None else ts.replace(tzinfo=None) - off
+
+
+def _time(s: str) -> int:
+    """'HH:MM:SS[.ffffff]' → µs since midnight, the LongType
+    types/pgtypes.py maps ``time`` to ('24:00:00' is a valid pg time)."""
+    hms, _, frac = s.partition(".")
+    h, m, sec = hms.split(":")
+    return (
+        (int(h) * 3600 + int(m) * 60 + int(sec)) * 1_000_000
+        + int(frac.ljust(6, "0")[:6])
+    )
+
+
+def _date(s: str):
+    if s in ("infinity", "-infinity"):
+        return s
+    return _dt.date.fromisoformat(s)
+
+
+def _numeric(s: str):
+    return s if s in ("NaN", "Infinity", "-Infinity") else Decimal(s)
+
+
+@functools.lru_cache(maxsize=None)
+def _numeric_scale(typmod: int) -> int:
+    return pg_type_to_spark("numeric", typmod).scale
+
+
+def _fit_scale(v: Decimal, typmod: int) -> Decimal:
+    """Round a numeric datum half up to its column's DecimalType scale,
+    as Spark does on a write: an unconstrained ``numeric`` maps to
+    DecimalType(38, 18) but can print more fractional digits."""
+    scale = _numeric_scale(typmod)
+    if v.as_tuple().exponent >= -scale:
+        return v
+    return v.quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP, Context(prec=80))
+
+
+# pg type name → text-datum decoder; any other type stays a string —
+# bytea too: pg's ``\x..`` hex text is lossless and fits the StringType
+# types/pgtypes.py maps it to, where raw bytes would not
+_TEXT_DECODERS = {
+    "int2": int,
+    "int4": int,
+    "int8": int,
+    "float4": float,
+    "float8": float,
+    "bool": "t".__eq__,
+    "numeric": _numeric,
+    "timestamp": _timestamp,
+    "timestamptz": _timestamp,
+    "date": _date,
+    "time": _time,
+}
+
+
 def decode_text_value(raw: bytes, type_oid: int):
     """Text-format column datum → Python value (the decodeTextColumnData
     analog, replication.go:530-539).  Only types the driver data uses get
     native decodes; everything else stays a string."""
+    return _decode_named(raw, OID_NAMES.get(type_oid, "text"))
+
+
+def _decode_named(raw: bytes, pg_type: str):
     s = raw.decode("utf-8")
-    name = OID_NAMES.get(type_oid, "text")
-    if name in ("int2", "int4", "int8"):
-        return int(s)
-    if name in ("float4", "float8"):
-        return float(s)
-    if name == "bool":
-        return s == "t"
-    if name == "numeric":
-        return s if s in ("NaN", "Infinity", "-Infinity") else Decimal(s)
-    if name == "bytea":
-        return bytes.fromhex(s[2:]) if s.startswith("\\x") else s.encode()
-    if name in ("timestamp", "timestamptz"):
-        if s in ("infinity", "-infinity"):
-            return s
-        # Postgres renders timestamptz with the server's UTC offset —
-        # '+HH[:MM[:SS]]' east of UTC, '-HH[:MM[:SS]]' west (a US server
-        # prints '... -08'), or 'Z'.  Parse the offset explicitly, convert
-        # to UTC, then drop tzinfo (envelope timestamps are naive UTC);
-        # naive 'timestamp' values pass through unchanged.
-        base, offset = s, None
-        if base.endswith("Z"):
-            base, offset = base[:-1], _dt.timedelta(0)
-        else:
-            m = re.search(r"([+-])(\d{2})(?::?(\d{2}))?(?::?(\d{2}))?$", base)
-            if m and ("-" in base[10:] or "+" in base[10:]):
-                sign = -1 if m.group(1) == "-" else 1
-                offset = sign * _dt.timedelta(
-                    hours=int(m.group(2)),
-                    minutes=int(m.group(3) or 0),
-                    seconds=int(m.group(4) or 0),
-                )
-                base = base[: m.start()]
-        fmt = "%Y-%m-%d %H:%M:%S.%f" if "." in base else "%Y-%m-%d %H:%M:%S"
-        ts = _dt.datetime.strptime(base.strip(), fmt)
-        return ts - offset if offset is not None else ts
-    if name == "date":
-        if s in ("infinity", "-infinity"):
-            return s
-        return _dt.date.fromisoformat(s)
-    return s
+    dec = _TEXT_DECODERS.get(pg_type)
+    return s if dec is None else dec(s)
+
+
+def _key_of(vals: dict, rel: PGRelation) -> dict:
+    """Project decoded values onto the relation's key columns."""
+    return {c.name: vals.get(c.name) for c in rel.columns if c.is_key}
 
 
 @dataclass
@@ -200,20 +266,16 @@ class PgOutputDecoder:
                 toast.append(col.name)
             elif tag == "b":
                 # binary-format datum (the publication's binary option,
-                # protocol.sgml) — carried as raw bytes; the reference's
-                # text pipeline never requests binary, so this is the
-                # lossless fallback, not a per-type binary codec
-                vals[col.name] = bytes(raw)
+                # protocol.sgml) — carried as bytea's ``\x..`` hex text;
+                # the reference's text pipeline never requests binary, so
+                # this is the lossless fallback, not a per-type binary codec
+                vals[col.name] = "\\x" + raw.hex()
             else:
-                oid = next(
-                    (o for o, nm in OID_NAMES.items() if nm == col.pg_type), 25
-                )
-                vals[col.name] = decode_text_value(raw, oid)
+                v = _decode_named(raw, col.pg_type)
+                if col.pg_type == "numeric" and isinstance(v, Decimal):
+                    v = _fit_scale(v, col.typmod)
+                vals[col.name] = v
         return vals, toast
-
-    def _key_values(self, t: _Tuple, rel: PGRelation):
-        vals, _ = self._values(t, rel)
-        return {c.name: vals.get(c.name) for c in rel.columns if c.is_key}
 
     def _before_values(self, t: _Tuple, rel: PGRelation):
         """Old-tuple values projected to the envelope's before shape:
@@ -223,9 +285,7 @@ class PgOutputDecoder:
         declares and listen_test.go asserts (before == {"id": 1} for a
         PK-changing update of a default-identity table)."""
         vals, _ = self._values(t, rel)
-        if rel.replica_identity == "f":
-            return vals
-        return {c.name: vals.get(c.name) for c in rel.columns if c.is_key}
+        return vals if rel.replica_identity == "f" else _key_of(vals, rel)
 
     # -- message decode ------------------------------------------------
 
@@ -322,14 +382,14 @@ class PgOutputDecoder:
                 )
             new, off = self._tuple(buf, off + 1)
             env = self._envelope(rel, wal_start, relid)
+            env["after"], toast = self._values(new, rel)
+            env["unchanged_toast"] = toast or None
             if old is not None:  # replication.go:425-427
                 env["op"] = "u_pk"
                 env["before"] = self._before_values(old, rel)
             else:
                 env["op"] = "u"
-                env["before"] = self._key_values(new, rel)
-            env["after"], toast = self._values(new, rel)
-            env["unchanged_toast"] = toast or None
+                env["before"] = _key_of(env["after"], rel)
             return [env]
         if tag == "D":
             (relid,) = struct.unpack_from(">I", buf, off)

@@ -41,7 +41,11 @@ from __future__ import annotations
 
 import os
 import struct
+import uuid
 
+from pyspark.sql import types as T
+
+from creek_spark import fsio
 from creek_spark.sources.pgoutput import PgOutputDecoder, lsn_str
 
 _STATE_FILE = "walsender_lsn"
@@ -329,6 +333,52 @@ class WalSenderSession:
         return [r for _, r in self.stream()]
 
 
+def _refuse_nulls(value, dtype) -> None:
+    """Raise on a None where ``dtype`` forbids one — the nullability
+    half of createDataFrame's row check, which pyarrow does not make
+    (it does raise on a value of the wrong type)."""
+    if isinstance(dtype, T.StructType):
+        for f in dtype.fields:
+            v = value.get(f.name)
+            if v is not None:
+                _refuse_nulls(v, f.dataType)
+            elif not f.nullable:
+                raise ValueError(f"field {f.name!r} is not nullable, got None")
+    elif isinstance(dtype, (T.ArrayType, T.MapType)):
+        array = isinstance(dtype, T.ArrayType)
+        inner = dtype.elementType if array else dtype.valueType
+        for v in value if array else value.values():
+            if v is not None:
+                _refuse_nulls(v, inner)
+            elif not (dtype.containsNull if array else dtype.valueContainsNull):
+                raise ValueError(f"{dtype.simpleString()} holds a None")
+
+
+def stage_envelope_rows(spark, rows: list[dict], schema, wal_dir: str) -> None:
+    """Publish envelope row dicts as ONE parquet file,
+    ``<wal_dir>/part-<uuid4>.parquet``.
+
+    pyarrow writes the file into memory and fsio's tmp-then-rename puts
+    it in place, so staging runs no Spark job and works on any Hadoop
+    filesystem; the tmp name starts with ``.``, which Spark's file
+    source skips, so a reader tailing ``wal_dir`` only ever sees
+    complete files.  A row with a value of the wrong type or a None in
+    a non-nullable field raises before any file becomes visible.
+    Naive datetimes are stored as that instant in UTC
+    (types/envelope.py)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    for row in rows:
+        _refuse_nulls(row, schema)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    path = fsio.join(wal_dir, f"part-{uuid.uuid4()}.parquet")
+    fsio.write_file_atomic(spark, path, buf.getvalue().to_pybytes())
+
+
 def ingest_transcript(
     spark,
     session: WalSenderSession,
@@ -339,10 +389,13 @@ def ingest_transcript(
 ) -> int:
     """Drain a walsender session into staged envelope parquet under
     ``wal_dir`` — the directory the streaming pipeline tails
-    (streaming.read_envelope_stream → CdcApplier) — acking the session
-    only AFTER each batch is durably written, so a crash between write
+    (streaming.read_envelope_stream → CdcApplier).  Each flush of up to
+    ``batch_rows`` rows becomes one Arrow-written file, published by
+    fsio's atomic rename (:func:`stage_envelope_rows`); the session is
+    acked only AFTER that file is in place, so a crash between write
     and ack re-delivers (and the applier's same-LSN merge no-ops it:
-    at-least-once transport + idempotent sink = effectively-once).
+    at-least-once transport + idempotent sink = effectively-once).  A
+    flush that raises publishes no file and acks nothing.
 
     This is the bridge that makes the session product-reachable: the
     reference's producer loop writes decoded WAL to its bus the same
@@ -358,9 +411,7 @@ def ingest_transcript(
         nonlocal buf, total
         if not buf:
             return
-        spark.createDataFrame(buf, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(wal_dir)
+        stage_envelope_rows(spark, buf, schema, wal_dir)
         session.ack(hi)  # durable → confirm (crash before this re-sends)
         total += len(buf)
         buf = []
@@ -1033,10 +1084,13 @@ def ingest_transcript_tables(
     qualified table, derive each table's ROW SCHEMA from the stream's own
     Relation declarations (exactly how the reference builds its publish
     schema from the RelationMessage), optionally register it, and stage
-    each table's rows as envelope parquet under ``wal_dir/<schema_table>``
-    — the per-table staging layout the daemon tails.  The session is
-    acked once after ALL writes land (crash before the ack re-delivers;
-    the applier's same-LSN merge no-ops duplicates).
+    each table's rows as ONE Arrow-written envelope parquet file under
+    ``wal_dir/<schema_table>`` (:func:`stage_envelope_rows`, published
+    by fsio's atomic rename) — the per-table staging layout the daemon
+    tails.  The session is acked once after ALL files are in place
+    (crash before the ack re-delivers; the applier's same-LSN merge
+    no-ops duplicates); a table whose rows are refused raises before
+    the ack.
 
     Returns {qualified_table: rows_written}."""
     from creek_spark.types.envelope import envelope_schema
@@ -1071,9 +1125,7 @@ def ingest_transcript_tables(
         if registry is not None and registry.last_for_source(qname) is None:
             registry.put(row_schema, source=qname)
         sub = os.path.join(wal_dir, qname.replace(".", "_"))
-        spark.createDataFrame(rows, envelope_schema(row_schema)).coalesce(
-            1
-        ).write.mode("append").parquet(sub)
+        stage_envelope_rows(spark, rows, envelope_schema(row_schema), sub)
         written[qname] = len(rows)
     if hi:
         session.ack(hi)

@@ -101,16 +101,16 @@ class CdcApplier:
     with writes; on a cluster the same contract is Delta MERGE +
     OPTIMIZE.
 
-    ``envelope_schema`` is not read: runs keep each batch's own
-    schema.  The argument stays so that existing positional calls
-    still bind."""
+    ``envelope_schema`` is not read (runs keep each batch's own
+    schema) and defaults to None; it stays so that existing positional
+    calls still bind."""
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
         key_cols: list[str],
-        envelope_schema: T.StructType,
+        envelope_schema: T.StructType | None = None,
         *,
         n_buckets: int = 64,
     ):

@@ -91,6 +91,9 @@ from creek_spark.operators.ann_maintenance import (
     write_manifest,
 )
 from creek_spark.operators.similarity import (
+    _ivfpq_train,
+    _ivfpq_write,
+    _police_zero_norm,
     ivfpq_index_append,
     ivfpq_index_build,
     ivfpq_search,
@@ -370,7 +373,11 @@ class StreamingAnnIndex:
         built or streamed under the ``allow`` policy must not find its
         retrain wedged by a row it accepted earlier (an explicit
         ``corpus`` gets the index's own policy, like any other build;
-        both are overridable through ``build_kw``).
+        both are overridable through ``build_kw``).  ``build_kw`` takes
+        `ivfpq_index_build`'s training options (train=, residual=,
+        n_cells=, n_codes=, sample=, iters=) and ``on_zero_norm``,
+        which polices the training corpus only; the snapshot is encoded
+        once, with stored vectors, by the build's default encode.
 
         Requires a ``store_vectors`` index (the default): the snapshot
         and the catch-up rounds read the vectors back from the
@@ -404,11 +411,11 @@ class StreamingAnnIndex:
             "with bootstrap() at a fresh path instead"
         )
         snapshot = self._stored_corpus(man0, remedy)
+        policy = build_kw.pop(
+            "on_zero_norm", "allow" if corpus is None else self.on_zero_norm
+        )
         if corpus is None:
-            build_kw.setdefault("on_zero_norm", "allow")
             corpus = snapshot
-        else:
-            build_kw.setdefault("on_zero_norm", self.on_zero_norm)
         epoch = man0["version"] + 1
         qdir = f"quantizers/v{epoch:08d}"
         quantizers = f"{self.path}/{qdir}"
@@ -424,25 +431,25 @@ class StreamingAnnIndex:
         fsio.write_json_atomic(
             self.spark, f"{self.path}/{RETRAIN_MARKER}", {"epoch": epoch}
         )
-        # build: fresh dirs only, no publish
-        ivfpq_index_build(
-            corpus, self.path, id_col=self.id_col, vec_col=self.vec_col,
-            dim=self.dim, m=self.m,
+        # build: fresh dirs only, no publish.  The quantizers train on
+        # ``corpus``; the staged generation encodes the committed
+        # snapshot once, with no junk policy (its rows were admitted)
+        cents, cb, residual = _ivfpq_train(
+            _police_zero_norm(
+                corpus, self.id_col, self.vec_col, policy, site="build"
+            ),
+            id_col=self.id_col, vec_col=self.vec_col, m=self.m, **build_kw,
+        )
+        _ivfpq_write(
+            snapshot, cents, cb, residual,
+            id_col=self.id_col, vec_col=self.vec_col, dim=self.dim, m=self.m,
             codes_dir=f"{self.path}/codes/batch={gen0}",
             centroids_dir=f"{quantizers}/centroids",
             codebook_dir=f"{quantizers}/codebook",
-            **build_kw,
         )
-        if corpus is not snapshot:
-            # the build encoded the training corpus into gen0 as a side
-            # effect; replace it with the committed snapshot re-encoded
-            # under the new epoch (static overwrite clears the dir)
-            self._encode(snapshot, gen0, quantizers)
         # the drift baseline describes what the INDEX will contain —
         # the snapshot — not the training corpus
-        probe = self._baseline(
-            self._probe_view(snapshot, build_kw["on_zero_norm"]), quantizers
-        )
+        probe = self._baseline(self._probe_view(snapshot, policy), quantizers)
         new_live = [gen0]
         rounds = 0
         for attempt in range(_MAX_CATCH_UP_ROUNDS):
@@ -464,7 +471,7 @@ class StreamingAnnIndex:
                             # policy (corpus=None defaults to 'allow'):
                             # every drift entry point probes the view
                             # THIS generation indexes
-                            "on_zero_norm": build_kw["on_zero_norm"],
+                            "on_zero_norm": policy,
                         },
                         expect_version=man["version"],
                     )

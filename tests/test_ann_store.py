@@ -204,3 +204,34 @@ def test_apply_batch_without_manifest_names_bootstrap_and_adopt(
     with pytest.raises(ValueError, match=r"bootstrap\(\).*adopt_static_layout"):
         idx.apply_batch(spark.range(1), 0)
     assert not os.path.exists(f"{p}/_manifest.json")
+
+
+def test_retrain_with_a_corpus_encodes_only_the_committed_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """retrain(corpus=X) trains the quantizers on X and runs one encode
+    pass, of the committed rows: X's extra rows are never encoded."""
+    from creek_spark.operators.ann_maintenance import read_codes
+    from creek_spark.streaming.ann import StreamingAnnIndex
+
+    emb = read_table(spark, SF_DIR, "embeddings")
+    seed = emb.where(F.col("vec_id") % 4 == 0)
+    batch = emb.where(F.col("vec_id") % 4 == 1)
+    p = str(tmp_path / "idx")
+    idx = StreamingAnnIndex(spark, p)
+    idx.bootstrap(seed)
+    idx.apply_batch(batch, 0)
+    committed = sorted(r["n_id"] for r in read_codes(spark, p).select("n_id").collect())
+
+    encoded = []
+    encode = sim.assign_encode_fast
+
+    def spy(c, *a, **kw):
+        encoded.append(c)
+        return encode(c, *a, **kw)
+
+    monkeypatch.setattr(sim, "assign_encode_fast", spy)
+    assert idx.retrain(emb.where(F.col("vec_id") % 4 != 3)) == 0
+    assert len(encoded) == 1
+    assert sorted(r["n_id"] for r in encoded[0].select("n_id").collect()) == committed
+    assert sorted(r["n_id"] for r in read_codes(spark, p).select("n_id").collect()) == committed

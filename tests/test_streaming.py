@@ -312,6 +312,17 @@ def test_cdc_empty_batch_leaves_manifest_unchanged(spark, tmp_path):
     }
 
 
+def test_cdc_applier_takes_no_envelope_schema(spark, tmp_path):
+    """The envelope schema argument is optional: runs keep each batch's
+    own schema."""
+    from tests.fixtures import wal_row
+
+    applier = CdcApplier(spark, str(tmp_path / "state"), ["id"], n_buckets=4)
+    applier.apply_batch(spark.createDataFrame(
+        [wal_row(1, "c", after=(1, "one"))], schema=ENV_SCHEMA), 0)
+    assert state_dict(applier.current_state().select("id", "data")) == {1: "one"}
+
+
 def test_concurrent_store_reads_restore_the_discovery_threshold(spark, tmp_path):
     """Store reads raise Spark's parallel-discovery threshold while they
     list; reads from several threads at once (one query per table,

@@ -2,8 +2,8 @@
 shuffle inventory.  For every catalog query it records the scale-shape
 facts the plan gates assert piecemeal:
 
-  * exchanges:   hashpartitioning key-lists (corpus shuffles; the first
-                 key tells you what the shuffle is bounded by).
+  * exchanges:   hashpartitioning key-lists, each sorted by name
+                 (corpus shuffles).
                  `n_exchanges` counts DISTINCT shuffle subtrees — cached
                  builds (InMemoryRelation) are de-duplicated across
                  reuse sites and identical self-join shuffles collapse
@@ -116,6 +116,7 @@ def count_unique_exchanges(plan: str) -> int:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     import __spark_entry__ as entrymod
+    from creek_spark.operators.cachereg import release_caches
     from creek_spark.session import get_spark
 
     spark = get_spark()
@@ -129,15 +130,23 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
             out[name] = {"err": f"{type(e).__name__}: {e}"[:300]}
             continue
+        finally:
+            # each plan is taken with no other query's cache present (as
+            # bench.py runs them), so no dict depends on the build order
+            release_caches()
+            spark.catalog.clearCache()
         exchanges = [
             m.group(1).split(", ")
             for m in re.finditer(
                 r"Exchange hashpartitioning\(([^)]*?), \d+\)", plan
             )
         ]
+        # each key list sorted: the plan prints hash keys in an order
+        # that follows what the session built before, and the order
+        # does not change which rows land together
         ex_keys = sorted(
             {
-                tuple(k.split("#")[0] for k in e if "#" in k)
+                tuple(sorted(k.split("#")[0] for k in e if "#" in k))
                 for e in exchanges
             }
         )
