@@ -36,7 +36,6 @@ __all__ = [
     "exists",
     "is_dir",
     "list_names",
-    "list_files",
     "rename",
     "mkdirs",
     "delete",
@@ -82,19 +81,6 @@ def list_names(spark, path: str) -> list[str]:
     if not fs.exists(jpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
-
-
-def list_files(spark, path: str) -> list[tuple[str, int]]:
-    """(name, size) of the plain files under ``path`` ([] when it does
-    not exist); directories are skipped."""
-    fs, jpath, _ = _fs(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return [
-        (st.getPath().getName(), int(st.getLen()))
-        for st in fs.listStatus(jpath)
-        if st.isFile()
-    ]
 
 
 def rename(spark, src: str, dst: str) -> bool:

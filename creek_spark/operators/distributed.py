@@ -12,7 +12,7 @@ the classic two-phase decompositions instead:
 * ``segmented_running`` — running sum/min/max/row_number over a total
   order, computed as bounded within-segment window partials plus
   broadcast per-segment offsets (the distributed prefix-sum).  The
-  segment column is a PLAN HINT only: any deterministic bucketing that
+  segment column is a PLAN HINT only: any deterministic segmenting that
   is monotone along the sort order yields bit-identical results, because
   offsets are derived from the actual per-segment aggregates.
 * ``rank_pick`` — the exact (value, tie) tuple at arbitrary rank k per
@@ -187,7 +187,7 @@ def rank_pick(
     ``ranks_fn(n)`` maps the group's row count (a Column) to the list of
     target-rank expressions (1-based); ``bucket_col`` must be a
     deterministic non-decreasing INTEGRAL function of ``sort_col``
-    (granularity is a plan knob only — any monotone bucketing gives the
+    (granularity is a plan knob only — any monotone segmenting gives the
     same picks; integral so the summary's super-segment is a floor-div).
 
     Ranks beyond the group size are silently absent from the result

@@ -808,10 +808,7 @@ def media_report(media: DataFrame, *, day_col: str = "day") -> DataFrame:
     bucket.
 
     Every cell is an integer SUM/MIN/MAX, so the report is perfectly
-    additive — the streaming twin
-    (`streaming.detectors.StreamingMediaReport`) maintains it through
-    the fenced rollup sink with bit-identical results, the curation
-    dashboard a 100 TB multimodal ingest runs continuously.
+    additive: cells from disjoint batches merge losslessly.
 
     Scale shape: mapInPandas emits AT MOST one cell per (fmt, day) per
     Arrow batch (map-side combine in Python — blobs never shuffle, the
@@ -1810,76 +1807,6 @@ def png_bytes_indexed(
         out += _png_chunk(b"tRNS", bytes(bytearray(trns)))
     out += _png_chunk(b"IDAT", zlib.compress(raw))
     return out + _png_chunk(b"IEND", b"")
-
-
-def png16_from_array(arr16, *, interlace: bool = False) -> bytes:
-    """16-bit PNG from an (h, w[, ch]) uint16 array (big-endian
-    samples, filter-0 scanlines) — the fixture encoder for the
-    decoder's 16-bit path (which reduces each sample to its high
-    byte)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    a = np.asarray(arr16, dtype=np.uint16)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, ch = a.shape
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-    be = a.astype(">u2")
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, color_type, 0, 0, int(interlace))
-    if interlace:
-        raw = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            sub = be[y0::dy, x0::dx]
-            if sub.size:
-                raw += b"".join(
-                    b"\x00" + sub[y].tobytes() for y in range(sub.shape[0])
-                )
-        raw = bytes(raw)
-    else:
-        raw = b"".join(b"\x00" + be[y].tobytes() for y in range(h))
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def png_bytes_gray_lowdepth(
-    vals, bit_depth: int, *, interlace: bool = False
-) -> bytes:
-    """Grayscale PNG at 1/2/4-bit depth from raw sample values
-    (< 2^depth); decode expands them to 8-bit by the spec scaling."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    a = np.asarray(vals, dtype=np.uint8)
-    if a.ndim != 2 or bit_depth not in (1, 2, 4):
-        raise ValueError("expected (h, w) values and depth 1/2/4")
-    if int(a.max(initial=0)) >= (1 << bit_depth):
-        raise ValueError("sample exceeds the bit depth")
-    h, w = a.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, bit_depth, 0, 0, 0, int(interlace))
-    if interlace:
-        raw = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            sub = a[y0::dy, x0::dx]
-            if sub.size:
-                raw += _png_pack_rows(sub, bit_depth)
-        raw = bytes(raw)
-    else:
-        raw = _png_pack_rows(a, bit_depth)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
 
 
 def png_bytes_gradient(width: int, height: int, seed: int = 0) -> bytes:

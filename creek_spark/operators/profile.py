@@ -187,8 +187,7 @@ def dim_stats_cells(df: DataFrame, vec_col: str) -> DataFrame:
     """The per-dimension sufficient-statistic cells (dim, n, _s, _ss,
     vmin, vmax): counts and FLOOR-quantized integer sums are additive,
     min/max merge by extremum — so cells from disjoint batches combine
-    losslessly, which is what the streaming mirror
-    (streaming/detectors.py::StreamingDimStats) maintains."""
+    losslessly."""
     x = df.select(F.posexplode(F.col(vec_col)).alias("_pos", "_v")).select(
         (F.col("_pos") + 1).cast("bigint").alias("dim"),
         F.col("_v").cast("double").alias("_v"),
@@ -209,9 +208,8 @@ def dim_stats_cells(df: DataFrame, vec_col: str) -> DataFrame:
 
 
 def dim_stats_from_cells(agg: DataFrame) -> DataFrame:
-    """cells → (dim, n, mean, variance, vmin, vmax): the fixed-order
-    IEEE projection shared by the batch operator and the streaming
-    mirror, so incremental == batch bit-for-bit."""
+    """cells → (dim, n, mean, variance, vmin, vmax): a fixed-order
+    IEEE projection, deterministic bit-for-bit."""
     mean = F.col("_s").cast("double") / (
         F.lit(1_000_000_000.0) * F.col("n").cast("double")
     )

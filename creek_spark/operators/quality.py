@@ -108,11 +108,9 @@ def distribution_drift(
 
 
 def drift_from_cells(gb: DataFrame, group_col: str) -> DataFrame:
-    """The cells → TVD fold shared by the batch operator and the
-    streaming mirror: ``gb`` is the (group, _bin, _c_gb) count summary —
-    from one corpus scan in the batch path, from the additive rollup
-    state in the streaming path.  Because counts are exact integers and
-    the fold is the same plan, incremental == batch bit-for-bit."""
+    """The cells → TVD fold: ``gb`` is the (group, _bin, _c_gb) count
+    summary from one corpus scan.  Counts are exact integers, so the
+    fold is bit-for-bit deterministic."""
     from creek_spark.operators.distributed import const_partition
 
     w_g = Window.partitionBy(group_col)

@@ -21,75 +21,24 @@ LANG_MARKERS = {
 
 STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is")
 
-# BPE-ish pre-tokenization: letter runs, digit runs, single punctuation
-BPE_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
-
-
-def token_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, n_ws_tokens, n_bpe_tokens, n_chars_norm).
-
-    n_ws_tokens: whitespace tokens of the normalized text;
-    n_bpe_tokens: BPE-style pre-token count via regexp."""
-    return df.select(
-        F.col(id_col),
-        F.size(tokens(text_col)).alias("n_ws_tokens"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_REGEX)).cast("int").alias(
-            "n_bpe_tokens"
-        ),
-        F.length(norm_text(text_col)).alias("n_chars_norm"),
-    )
-
-
-def quality_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Heuristic quality metrics: length, punctuation ratio, stopword
-    ratio, mean token length, and a combined score — the standard cheap
-    filters applied before expensive dedup/training steps."""
-    # materialize tokens once; the tokenize regex is referenced by four
-    # downstream expressions and CollapseProject keeps the projections
-    # separate for non-cheap multi-referenced producers
-    base = df.select(
-        F.col(id_col), F.col(text_col).alias("_txt"), tokens(text_col).alias("_toks")
-    )
-    toks = F.col("_toks")
-    n_tok = F.size(toks)
-    n_chars = F.length(F.col("_txt"))
-    n_alnum = F.length(F.regexp_replace(F.col("_txt"), r"[^a-zA-Z0-9\s]", ""))
-    punct_ratio = (n_chars - n_alnum).cast("double") / n_chars.cast("double")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    stop_ratio = n_stop.cast("double") / n_tok.cast("double")
-    mean_tok_len = (
-        F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)).cast("double")
-        / n_tok.cast("double")
-    )
-    score = (
-        F.when(n_tok >= 5, F.lit(1.0)).otherwise(F.lit(0.0))
-        * (F.lit(1.0) - punct_ratio)
-        * (F.lit(0.5) + stop_ratio)
-    )
-    return base.select(
-        F.col(id_col),
-        n_tok.alias("n_tokens"),
-        n_chars.alias("n_chars_raw"),
-        punct_ratio.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        mean_tok_len.alias("mean_token_len"),
-        score.alias("quality_score"),
-    )
-
-
 def text_metrics(
     df: DataFrame, text_col: str, id_col: str, keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """token_stats + quality_scores in a single projection (one scan, no
+    """Token counts and the cheap quality filters applied before
+    expensive dedup/training steps, in a single projection (one scan, no
     join): (id, *keep, n_tokens, n_bpe_tokens, n_chars_norm, n_chars_raw,
     punct_ratio, stopword_ratio, mean_token_len, quality_score).
     ``keep`` passes extra input columns through so downstream grouping
     (e.g. per-source corpus reports) stays single-scan.
 
-    FUSED (round-4 verdict): every counter derives from ONE normalized
-    projection instead of separate full-text regexp passes.  With
-    ``norm = norm_text(txt)`` (single-space-separated alnum runs):
+    ``n_tokens`` counts whitespace tokens of the normalized text;
+    ``n_bpe_tokens`` counts BPE-style pre-tokens (letter runs, digit runs
+    and single punctuation chars); ``quality_score`` is
+    [n_tokens ≥ 5] · (1 − punct_ratio) · (0.5 + stopword_ratio).
+
+    Every counter derives from ONE normalized projection instead of
+    separate full-text regexp passes.  With ``norm = norm_text(txt)``
+    (single-space-separated alnum runs):
       * alnum chars in txt  = length(norm) − (n_tokens − 1)  — every
         [a-zA-Z0-9] survives lowercasing into norm exactly once;
       * whitespace chars    = length(txt) − length(translate(txt, ws, ''))
@@ -148,24 +97,22 @@ def text_metrics(
     )
 
 
-def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Marker-word language heuristic: count hits per language's marker
-    list over the token stream; argmax with 'und' (undetermined) fallback.
-
-    Deterministic tie-break: language code ascending."""
-    # tokenize once (see quality_scores); then one counting projection
-    # per-language over the materialized array, then the argmax projection
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
+def _marker_argmax(
+    base: DataFrame, id_col: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(id, _toks, *carry) → (id, pred_lang, marker_hits, *carry): one
+    projection counts each language's marker hits over the materialized
+    token array, the next takes the argmax with 'und' (undetermined)
+    when no marker hits.  Deterministic tie-break: language code
+    ascending."""
     toks = F.col("_toks")
+    langs = sorted(LANG_MARKERS)
     hit_exprs = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        arr = F.array(*[F.lit(m) for m in markers])
+    for lang in langs:
+        arr = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
         hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        hit_exprs.append((lang, hits))
-    counted = base.select(
-        F.col(id_col), *[h.alias(f"_h_{lang}") for lang, h in hit_exprs]
-    )
-    langs = [lang for lang, _ in hit_exprs]
+        hit_exprs.append(hits.alias(f"_h_{lang}"))
+    counted = base.select(F.col(id_col), *carry, *hit_exprs)
     # argmax via greatest + chained when (ascending code order = tie-break)
     best = F.greatest(*[F.col(f"_h_{lang}") for lang in langs])
     pred = F.lit("und")
@@ -174,57 +121,31 @@ def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             (best > 0) & (F.col(f"_h_{lang}") == best), F.lit(lang)
         ).otherwise(pred)
     return counted.select(
-        F.col(id_col),
-        pred.alias("pred_lang"),
-        best.alias("marker_hits"),
+        F.col(id_col), pred.alias("pred_lang"), best.alias("marker_hits"), *carry
+    )
+
+
+def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Marker-word language heuristic: (id, pred_lang, marker_hits)."""
+    # tokenize once: the token array feeds every language's count
+    return _marker_argmax(
+        df.select(F.col(id_col), tokens(text_col).alias("_toks")), id_col
     )
 
 
 def lang_fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """lang_id + doc_fingerprint in one scan: (id, pred_lang, marker_hits,
-    fp, fp_bucket).  The fingerprint rides through the lang-id projections
-    as a plain attribute — no join, no second pass over the text."""
-    fp = F.md5(norm_text(text_col))
+    """lang_id plus a content fingerprint in one scan: (id, pred_lang,
+    marker_hits, fp, fp_bucket), where fp is the md5 of the normalized
+    text and fp_bucket its first 8 hex chars, a coarse rolling/partition
+    key.  The fingerprint rides through the lang-id projections as a
+    plain attribute — no join, no second pass over the text."""
     base = df.select(
         F.col(id_col),
         tokens(text_col).alias("_toks"),
-        fp.alias("fp"),
+        F.md5(norm_text(text_col)).alias("fp"),
     )
-    toks = F.col("_toks")
-    hit_exprs = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        arr = F.array(*[F.lit(m) for m in markers])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        hit_exprs.append((lang, hits))
-    counted = base.select(
-        F.col(id_col),
-        F.col("fp"),
-        *[h.alias(f"_h_{lang}") for lang, h in hit_exprs],
-    )
-    langs = [lang for lang, _ in hit_exprs]
-    best = F.greatest(*[F.col(f"_h_{lang}") for lang in langs])
-    pred = F.lit("und")
-    for lang in reversed(langs):
-        pred = F.when(
-            (best > 0) & (F.col(f"_h_{lang}") == best), F.lit(lang)
-        ).otherwise(pred)
-    return counted.select(
-        F.col(id_col),
-        pred.alias("pred_lang"),
-        best.alias("marker_hits"),
-        F.col("fp"),
-        F.substring(F.col("fp"), 1, 8).alias("fp_bucket"),
-    )
-
-
-def doc_fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Content fingerprint over normalized text (md5) plus a coarse
-    8-hex-char bucket usable as a rolling/partition key."""
-    fp = F.md5(norm_text(text_col))
-    return df.select(
-        F.col(id_col),
-        fp.alias("fp"),
-        F.substring(fp, 1, 8).alias("fp_bucket"),
+    return _marker_argmax(base, id_col, ("fp",)).withColumn(
+        "fp_bucket", F.substring(F.col("fp"), 1, 8)
     )
 
 

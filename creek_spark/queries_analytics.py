@@ -491,12 +491,7 @@ def ts_anomaly_zscore(spark, sf_dir):
     scan.  sqrt/+,-,*,/ are IEEE-deterministic, so flagged rows AND their
     z values are bit-identical to the oracle.  At 100 TB this is one scan
     + one |types|-row broadcast — the grouped-stats pattern that replaces
-    a per-row Python scorer.
-
-    Streaming twin: streaming/detectors.py::StreamingZScore maintains the
-    same moments incrementally through AdditiveRollupSink (batch_id-
-    fenced), proven flag- and z-identical to this batch operator in
-    tests/test_streaming_rollup.py::test_streaming_zscore_flags_equal_batch."""
+    a per-row Python scorer."""
     ev = _t(spark, sf_dir, "events")
     vd = dec("value", 14, 2)
     stats = ev.groupBy("event_type").agg(

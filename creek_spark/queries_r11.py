@@ -365,9 +365,7 @@ def multimodal_media_report(spark, sf_dir):
     blobs never shuffle) and folded to per-(format, day) exact-integer
     ingest statistics.  Undecodable payloads count as
     arrived-but-undecoded — the n_media/n_decoded gap IS the corruption
-    monitor.  Its streaming twin
-    (`StreamingMediaReport`) maintains the same frame incrementally,
-    proven bit-identical in tests/test_streaming_rollup.py."""
+    monitor."""
     from creek_spark.operators.multimodal import media_report
 
     def synth(batches):

@@ -1808,9 +1808,7 @@ def ts_cusum_hourly(spark, sf_dir):
     """Tabular CUSUM over the HOURLY aggregated series (allowance 0.5σ,
     threshold 5σ over hourly totals) — the level-shift detector for
     aggregate drift, and the formulation whose state is purely additive:
-    its streaming twin (streaming/detectors.py::StreamingCusum)
-    maintains the hourly cells through AdditiveRollupSink and rescoring
-    reproduces these rows bit-for-bit.
+    hourly cells from disjoint batches merge by addition.
 
     Scale: the corpus collapses to the (type, hour) summary BEFORE any
     ordered work, so the prefix windows here walk a bounded series —

@@ -61,9 +61,9 @@ FROM c WHERE den <> 0 AND dy <> 0
 
 
 def trend_daily_cells(ev) -> "DataFrame":
-    """Micro-batch/corpus → additive (event_type, day, y-cents) cells —
-    the sufficient statistic the streaming mirror maintains (cents sum
-    by addition per cell)."""
+    """Corpus → additive (event_type, day, y-cents) cells — the
+    sufficient statistic of the trend (cents sum by addition per
+    cell)."""
     return ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
@@ -74,9 +74,7 @@ def trend_daily_cells(ev) -> "DataFrame":
 
 
 def trend_from_cells(cells) -> "DataFrame":
-    """(event_type, day, y) cells → the OLS trend frame.  Shared by the
-    batch catalog query and StreamingTrend so incremental == batch is
-    equality of literally the same fold plan."""
+    """(event_type, day, y) cells → the OLS trend frame."""
     d = cells.select(
         "event_type",
         F.datediff(F.col("day"), F.lit(TREND_EPOCH).cast("timestamp"))
@@ -133,9 +131,7 @@ def ts_linear_trend(spark, sf_dir):
 
     Scale shape: two skew-free hash aggregations — (type, day) then type
     — with map-side combines; no window, no join.  The daily grid is
-    calendar-bounded, the final frame is |event types| rows.  The daily
-    cells are ADDITIVE, so the same cells/fold pair powers the
-    StreamingTrend mirror (ninth incremental == batch proof)."""
+    calendar-bounded, the final frame is |event types| rows."""
     ev = _t(spark, sf_dir, "events")
     return trend_from_cells(trend_daily_cells(ev))
 

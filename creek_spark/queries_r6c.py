@@ -223,10 +223,8 @@ FROM m GROUP BY grp ORDER BY grp
 
 
 def bloom_summary(bits, cust, sup):
-    """bits + the probe frames → the membership/false-positive summary.
-    Shared fold: the batch query applies it to ``bloom_bits(cust)``, the
-    StreamingBloom mirror to its merged micro-batch bit state — so
-    incremental == batch is equality of literally the same plan."""
+    """bits + the probe frames → the membership/false-positive summary;
+    the batch query applies it to ``bloom_bits(cust)``."""
     from creek_spark.operators.sketches import bloom_probe
 
     probes = sup.withColumn("grp", F.lit("supplier")).unionByName(
@@ -266,8 +264,7 @@ def sketch_bloom_filter(spark, sf_dir):
     broadcastable at any corpus size — and probes join it on the bit
     position; per-probe verdicts are a count-of-matched-positions == k
     aggregate.  Everything is exact integers.  Bit sets are mergeable
-    (bits of a union = union of bits), which is what makes the
-    StreamingBloom twin maintainable on the fenced rollup sink."""
+    (bits of a union = union of bits)."""
     from creek_spark.operators.sketches import bloom_bits
 
     cust = _t(spark, sf_dir, "customer").select(F.col("c_name").alias("name"))
@@ -399,9 +396,9 @@ def text_vocab_hapax(spark, sf_dir):
 
 
 def vocab_tf_cells(docs):
-    """Micro-batch/corpus → additive (source, token, count) cells — the
-    sufficient statistic the StreamingVocab mirror maintains (Heaps-law
-    sublinear state: one row per distinct (source, token))."""
+    """Corpus → additive (source, token, count) cells — the sufficient
+    statistic of the vocabulary profile (Heaps-law sublinear: one row
+    per distinct (source, token))."""
     from creek_spark.functions.text import tokens
 
     t = docs.select("source", F.explode(tokens("text")).alias("w")).where(
@@ -411,9 +408,7 @@ def vocab_tf_cells(docs):
 
 
 def vocab_from_tf(tf):
-    """(source, token, count) cells → the vocabulary profile.  Shared by
-    the batch catalog query and StreamingVocab so incremental == batch
-    is equality of literally the same fold plan."""
+    """(source, token, count) cells → the vocabulary profile."""
     hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("bigint")
     return (
         tf.groupBy("source")
@@ -628,10 +623,8 @@ FROM s ORDER BY day
 
 
 def backlog_from_pairs(j):
-    """(od, close) per order → the backlog timeline.  Shared fold: the
-    batch query applies it to the joined fact tables, StreamingBacklog
-    to its max-merged per-order state — incremental == batch is
-    equality of literally the same fold plan."""
+    """(od, close) per order → the backlog timeline; the batch query
+    applies it to the joined fact tables."""
     # one scan: ±1 deltas from a single explode rather than a 2-leg
     # union (a union of two projections re-evaluates the join per leg)
     d = j.select(
@@ -739,8 +732,8 @@ def ts_autocorrelation(spark, sf_dir):
 
 
 def acf_cells(ev):
-    """Micro-batch/corpus → additive (event_type, hour-µs, count) cells —
-    the sufficient statistic the StreamingAcf mirror maintains."""
+    """Corpus → additive (event_type, hour-µs, count) cells — the
+    sufficient statistic of the lag ACF."""
     return ev.groupBy(
         "event_type",
         F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hu"),
@@ -748,9 +741,7 @@ def acf_cells(ev):
 
 
 def acf_from_cells(h):
-    """(event_type, hu, c) cells → the lag-ACF frame.  Shared by the
-    batch catalog query and StreamingAcf so incremental == batch is
-    equality of literally the same fold plan."""
+    """(event_type, hu, c) cells → the lag-ACF frame."""
     lags = F.explode(
         F.array([F.lit(k) for k in ACF_LAGS])
     ).alias("lag_hours")
@@ -949,10 +940,8 @@ def events_conversion_latency(spark, sf_dir):
 
 def conversion_from_firsts(fv, fp):
     """(user, first-view ts) × (user, first-purchase ts) → the one-row
-    conversion report.  Shared fold: the batch query applies it to the
-    per-user min aggregates, StreamingConversion to its min-merged
-    state tiers — incremental == batch is equality of literally the
-    same fold plan."""
+    conversion report; the batch query applies it to the per-user min
+    aggregates."""
     from creek_spark.operators.cachereg import register_cache
     from creek_spark.operators.distributed import rank_pick
 
@@ -1552,10 +1541,8 @@ def customer_revenue_gini(spark, sf_dir):
 
 
 def gini_from_revenue(r):
-    """(o_custkey, r-cents) → the one-row Gini frame.  Shared fold: the
-    batch query applies it to the orders aggregate, StreamingGini to its
-    additively-merged per-customer state — incremental == batch is
-    equality of literally the same fold plan."""
+    """(o_custkey, r-cents) → the one-row Gini frame; the batch query
+    applies it to the orders aggregate."""
     from creek_spark.operators.distributed import segmented_running
 
     rk = segmented_running(

@@ -4,8 +4,7 @@ The driver's testdata parquet ships ONE row group per file; parquet scans
 cannot split below a row group, so every scan decodes on a single core no
 matter how many executor threads exist.  Real deployments fix this at
 ingest: data lands in the engine's preferred layout (bounded row groups →
-parallel decode; see also sources/compaction.py and operators/zorder.py
-for the maintenance-time variants).
+parallel decode).
 
 `optimize_layout` mirrors a testdata directory into a cache with row
 groups sized for the session's parallelism.  It is a pure re-layout —

@@ -195,10 +195,6 @@ def encode_xlogdata(wal_start: int, payload: bytes, *, wal_end: int | None = Non
     )
 
 
-def encode_keepalive(wal_end: int, *, clock: int = 0, reply: bool = False) -> bytes:
-    return b"k" + struct.pack(">Qq?", wal_end, clock, reply)
-
-
 class WalSenderSession:
     """The reference's replication receive loop as a resumable generator.
 

@@ -110,9 +110,8 @@ class AdditiveRollupSink:
 
         The tier plan is evaluated up to three times per trigger
         (fence fingerprint, touched-partition collect, merge/write) —
-        for tiers that embed a Python decode stage (StreamingMediaReport
-        runs the mapInPandas codecs) that would re-decode every blob
-        per pass, so the tier is persisted for the trigger's duration
+        for tiers that embed a Python decode stage (a mapInPandas
+        media codec) that would re-decode every blob per pass, so the tier is persisted for the trigger's duration
         and unpersisted after the manifest publish: the decode stage
         runs ONCE per trigger."""
         old = self._store.manifest()

@@ -1,18 +1,28 @@
-"""Synthetic WAL-envelope fixtures (FIXTURES.md F4).
+"""Synthetic fixtures: WAL envelopes (FIXTURES.md F4), walsender
+keepalive frames and the PNG variants only the decoder tests need.
 
-Generates the `other(id int PK, data text)` change stream exercising every
-op the reference's integration tests cover (listen_test.go:14-138):
-inserts, key-only updates, a PK-changing update, deletes, a truncate,
-duplicate delivery (same LSN), out-of-order arrival, and an unchanged-TOAST
-update.
+The envelope fixture generates the `other(id int PK, data text)` change
+stream exercising every op the reference's integration tests cover
+(listen_test.go:14-138): inserts, key-only updates, a PK-changing update,
+deletes, a truncate, duplicate delivery (same LSN), out-of-order arrival,
+and an unchanged-TOAST update.
 """
 
 from __future__ import annotations
 
 import datetime
+import struct
+import zlib
 
+import numpy as np
 from pyspark.sql import SparkSession, types as T
 
+from creek_spark.operators.multimodal import (
+    _ADAM7,
+    _PNG_SIG,
+    _png_chunk,
+    _png_pack_rows,
+)
 from creek_spark.types import envelope_schema
 from creek_spark.types.pgtypes import PGColumn, PGRelation, pg_relation_to_struct
 
@@ -114,3 +124,68 @@ OTHER_EXPECTED = {
 
 def other_wal_df(spark: SparkSession):
     return spark.createDataFrame(other_wal_events(), schema=ENV_SCHEMA)
+
+
+def encode_keepalive(wal_end: int, *, clock: int = 0, reply: bool = False) -> bytes:
+    """A primary keepalive ('k') frame as a walsender sends it."""
+    return b"k" + struct.pack(">Qq?", wal_end, clock, reply)
+
+
+def png16_from_array(arr16, *, interlace: bool = False) -> bytes:
+    """16-bit PNG from an (h, w[, ch]) uint16 array (big-endian
+    samples, filter-0 scanlines) — the fixture encoder for the
+    decoder's 16-bit path (which reduces each sample to its high
+    byte)."""
+    a = np.asarray(arr16, dtype=np.uint16)
+    if a.ndim == 2:
+        a = a[:, :, None]
+    h, w, ch = a.shape
+    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
+    be = a.astype(">u2")
+    ihdr = struct.pack(">IIBBBBB", w, h, 16, color_type, 0, 0, int(interlace))
+    if interlace:
+        raw = bytearray()
+        for x0, y0, dx, dy in _ADAM7:
+            sub = be[y0::dy, x0::dx]
+            if sub.size:
+                raw += b"".join(
+                    b"\x00" + sub[y].tobytes() for y in range(sub.shape[0])
+                )
+        raw = bytes(raw)
+    else:
+        raw = b"".join(b"\x00" + be[y].tobytes() for y in range(h))
+    return (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def png_bytes_gray_lowdepth(
+    vals, bit_depth: int, *, interlace: bool = False
+) -> bytes:
+    """Grayscale PNG at 1/2/4-bit depth from raw sample values
+    (< 2^depth); decode expands them to 8-bit by the spec scaling."""
+    a = np.asarray(vals, dtype=np.uint8)
+    if a.ndim != 2 or bit_depth not in (1, 2, 4):
+        raise ValueError("expected (h, w) values and depth 1/2/4")
+    if int(a.max(initial=0)) >= (1 << bit_depth):
+        raise ValueError("sample exceeds the bit depth")
+    h, w = a.shape
+    ihdr = struct.pack(">IIBBBBB", w, h, bit_depth, 0, 0, 0, int(interlace))
+    if interlace:
+        raw = bytearray()
+        for x0, y0, dx, dy in _ADAM7:
+            sub = a[y0::dy, x0::dx]
+            if sub.size:
+                raw += _png_pack_rows(sub, bit_depth)
+        raw = bytes(raw)
+    else:
+        raw = _png_pack_rows(a, bit_depth)
+    return (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw))
+        + _png_chunk(b"IEND", b"")
+    )

@@ -279,10 +279,8 @@ def test_png_adam7_interlace_all_channel_counts():
 
 
 def test_png_lowdepth_gray_expands_per_spec():
-    from creek_spark.operators.multimodal import (
-        decode_png_pixels,
-        png_bytes_gray_lowdepth,
-    )
+    from creek_spark.operators.multimodal import decode_png_pixels
+    from tests.fixtures import png_bytes_gray_lowdepth
 
     rng = np.random.default_rng(7)
     for depth in (1, 2, 4):
@@ -306,8 +304,8 @@ def test_png_16bit_decodes_and_palette_needs_plte():
         _png_chunk,
         _PNG_SIG,
         decode_png_pixels,
-        png16_from_array,
     )
+    from tests.fixtures import png16_from_array
 
     rng = np.random.default_rng(13)
     for shape in [(5, 7), (6, 11, 3), (3, 3, 4), (9, 4, 2)]:

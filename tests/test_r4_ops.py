@@ -169,7 +169,7 @@ def test_interval_overlap_exactly_once_vs_brute_force(spark):
 
 
 def test_interval_overlap_is_equi_join(spark, sf_dir):
-    """The plan must be an equi join on (keys, cell) — cell bucketing
+    """The plan must be an equi join on (keys, cell) — cell binning
     exists precisely to avoid a per-key nested loop."""
     from creek_spark.operators.intervals import interval_overlap_join
 

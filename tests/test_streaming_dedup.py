@@ -159,25 +159,39 @@ def test_old_layout_manifest_raises_with_remedy(spark, tmp_path):
 
 
 def test_detector_restart_resumes_from_state(spark, sf_dir, tmp_path):
-    """A NEW StreamingZScore object pointed at an existing state dir
-    must resume exactly (the restart path): moments from disk, replay
-    fencing intact, final flags equal the batch operator."""
-    import __spark_entry__ as entrymod
+    """A NEW fenced rollup sink pointed at an existing state dir must
+    resume exactly (the restart path): the fence is read from disk, so
+    replaying the last committed batch is a no-op, and the state after
+    the next batch equals a one-shot groupBy of the same rows."""
+    from creek_spark.streaming.rollup import AdditiveRollupSink
 
-    from creek_spark.streaming.detectors import StreamingZScore
+    keys = ["day", "event_type"]
+    kinds = {"n": "sum", "cents": "sum", "vmax": "max"}
+
+    def cells(df):
+        return df.groupBy(
+            F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
+        ).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("value") * 100).cast("bigint")).alias("cents"),
+            F.max("value").alias("vmax"),
+        )
 
     ev = read_table(spark, sf_dir, "events")
-    d1 = StreamingZScore(spark, str(tmp_path / "zrestart"))
-    d1.apply_batch(ev.where(F.col("event_id") < 500), 0)
-    del d1  # "process exit"
-    d2 = StreamingZScore(spark, str(tmp_path / "zrestart"))
-    d2.apply_batch(ev.where(F.col("event_id") < 500), 0)  # replay: no-op
-    d2.apply_batch(ev.where(F.col("event_id") >= 500), 1)
-    got = sorted(
-        map(tuple, d2.score(ev).select("event_id", "z").collect())
-    )
-    batch = entrymod._catalog()["ts_anomaly_zscore"].fn(spark, sf_dir)
-    want = sorted(map(tuple, batch.select("event_id", "z").collect()))
+    b0 = ev.where(F.col("event_id") < 500)
+    b1 = ev.where(F.col("event_id") >= 500)
+    state = str(tmp_path / "restart")
+    s1 = AdditiveRollupSink(spark, state, keys, kinds, "day")
+    s1.apply_batch(cells(b0), 0)
+    del s1  # "process exit"
+    s2 = AdditiveRollupSink(spark, state, keys, kinds, "day")
+    assert s2.last_batch_id() == 0
+    s2.apply_batch(cells(b0), 0)  # replay: no-op
+    s2.apply_batch(cells(b1), 1)
+    cols = [*keys, *kinds]
+    got = sorted(map(tuple, s2.current().select(*cols).collect()))
+    want = sorted(map(tuple, cells(ev).select(*cols).collect()))
+    assert len(want) > 1  # non-vacuous: several (day, type) cells
     assert got == want
 
 

@@ -151,113 +151,6 @@ def test_empty_batch_advances_fence_only(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_zscore_flags_equal_batch(spark, sf_dir, tmp_path):
-    """Round-4 verdict task: one detector proven incremental == batch.
-    The z-score detector's moments stream through AdditiveRollupSink in
-    three micro-batches; scoring all streamed events must flag EXACTLY
-    the batch ts_anomaly_zscore rows, z values bit-identical."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingZScore
-
-    ev = read_table(spark, sf_dir, "events")
-    det = StreamingZScore(spark, str(tmp_path / "zstate"))
-    for i, (lo, hi) in enumerate([(0, 400), (400, 900), (900, 10**9)]):
-        det.apply_batch(
-            ev.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)), i
-        )
-    got = sorted(
-        map(tuple, det.score(ev).select("event_id", "z").collect())
-    )
-    batch = entrymod._catalog()["ts_anomaly_zscore"].fn(spark, sf_dir)
-    want = sorted(map(tuple, batch.select("event_id", "z").collect()))
-    assert got == want
-    assert len(got) > 0  # non-vacuous at sf0.001
-
-    # replaying the last batch under the same batch_id must not change
-    # the moments (at-least-once delivery -> effectively-once flags)
-    det.apply_batch(ev.where(F.col("event_id") >= 900), 2)
-    again = sorted(map(tuple, det.score(ev).select("event_id", "z").collect()))
-    assert again == want
-
-
-@pytest.mark.slow
-def test_streaming_growth_rates_equal_batch(spark, sf_dir, tmp_path):
-    """Second incremental == batch proof: MoM/YoY growth from monthly
-    cells streamed in three micro-batches (plus a replay) must equal the
-    batch ts_growth_rates rows exactly."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingGrowthRates
-
-    o = read_table(spark, sf_dir, "orders")
-    det = StreamingGrowthRates(spark, str(tmp_path / "gstate"))
-    for i, (lo, hi) in enumerate([(0, 3000), (3000, 9000), (9000, 10**12)]):
-        det.apply_batch(
-            o.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)), i
-        )
-    det.apply_batch(o.where(F.col("o_orderkey") >= 9000), 2)  # replay fence
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["ts_growth_rates"].fn(spark, sf_dir)
-    got, want = key(det.rates()), key(batch)
-    assert len(got) > 0
-    assert got == want
-
-
-@pytest.mark.slow
-def test_streaming_forecast_backtest_equals_batch(spark, sf_dir, tmp_path):
-    """Third incremental == batch proof: seasonal-naive MAE/bias from
-    hourly cells streamed in three micro-batches equals the batch
-    ts_forecast_snaive rows exactly."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingForecastBacktest
-
-    ev = read_table(spark, sf_dir, "events")
-    det = StreamingForecastBacktest(spark, str(tmp_path / "fstate"))
-    for i, (lo, hi) in enumerate([(0, 300), (300, 700), (700, 10**12)]):
-        det.apply_batch(
-            ev.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["ts_forecast_snaive"].fn(spark, sf_dir)
-    got, want = key(det.backtest()), key(batch)
-    assert len(got) > 0
-    assert got == want
-
-
-@pytest.mark.slow
-def test_streaming_cusum_equals_batch(spark, sf_dir, tmp_path):
-    """Fourth incremental == batch proof: hourly-series CUSUM from
-    maintained cells equals batch ts_cusum_hourly exactly — and the
-    SAME maintained rollup state can feed both the CUSUM and the
-    forecast-backtest detectors (shared tier)."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import (
-        StreamingCusum,
-        StreamingForecastBacktest,
-    )
-
-    ev = read_table(spark, sf_dir, "events")
-    det = StreamingCusum(spark, str(tmp_path / "cstate"))
-    for i, (lo, hi) in enumerate([(0, 500), (500, 10**12)]):
-        det.apply_batch(
-            ev.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["ts_cusum_hourly"].fn(spark, sf_dir)
-    got, want = key(det.changepoints()), key(batch)
-    assert len(got) > 0
-    assert got == want
-    # shared-tier property: a backtest detector pointed at the SAME state
-    # dir reads the same committed cells
-    bt = StreamingForecastBacktest(spark, str(tmp_path / "cstate"))
-    fb = entrymod._catalog()["ts_forecast_snaive"].fn(spark, sf_dir)
-    assert key(bt.backtest()) == key(fb)
-
-
-@pytest.mark.slow
 def test_driver_partition_collect_is_capped(spark):
     """The sinks' only driver round-trip — distinct touched partition
     values — must be bounded: a mis-chosen high-cardinality partition key
@@ -275,89 +168,6 @@ def test_driver_partition_collect_is_capped(spark):
     # over the cap: loud error naming the column and the fix
     with pytest.raises(ValueError, match="pv.*low-.?cardinality"):
         bounded_partition_values(df, "pv", what="t", cap=10)
-
-
-@pytest.mark.slow
-def test_streaming_corpus_report_equals_batch(spark, sf_dir, tmp_path):
-    """Fifth incremental == batch proof: the per-(source, lang) corpus
-    report card maintained from document micro-batches equals the batch
-    corpus_report bit-for-bit, and a replayed batch is a no-op."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingCorpusReport
-
-    docs = read_table(spark, sf_dir, "documents")
-    det = StreamingCorpusReport(spark, str(tmp_path / "rstate"))
-    splits = [(0, 40), (40, 90), (90, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["corpus_report"].fn(spark, sf_dir)
-    got, want = key(det.report()), key(batch)
-    assert len(got) > 0
-    assert got == want
-    # replay fence: re-applying the last batch must not double-count
-    det.apply_batch(
-        docs.where(F.col("doc_id") >= splits[-1][0]), len(splits) - 1
-    )
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_drift_equals_batch(spark, sf_dir, tmp_path):
-    """Sixth incremental == batch proof: the (group, bin) drift state
-    maintained from document micro-batches reproduces the batch
-    quality_drift_tvd report bit-for-bit, and a replayed batch is a
-    no-op."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingDriftMonitor
-
-    docs = read_table(spark, sf_dir, "documents")
-    det = StreamingDriftMonitor(spark, str(tmp_path / "dstate"))
-    splits = [(0, 40), (40, 90), (90, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["quality_drift_tvd"].fn(spark, sf_dir)
-    got, want = key(det.report()), key(batch)
-    assert len(got) > 0
-    assert got == want
-    # replay fence: re-applying the last batch must not double-count
-    det.apply_batch(
-        docs.where(F.col("doc_id") >= splits[-1][0]), len(splits) - 1
-    )
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_dim_stats_equals_batch(spark, sf_dir, tmp_path):
-    """Seventh incremental == batch proof — and the first exercising the
-    sink's kind-aware merge (min/max cells beside sums): per-dimension
-    stats maintained from embedding micro-batches equal the batch
-    embedding_dim_stats bit-for-bit; a replayed batch is a no-op."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingDimStats
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    det = StreamingDimStats(spark, str(tmp_path / "dimstate"))
-    splits = [(0, 150), (150, 400), (400, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["embedding_dim_stats"].fn(spark, sf_dir)
-    got, want = key(det.report()), key(batch)
-    assert len(got) > 0
-    assert got == want
-    det.apply_batch(emb.where(F.col("vec_id") >= splits[-1][0]), len(splits) - 1)
-    assert key(det.report()) == want
 
 
 @pytest.mark.slow
@@ -422,237 +232,6 @@ def test_kind_aware_merge_hypothesis(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_cms_equals_batch(spark, sf_dir, tmp_path):
-    """Eighth incremental == batch proof: the count-min cell grid and
-    probe exact-counts maintained from document micro-batches reproduce
-    the batch sketch_cms_counts report bit-for-bit; a replayed batch is
-    a no-op; state stays sketch-sized."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.queries_northstar import (
-        CMS_DEPTH,
-        CMS_PROBES,
-        CMS_WIDTH,
-    )
-    from creek_spark.streaming.detectors import StreamingCms
-
-    docs = read_table(spark, sf_dir, "documents")
-    det = StreamingCms(
-        spark,
-        str(tmp_path / "cmsstate"),
-        probes=CMS_PROBES,
-        depth=CMS_DEPTH,
-        width=CMS_WIDTH,
-    )
-    splits = [(0, 40), (40, 90), (90, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["sketch_cms_counts"].fn(spark, sf_dir)
-    got, want = key(det.report()), key(batch)
-    assert len(got) == len(CMS_PROBES)
-    assert got == want
-    # replay fence: re-applying the last batch must not double-count
-    det.apply_batch(
-        docs.where(F.col("doc_id") >= splits[-1][0]), len(splits) - 1
-    )
-    assert key(det.report()) == want
-    # the state itself is sketch-sized
-    assert det.cells.current().count() <= CMS_DEPTH * CMS_WIDTH
-
-
-@pytest.mark.slow
-def test_streaming_trend_equals_batch(spark, sf_dir, tmp_path):
-    """Ninth incremental == batch proof: the (type, day) daily-cents
-    grid maintained from event micro-batches reproduces the batch
-    ts_linear_trend OLS report bit-for-bit; a replayed batch is a
-    no-op."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingTrend
-
-    ev = read_table(spark, sf_dir, "events")
-    det = StreamingTrend(spark, str(tmp_path / "trendstate"))
-    splits = [(0, 3000), (3000, 7000), (7000, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            ev.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["ts_linear_trend"].fn(spark, sf_dir)
-    got, want = key(det.report()), key(batch)
-    assert len(got) > 0
-    assert got == want
-    # replay fence
-    det.apply_batch(
-        ev.where(F.col("event_id") >= splits[-1][0]), len(splits) - 1
-    )
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_bloom_equals_batch(spark, sf_dir, tmp_path):
-    """Tenth incremental == batch proof: Bloom bit positions maintained
-    from customer micro-batches reproduce the batch sketch_bloom_filter
-    report bit-for-bit; a replayed batch is a no-op; state stays ≤ m
-    rows (the sketch property)."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.operators.sketches import BLOOM_M
-    from creek_spark.streaming.detectors import StreamingBloom
-
-    cust = read_table(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name")
-    )
-    sup = read_table(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name")
-    )
-    det = StreamingBloom(spark, str(tmp_path / "bloomstate"))
-    splits = ["0123", "4567", "89abcdef"]
-    for i, chars in enumerate(splits):
-        det.apply_batch(
-            cust.where(F.substring(F.md5("name"), 2, 1).isin(list(chars))), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    batch = entrymod._catalog()["sketch_bloom_filter"].fn(spark, sf_dir)
-    want = key(batch)
-    assert key(det.report(cust, sup)) == want
-    # replay fence: re-applying the last batch must not change the bits
-    det.apply_batch(
-        cust.where(F.substring(F.md5("name"), 2, 1).isin(list(splits[-1]))),
-        len(splits) - 1,
-    )
-    assert key(det.report(cust, sup)) == want
-    # the state itself is sketch-sized
-    assert det.bits_sink.current().count() <= BLOOM_M
-
-
-@pytest.mark.slow
-def test_streaming_acf_equals_batch(spark, sf_dir, tmp_path):
-    """Eleventh incremental == batch proof: the (type, hour) count grid
-    maintained from event micro-batches reproduces ts_autocorrelation
-    bit-for-bit; a replayed batch is a no-op."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingAcf
-
-    ev = read_table(spark, sf_dir, "events")
-    det = StreamingAcf(spark, str(tmp_path / "acfstate"))
-    splits = [(0, 300), (300, 700), (700, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            ev.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    want = key(entrymod._catalog()["ts_autocorrelation"].fn(spark, sf_dir))
-    assert key(det.report()) == want
-    det.apply_batch(ev.where(F.col("event_id") >= 700), len(splits) - 1)
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_backlog_equals_batch(spark, sf_dir, tmp_path):
-    """Twelfth incremental == batch proof — the incremental-MV member:
-    per-order (od, close) state with extremum merges reproduces
-    orders_open_backlog even when an order's lineitems are SPLIT across
-    micro-batches (close = max of maxes); replays are no-ops."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingBacklog
-
-    o = read_table(spark, sf_dir, "orders")
-    li = read_table(spark, sf_dir, "lineitem")
-    det = StreamingBacklog(spark, str(tmp_path / "blstate"))
-    # orders split by key range; lineitems split by LINE NUMBER so most
-    # orders' lines straddle batches — the max-merge stress
-    det.apply_orders(o.where(F.col("o_orderkey") % 3 == 0), 0)
-    det.apply_orders(o.where(F.col("o_orderkey") % 3 != 0), 1)
-    det.apply_lineitems(li.where(F.col("l_linenumber") <= 2), 0)
-    det.apply_lineitems(li.where(F.col("l_linenumber") > 2), 1)
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    want = key(entrymod._catalog()["orders_open_backlog"].fn(spark, sf_dir))
-    assert key(det.report()) == want
-    # replay fence on both tiers
-    det.apply_orders(o.where(F.col("o_orderkey") % 3 != 0), 1)
-    det.apply_lineitems(li.where(F.col("l_linenumber") > 2), 1)
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_gini_equals_batch(spark, sf_dir, tmp_path):
-    """Thirteenth incremental == batch proof: per-customer revenue cents
-    merged additively reproduce customer_revenue_gini even when a
-    customer's orders split across micro-batches; replays are no-ops."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingGini
-
-    o = read_table(spark, sf_dir, "orders")
-    det = StreamingGini(spark, str(tmp_path / "ginistate"))
-    # split by ORDER key (not customer) → most customers straddle batches
-    det.apply_batch(o.where(F.col("o_orderkey") % 3 == 0), 0)
-    det.apply_batch(o.where(F.col("o_orderkey") % 3 == 1), 1)
-    det.apply_batch(o.where(F.col("o_orderkey") % 3 == 2), 2)
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    want = key(entrymod._catalog()["customer_revenue_gini"].fn(spark, sf_dir))
-    assert key(det.report()) == want
-    det.apply_batch(o.where(F.col("o_orderkey") % 3 == 2), 2)  # replay
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_conversion_equals_batch(spark, sf_dir, tmp_path):
-    """Fourteenth incremental == batch proof: per-user first-view /
-    first-purchase tiers merged by MINIMUM reproduce
-    events_conversion_latency even when batches arrive out of time
-    order (a later batch carrying an earlier first event wins);
-    replays are no-ops."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingConversion
-
-    ev = read_table(spark, sf_dir, "events")
-    det = StreamingConversion(spark, str(tmp_path / "convstate"))
-    # deliberately deliver NEWEST events first — min-merge must converge
-    det.apply_batch(ev.where(F.dayofmonth("ts") > 20), 0)
-    det.apply_batch(ev.where(F.dayofmonth("ts").between(11, 20)), 1)
-    det.apply_batch(ev.where(F.dayofmonth("ts") <= 10), 2)
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    want = key(
-        entrymod._catalog()["events_conversion_latency"].fn(spark, sf_dir)
-    )
-    assert key(det.report()) == want
-    det.apply_batch(ev.where(F.dayofmonth("ts") <= 10), 2)  # replay
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
-def test_streaming_vocab_equals_batch(spark, sf_dir, tmp_path):
-    """Fifteenth incremental == batch proof: additive (source, token)
-    counts reproduce text_vocab_hapax — including hapax counts, the
-    subtle one: a type hapax in TWO batches must stop being hapax in
-    the merged state; replays are no-ops."""
-    import __spark_entry__ as entrymod
-
-    from creek_spark.streaming.detectors import StreamingVocab
-
-    docs = read_table(spark, sf_dir, "documents")
-    det = StreamingVocab(spark, str(tmp_path / "vocabstate"))
-    splits = [(0, 150), (150, 320), (320, 10**12)]
-    for i, (lo, hi) in enumerate(splits):
-        det.apply_batch(
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), i
-        )
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    want = key(entrymod._catalog()["text_vocab_hapax"].fn(spark, sf_dir))
-    assert key(det.report()) == want
-    det.apply_batch(docs.where(F.col("doc_id") >= 320), len(splits) - 1)
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
 def test_rollup_schema_evolution_new_metric_column(spark, tmp_path):
     """A metric column added to ``add_cols`` after state was persisted
     (the rollup-side twin of CdcApplier's ADD COLUMN case): the widened
@@ -693,83 +272,10 @@ def test_rollup_schema_evolution_new_metric_column(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_media_report_equals_batch(spark, tmp_path):
-    """Sixteenth incremental == batch proof, and the first whose tier is
-    a PYTHON decode stage (mapInPandas over the pure-stdlib codecs)
-    feeding the fenced sink: the per-(format, day) media ingest report
-    maintained from micro-batches equals the batch media_report
-    bit-for-bit — every cell is an exact-integer sum/min/max, so no
-    float path exists to disagree.  Covers all four image formats, WAV,
-    an out-of-profile payload (counts as arrived-but-undecoded), a null
-    payload, replay fencing, and an on-fence imposter."""
-    import numpy as np
-    import pytest
-
-    from creek_spark.operators.jpeg_codec import jpeg_bytes_blockgrid
-    from creek_spark.operators.media_codecs import (
-        bmp_from_array,
-        gif_from_array,
-        wav_from_array,
-    )
-    from creek_spark.operators.multimodal import (
-        media_report,
-        png_bytes_gradient,
-    )
-    from creek_spark.streaming.detectors import StreamingMediaReport
-    from creek_spark.streaming.fence import FenceContentError
-
-    rng = np.random.default_rng(8)
-    rows = []
-    mid = 0
-    for day in ("2026-08-14", "2026-08-15", "2026-08-16"):
-        for _ in range(3):
-            mid += 1
-            pick = mid % 6
-            if pick == 0:
-                c = png_bytes_gradient(5 + mid % 4, 3 + mid % 3, seed=mid)
-            elif pick == 1:
-                c = jpeg_bytes_blockgrid(16, 8, seed=mid, progressive=mid % 2 == 0)
-            elif pick == 2:
-                c = bmp_from_array(rng.integers(0, 256, (5, 7, 3), dtype=np.uint8))
-            elif pick == 3:
-                c = gif_from_array(rng.integers(0, 256, (6, 4), dtype=np.uint8))
-            elif pick == 4:
-                c = wav_from_array(
-                    rng.integers(-999, 999, (40, 2), dtype=np.int16)
-                )
-            else:
-                c = b"\x00not-a-media-payload" + bytes(mid)
-            rows.append((mid, day, bytearray(bytes(c))))
-    rows.append((mid + 1, "2026-08-16", None))  # null payload
-    media = spark.createDataFrame(
-        rows, "media_id bigint, day string, content binary"
-    )
-
-    det = StreamingMediaReport(spark, str(tmp_path / "mstate"))
-    batches = [
-        media.where(F.col("media_id") % 3 == r) for r in range(3)
-    ]
-    for i, b in enumerate(batches):
-        det.apply_batch(b, i)
-
-    key = lambda df: sorted(tuple(map(repr, r)) for r in df.collect())
-    want = key(media_report(media))
-    assert len(want) > 0
-    assert key(det.report()) == want
-    # genuine replay of the LAST batch: no-op
-    det.apply_batch(batches[-1], 2)
-    assert key(det.report()) == want
-    # on-fence imposter (same id, different content): refused loudly
-    with pytest.raises(FenceContentError, match="content differs"):
-        det.apply_batch(batches[0], 2)
-    assert key(det.report()) == want
-
-
-@pytest.mark.slow
 def test_tier_python_stage_runs_once_per_trigger(spark, tmp_path):
     """The tier plan is referenced three times per trigger (fence
     fingerprint, touched-partition collect, merge/write).  For tiers
-    with a Python decode stage (StreamingMediaReport's codecs) each
+    with a Python decode stage (a mapInPandas media codec) each
     extra pass would re-decode every blob — apply_batch must persist
     the tier so the Python stage runs ONCE per trigger (accumulator-
     counted; local mode has no task retries to inflate it)."""

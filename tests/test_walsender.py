@@ -13,9 +13,9 @@ import struct
 from creek_spark.sources.walsender import (
     TranscriptTransport,
     WalSenderSession,
-    encode_keepalive,
     encode_xlogdata,
 )
+from tests.fixtures import encode_keepalive
 from tests.test_pgoutput import OTHER, begin, commit, delete, insert, update
 
 US = 1_000_000
@@ -606,7 +606,6 @@ def test_kill_between_schema_generations_resumes_and_converges(
     from creek_spark.sources.walsender import (
         SocketTransport,
         TranscriptServer,
-        encode_keepalive,
         ingest_transcript_tables,
     )
     from creek_spark.streaming import CdcApplier, read_envelope_stream
