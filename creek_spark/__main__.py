@@ -9,6 +9,7 @@ grants a 10 s grace, creekd.go:27-34)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from creek_spark.config import Config
@@ -28,72 +29,48 @@ def main(argv: list[str] | None = None, env: dict | None = None) -> int:
     if owns_session:
         spark.sparkContext.setLogLevel(cfg.log_level.upper())
 
-    dyn = DynamicTables(spark, cfg.wal_dir, cfg.base_dir, None)
-    if cfg.walsender:
-        # Live socket mode: connect to a walsender endpoint (a real
-        # primary's replication port, or the TranscriptServer replay
-        # harness), stream until the server ends the copy stream, and
-        # stage everything received — same resume/ack semantics as the
-        # transcript path, same v3 protocol bytes as the reference.
-        import os as _os
-
+    dyn = DynamicTables(spark, cfg.wal_dir, cfg.base_dir)
+    if cfg.walsender or cfg.transcript:
+        # Ingest FIRST: decode pgoutput, derive each table's schema from
+        # the stream's own Relation declarations, register it, and stage
+        # per-table envelope parquet the appliers tail — the producer
+        # path (capture → publish), from a live walsender endpoint (a
+        # real primary's replication port, or the TranscriptServer replay
+        # harness) or from a recorded session.  Resume state (the
+        # confirmed-LSN analog) lives under base_dir, so re-running the
+        # daemon on the same transcript ingests nothing new.
         from creek_spark.sources.walsender import (
             SocketTransport,
-            WalSenderSession,
-            ingest_transcript_tables,
-        )
-
-        host, _, port = cfg.walsender.rpartition(":")
-        transport = SocketTransport(
-            host or "127.0.0.1",
-            int(port),
-            slot=cfg.slot,
-            publication=cfg.publication,
-        )
-        # Producer bootstrap (init.go:120-206 parity): create-or-reuse
-        # the publication (from --tables) and the replication slot; an
-        # existing slot's confirmed_flush_lsn seeds the resume point so
-        # a fresh daemon host continues where the slot left off.
-        boot_lsn = transport.ensure_bootstrap(cfg.tables or None)
-        sess = WalSenderSession(
-            transport,
-            _os.path.join(cfg.base_dir, "walsender"),
-        )
-        # the slot seeds only a FRESH host: where local applied state
-        # exists it is the stricter commit point (the slot advances on
-        # receipt, local ack on durable apply)
-        if sess.acked_lsn == 0 and boot_lsn > 0:
-            sess.ack(boot_lsn)
-        written = ingest_transcript_tables(
-            spark, sess, cfg.wal_dir, dyn.registry, only=cfg.tables or None
-        )
-        for qname, n in sorted(written.items()):
-            print(f"ingested {n} rows for {qname}", file=sys.stderr)
-        if not cfg.tables:
-            cfg.tables = sorted(written)
-    if cfg.transcript:
-        # Ingest the recorded replication session FIRST: decode pgoutput,
-        # derive each table's schema from the stream's own Relation
-        # declarations, register it, and stage per-table envelope parquet
-        # the appliers tail — the full producer path (capture → publish)
-        # without a live Postgres.  Resume state (the confirmed-LSN
-        # analog) lives under base_dir, so re-running the daemon on the
-        # same transcript ingests nothing new.
-        import os as _os
-
-        from creek_spark.sources.walsender import (
             TranscriptTransport,
             WalSenderSession,
             ingest_transcript_tables,
         )
 
+        boot_lsn = 0
+        if cfg.walsender:
+            host, _, port = cfg.walsender.rpartition(":")
+            transport = SocketTransport(
+                host or "127.0.0.1",
+                int(port),
+                slot=cfg.slot,
+                publication=cfg.publication,
+            )
+            # Producer bootstrap (init.go:120-206 parity): create-or-reuse
+            # the publication (from --tables) and the replication slot; an
+            # existing slot's confirmed_flush_lsn seeds the resume point so
+            # a fresh daemon host continues where the slot left off.
+            boot_lsn = transport.ensure_bootstrap(cfg.tables or None)
+        else:
+            transport = TranscriptTransport(cfg.transcript)
         sess = WalSenderSession(
-            TranscriptTransport(cfg.transcript),
-            _os.path.join(cfg.base_dir, "walsender"),
+            transport, os.path.join(cfg.base_dir, "walsender")
         )
+        # the slot seeds only a FRESH host: where local state exists,
+        # its acked LSN is the commit point
+        if sess.acked_lsn == 0 and boot_lsn > 0:
+            sess.ack(boot_lsn)
         written = ingest_transcript_tables(
-            spark, sess, cfg.wal_dir, dyn.registry,
-            only=cfg.tables or None,
+            spark, sess, cfg.wal_dir, dyn.registry, only=cfg.tables or None
         )
         for qname, n in sorted(written.items()):
             print(f"ingested {n} rows for {qname}", file=sys.stderr)

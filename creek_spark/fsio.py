@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import json
 
+from py4j.protocol import Py4JJavaError
+
 __all__ = [
     "join",
     "exists",
@@ -111,10 +113,6 @@ def _tmp_path(jvm, jpath):
 
 def _is_missing(exc) -> bool:
     """True when a py4j error wraps a missing-file condition."""
-    try:
-        from py4j.protocol import Py4JJavaError
-    except ImportError:  # pragma: no cover
-        return False
     return isinstance(exc, Py4JJavaError) and (
         "FileNotFoundException" in str(exc.java_exception)
     )

@@ -22,6 +22,10 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
+
+from creek_spark.sources import TABLES
+
 # cache inside the repo (gitignored) — the sandbox contract reserves
 # paths outside it; override with CREEK_LAYOUT_CACHE
 _REPO_ROOT = os.path.dirname(
@@ -29,19 +33,6 @@ _REPO_ROOT = os.path.dirname(
 )
 DEFAULT_CACHE_ROOT = os.environ.get(
     "CREEK_LAYOUT_CACHE", os.path.join(_REPO_ROOT, ".layout_cache")
-)
-
-TABLES_DEFAULT = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
 )
 
 # below this BYTE size a second row group would not pay for its footer.
@@ -76,21 +67,15 @@ def optimize_layout(
     sf_dir: str,
     *,
     cache_root: str = DEFAULT_CACHE_ROOT,
-    tables=TABLES_DEFAULT,
     target_groups: int = 32,
 ) -> str:
-    """Mirror ``sf_dir`` into a multi-row-group layout; returns the mirror
-    directory (or ``sf_dir`` unchanged if pyarrow is unavailable)."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return sf_dir
-
+    """Mirror ``sf_dir``'s tables into a multi-row-group layout; returns
+    the mirror directory."""
     mirror = os.path.join(
         cache_root, os.path.basename(os.path.normpath(sf_dir))
     )
     os.makedirs(mirror, exist_ok=True)
-    for t in tables:
+    for t in TABLES:
         src = os.path.join(sf_dir, f"{t}.parquet")
         if not os.path.exists(src):
             continue

@@ -215,6 +215,9 @@ class PgOutputDecoder:
         self.db = db
         self.relations: dict[int, PGRelation] = {}
         self._xid: int | None = None
+        # the open transaction's commit LSN (its Begin's final_lsn),
+        # None between a Commit and the next Begin
+        self.tx_lsn: int | None = None
         self._commit_ts: _dt.datetime | None = None
         # schema-generation tracking: each Relation message fingerprints
         # its StructType (the reference registers a schema per
@@ -316,9 +319,11 @@ class PgOutputDecoder:
         if tag == "B":
             final_lsn, commit_ts, xid = struct.unpack_from(">QqI", buf, off)
             self._xid = xid
+            self.tx_lsn = final_lsn
             self._commit_ts = _pg_ts(commit_ts)
             return []
         if tag == "C":
+            self.tx_lsn = None
             return []
         if tag in ("Y", "O", "M"):
             return []

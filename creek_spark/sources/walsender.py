@@ -4,7 +4,8 @@ driven from recorded session transcripts.
 The reference's capture process holds a logical-replication session
 open: START_REPLICATION from the slot's ``confirmed_flush_lsn``, a
 receive loop over CopyData frames (XLogData 'w' / primary keepalive
-'k'), a 5 s standby-status-update cadence acking the current LSN,
+'k'), a 5 s standby-status-update cadence acking the received LSN
+(held at the consumer's ack while a yielded row is unacked),
 immediate replies to reply-requested keepalives, CopyDone/timeline
 handoff, and reconnect-with-resume on connection loss
 (/root/reference/internal/dao/replication.go:96-307, 88-94, 583-599;
@@ -30,10 +31,11 @@ server ending the copy stream (the session acks CopyDone and restarts
 replication, replication.go:183-200).
 
 Resume: the consumer calls :meth:`WalSenderSession.ack` after it has
-durably applied rows up to an LSN (the CdcApplier commit point); the
-session persists it like the slot's ``confirmed_flush_lsn`` and a
-restarted session both STARTs from it and drops any re-delivered rows
-at or below it — so transcript → session → CdcApplier survives a
+durably applied the rows up to one it was handed (the CdcApplier commit
+point); the session persists it like the slot's ``confirmed_flush_lsn``
+and a restarted session both STARTs from it and drops the re-delivered
+transactions committed at or below it, and the acked part of the
+transaction it fell in — so transcript → session → CdcApplier survives a
 kill/restart with exactly-once effect.
 """
 
@@ -218,8 +220,11 @@ class WalSenderSession:
         os.makedirs(state_dir, exist_ok=True)
         self.status_interval_us = status_interval_us
         self.decoder = PgOutputDecoder(source_name, db)
-        self.acked_lsn = self._load_lsn()
+        self.acked_lsn, self._acked_tx = self._load_ack()
         self.current_lsn = self.acked_lsn
+        # the last row handed to the consumer: (its LSN, the commit LSN
+        # of its transaction or None outside one)
+        self._last_row: tuple[int, int | None] | None = None
         self._last_status_clock: int | None = None
 
     # -- confirmed_flush_lsn analog -----------------------------------
@@ -227,33 +232,57 @@ class WalSenderSession:
     def _state_path(self) -> str:
         return os.path.join(self.state_dir, _STATE_FILE)
 
-    def _load_lsn(self) -> int:
+    def _load_ack(self) -> tuple[int, int]:
         try:
             with open(self._state_path()) as f:
-                return int(f.read().strip())
+                lsn, _, tx = f.read().strip().partition(" ")
+                return int(lsn), int(tx or 0)
         except (OSError, ValueError):
-            return 0
+            return 0, 0
 
     def ack(self, lsn: int) -> None:
-        """Durably confirm rows ≤ lsn (the consumer's commit point); the
-        next status update and any restart use it — the client-side
-        twin of the slot advancing confirmed_flush_lsn."""
+        """Durably confirm the rows yielded up to the one at ``lsn`` (the
+        consumer's commit point); the next status update and any restart
+        use it — the client-side twin of the slot advancing
+        confirmed_flush_lsn.  Postgres sends whole transactions in commit
+        order, and a later one's changes can sit below an earlier one's
+        LSNs, so the ack is kept per transaction (:meth:`_is_acked`)."""
         if lsn <= self.acked_lsn:
             return
+        tx = 0
+        if self._last_row is not None and self._last_row[0] == lsn:
+            tx = self._last_row[1] or 0
         tmp = self._state_path() + ".tmp"
         with open(tmp, "w") as f:
-            f.write(str(lsn))
+            f.write(f"{lsn} {tx}")
         os.replace(tmp, self._state_path())
-        self.acked_lsn = lsn
+        self.acked_lsn, self._acked_tx = lsn, tx
+
+    def _is_acked(self, lsn: int, tx_lsn: int | None) -> bool:
+        """Whether the ack covers the row at ``lsn`` of the transaction
+        committing at ``tx_lsn`` (None: a row outside any transaction):
+        every transaction committed at or below the acked LSN is, and so
+        is the acked row's own transaction up to that row."""
+        if tx_lsn is None:
+            return lsn <= self.acked_lsn
+        return tx_lsn <= self.acked_lsn or (
+            tx_lsn == self._acked_tx and lsn <= self.acked_lsn
+        )
 
     # -- protocol actions ---------------------------------------------
 
     def _send_status(self, clock: int, reply: int = 0) -> None:
         # pglogrepl.SendStandbyStatusUpdate with WALWritePosition only:
-        # flush/apply default to the write position (replication.go:88-94)
-        self.transport.send_status(
-            self.current_lsn, self.current_lsn, self.current_lsn, clock, reply
+        # flush/apply default to the write position (replication.go:88-94).
+        # The server advances the slot's confirmed_flush_lsn from it, so
+        # the received position is confirmed only between transactions
+        # and once the last yielded row is acked; otherwise a crash must
+        # leave the slot at the ack.
+        settled = self.decoder.tx_lsn is None and (
+            self._last_row is None or self._is_acked(*self._last_row)
         )
+        lsn = self.current_lsn if settled else self.acked_lsn
+        self.transport.send_status(lsn, lsn, lsn, clock, reply)
         self._last_status_clock = clock
 
     def _maybe_status(self, clock: int) -> None:
@@ -266,13 +295,14 @@ class WalSenderSession:
     # -- the receive loop ---------------------------------------------
 
     def stream(self, *, stop_on_copydone: bool = False):
-        """Yield ``(wal_start_lsn, envelope_row)`` pairs in WAL order,
-        excluding rows at or below the acked LSN (re-delivered data
-        after a resume).  Runs the full session protocol on the way.
+        """Yield ``(wal_start_lsn, envelope_row)`` pairs in the order the
+        server sends them, excluding rows the ack already covers
+        (re-delivered data after a resume).  Runs the full session
+        protocol on the way.
 
         ``stop_on_copydone`` is the batch-drain mode (transcript/daemon
         ingestion): ack the server's CopyDone and return instead of
-        restarting replication — the consumer commits once afterwards.
+        restarting replication — the consumer's last flush follows.
         The default continuous mode restarts (replication.go:183-200),
         bounded by a PROGRESS guard: a restart cycle that delivers no LSN
         above the high-water mark ends the stream, so a replay backend
@@ -312,11 +342,13 @@ class WalSenderSession:
                 if wal_start > self.current_lsn:
                     self.current_lsn = wal_start
                 rows = self.decoder.feed(frame[25:], wal_start)
-                if wal_start > self.acked_lsn:
+                tx_lsn = self.decoder.tx_lsn
+                if not self._is_acked(wal_start, tx_lsn):
                     if rows and wal_start > hwm:
                         hwm = wal_start
                         progress_since_copydone = True
                     for r in rows:
+                        self._last_row = (wal_start, tx_lsn)
                         yield wal_start, r
                 self._maybe_status(clock)
                 continue
@@ -375,50 +407,116 @@ def stage_envelope_rows(spark, rows: list[dict], schema, wal_dir: str) -> None:
     fsio.write_file_atomic(spark, path, buf.getvalue().to_pybytes())
 
 
+# rows per flush of both ingest entry points
+_FLUSH_ROWS = 1000
+
+
+def _ingest(spark, session: WalSenderSession, route, batch_rows: int) -> dict[str, int]:
+    """The capture loop of both ingest entry points: receive → stage →
+    ack LSN, the reference producer's loop.  ``route(row)`` gives a
+    row's staging dir and envelope schema, or None to skip it.  Every
+    ``batch_rows`` rows consumed, each dir's buffered rows become one
+    file (:func:`stage_envelope_rows`), and only once all are in place
+    is the session acked up to the last row consumed, skipped rows
+    included.  A crash before the ack re-delivers the flush (the
+    applier's same-LSN merge no-ops it); a flush that raises acks
+    nothing.  Returns {staging dir: rows staged}."""
+    groups: dict[str, list[dict]] = {}
+    schemas: dict = {}
+    staged: dict[str, int] = {}
+    consumed = last = 0
+
+    def flush() -> None:
+        for d, rows in groups.items():
+            stage_envelope_rows(spark, rows, schemas[d], d)
+            staged[d] = staged.get(d, 0) + len(rows)
+        groups.clear()
+        session.ack(last)  # durable → confirm (crash before this re-sends)
+
+    for last, row in session.stream(stop_on_copydone=True):
+        dest = route(row)
+        if dest is not None:
+            d, schemas[d] = dest
+            groups.setdefault(d, []).append(row)
+        consumed += 1
+        if consumed % batch_rows == 0:
+            flush()
+    flush()
+    return staged
+
+
 def ingest_transcript(
     spark,
     session: WalSenderSession,
     wal_dir: str,
     row_schema,
     *,
-    batch_rows: int = 1000,
+    batch_rows: int = _FLUSH_ROWS,
 ) -> int:
     """Drain a walsender session into staged envelope parquet under
     ``wal_dir`` — the directory the streaming pipeline tails
     (streaming.read_envelope_stream → CdcApplier).  Each flush of up to
-    ``batch_rows`` rows becomes one Arrow-written file, published by
-    fsio's atomic rename (:func:`stage_envelope_rows`); the session is
-    acked only AFTER that file is in place, so a crash between write
-    and ack re-delivers (and the applier's same-LSN merge no-ops it:
-    at-least-once transport + idempotent sink = effectively-once).  A
-    flush that raises publishes no file and acks nothing.
-
-    This is the bridge that makes the session product-reachable: the
-    reference's producer loop writes decoded WAL to its bus the same
-    way (receive → publish → ack LSN).  Returns rows written."""
+    ``batch_rows`` rows becomes one Arrow-written file, acked once it is
+    in place (:func:`_ingest`).  Returns rows written."""
     from creek_spark.types.envelope import envelope_schema
 
-    schema = envelope_schema(row_schema)
-    buf: list[dict] = []
-    hi = 0
-    total = 0
+    dest = (wal_dir, envelope_schema(row_schema))
+    return sum(_ingest(spark, session, lambda row: dest, batch_rows).values())
 
-    def flush() -> None:
-        nonlocal buf, total
-        if not buf:
-            return
-        stage_envelope_rows(spark, buf, schema, wal_dir)
-        session.ack(hi)  # durable → confirm (crash before this re-sends)
-        total += len(buf)
-        buf = []
 
-    for lsn, row in session.stream(stop_on_copydone=True):
-        buf.append(row)
-        hi = max(hi, lsn)
-        if len(buf) >= batch_rows:
-            flush()
-    flush()
-    return total
+def ingest_transcript_tables(
+    spark,
+    session: WalSenderSession,
+    wal_dir: str,
+    registry=None,
+    *,
+    only: list[str] | None = None,
+) -> dict[str, int]:
+    """Daemon-grade ingestion: drain a session into one staging dir per
+    qualified table, ``wal_dir/<schema>_<table>`` — the per-table layout
+    the daemon tails — flushing every :data:`_FLUSH_ROWS` rows as
+    :func:`_ingest` does.  Each table's envelope schema comes from the
+    ROW SCHEMA of its current Relation declaration in the stream
+    (exactly how the reference builds its publish schema from the
+    RelationMessage), which is optionally registered.  Rows of tables
+    outside ``only`` are skipped but still acked.
+
+    Returns {qualified_table: rows_written}."""
+    from creek_spark.types.envelope import envelope_schema
+    from creek_spark.types.pgtypes import pg_relation_to_struct
+
+    if registry is not None:
+        # register EVERY schema generation as it is declared — the
+        # reference persists a schema per RelationMessage
+        # (replication.go:318-363 → PersistSchemaFromRelation), so a
+        # mid-stream ALTER TABLE leaves both fingerprints queryable
+        session.decoder.on_relation = lambda rel: registry.put(
+            pg_relation_to_struct(rel),
+            source=f"{rel.namespace}.{rel.name}",
+        )
+    dests: dict[tuple[str, str], tuple] = {}  # (table, generation) → dest
+    tables: dict[str, str] = {}  # staging dir → table
+
+    def route(row):
+        qname = f"{row['source']['schema']}.{row['source']['table']}"
+        if only and qname not in only:
+            return None
+        key = (qname, row["fingerprint"])
+        if key not in dests:
+            rel = {
+                f"{r.namespace}.{r.name}": r
+                for r in session.decoder.relations.values()
+            }[qname]
+            row_schema = pg_relation_to_struct(rel)
+            if registry is not None and registry.last_for_source(qname) is None:
+                registry.put(row_schema, source=qname)
+            sub = os.path.join(wal_dir, qname.replace(".", "_"))
+            tables[sub] = qname
+            dests[key] = (sub, envelope_schema(row_schema))
+        return dests[key]
+
+    written = _ingest(spark, session, route, _FLUSH_ROWS)
+    return {tables[d]: n for d, n in written.items()}
 
 
 # -- v3 wire-protocol socket transport ---------------------------------
@@ -1066,63 +1164,3 @@ class TranscriptServer:
             self.received.append(("copydone",))
         else:
             self.received.append((tag, payload))
-
-
-def ingest_transcript_tables(
-    spark,
-    session: WalSenderSession,
-    wal_dir: str,
-    registry=None,
-    *,
-    only: list[str] | None = None,
-) -> dict[str, int]:
-    """Daemon-grade ingestion: drain a session, group envelope rows per
-    qualified table, derive each table's ROW SCHEMA from the stream's own
-    Relation declarations (exactly how the reference builds its publish
-    schema from the RelationMessage), optionally register it, and stage
-    each table's rows as ONE Arrow-written envelope parquet file under
-    ``wal_dir/<schema_table>`` (:func:`stage_envelope_rows`, published
-    by fsio's atomic rename) — the per-table staging layout the daemon
-    tails.  The session is acked once after ALL files are in place
-    (crash before the ack re-delivers; the applier's same-LSN merge
-    no-ops duplicates); a table whose rows are refused raises before
-    the ack.
-
-    Returns {qualified_table: rows_written}."""
-    from creek_spark.types.envelope import envelope_schema
-    from creek_spark.types.pgtypes import pg_relation_to_struct
-
-    if registry is not None:
-        # register EVERY schema generation as it is declared — the
-        # reference persists a schema per RelationMessage
-        # (replication.go:318-363 → PersistSchemaFromRelation), so a
-        # mid-stream ALTER TABLE leaves both fingerprints queryable
-        session.decoder.on_relation = lambda rel: registry.put(
-            pg_relation_to_struct(rel),
-            source=f"{rel.namespace}.{rel.name}",
-        )
-    per_table: dict[str, list[dict]] = {}
-    hi = 0
-    for lsn, row in session.stream(stop_on_copydone=True):
-        qname = f"{row['source']['schema']}.{row['source']['table']}"
-        if only and qname not in only:
-            continue
-        per_table.setdefault(qname, []).append(row)
-        hi = max(hi, lsn)
-    rels = {
-        f"{r.namespace}.{r.name}": r for r in session.decoder.relations.values()
-    }
-    written: dict[str, int] = {}
-    for qname, rows in per_table.items():
-        rel = rels.get(qname)
-        if rel is None:
-            continue  # rows for a relation never declared: unreachable
-        row_schema = pg_relation_to_struct(rel)
-        if registry is not None and registry.last_for_source(qname) is None:
-            registry.put(row_schema, source=qname)
-        sub = os.path.join(wal_dir, qname.replace(".", "_"))
-        stage_envelope_rows(spark, rows, envelope_schema(row_schema), sub)
-        written[qname] = len(rows)
-    if hi:
-        session.ack(hi)
-    return written

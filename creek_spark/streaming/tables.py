@@ -67,18 +67,16 @@ class DynamicTables:
         spark: SparkSession,
         wal_dir: str,
         base_dir: str,
-        envelope_schema: T.StructType | None = None,
         registry: SchemaRegistry | None = None,
         *,
         n_buckets: int = 8,
     ):
-        """``envelope_schema`` may be None: each table's envelope shape is
-        then derived from its registered ROW schema (the daemon path —
-        the reference likewise derives the message schema per relation)."""
+        """Each table's envelope shape is derived from its registered ROW
+        schema (the reference likewise derives the message schema per
+        relation)."""
         self.spark = spark
         self.wal_dir = wal_dir
         self.base_dir = base_dir
-        self.envelope_schema = envelope_schema
         self.registry = registry or SchemaRegistry(
             os.path.join(base_dir, "registry")
         )
@@ -172,14 +170,12 @@ class DynamicTables:
     # ---------------------------------------------------------------- run
 
     def _env_schema_for(self, qname: str) -> T.StructType:
-        if self.envelope_schema is not None:
-            return self.envelope_schema
-        from creek_spark.types.envelope import envelope_schema as build_env
+        from creek_spark.types.envelope import envelope_schema
 
         row = self.registry.get(self._tables[qname]["fingerprint"])
         if row is None:
             raise KeyError(f"no registered schema for {qname}")
-        return build_env(row)
+        return envelope_schema(row)
 
     def _applier(self, qname: str) -> CdcApplier:
         safe = qname.replace(".", "_")
@@ -187,18 +183,18 @@ class DynamicTables:
             self.spark,
             os.path.join(self.base_dir, "state", safe),
             self._tables[qname]["key_cols"],
-            self._env_schema_for(qname),
             n_buckets=self.n_buckets,
         )
 
     def _table_stream(self, qname: str) -> DataFrame:
         ns, tbl = qname.split(".", 1)
         # Per-table staging subdir (wal_dir/<schema_table>) wins when it
-        # exists — the layout walsender.ingest_transcript_tables writes,
-        # and the multi-table-safe one: a shared flat dir mixes envelope
-        # schemas whose before/after structs differ per relation.  The
-        # flat dir remains for single-table deployments (≙ one NATS
-        # subject per table in the reference).
+        # exists — the layout walsender.ingest_transcript_tables stages,
+        # one file per table per flush, and the multi-table-safe one: a
+        # shared flat dir mixes envelope schemas whose before/after
+        # structs differ per relation.  The flat dir, where
+        # ingest_transcript stages, remains for single-table deployments
+        # (≙ one NATS subject per table in the reference).
         sub = os.path.join(self.wal_dir, qname.replace(".", "_"))
         src = sub if os.path.isdir(sub) else self.wal_dir
         stream = read_envelope_stream(
@@ -269,7 +265,6 @@ class DynamicTables:
             self.spark,
             os.path.join(self.base_dir, "state", safe),
             self._tables.get(qname, {}).get("key_cols", []),
-            self.envelope_schema,
             n_buckets=self.n_buckets,
         )
         return applier.current_state()

@@ -22,15 +22,8 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.parity_cert import duck_views
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()

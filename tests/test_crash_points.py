@@ -12,7 +12,8 @@ examples pin one crash at each fsio step of a run publish and of a
 compaction publish (CdcApplier, StreamingDedup), of a rollup publish
 (AdditiveRollupSink) — every fenced sink that commits through the
 versioned store — of a StreamingAnnIndex manifest commit, compaction and
-retrain flip, and of a stream_shard_writer fence commit.  A
+retrain flip, of a stream_shard_writer fence commit, and of each staged
+file of a two-flush, two-table walsender ingest.  A
 StreamingDedup, StreamingAnnIndex or shard-writer batch costs seconds of
 Spark jobs, so their harnesses run the explicit examples only."""
 
@@ -258,6 +259,49 @@ def test_cdc_applier_survives_a_crash_at_every_fsio_step(
         assert not _dirs_outside(state_dir, manifest, "creek_bucket")
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
+
+
+# -- walsender ingest --------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "k, expect",
+    [(1, "write_file_atomic"), (2, "write_file_atomic"), (3, "write_file_atomic"),
+     (4, "write_file_atomic"), (5, "after")],
+)
+def test_tables_ingest_survives_a_crash_at_every_fsio_step(
+    spark, tmp_path, monkeypatch, k, expect
+):
+    """Two flushes of two tables stage four files.  A crash in place of
+    any of them, or after the ingest returns, then a fresh session on
+    the same state dir re-ingesting the transcript, must apply to each
+    table's interpreter state: a flush whose ack was lost is
+    re-delivered, and its rows staged twice merge as no-ops."""
+    from creek_spark.sources import walsender
+    from creek_spark.sources.walsender import (
+        TranscriptTransport,
+        WalSenderSession,
+        ingest_transcript_tables,
+    )
+    from tests.test_wal_staging import TWO_TABLES, two_table_transcript
+
+    monkeypatch.setattr(walsender, "_FLUSH_ROWS", 3)
+    path = two_table_transcript(tmp_path / "two.hex")
+    wal_dir = str(tmp_path / "wal")
+
+    def ingest():
+        sess = WalSenderSession(TranscriptTransport(path), str(tmp_path / "lsn"))
+        ingest_transcript_tables(spark, sess, wal_dir)
+
+    assert _crash_during(k, ingest) == expect
+    ingest()  # the restart
+    for qname, (_, events) in TWO_TABLES.items():
+        staged = os.path.join(wal_dir, qname.replace(".", "_"))
+        applier = CdcApplier(spark, str(tmp_path / qname), ["id"], n_buckets=2)
+        applier.apply_batch(spark.read.schema(ENV_SCHEMA).parquet(staged), 0)
+        expected, last = interpret(events)
+        expected_lsn = {key: _lsn(lsn) for key, lsn in last.items()}
+        assert _cdc_state(applier) == (expected, expected_lsn)
 
 
 # -- AdditiveRollupSink ------------------------------------------------

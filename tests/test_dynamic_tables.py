@@ -41,7 +41,7 @@ def test_add_remove_table_mid_stream(spark, tmp_path):
     wal = str(tmp_path / "wal")
     base = str(tmp_path / "cdc")
     reg = SchemaRegistry(str(tmp_path / "reg"))
-    dyn = DynamicTables(spark, wal, base, ENV_SCHEMA, reg, n_buckets=4)
+    dyn = DynamicTables(spark, wal, base, reg, n_buckets=4)
     dyn.add_table("public.other", ROW_SCHEMA, ["id"])
     assert dyn.subscribed() == ["public.other"]
 
@@ -105,7 +105,7 @@ def test_run_available_compacts_only_terminated_queries(spark, tmp_path, monkeyp
     the next version dir.  A table whose query finished is."""
     from types import SimpleNamespace
 
-    dyn = DynamicTables(spark, str(tmp_path / "wal"), str(tmp_path / "cdc"), ENV_SCHEMA)
+    dyn = DynamicTables(spark, str(tmp_path / "wal"), str(tmp_path / "cdc"))
     dyn.add_table("public.done", ROW_SCHEMA, ["id"])
     dyn.add_table("public.slow", ROW_SCHEMA, ["id"])
     compacted = []
@@ -129,7 +129,7 @@ def test_command_parsing_and_persistence(spark, tmp_path):
     wal = str(tmp_path / "wal")
     base = str(tmp_path / "cdc")
     os.makedirs(wal, exist_ok=True)
-    dyn = DynamicTables(spark, wal, base, ENV_SCHEMA)
+    dyn = DynamicTables(spark, wal, base)
     # malformed payloads are skipped, not raised (api.go:76-80)
     assert not dyn.handle_command("NONSENSE")
     assert not dyn.handle_command("ADDpublic.other")
@@ -145,7 +145,7 @@ def test_command_parsing_and_persistence(spark, tmp_path):
     assert dyn.subscribed() == ["public.other"]
 
     # the subscribed set survives a restart (tables.json)
-    dyn2 = DynamicTables(spark, wal, base, ENV_SCHEMA)
+    dyn2 = DynamicTables(spark, wal, base)
     assert dyn2.subscribed() == ["public.other"]
     assert dyn2._tables["public.other"]["key_cols"] == ["id"]
 
@@ -169,7 +169,7 @@ def test_run_continuous_add_mid_flight(spark, tmp_path):
     starts the new table's query without restarting the existing one."""
     wal = str(tmp_path / "wal")
     base = str(tmp_path / "cdc")
-    dyn = DynamicTables(spark, wal, base, ENV_SCHEMA, n_buckets=4)
+    dyn = DynamicTables(spark, wal, base, n_buckets=4)
     dyn.add_table("public.other", ROW_SCHEMA, ["id"])
 
     other = other_wal_events()
@@ -219,7 +219,7 @@ def test_control_channel_poll(spark, tmp_path):
     wal = str(tmp_path / "wal")
     base = str(tmp_path / "cdc")
     os.makedirs(wal, exist_ok=True)
-    dyn = DynamicTables(spark, wal, base, ENV_SCHEMA)
+    dyn = DynamicTables(spark, wal, base)
     dyn.registry.put(ROW_SCHEMA, source="public.other")
 
     ch = ControlChannel(base)

@@ -11,12 +11,9 @@ import pytest
 
 pytestmark = pytest.mark.slow  # subprocess/fuzz/e2e tier - see pytest.ini
 
-import math
-
-import pandas as pd
-
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
+from tools.parity_cert import check
 
 CATALOG = None
 
@@ -28,51 +25,6 @@ def _catalog():
         # covered automatically (a local import list would drift)
         CATALOG = entrymod._catalog()
     return CATALOG
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-        elif df[c].dtype == object:
-            # unify decimal.Decimal / bytes and None representations
-            df[c] = df[c].map(
-                lambda v: str(v) if v is not None and not isinstance(v, float) else v
-            )
-        elif pd.api.types.is_integer_dtype(df[c]) or pd.api.types.is_bool_dtype(df[c]):
-            df[c] = df[c].astype("float64") if df[c].isna().any() else df[c].astype("int64")
-    df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
-
-
-def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str):
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"{name}: row count {len(spark_pdf)} vs oracle {len(duck_pdf)}"
-    )
-    assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
-        f"{name}: columns {sorted(spark_pdf.columns)} vs {sorted(duck_pdf.columns)}"
-    )
-    a, b = normalize(spark_pdf), normalize(duck_pdf)
-    for c in a.columns:
-        av, bv = a[c], b[c]
-        if pd.api.types.is_float_dtype(av) or pd.api.types.is_float_dtype(bv):
-            av = av.astype("float64")
-            bv = bv.astype("float64")
-            mism = ~(
-                (av.isna() & bv.isna())
-                | (av == bv)
-            )
-            assert not mism.any(), (
-                f"{name}.{c}: {int(mism.sum())} float mismatches, e.g. "
-                f"{list(zip(av[mism].head(3), bv[mism].head(3)))}"
-            )
-        else:
-            mism = ~((av.isna() & bv.isna()) | (av == bv))
-            assert not mism.any(), (
-                f"{name}.{c}: {int(mism.sum())} mismatches, e.g. "
-                f"{list(zip(av[mism].head(3), bv[mism].head(3)))}"
-            )
 
 
 ALL = sorted(entrymod.queries().keys())
@@ -88,8 +40,8 @@ def test_query_matches_oracle(spark, duck, name):
         assert len(spark_pdf) >= 0  # runs; schema is stable
         assert len(spark_pdf.columns) > 0
         return
-    duck_pdf = duck.execute(q.oracle).fetchdf()
-    compare(spark_pdf, duck_pdf, name)
+    err = check(spark_pdf, duck.execute(q.oracle).fetchdf())
+    assert err is None, f"{name}: {err}"
 
 
 def test_entry_smoke(spark):

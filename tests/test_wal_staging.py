@@ -1,6 +1,7 @@
 """Staging decoded WAL: every flush of ``ingest_transcript`` and
-``ingest_transcript_tables`` lands as one Arrow-written parquet file
-published by fsio's atomic rename, acked only after it is in place.
+``ingest_transcript_tables`` lands as one Arrow-written parquet file per
+staging dir, published by fsio's atomic rename, and is acked only after
+all of them are in place.
 
 The staged rows must read back exactly as ``createDataFrame`` of the same
 rows would have built them; rows ``createDataFrame`` refuses (a value of
@@ -284,3 +285,165 @@ def test_ingest_transcript_starts_no_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert staged_jobs == []
     assert probe_jobs
+
+
+# two tables of `other`'s shape whose changes interleave in one
+# transaction, as (lsn, op, before, after, toast) events per table
+_SHAPE = [(1, "id", 23, -1), (0, "data", 25, -1)]
+TWO_TABLES = {
+    "public.a": (57, [
+        (0x14, "c", None, (1, "a1"), None),
+        (0x1C, "c", None, (2, "a2"), None),
+        (0x24, "d", (2,), None, None),
+    ]),
+    "public.b": (58, [
+        (0x18, "c", None, (1, "b1"), None),
+        (0x20, "u", (1,), (1, "b1v2"), None),
+        (0x28, "u_pk", (1,), (3, "b3"), None),
+    ]),
+}
+
+
+def two_table_transcript(path) -> str:
+    frames = [encode_xlogdata(0x10, begin(lsn=0x40))]
+    changes = []
+    for qname, (relid, events) in TWO_TABLES.items():
+        frames.append(encode_xlogdata(0x10, relation(relid, *qname.split("."), _SHAPE)))
+        changes += [(e, relid) for e in events]
+    for (lsn, op, before, after, _toast), relid in sorted(changes):
+        payload = {
+            "c": lambda: insert(relid, *after),
+            "u": lambda: update(relid, new=after),
+            "u_pk": lambda: update(relid, new=after, old=(before[0], None)),
+            "d": lambda: delete(relid, (before[0], None)),
+        }[op]()
+        frames.append(encode_xlogdata(lsn, payload))
+    frames.append(encode_xlogdata(0x40, commit(lsn=0x40)))
+    return _transcript(path, frames)
+
+
+def test_tables_ingest_stages_and_acks_every_flush(spark, tmp_path, monkeypatch):
+    """ingest_transcript_tables flushes every _FLUSH_ROWS rows:
+    each flush stages one file per table, then acks, and the staged
+    rows equal those of one flush of the whole drain."""
+    from creek_spark.sources import walsender
+    from tests.fixtures import ENV_SCHEMA
+
+    path = two_table_transcript(tmp_path / "two.hex")
+    one_flush = str(tmp_path / "one_flush")
+    sess = WalSenderSession(TranscriptTransport(path), str(tmp_path / "s0"))
+    assert ingest_transcript_tables(spark, sess, one_flush) == {"public.a": 3, "public.b": 3}
+
+    monkeypatch.setattr(walsender, "_FLUSH_ROWS", 2)
+    sess = WalSenderSession(TranscriptTransport(path), str(tmp_path / "s1"))
+    log = []  # staged table dirs and acks that moved, in order
+    real_stage, real_ack = walsender.stage_envelope_rows, sess.ack
+
+    def stage(spark, rows, schema, d):
+        log.append(os.path.basename(d))
+        real_stage(spark, rows, schema, d)
+
+    def ack(lsn):
+        if lsn > sess.acked_lsn:
+            log.append(lsn)
+        real_ack(lsn)
+
+    monkeypatch.setattr(walsender, "stage_envelope_rows", stage)
+    monkeypatch.setattr(sess, "ack", ack)
+    wal_dir = str(tmp_path / "wal")
+    assert ingest_transcript_tables(spark, sess, wal_dir) == {"public.a": 3, "public.b": 3}
+    assert log == ["public_a", "public_b", 0x18,
+                   "public_a", "public_b", 0x20,
+                   "public_a", "public_b", 0x28]
+    for table in ("public_a", "public_b"):
+        staged = os.path.join(wal_dir, table)
+        assert len([f for f in _staged_files(staged) if f.endswith(".parquet")]) == 3
+        got = spark.read.schema(ENV_SCHEMA).parquet(staged).collect()
+        want = spark.read.schema(ENV_SCHEMA).parquet(os.path.join(one_flush, table)).collect()
+        assert _by_lsn(got) == _by_lsn(want)
+
+
+def test_tables_ingest_acks_rows_it_skips(tmp_path, monkeypatch):
+    """A row outside ``only=`` is consumed: the ack covers it, so a
+    restart does not re-deliver it."""
+    from creek_spark.sources import walsender
+
+    monkeypatch.setattr(walsender, "stage_envelope_rows", lambda *args: None)
+    path = two_table_transcript(tmp_path / "two.hex")
+    sess = WalSenderSession(TranscriptTransport(path), str(tmp_path / "s"))
+    assert ingest_transcript_tables(None, sess, str(tmp_path / "wal"), only=["public.a"]) == {
+        "public.a": 3}
+    assert sess.acked_lsn == 0x28
+
+
+def interleaved_transcript(path) -> str:
+    """Two transactions of ``public.a`` in commit order: tx A (rows 1, 2
+    at 0x20, 0x28, commit 0x30), then tx B, which began first (rows 3, 4
+    at 0x10, 0x14, commit 0x50), so B's rows sit below A's LSNs."""
+    frames = [
+        encode_xlogdata(0x20, begin(lsn=0x30)),
+        encode_xlogdata(0x20, relation(57, "public", "a", _SHAPE)),
+        encode_xlogdata(0x20, insert(57, 1, "r1")),
+        encode_xlogdata(0x28, insert(57, 2, "r2")),
+        encode_xlogdata(0x30, commit(lsn=0x30)),
+        encode_xlogdata(0x10, begin(lsn=0x50)),
+        encode_xlogdata(0x10, insert(57, 3, "r3")),
+        encode_xlogdata(0x14, insert(57, 4, "r4")),
+        encode_xlogdata(0x50, commit(lsn=0x50)),
+    ]
+    return _transcript(path, frames)
+
+
+def _staged_ids(spark, staged_dir) -> list[int]:
+    from tests.fixtures import ENV_SCHEMA
+
+    rows = spark.read.schema(ENV_SCHEMA).parquet(staged_dir).collect()
+    return sorted(r["after"]["id"] for r in rows)
+
+
+def test_tables_ingest_keeps_a_transaction_below_an_earlier_flush(
+    spark, tmp_path, monkeypatch
+):
+    """A flush acks tx A; tx B, committed after A but with rows at lower
+    LSNs, must still be staged in the same drain."""
+    from creek_spark.sources import walsender
+
+    monkeypatch.setattr(walsender, "_FLUSH_ROWS", 2)
+    path = interleaved_transcript(tmp_path / "tx.hex")
+    sess = WalSenderSession(TranscriptTransport(path), str(tmp_path / "s"))
+    wal_dir = str(tmp_path / "wal")
+    assert ingest_transcript_tables(spark, sess, wal_dir) == {"public.a": 4}
+    assert _staged_ids(spark, os.path.join(wal_dir, "public_a")) == [1, 2, 3, 4]
+
+
+def test_restart_after_a_flush_keeps_a_later_committed_transaction(
+    spark, tmp_path, monkeypatch
+):
+    """Tx A's flush is acked, then B's flush fails.  A restart on the
+    same state dir re-delivers B, whose rows lie below the acked LSN,
+    and not A: every row is staged exactly once."""
+    from creek_spark.sources import walsender
+
+    row_schema = pg_relation_to_struct(PGRelation(
+        "public", "a", [PGColumn("id", "int4", -1, 1), PGColumn("data", "text", -1, 0)]))
+    path = interleaved_transcript(tmp_path / "tx.hex")
+    state, wal_dir = str(tmp_path / "s"), str(tmp_path / "wal")
+    real_stage = walsender.stage_envelope_rows
+    calls = []
+
+    def stage_once(*args):
+        calls.append(args)
+        if len(calls) > 1:
+            raise OSError("disk gone")
+        real_stage(*args)
+
+    monkeypatch.setattr(walsender, "stage_envelope_rows", stage_once)
+    sess = WalSenderSession(TranscriptTransport(path), state)
+    with pytest.raises(OSError, match="disk gone"):
+        ingest_transcript(spark, sess, wal_dir, row_schema, batch_rows=2)
+    assert sess.acked_lsn == 0x28
+
+    monkeypatch.setattr(walsender, "stage_envelope_rows", real_stage)
+    sess = WalSenderSession(TranscriptTransport(path), state)
+    assert ingest_transcript(spark, sess, wal_dir, row_schema, batch_rows=2) == 2
+    assert _staged_ids(spark, wal_dir) == [1, 2, 3, 4]

@@ -75,17 +75,23 @@ def test_session_protocol_start_cadence_and_reply(tmp_path):
     # crosses the 5s cadence; the reply-requested keepalive forces one;
     # close sends the final one
     assert len(statuses) >= 3
-    # every status acks write=flush=apply=current LSN (pglogrepl default)
-    for _, w, f, a, _r in statuses:
-        assert w == f == a
-    # the reply-requested keepalive (current LSN 0x60) was acked at 0x60
-    assert ("status", 0x60, 0x60, 0x60, 0) in statuses
+    # this consumer never acks, so every status confirms write=flush=
+    # apply=the acked LSN 0, never the received position past its rows
+    assert {s[1:4] for s in statuses} == {(0, 0, 0)}
     # raw 'r' frames are well-formed
     tag, w, f, a, clock, reply = (
         t.sent_raw[-1][0:1],
         *struct.unpack_from(">QQQqB", t.sent_raw[-1], 1),
     )
-    assert tag == b"r" and w == 0x60
+    assert tag == b"r" and w == 0
+
+    # a consumer that acks every row is confirmed up to the received
+    # position: the reply-requested keepalive (LSN 0x60) is acked at 0x60
+    t = TranscriptTransport(_transcript(tmp_path / "s.hex", _events()))
+    sess = WalSenderSession(t, str(tmp_path / "acking"))
+    for lsn, _row in sess.stream():
+        sess.ack(lsn)
+    assert ("status", 0x60, 0x60, 0x60, 0) in t.sent
 
 
 def test_kill_restart_resumes_from_saved_lsn(tmp_path):
@@ -126,6 +132,30 @@ def test_kill_restart_resumes_from_saved_lsn(tmp_path):
     assert combined == full == {1: "a2", 3: "c"}
     # restart STARTed from the saved LSN
     assert t2.sent[0] == ("start", 0x18)
+
+
+def test_acking_consumer_gets_a_transaction_committed_below_its_ack(tmp_path):
+    """Tx B began before tx A but commits after it, so B's rows sit
+    below A's LSNs.  A consumer that acks every row still gets B's rows,
+    and a restart after A's last row re-delivers B and not A."""
+    from tests.test_wal_staging import interleaved_transcript
+
+    path = interleaved_transcript(tmp_path / "tx.hex")
+    sess = WalSenderSession(TranscriptTransport(path), str(tmp_path / "a"))
+    ids = []
+    for lsn, row in sess.stream():
+        ids.append(row["after"]["id"])
+        sess.ack(lsn)
+    assert ids == [1, 2, 3, 4]
+
+    state = str(tmp_path / "b")
+    s1 = WalSenderSession(TranscriptTransport(path), state)
+    for lsn, row in s1.stream():
+        s1.ack(lsn)
+        if row["after"]["id"] == 2:
+            break  # kill after tx A
+    s2 = WalSenderSession(TranscriptTransport(path), state)
+    assert [r["after"]["id"] for r in s2.stream_rows()] == [3, 4]
 
 
 def test_disconnect_and_copydone_reconnect_resume(tmp_path):
@@ -551,6 +581,47 @@ def test_restart_resumes_from_server_confirmed_flush(tmp_path):
             not (r["op"] == "c" and r["after"]["id"] in (1, 2)) for r in got2
         )
         assert _interpret_ops(got1 + got2) == {1: "a2", 3: "c"}
+    finally:
+        srv.close()
+
+
+def test_status_never_confirms_an_unstaged_row(tmp_path, monkeypatch):
+    """A reply-requested keepalive arrives while decoded rows wait for
+    their flush, and staging then fails: no status may have moved the
+    slot's confirmed_flush_lsn past the session's acked LSN, or a
+    restart from the slot would lose the rows that were never staged."""
+    import time
+
+    import pytest
+
+    from creek_spark.sources import walsender
+    from creek_spark.sources.walsender import (
+        SocketTransport,
+        TranscriptServer,
+        ingest_transcript_tables,
+    )
+
+    frames = _events()
+    frames[5] = encode_keepalive(0x30, clock=6 * US, reply=True)
+    srv = TranscriptServer(_transcript(tmp_path / "s.hex", frames), strict_bootstrap=True)
+
+    def refuse(*args, **kwargs):
+        raise OSError("staging refused")
+
+    monkeypatch.setattr(walsender, "stage_envelope_rows", refuse)
+    try:
+        t = SocketTransport("127.0.0.1", srv.port, slot="su", publication="pu")
+        t.ensure_bootstrap(["public.other"])
+        sess = WalSenderSession(t, str(tmp_path / "state"))
+        with pytest.raises(OSError, match="staging refused"):
+            ingest_transcript_tables(None, sess, str(tmp_path / "wal"))
+        # the client's statuses precede its CopyDone on the wire
+        deadline = time.time() + 10
+        while ("copydone",) not in srv.received and time.time() < deadline:
+            time.sleep(0.05)
+        assert any(r[0] == "status" for r in srv.received), srv.received
+        assert sess.acked_lsn == 0
+        assert srv.slots["su"] <= sess.acked_lsn
     finally:
         srv.close()
 

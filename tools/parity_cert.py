@@ -27,10 +27,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from creek_spark.sources import TABLES  # noqa: E402
+
+
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per source table of ``sf_dir``
+    — the oracle side of every parity check."""
+    duck = duckdb.connect()
+    for t in TABLES:
+        duck.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return duck
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -75,11 +83,7 @@ def main() -> int:
 
     spark = get_spark()
     cat = entrymod._catalog()
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duck = duck_views(sf_dir)
     bad, n_pass, n_weak = [], 0, 0
     for name in sorted(cat):
         q = cat[name]

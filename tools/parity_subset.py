@@ -14,9 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
-from tools.parity_cert import TABLES, check  # noqa: E402
+from tools.parity_cert import check, duck_views  # noqa: E402
 
 
 def main() -> int:
@@ -33,11 +31,7 @@ def main() -> int:
 
     spark = get_spark()
     cat = entrymod._catalog()
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duck = duck_views(sf_dir)
     bad = []
     for name in names:
         q = cat[name]
