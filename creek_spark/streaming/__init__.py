@@ -16,13 +16,14 @@ Correctness properties preserved (BASELINE.md):
 On a cluster the sink would be Delta MERGE; locally the state is
 merge-on-read, the shape of Spark's own HDFS state store (one delta
 file per micro-batch, a snapshot every N versions): a hash-bucketed
-parquet *base* (hive partitions on pmod(xxhash64(key), n_buckets)) plus
-an ordered list of delta *runs*.  Each trigger appends its raw changes
-as one run — an O(batch) write with no state read, no shuffle and no
-driver collect — and a read folds the base with the pending runs
-through the same latest_state operator the batch catalog uses.  Every
-``_COMPACT_VERSIONS`` runs, compaction folds them into the buckets they
-touch.  Visibility is transactional: each run or compaction lands in a
+parquet *base* (each row carries its bucket, pmod(xxhash64(key),
+n_buckets), and a compaction writes data-sized files, not one per
+bucket) plus an ordered list of delta *runs*.  Each trigger appends
+its raw changes as one run — an O(batch) write with no state read, no
+shuffle and no driver collect — and a read folds the base with the
+pending runs through the same latest_state operator the batch catalog
+uses.  Every ``_COMPACT_VERSIONS`` runs, compaction folds them into
+the buckets they touch.  Visibility is transactional: each run or compaction lands in a
 fresh version directory and is published with an atomic
 `_manifest.json` swap (streaming/versioned.py, the Delta-log analog).
 """
@@ -79,8 +80,8 @@ class CdcApplier:
     not truncate publishes nothing.
 
     Read: :meth:`current_state` folds the buckets of the hash-bucketed
-    base (``creek_bucket = pmod(xxhash64(keys), n_buckets)`` hive
-    partitions) that the pending runs touch — each row re-entering as
+    base (``creek_bucket = pmod(xxhash64(keys), n_buckets)``, a column
+    of the state) that the pending runs touch — each row re-entering as
     an 'r' change at its stored LSN through operators.cdc.with_rows —
     with those runs by latest_state; each surviving key keeps its
     winning change's LSN.  Untouched buckets are carried as stored, and
@@ -94,10 +95,10 @@ class CdcApplier:
     dir, published with no runs pending.  No step collects to the
     driver: the buckets a run touches (≤ n_buckets ints) and whether it
     truncates are observed on the run's own write and kept in the
-    manifest; compaction lists only the version dir it wrote.  A
-    batch whose schema differs from the pending runs' (upstream ADD
-    COLUMN) compacts them first, so every pending run shares one
-    schema.  Readers always see one committed manifest, concurrent
+    manifest; compaction observes the buckets it wrote on its own
+    write.  A batch whose schema differs from the pending runs'
+    (upstream ADD COLUMN) compacts them first, so every pending run
+    shares one schema.  Readers always see one committed manifest, concurrent
     with writes; on a cluster the same contract is Delta MERGE +
     OPTIMIZE.
 
@@ -119,8 +120,6 @@ class CdcApplier:
         self.key_cols = key_cols
         self.n_buckets = n_buckets
         self._lsn_col = "_creek_lsn"
-        # NOT underscore-prefixed: Spark's file listing treats `_*` paths
-        # as hidden metadata and would skip the partition directories.
         self._bucket_col = "creek_bucket"
         self._store = VersionedStore(spark, state_dir, self._bucket_col)
 

@@ -14,14 +14,16 @@ means a reset/relocated checkpoint and raises instead of silently
 dropping the new rows it carries.
 
 Scale design mirrors CdcApplier, and the state layout is the same
-store (streaming/versioned.py): state is hive-partitioned on a caller-
-chosen partition key (for time-tier rollups: the day of the bucket), a
+store (streaming/versioned.py): state is keyed by a caller-chosen
+partition column (for time-tier rollups: the day of the bucket), a
 batch rewrites ONLY the partitions its rows touch (a trickle of fresh
-events touches today's partition, never the year of history) into a new
-version directory published by an atomic manifest swap — readers always
-see one committed generation.  The fence (``last_batch_id`` and its
-content fingerprint, streaming/fence.py) rides in the same manifest, so
-the merge and the fence advance in one atomic publish.  The only driver
+events touches today's partition, never the year of history) as
+data-sized files in a new version directory, published by an atomic
+manifest swap that maps each partition to its current directory —
+readers always see one committed generation.  The fence
+(``last_batch_id`` and its content fingerprint, streaming/fence.py)
+rides in the same manifest, so the merge and the fence advance in one
+atomic publish.  The only driver
 traffic is one bounded collect of touched partition values.
 """
 
@@ -86,20 +88,11 @@ class AdditiveRollupSink:
         m = self._store.manifest()
         return m["last_batch_id"] if m else -1
 
-    def _read(self, manifest: dict | None, parts=None) -> DataFrame | None:
-        df = self._store.read(manifest, parts)
-        if df is None:
-            return None
-        # partition values round-trip through hive paths as strings
-        return df.withColumn(
-            self.partition_col, F.col(self.partition_col).cast("string")
-        )
-
     def current(self) -> DataFrame | None:
         """The committed rollup as of the latest manifest generation;
         partitions rewritten since a metric column was added carry it,
         untouched ones read it as NULL."""
-        return self._read(self._store.manifest())
+        return self._store.read(self._store.manifest())
 
     # -- merge ---------------------------------------------------------
 
@@ -140,7 +133,7 @@ class AdditiveRollupSink:
                 merged, self.partition_col, what="AdditiveRollupSink.apply_batch"
             )
         }
-        prev = self._read(old, touched)
+        prev = self._store.read(old, touched)
         if prev is not None:
             # Schema evolution (a metric column added to add_cols after
             # state was persisted): stored partitions that predate the

@@ -1,53 +1,61 @@
-"""Versioned-partition state store: the on-disk layout the CDC, rollup
-and dedup sinks commit through.
+"""Versioned state store: the on-disk layout the CDC, rollup and dedup
+sinks commit through.
 
     state_dir/_manifest.json       {"version": N, "buckets": {p: vdir},
                                     "runs": ["vdir/_run", ...],
-                                    "retain": ["vdir/col=p", "vdir/_run", ...],
+                                    "retain": ["vdir", "vdir/_run", ...],
                                     ...}
-    state_dir/v00000000N/<col>=<p>/part-*.parquet    base partitions
+    state_dir/v00000000N/part-*.parquet              base files
     state_dir/v00000000N/_run/part-*.parquet         one delta run
 
-State is a *base* hive-partitioned on one caller-chosen column, plus an
-ordered list of unpartitioned delta *runs* the caller folds into it on
-read (merge-on-read; the rollup sink keeps no runs, the dedup sink no
-base).  A writer puts new files into a FRESH version directory (never
-in place — untouched partitions and earlier runs stay byte-identical),
-then publishes a new manifest naming, per partition, the version dir
-holding its current files, and the runs in append order (atomic
-Hadoop-FS rename via creek_spark.fsio, so state rides the same
-filesystem as the data —
-local, HDFS or object store).  Readers resolve files through the
-manifest only, so a reader sees the whole old state or the whole new
-state, never a mix, and an orphan version dir left by a crash between
-write and publish is invisible.  Run dirs are underscore-named, which
-Spark's file listing treats as hidden: a plain parquet read of the
-state dir sees base partitions only.  Everything the previous manifest named
-survives one more publish (``retain``) so a reader that resolved it can
-still open its files — the vacuum analog.  Sinks add their own keys (a
-batch-id fence, say) beside the layout's.
+State is a *base* keyed by one caller-chosen part column ``<col>``,
+plus an ordered list of unpartitioned delta *runs* the caller folds
+into it on read (merge-on-read; the rollup sink keeps no runs, the
+dedup sink no base).  A base write stores ``<col>`` as an ordinary
+column, sorted within each file, and writes one file per write task
+into a FRESH version directory (never in place — untouched files and
+earlier runs stay byte-identical).  A publish then swaps in a new
+manifest naming, per part value, the version dir holding its current
+rows, and the runs in append order (atomic Hadoop-FS rename via
+creek_spark.fsio, so state rides the same filesystem as the data —
+local, HDFS or object store).  A read opens each named dir's top-level
+files and keeps the rows whose ``<col>`` the manifest maps to that dir,
+so a value's superseded rows in an older dir are never read twice.  A
+subset read still opens every file of each dir it names and skips row
+groups by ``<col>``'s statistics: against one hive dir per value that
+is the tradeoff at large state, for data-sized files at any state.
+Readers resolve files through the manifest only, so a reader sees the
+whole old state or the whole new state, never a mix, and an orphan
+version dir left by a crash between write and publish is invisible.
+Run dirs are underscore-named, which Spark's file listing treats as
+hidden.  Everything the previous manifest named survives one more
+publish (``retain``) so a reader that resolved it can still open its
+files — the vacuum analog.  Sinks add their own keys (a batch-id
+fence, say) beside the layout's.
 
-GC is manifest-driven: a publish deletes exactly the partition and run
-dirs the old manifest kept (live or retained) and the new one keeps in
-neither list — no listing.  The full orphan sweep, which lists every
-version dir, runs on a store's first publish (after a restart) and when
-the caller asks for it (CDC and dedup compaction).
+GC is manifest-driven and works per version dir: a publish deletes
+each dir the old manifest kept something of (live or retained) and the
+new one keeps nothing of — no listing.  So a dead value's rows stay on disk until
+nothing in their dir is kept (CdcApplier folds a base spread over
+``_COMPACT_VERSIONS`` dirs whole, which bounds this).  The full orphan
+sweep lists every version dir: it deletes the dirs the manifest keeps
+nothing of, and the base files a crashed write left in a dir kept only
+for its run.  It runs on a store's first publish (after a restart) and
+when the caller asks for it (CDC and dedup compaction).
 """
 
 from __future__ import annotations
 
 import re
-import threading
-from contextlib import contextmanager
-from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from creek_spark import fsio
 
 MANIFEST = "_manifest.json"
-_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 RUN = "_run"
 _VDIR = re.compile(r"v\d{9}")
 
@@ -76,52 +84,19 @@ def bounded_partition_values(
     return {r[0] for r in rows}
 
 
-_DISCOVERY_LOCK = threading.Lock()
-
-
-@contextmanager
-def _listing_on_driver(spark: SparkSession):
-    """Reads opened inside list their paths on the driver.  A store read
-    names every partition dir it opens — one per live partition, a few
-    dozen for CDC buckets — and above Spark's parallel-discovery
-    threshold (32 paths) the listing would run as a Spark job whose
-    scheduling costs more than the listing itself.
-
-    This mutates session state: the threshold is raised on ``spark``
-    for the duration and then put back.  Store reads from several
-    threads (one query per table, concurrent readers) serialize on a
-    lock so none saves another's raised value as the one to restore;
-    a read outside any store that runs meanwhile also lists on the
-    driver."""
-    with _DISCOVERY_LOCK:
-        prev = spark.conf.get(_DISCOVERY_THRESHOLD, None)
-        spark.conf.set(_DISCOVERY_THRESHOLD, str(MAX_DRIVER_PARTITION_VALUES))
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(_DISCOVERY_THRESHOLD)
-            else:
-                spark.conf.set(_DISCOVERY_THRESHOLD, prev)
-
-
 def _vdir(version: int) -> str:
     return f"v{version:09d}"
 
 
 class VersionedStore:
-    """Manifest-published, hive-partitioned state under ``state_dir``,
-    partitioned on ``part_col``; partition values are manifest keys and
-    so always strings."""
+    """Manifest-published state under ``state_dir``, keyed by
+    ``part_col``; part values are manifest keys and so always strings."""
 
     def __init__(self, spark: SparkSession, state_dir: str, part_col: str):
         self.spark = spark
         self.state_dir = state_dir
         self.part_col = part_col
         self._swept = False
-
-    def _part(self, ver: str, pval: str) -> str:
-        return f"{ver}/{self.part_col}={pval}"
 
     def manifest(self) -> dict | None:
         m = fsio.read_json_or_none(self.spark, fsio.join(self.state_dir, MANIFEST))
@@ -140,39 +115,51 @@ class VersionedStore:
         return list(manifest.get("runs", ())) if manifest else []
 
     def _live(self, manifest: dict | None) -> set[str]:
-        """The partition and run dirs ``manifest`` reads."""
+        """What ``manifest`` reads: its base version dirs and its runs."""
         if not manifest:
             return set()
-        return {
-            self._part(v, p) for p, v in manifest["buckets"].items()
-        } | set(self.runs(manifest))
+        return set(manifest["buckets"].values()) | set(self.runs(manifest))
 
     def read(self, manifest: dict | None, parts=None) -> DataFrame | None:
-        """The committed partitions of ``manifest`` — all of them, or
+        """The committed base rows of ``manifest`` — every part value, or
         those named in ``parts`` — as one DataFrame carrying
-        ``part_col``; None when there are none.  One basePath read per
-        version dir; allowMissingColumns because a column added after
-        state was persisted exists only in partitions rewritten since,
-        and the others read it as NULL (ADD COLUMN semantics)."""
+        ``part_col``; None when there are none.  One read per version
+        dir, of its top-level files, keeping the rows of the values the
+        manifest maps to that dir; allowMissingColumns because a column
+        added after state was persisted exists only in values rewritten
+        since, and the others read it as NULL (ADD COLUMN semantics)."""
         by_ver: dict[str, list[str]] = {}
         for pval, ver in (manifest["buckets"] if manifest else {}).items():
             if parts is None or pval in parts:
                 by_ver.setdefault(ver, []).append(pval)
-        with _listing_on_driver(self.spark):
-            frames = [
-                self.spark.read.option(
-                    "basePath", fsio.join(self.state_dir, ver)
-                ).parquet(
-                    *[fsio.join(self.state_dir, self._part(ver, p)) for p in sorted(ps)]
-                )
-                for ver, ps in sorted(by_ver.items())
-            ]
+        frames = [
+            self._read_dir(ver).where(F.col(self.part_col).isin(sorted(ps)))
+            for ver, ps in sorted(by_ver.items())
+        ]
         if not frames:
             return None
         df = frames[0]
         for f in frames[1:]:
             df = df.unionByName(f, allowMissingColumns=True)
         return df
+
+    def _read_dir(self, ver: str) -> DataFrame:
+        """The base files of version dir ``ver``.  A dir holding
+        ``<part_col>=<p>/`` partition dirs instead is state in the older
+        hive layout: it is refused, never read as empty."""
+        path = fsio.join(self.state_dir, ver)
+        try:
+            return self.spark.read.parquet(fsio.join(path, "*.parquet"))
+        except AnalysisException:
+            prefix = self.part_col + "="
+            if any(n.startswith(prefix) for n in fsio.list_names(self.spark, path)):
+                raise ValueError(
+                    f"{path} holds {prefix}<value> partition dirs: state "
+                    "written in an older layout, which this store does not "
+                    "read — delete the state dir and replay from the "
+                    "checkpoint"
+                ) from None
+            raise
 
     @staticmethod
     def run_schema(manifest: dict | None) -> T.StructType | None:
@@ -205,25 +192,26 @@ class VersionedStore:
         return run
 
     def write(self, df: DataFrame, manifest: dict | None) -> set:
-        """Write ``df`` — the partitions a batch rewrites — into the
-        version dir the next :meth:`publish` will point at, and return
-        the partition values now present there (one listing).  Static
-        overwrite first clears whatever a crashed attempt left in that
-        dir, even when the session sets dynamic overwrite, so an orphan
-        partition is replaced, never published."""
-        path = fsio.join(self.state_dir, _vdir(self._next_version(manifest)))
+        """Write ``df`` — the part values a batch rewrites — into the
+        version dir the next :meth:`publish` will point at, sorted by
+        ``part_col`` within each write task's one file, and return the
+        values written, observed on the write itself.  Overwrite first
+        clears whatever a crashed attempt left in that dir, so an
+        orphan file is replaced, never published.  A NULL part value
+        has no manifest key, so it is refused rather than written."""
+        seen = Observation()
+        col = F.col(self.part_col)
         (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(self.part_col)
-            .parquet(path)
+            df.sortWithinPartitions(col)
+            .observe(seen, F.collect_set(col).alias("parts"),
+                     F.count_if(col.isNull()).alias("nulls"))
+            .write.mode("overwrite")
+            .parquet(fsio.join(self.state_dir, _vdir(self._next_version(manifest))))
         )
-        prefix = self.part_col + "="
-        return {
-            unquote(sub[len(prefix):])
-            for sub in fsio.list_names(self.spark, path)
-            if sub.startswith(prefix)
-        }
+        got = seen.get
+        if got["nulls"]:
+            raise ValueError(f"{got['nulls']} rows with a NULL {self.part_col!r}")
+        return {str(p) for p in got["parts"]}
 
     @staticmethod
     def _next_version(manifest: dict | None) -> int:
@@ -241,15 +229,15 @@ class VersionedStore:
         **extra,
     ) -> dict:
         """Swap the manifest to the post-batch state and return it:
-        partitions in ``replaced`` drop their old entry, partitions in
+        values in ``replaced`` drop their old entry, values in
         ``written`` map to the version dir :meth:`write` filled (a
-        replaced partition the batch emptied just drops out), ``runs``
+        replaced value the batch emptied just drops out), ``runs``
         become the pending runs — every one of them written with
         ``run_schema`` (nullability aside) — and ``extra`` keys ride
         along.  Everything ``old`` read is retained one generation.
-        Then GC: the dirs ``old`` kept that the new manifest keeps in
-        neither list — or, on this store's first publish and when
-        ``sweep`` is set, every dir under a version dir that it does
+        Then GC: the version dirs ``old`` kept that the new manifest
+        keeps nothing of — or, on this store's first publish and when
+        ``sweep`` is set, everything under a version dir that it does
         not keep."""
         version = self._next_version(old)
         old_map = dict(old["buckets"]) if old else {}
@@ -276,32 +264,29 @@ class VersionedStore:
         return manifest
 
     def _gc(self, kept_before: set[str], keep: set[str]) -> None:
-        """Delete the dirs in ``kept_before`` but not in ``keep``: a
-        version dir none of whose entries is kept goes in one delete."""
-        dead = kept_before - keep
-        live_vdirs = {e.split("/", 1)[0] for e in keep}
-        for vdir in sorted({e.split("/", 1)[0] for e in dead} - live_vdirs):
+        """Delete the version dirs ``kept_before`` names and ``keep``
+        does not, one delete each."""
+        for vdir in sorted(_vdirs(kept_before) - _vdirs(keep)):
             fsio.delete(self.spark, fsio.join(self.state_dir, vdir))
-        for entry in sorted(dead):
-            if entry.split("/", 1)[0] in live_vdirs:
-                fsio.delete(self.spark, fsio.join(self.state_dir, entry))
 
     def _sweep(self, keep: set[str]) -> None:
         """List every version dir and delete what ``keep`` does not name
-        — the orphans of crashed writes and of an interrupted GC."""
-        prefix = self.part_col + "="
+        — the orphans of crashed writes and of an interrupted GC: a dir
+        none of whose entries is kept, and in a kept dir the run or the
+        base files (whatever is not ``_run``) it is not kept for."""
+        live = _vdirs(keep)
         for ver in sorted(fsio.list_names(self.spark, self.state_dir)):
             if not _VDIR.fullmatch(ver):
                 continue
             vdir = fsio.join(self.state_dir, ver)
-            live = False
-            for sub in sorted(fsio.list_names(self.spark, vdir)):
-                if not (sub.startswith(prefix) or sub == RUN):
-                    continue
-                # the writer escapes partition values in dir names
-                if f"{ver}/{unquote(sub)}" in keep:
-                    live = True
-                else:
-                    fsio.delete(self.spark, fsio.join(vdir, sub))
-            if not live:
+            if ver not in live:
                 fsio.delete(self.spark, vdir)
+                continue
+            for sub in sorted(fsio.list_names(self.spark, vdir)):
+                if (f"{ver}/{RUN}" if sub == RUN else ver) not in keep:
+                    fsio.delete(self.spark, fsio.join(vdir, sub))
+
+
+def _vdirs(entries: set[str]) -> set[str]:
+    """The version dirs manifest entries (``vdir``, ``vdir/_run``) lie in."""
+    return {e.split("/", 1)[0] for e in entries}

@@ -206,9 +206,9 @@ def test_reader_resolved_before_compaction_keeps_its_snapshot(spark, tmp_path):
 def test_orphan_next_version_dir_is_replaced_not_published(spark, tmp_path):
     """A crashed attempt can leave files in the version dir the next
     publish points at.  A run publish names only its run, and compaction
-    overwrites the dir it writes statically (even when the session
-    defaults to dynamic partition overwrite), so a stale bucket is
-    neither listed nor read — with runs pending or after compaction."""
+    overwrites the whole dir it writes (an unpartitioned write, so a
+    session default of dynamic partition overwrite has no say), so a
+    stale bucket is never read — with runs pending or after compaction."""
     import json
 
     state_dir = str(tmp_path / "state")

@@ -10,6 +10,16 @@ from creek_spark.config import Config
 from tests.fixtures import ENV_SCHEMA, OTHER_EXPECTED, ROW_SCHEMA, other_wal_events
 
 
+def _state(spark, wal: str, base: str) -> dict:
+    """public.other's state as the daemon left it, read the way its
+    readers do: through DynamicTables.state, which resolves the store's
+    files by its manifest."""
+    from creek_spark.streaming.tables import DynamicTables
+
+    st = DynamicTables(spark, wal, base).state("public.other")
+    return {r["id"]: r["data"] for r in st.select("id", "data").collect()}
+
+
 def test_config_env_and_flag_override():
     env = {
         "CREEK_WAL_DIR": "/w",
@@ -59,13 +69,7 @@ def test_daemon_available_now_end_to_end(spark, tmp_path):
         {"CREEK_WAL_DIR": wal, "CREEK_BASE_DIR": base},
     )
     assert rc == 0
-    got = {
-        r["id"]: r["data"]
-        for r in spark.read.parquet(base + "/state/public_other")
-        .select("id", "data")
-        .collect()
-    }
-    assert got == OTHER_EXPECTED
+    assert _state(spark, wal, base) == OTHER_EXPECTED
 
 
 def test_daemon_no_tables_is_error(spark, tmp_path):
@@ -209,13 +213,7 @@ def test_daemon_transcript_ingestion_end_to_end(spark, tmp_path):
         {"CREEK_WAL_DIR": wal, "CREEK_BASE_DIR": base},
     )
     assert rc == 0
-    got = {
-        r["id"]: r["data"]
-        for r in spark.read.parquet(base + "/state/public_other")
-        .select("id", "data")
-        .collect()
-    }
-    assert got == {1: "uno"}
+    assert _state(spark, wal, base) == {1: "uno"}
 
     # re-run: resume state makes the ingest a no-op, state unchanged
     rc2 = main(
@@ -223,13 +221,7 @@ def test_daemon_transcript_ingestion_end_to_end(spark, tmp_path):
         {"CREEK_WAL_DIR": wal, "CREEK_BASE_DIR": base},
     )
     assert rc2 == 0
-    got2 = {
-        r["id"]: r["data"]
-        for r in spark.read.parquet(base + "/state/public_other")
-        .select("id", "data")
-        .collect()
-    }
-    assert got2 == {1: "uno"}
+    assert _state(spark, wal, base) == {1: "uno"}
 
 
 def test_daemon_live_walsender_socket_end_to_end(spark, tmp_path):
@@ -264,13 +256,7 @@ def test_daemon_live_walsender_socket_end_to_end(spark, tmp_path):
             },
         )
         assert rc == 0
-        got = {
-            r["id"]: r["data"]
-            for r in spark.read.parquet(str(tmp_path / "cdc/state/public_other"))
-            .select("id", "data")
-            .collect()
-        }
-        assert got == {5: "cinq"}
+        assert _state(spark, str(tmp_path / "wal"), str(tmp_path / "cdc")) == {5: "cinq"}
         # the daemon really spoke the protocol: startup + slot in the query
         assert any(r[0] == "startup" for r in srv.received)
         assert any(

@@ -141,7 +141,7 @@ def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
 
     def base_files():
         return {k: v for k, v in _parquet_file_hashes(state_dir).items()
-                if "creek_bucket=" in k}
+                if os.sep + "_run" + os.sep not in k}
 
     _write_batch(spark, other_wal_events(), src)
     q = applier.start(read_envelope_stream(spark, src, ENV_SCHEMA), ckpt)
@@ -152,6 +152,7 @@ def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
 
     before = base_files()
     before_all = set(_parquet_file_hashes(state_dir))
+    buckets_before = manifest()["buckets"]
     # batch 2: update only id=1
     _write_batch(spark, [wal_row(20, "u", before=(1,), after=(1, "one-v4"))], src)
     q2 = applier.start(read_envelope_stream(spark, src, ENV_SCHEMA), ckpt)
@@ -170,18 +171,138 @@ def test_cdc_applier_rewrites_only_touched_buckets(spark, tmp_path):
     assert manifest()["runs"] == []
     assert state_dict(applier.current_state().select("id", "data")) == st2
     after = base_files()
-    touched_bucket = spark.range(1).select(
+    buckets_after = manifest()["buckets"]
+    touched_bucket = str(spark.range(1).select(
         F.pmod(F.xxhash64(F.lit(1).cast("int")), F.lit(n_buckets)).cast("int")
-    ).collect()[0][0]
-    prefix = f"creek_bucket={touched_bucket}{os.sep}"
-    untouched_before = {k: v for k, v in before.items() if prefix not in k}
-    untouched_after = {k: v for k, v in after.items() if prefix not in k}
+    ).collect()[0][0])
+    untouched_before = {b: v for b, v in buckets_before.items() if b != touched_bucket}
+    untouched_after = {b: v for b, v in buckets_after.items() if b != touched_bucket}
     assert untouched_before == untouched_after
     assert untouched_before  # sanity: other buckets actually exist
-    # the touched bucket was rewritten
-    assert {k: v for k, v in before.items() if prefix in k} != {
-        k: v for k, v in after.items() if prefix in k
+    # every earlier base file is still there, byte-identical
+    assert {k: after.get(k) for k in before} == before
+    # the touched bucket was rewritten, into a new dir holding it alone
+    new_dir = buckets_after[touched_bucket]
+    assert new_dir != buckets_before[touched_bucket]
+    new_files = set(after) - set(before)
+    assert new_files and all(k.startswith(new_dir + os.sep) for k in new_files)
+    rows = spark.read.parquet(os.path.join(state_dir, new_dir, "*.parquet"))
+    assert {r[0] for r in rows.select("creek_bucket").distinct().collect()} == {
+        int(touched_bucket)
     }
+
+
+def _apply_events(spark, applier, events, batch_id):
+    """Apply ``(lsn, op, before, after, toast)`` events as one batch."""
+    from tests.fixtures import wal_row
+
+    rows = [wal_row(lsn, op, before=b, after=a, toast=t) for lsn, op, b, a, t in events]
+    applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), batch_id)
+
+
+def test_superseded_rows_in_an_older_file_are_read_once(spark, tmp_path):
+    """A compaction writes every bucket into one dir; a one-key batch
+    and compact() then rewrite one bucket into a newer dir while the
+    older file still holds that bucket's superseded rows.  Reads with a
+    run pending and after each compaction return every key exactly
+    once, as the interpreter says."""
+    import json
+
+    from tests.fixtures import interpret
+
+    state_dir = str(tmp_path / "state")
+    applier = CdcApplier(spark, state_dir, ["id"], n_buckets=4)
+
+    def manifest():
+        with open(os.path.join(state_dir, "_manifest.json")) as f:
+            return json.load(f)
+
+    def check(events):
+        rows = applier.current_state().select("id", "data").collect()
+        assert len(rows) == len({r["id"] for r in rows})
+        assert {r["id"]: r["data"] for r in rows} == interpret(events)[0]
+
+    events = [(k, "c", None, (k, f"v{k}"), None) for k in range(1, 21)]
+    _apply_events(spark, applier, events, 0)
+    applier.compact()
+    first = manifest()["buckets"]
+    assert len(first) == 4 and len(set(first.values())) == 1
+    for i, key in enumerate((1, 2, 1)):
+        one = [(21 + i, "u", (key,), (key, f"v{21 + i}"), None)]
+        events += one
+        _apply_events(spark, applier, one, 1 + i)
+        check(events)  # a run pending
+        applier.compact()
+        check(events)
+    buckets = manifest()["buckets"]
+    assert len(set(buckets.values())) > 1  # the base spans dirs
+    assert {b for b, v in buckets.items() if v != first[b]}  # superseded in the first
+
+
+def test_cdc_state_in_the_hive_layout_is_refused_with_remedy(spark, tmp_path):
+    """State whose version dirs hold ``creek_bucket=<p>/`` partition dirs
+    (the older hive layout) is refused with its remedy by a read, by a
+    read with a run pending and by compaction — never read as empty."""
+    import json
+
+    state_dir = tmp_path / "state"
+    spark.createDataFrame(
+        [(1, "one", "0/1", 0), (2, "two", "0/2", 1)],
+        "id int, data string, _creek_lsn string, creek_bucket int",
+    ).write.partitionBy("creek_bucket").parquet(str(state_dir / "v000000001"))
+    (state_dir / "_manifest.json").write_text(json.dumps({
+        "version": 1, "buckets": {"0": "v000000001", "1": "v000000001"},
+        "runs": [], "retain": [], "touched": [], "truncate": False,
+    }))
+    applier = CdcApplier(spark, str(state_dir), ["id"], n_buckets=2)
+    remedy = "creek_bucket=<value> partition dirs.*replay from the checkpoint"
+    with pytest.raises(ValueError, match=remedy):
+        applier.current_state()
+    # a run publishes without reading the base; its fold then refuses
+    _apply_events(spark, applier, [(3, "u", (1,), (1, "one-v2"), None)], 0)
+    with pytest.raises(ValueError, match=remedy):
+        applier.current_state()
+    with pytest.raises(ValueError, match=remedy):
+        applier.compact()
+
+
+def test_compaction_writes_one_file_per_write_task(spark, tmp_path):
+    """A compaction writes data-sized files, not one per bucket: no more
+    data files than its write job has tasks (n_buckets here exceeds the
+    session's shuffle partitions), and no existing base file changes."""
+    import json
+
+    state_dir = str(tmp_path / "state")
+    n_buckets = 16
+    applier = CdcApplier(spark, state_dir, ["id"], n_buckets=n_buckets)
+    _apply_events(spark, applier,
+                  [(k, "c", None, (k, f"v{k}"), None) for k in range(1, 201)], 0)
+    applier.compact()
+    before = {k: v for k, v in _parquet_file_hashes(state_dir).items()
+              if os.sep + "_run" + os.sep not in k}
+    _apply_events(spark, applier,
+                  [(200 + k, "u", (k,), (k, f"w{k}"), None) for k in range(1, 201)], 1)
+
+    sc = spark.sparkContext
+    group = f"compaction-{id(applier)}"
+    sc.setJobGroup(group, "compaction under test")
+    try:
+        applier.compact()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    tasks = tracker.getStageInfo(max(write_job.stageIds)).numTasks
+
+    with open(os.path.join(state_dir, "_manifest.json")) as f:
+        buckets = json.load(f)["buckets"]
+    (vdir,) = set(buckets.values())
+    assert len(buckets) == n_buckets
+    files = [k for k in _parquet_file_hashes(os.path.join(state_dir, vdir))
+             if os.sep + "_run" + os.sep not in k]
+    assert 1 <= len(files) <= tasks < n_buckets
+    after = _parquet_file_hashes(state_dir)
+    assert {k: after.get(k) for k in before} == before
 
 
 def test_cdc_truncate_inside_a_pending_run(spark, tmp_path):
@@ -324,25 +445,23 @@ def test_cdc_applier_takes_no_envelope_schema(spark, tmp_path):
 
 
 def test_concurrent_store_reads_restore_the_discovery_threshold(spark, tmp_path):
-    """Store reads raise Spark's parallel-discovery threshold while they
-    list; reads from several threads at once (one query per table,
-    concurrent readers) still leave the session's own value in place."""
+    """Store reads from several threads at once (one query per table,
+    concurrent readers) return the same rows and leave the session's
+    conf as they found it."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from creek_spark.streaming.versioned import _DISCOVERY_THRESHOLD
-    from tests.fixtures import wal_row
-
     applier = CdcApplier(spark, str(tmp_path / "state"), ["id"], ENV_SCHEMA, n_buckets=4)
-    applier.apply_batch(spark.createDataFrame(
-        [wal_row(i, "c", after=(i, f"v{i}")) for i in range(1, 9)], schema=ENV_SCHEMA), 0)
+    _apply_events(spark, applier,
+                  [(i, "c", None, (i, f"v{i}"), None) for i in range(1, 9)], 0)
     applier.compact()
-    applier.apply_batch(spark.createDataFrame(
-        [wal_row(9, "u", before=(1,), after=(1, "v9"))], schema=ENV_SCHEMA), 1)
-    assert spark.conf.get(_DISCOVERY_THRESHOLD, None) is None
+    _apply_events(spark, applier, [(9, "u", (1,), (1, "v9"), None)], 1)
+    conf = spark.conf.getAll
     with ThreadPoolExecutor(4) as pool:
         frames = list(pool.map(lambda _: applier.current_state(), range(12)))
-    assert spark.conf.get(_DISCOVERY_THRESHOLD, None) is None
-    assert state_dict(frames[-1].select("id", "data"))[1] == "v9"
+    assert spark.conf.getAll == conf
+    rows = [sorted(map(tuple, f.select("id", "data", "_creek_lsn").collect())) for f in frames]
+    assert all(r == rows[0] for r in rows)
+    assert dict(r[:2] for r in rows[0])[1] == "v9"
 
 
 def test_cdc_applier_delete_empties_bucket(spark, tmp_path):

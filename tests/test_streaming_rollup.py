@@ -114,6 +114,43 @@ def test_old_layout_manifest_fails_with_remedy(spark, tmp_path):
         sink.current()
 
 
+def test_hive_layout_state_fails_with_remedy(spark, tmp_path):
+    """State whose version dirs hold ``day=<p>/`` partition dirs (the
+    older hive layout) is refused with its remedy by a read and by a
+    batch that touches it, which commits nothing."""
+    sink = _sink(spark, tmp_path)
+    spark.createDataFrame(
+        [("2024-01-01", "2024-01-01 10:00:00", "view", 1, 5)],
+        "day string, hour string, event_type string, bin long, n long",
+    ).write.partitionBy("day").parquet(os.path.join(sink.state_dir, "v000000001"))
+    with open(os.path.join(sink.state_dir, "_manifest.json"), "w") as f:
+        json.dump({"version": 1, "buckets": {"2024-01-01": "v000000001"},
+                   "runs": [], "retain": [], "last_batch_id": 0}, f)
+    remedy = "day=<value> partition dirs.*replay from the checkpoint"
+    with pytest.raises(ValueError, match=remedy):
+        sink.current()
+    tier = spark.createDataFrame(
+        [("2024-01-01", "2024-01-01 11:00:00", "view", 2, 3)],
+        "day string, hour string, event_type string, bin long, n long",
+    )
+    with pytest.raises(ValueError, match=remedy):
+        sink.apply_batch(tier, 1)
+    assert sink.last_batch_id() == 0
+
+
+def test_null_partition_value_is_refused(spark, tmp_path):
+    """A NULL partition value has no manifest key: the batch raises and
+    commits nothing instead of writing rows no read would return."""
+    sink = _sink(spark, tmp_path)
+    tier = spark.createDataFrame(
+        [(None, "2024-01-01 11:00:00", "view", 2, 3)],
+        "day string, hour string, event_type string, bin long, n long",
+    )
+    with pytest.raises(ValueError, match="NULL 'day'"):
+        sink.apply_batch(tier, 0)
+    assert sink.last_batch_id() == -1 and sink.current() is None
+
+
 @pytest.mark.slow
 def test_quantiles_from_streamed_rollup_match_batch(spark, sf_dir, tmp_path):
     """End-to-end: quantiles computed from the streamed tier equal those

@@ -6,17 +6,20 @@ compaction, so it cannot tell a cheaper apply from compaction landing
 outside the window.  This probe drains N batches through the same
 stage + trigger path (`perfbench/cdc.py` `Pipeline`), times every
 `CdcApplier.apply_batch` call (compactions included: they run inside
-the call that publishes the eighth pending run), then checks the final
-state against `perfbench/wal.interpret`.
+the call that publishes the eighth pending run) and every compaction
+on its own, in wall seconds and in process-tree CPU seconds (driver,
+JVM and Python workers: `perfbench/run.py` `_cpu_s`, the benchmark's
+CPU unit), then checks the final state against `perfbench/wal.interpret`.
 
     python tools/drain_probe.py [--repo PATH] [--batches 17] [--seed 1]
 
 ``--repo`` measures another checkout (a parent commit, say) with the
 same script: its `creek_spark` and `perfbench` are imported.  Prints
-one JSON line: per-batch apply seconds (the warm chunk excluded), their
-mean and median, the (version, pending runs) of the manifest after each
-batch, the compactions seen, the final read time and whether the state
-matched.  Set SPARK_GRAFT_CPUS to pin the local core count.
+one JSON line: per-batch apply wall and CPU seconds (the warm chunk
+excluded) with their means and medians, the (version, pending runs) of
+the manifest after each batch, each compaction's wall and CPU seconds,
+the final read time and whether the state matched.  Set
+SPARK_GRAFT_CPUS to pin the local core count.
 """
 
 from __future__ import annotations
@@ -59,15 +62,21 @@ def main(argv: list[str] | None = None) -> int:
         pipe = cdc.Pipeline(ctx, os.path.join(tmp, "pipeline"))
         cdc.preload_state(spark, pipe.applier, live)
 
-        times: list[float] = []
-        inner = pipe.applier.apply_batch
+        def timed(fn, out: list):
+            """``fn`` recording (wall s, CPU s) of each call into ``out``."""
+            def call(*a):
+                t0, c0 = time.perf_counter(), prun._cpu_s(spark)
+                got = fn(*a)
+                out.append((time.perf_counter() - t0, prun._cpu_s(spark) - c0))
+                return got
+            return call
 
-        def timed(batch, batch_id):
-            t0 = time.perf_counter()
-            inner(batch, batch_id)
-            times.append(time.perf_counter() - t0)
-
-        pipe.applier.apply_batch = timed
+        applies: list[tuple[float, float]] = []
+        compactions: list[tuple[float, float]] = []
+        pipe.applier.apply_batch = timed(pipe.applier.apply_batch, applies)
+        compact = timed(pipe.applier._compact, compactions)
+        # a call with no run pending returns at once and is not counted
+        pipe.applier._compact = lambda m: compact(m) if m and m.get("runs") else m
         manifest_path = os.path.join(pipe.applier.state_dir, "_manifest.json")
         start = applied = 0
         versions = []
@@ -84,17 +93,20 @@ def main(argv: list[str] | None = None) -> int:
                for r in pipe.applier.current_state().select("id", *wal.VALUE_COLS).collect()}
         read_s = time.perf_counter() - t0
         bad = wal.state_mismatches(wal.interpret(tr.changes[:applied], initial), got)
-        drain = times[1:]  # the warm chunk's apply is excluded
+        wall, cpu = zip(*applies[1:])  # the warm chunk's apply is excluded
         print(json.dumps({
             "repo": repo,
-            "batches": len(drain),
-            "mean_apply_s": round(statistics.mean(drain), 3),
-            "median_apply_s": round(statistics.median(drain), 3),
-            "apply_s": [round(t, 2) for t in drain],
+            "batches": len(wall),
+            "mean_apply_s": round(statistics.mean(wall), 3),
+            "median_apply_s": round(statistics.median(wall), 3),
+            "mean_apply_cpu_s": round(statistics.mean(cpu), 3),
+            "median_apply_cpu_s": round(statistics.median(cpu), 3),
+            "apply_s": [round(t, 2) for t in wall],
+            "apply_cpu_s": [round(t, 2) for t in cpu],
             "manifest_version_runs": versions,
-            # a compaction publishes with no run pending
-            "compactions": sum(1 for (_, r0), (_, r1) in zip(versions, versions[1:])
-                               if r0 and r1 <= r0),
+            "compactions": len(compactions),
+            "compaction_s": [round(w, 2) for w, _ in compactions],
+            "compaction_cpu_s": [round(c, 2) for _, c in compactions],
             "final_read_s": round(read_s, 3),
             "state_ok": not bad,
         }))
