@@ -5,9 +5,10 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-The catalog itself lives in creek_spark.queries and its parts
-(queries_ext, queries_northstar, ...); ``creek_spark.queries.catalog()``
-imports them in order, populating the registry.
+The catalog itself lives in creek_spark.queries (the registry) and its
+domain modules (queries_relational, queries_cdc, ...);
+``creek_spark.queries.catalog()`` imports them in order, populating the
+registry.
 """
 
 from __future__ import annotations

@@ -155,7 +155,7 @@ def triangle_corner_counts(e: DataFrame) -> DataFrame:
     set ``e`` (columns u, v with u < v, distinct) — the degree-oriented
     distributed algorithm (edges oriented from the (degree, id)-smaller
     endpoint bound the wedge join at m^{3/2}; each triangle found
-    exactly once; see queries_r6c.graph_triangles for the full scale
+    exactly once; see queries_graph.graph_triangles for the full scale
     argument).  Returns (n, n_triangles).  ``e`` should be a registered
     cache/persisted frame — it feeds several joins.
 
@@ -211,7 +211,7 @@ def common_neighbor_pairs(e: DataFrame, *, max_deg: int) -> DataFrame:
     """Common-neighbor counts + neighborhood Jaccard for NON-adjacent
     node pairs of the undirected edge set ``e`` (u < v, distinct);
     centers with degree > ``max_deg`` are skipped (hub cap — Σ deg²
-    bound; see queries_r6c.graph_common_neighbors).  Returns
+    bound; see queries_graph.graph_common_neighbors).  Returns
     (part_a, part_b, common_neighbors, jaccard)."""
     from creek_spark.operators.cachereg import register_cache
 

@@ -1,10 +1,10 @@
-"""Query catalog, part 2: scalar functions, CDC reconstruction, streaming
-windows, and the training-data-pipeline operators (dedup / similarity /
-text analysis / multimodal).  Same determinism rules as queries.py.
+"""Catalog domain: CDC reconstruction and streaming shapes.  The
+`events` table is mapped to a WAL envelope (query_parts.events_envelope)
+and replayed through the real operators: latest state, changelog stats,
+SCD2 history (full and incremental), incremental MV, snapshot diff and
+time travel; plus the batch-equivalent streaming windowed aggregation.
 
-The md5-based dedup/similarity SQL is generated programmatically from the
-same parameters the Spark operators use, guaranteeing parity by
-construction.
+Same determinism rules as queries.py.
 """
 
 from __future__ import annotations
@@ -12,171 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from creek_spark.queries import QUERIES, _t, dec, dsum, register
-
-# Shared SQL fragments (must mirror creek_spark.functions.text exactly)
-SQL_NORM = "trim(regexp_replace(lower({c}), '[^a-z0-9]+', ' ', 'g'))"
-SQL_TOKENS = "string_split_regex(" + SQL_NORM + ", '\\s+')"
-
-
-# =====================================================================
-# scalar functions
-# =====================================================================
-
-
-@register(
-    "scalar_string_math",
-    """
-    SELECT p_partkey,
-           upper(p_name) AS up_name,
-           CAST(length(p_name) AS INTEGER) AS name_len,
-           substr(p_name, 1, 10) AS name10,
-           concat_ws('-', p_brand, p_type) AS brand_type,
-           replace(p_name, 'a', '@') AS replaced,
-           lpad(p_brand, 12, '*') AS padded,
-           regexp_extract(p_name, '^[a-z]+') AS first_word,
-           CAST(len(string_split(p_name, ' ')) AS INTEGER) AS n_words,
-           abs(p_retailprice - 1000.0) AS abs_price_dev,
-           CAST(ceil(p_retailprice) AS BIGINT) AS price_ceil,
-           CAST(floor(p_retailprice) AS BIGINT) AS price_floor,
-           sqrt(CAST(p_size AS DOUBLE)) AS sqrt_size,
-           CAST(p_partkey % 5 AS BIGINT) AS mod5,
-           CAST(p_size * p_size AS INTEGER) AS size_sq
-    FROM part
-    """,
-    "scalar",
-)
-def scalar_string_math(spark, sf_dir):
-    """String + math scalar families in one wide projection (all JVM
-    built-ins, whole-stage codegen)."""
-    p = _t(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.upper("p_name").alias("up_name"),
-        F.length("p_name").alias("name_len"),
-        F.substring("p_name", 1, 10).alias("name10"),
-        F.concat_ws("-", "p_brand", "p_type").alias("brand_type"),
-        F.regexp_replace("p_name", "a", "@").alias("replaced"),
-        F.lpad("p_brand", 12, "*").alias("padded"),
-        F.regexp_extract("p_name", "^[a-z]+", 0).alias("first_word"),
-        F.size(F.split(F.col("p_name"), " ", -1)).alias("n_words"),
-        F.abs(F.col("p_retailprice") - 1000.0).alias("abs_price_dev"),
-        F.ceil("p_retailprice").alias("price_ceil"),
-        F.floor("p_retailprice").alias("price_floor"),
-        F.sqrt(F.col("p_size").cast("double")).alias("sqrt_size"),
-        (F.col("p_partkey") % 5).alias("mod5"),
-        (F.col("p_size") * F.col("p_size")).alias("size_sq"),
-    )
-
-
-@register(
-    "scalar_date_json",
-    """
-    SELECT event_id,
-           CAST(year(ts) AS INTEGER) AS yr,
-           CAST(month(ts) AS INTEGER) AS mo,
-           CAST(day(ts) AS INTEGER) AS dom,
-           date_trunc('day', ts) AS day_start,
-           CAST(date_diff('day', CAST(ts AS DATE), DATE '2026-01-01') AS INTEGER) AS days_to_end,
-           last_day(CAST(ts AS DATE)) AS month_end,
-           json_extract_string(props, '$.k') AS k_str,
-           CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_int
-    FROM events
-    """,
-    "scalar",
-)
-def scalar_date_json(spark, sf_dir):
-    """Date/time + JSON scalar families over the events stream table."""
-    ev = _t(spark, sf_dir, "events")
-    k_str = F.get_json_object("props", "$.k")
-    return ev.select(
-        "event_id",
-        F.year("ts").alias("yr"),
-        F.month("ts").alias("mo"),
-        F.dayofmonth("ts").alias("dom"),
-        F.date_trunc("day", "ts").alias("day_start"),
-        F.datediff(F.lit("2026-01-01").cast("date"), F.to_date("ts")).alias(
-            "days_to_end"
-        ),
-        F.last_day(F.to_date("ts")).alias("month_end"),
-        k_str.alias("k_str"),
-        k_str.cast("int").alias("k_int"),
-    )
-
-
-@register(
-    "scalar_array_map",
-    """
-    SELECT vec_id,
-           CAST(len(embedding) AS INTEGER) AS dim,
-           CAST(embedding[1] AS DOUBLE) AS first_val,
-           CAST(embedding[1] AS DOUBLE) + CAST(embedding[2] AS DOUBLE)
-             + CAST(embedding[3] AS DOUBLE) + CAST(embedding[4] AS DOUBLE) AS first4_sum,
-           CAST(list_aggregate(embedding, 'max') AS DOUBLE) AS max_val,
-           CAST(len(embedding) AS DOUBLE) AS m_dim,
-           CAST(list_aggregate(embedding, 'max') AS DOUBLE) AS m_maxv,
-           'dim,maxv' AS m_keys,
-           2 AS m_size
-    FROM embeddings
-    """,
-    "scalar",
-)
-def scalar_array_map(spark, sf_dir):
-    """Array + map scalar families.  The map columns are built with Spark
-    map_* functions (map_from_arrays → element_at / map_keys / size) and
-    verified by value: building a map and extracting its entries must
-    round-trip, so the oracle states the extracted values directly (DuckDB
-    MAP internals differ; the *values* are engine-neutral)."""
-    e = _t(spark, sf_dir, "embeddings")
-    el = lambda i: F.element_at("embedding", i).cast("double")
-    m = F.map_from_arrays(
-        F.array(F.lit("dim"), F.lit("maxv")),
-        F.array(
-            F.size("embedding").cast("double"),
-            F.array_max("embedding").cast("double"),
-        ),
-    )
-    return e.select(
-        "vec_id",
-        F.size("embedding").alias("dim"),
-        el(1).alias("first_val"),
-        (el(1) + el(2) + el(3) + el(4)).alias("first4_sum"),
-        F.array_max("embedding").cast("double").alias("max_val"),
-        F.element_at(m, F.lit("dim")).alias("m_dim"),
-        F.element_at(m, F.lit("maxv")).alias("m_maxv"),
-        F.array_join(F.map_keys(m), ",").alias("m_keys"),
-        F.size(m).alias("m_size"),
-    )
-
-
-# =====================================================================
-# CDC (the reference's core semantics, oracle-checked on driver data)
-# =====================================================================
-
-
-def _events_envelope(ev):
-    """Map the events table to a WAL envelope (error → delete, else
-    upsert; lsn from event_id) — the deterministic change stream the CDC
-    catalog entries replay through the real operators."""
-    return ev.select(
-        F.lit("fp-events").alias("fingerprint"),
-        F.struct(
-            F.lit("creek").alias("name"),
-            F.col("ts").alias("tx_at"),
-            F.lit("db").alias("db"),
-            F.lit("public").alias("schema"),
-            F.lit("events").alias("table"),
-            F.col("event_id").alias("tx_id"),
-            F.concat(F.lit("0/"), F.upper(F.hex("event_id"))).alias("lsn"),
-        ).alias("source"),
-        F.when(F.col("event_type") == "error", "d").otherwise("u").alias("op"),
-        F.col("ts").alias("sent_at"),
-        F.struct(F.col("user_id")).alias("before"),
-        F.when(F.col("event_type") == "error", F.lit(None)).otherwise(
-            F.struct("user_id", "event_type", "ts", "value")
-        ).alias("after"),
-        F.lit(None).cast("array<string>").alias("unchanged_toast"),
-    )
+from creek_spark.queries import _t, dsum, register
+from creek_spark.query_parts import events_envelope
 
 
 @register(
@@ -199,7 +36,7 @@ def cdc_latest_state(spark, sf_dir):
     per-key LSN ordering, one shuffle (SURVEY.md §7 step 2)."""
     from creek_spark.operators.cdc import latest_state
 
-    env = _events_envelope(_t(spark, sf_dir, "events"))
+    env = events_envelope(_t(spark, sf_dir, "events"))
     # this envelope never marks TOAST columns and only emits u/d ops →
     # skip the carry-forward pass AND the truncate-watermark scan (which
     # costs a full extra pass over the stream to find 't' rows that
@@ -362,7 +199,7 @@ def cdc_scd2_history(spark, sf_dir):
     rows with an is_current flag — same single per-key window shuffle."""
     from creek_spark.operators.cdc import scd2_history
 
-    env = _events_envelope(_t(spark, sf_dir, "events"))
+    env = events_envelope(_t(spark, sf_dir, "events"))
     return scd2_history(env, key_cols=["user_id"])
 
 
@@ -393,7 +230,7 @@ def cdc_incremental_mv(spark, sf_dir):
     whole log per batch is impossible."""
     from creek_spark.operators.cdc import incremental_latest_state
 
-    env = _events_envelope(_t(spark, sf_dir, "events"))
+    env = events_envelope(_t(spark, sf_dir, "events"))
     state = incremental_latest_state(
         env, 800, key_cols=["user_id"], handle_toast=False
     )
@@ -404,4 +241,171 @@ def cdc_incremental_mv(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
             dsum("value", "sum_value", 14, 2),
         )
+    )
+
+
+@register(
+    "cdc_snapshot_diff",
+    """
+    WITH old_s AS (
+      SELECT user_id, event_type, ts, value FROM (
+        SELECT user_id, event_type, ts, value,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY event_id DESC) AS rn
+        FROM events WHERE event_id <= 800) t
+      WHERE rn = 1 AND event_type <> 'error'),
+    new_s AS (
+      SELECT user_id, event_type, ts, value FROM (
+        SELECT user_id, event_type, ts, value,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY event_id DESC) AS rn
+        FROM events) t
+      WHERE rn = 1 AND event_type <> 'error')
+    SELECT COALESCE(o.user_id, n.user_id) AS user_id,
+           CASE WHEN o.user_id IS NULL THEN 'added'
+                WHEN n.user_id IS NULL THEN 'removed'
+                ELSE 'changed' END AS change,
+           o.event_type AS old_event_type, n.event_type AS new_event_type,
+           o.value AS old_value, n.value AS new_value
+    FROM old_s o FULL OUTER JOIN new_s n ON o.user_id = n.user_id
+    WHERE o.user_id IS NULL OR n.user_id IS NULL
+       OR o.event_type IS DISTINCT FROM n.event_type
+       OR o.ts IS DISTINCT FROM n.ts
+       OR o.value IS DISTINCT FROM n.value
+    """,
+    "cdc",
+)
+def cdc_snapshot_diff(spark, sf_dir):
+    """Snapshot diff: classify every key as added/removed/changed between
+    the state at LSN 800 and the current state (reference consumers diff
+    successive snapshots to audit replication; the engine computes it as
+    one full-outer join of two latest_state materializations).  At 100 TB
+    both sides are key-partitioned state tables, so the join co-locates;
+    unchanged keys (the overwhelming majority) are filtered pre-output."""
+    from creek_spark.operators.cdc import latest_state
+    from creek_spark.functions.lsn import lsn_num
+
+    env = events_envelope(_t(spark, sf_dir, "events"))
+    num = lsn_num(F.col("source.lsn"))
+    old_s = latest_state(env.filter(num <= 800), ["user_id"], handle_toast=False)
+    new_s = latest_state(env, ["user_id"], handle_toast=False)
+    o = old_s.select(
+        F.col("user_id").alias("o_uid"),
+        F.col("event_type").alias("old_event_type"),
+        F.col("ts").alias("o_ts"),
+        F.col("value").alias("old_value"),
+    )
+    n = new_s.select(
+        F.col("user_id").alias("n_uid"),
+        F.col("event_type").alias("new_event_type"),
+        F.col("ts").alias("n_ts"),
+        F.col("value").alias("new_value"),
+    )
+    j = o.join(n, o.o_uid == n.n_uid, "full_outer")
+    differs = (
+        o.o_uid.isNull()
+        | n.n_uid.isNull()
+        | ~F.col("old_event_type").eqNullSafe(F.col("new_event_type"))
+        | ~F.col("o_ts").eqNullSafe(F.col("n_ts"))
+        | ~F.col("old_value").eqNullSafe(F.col("new_value"))
+    )
+    change = (
+        F.when(o.o_uid.isNull(), "added")
+        .when(n.n_uid.isNull(), "removed")
+        .otherwise("changed")
+    )
+    return j.where(differs).select(
+        F.coalesce(o.o_uid, n.n_uid).alias("user_id"),
+        change.alias("change"),
+        "old_event_type",
+        "new_event_type",
+        "old_value",
+        "new_value",
+    )
+
+
+@register(
+    "cdc_scd2_incremental",
+    """
+    WITH ch AS (
+      SELECT user_id, event_id,
+             CASE WHEN event_type = 'error' THEN 'd' ELSE 'u' END AS op,
+             ts, event_type, value
+      FROM events)
+    SELECT user_id, op,
+           CAST(event_id AS BIGINT) AS lsn_num,
+           ts AS valid_from,
+           lead(ts) OVER w AS valid_to,
+           (lead(ts) OVER w IS NULL AND op <> 'd') AS is_current,
+           CASE WHEN op = 'd' THEN NULL ELSE event_type END AS event_type,
+           CASE WHEN op = 'd' THEN NULL ELSE ts END AS ts,
+           CASE WHEN op = 'd' THEN NULL ELSE value END AS value
+    FROM ch
+    WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
+    """,
+    "cdc",
+)
+def cdc_scd2_incremental(spark, sf_dir):
+    """SCD2 history maintained incrementally across the LSN-800 batch
+    boundary: recompute history only for keys the batch touches, carry
+    the rest — and hash-match the FULL-recompute oracle, proving the
+    maintenance is lossless (the versioned-history twin of
+    cdc_incremental_mv).  Touched keys broadcast into the anti/semi
+    joins; the carried history is never shuffled."""
+    from creek_spark.operators.cdc import incremental_scd2
+
+    env = events_envelope(_t(spark, sf_dir, "events"))
+    return incremental_scd2(env, 800, key_cols=["user_id"])
+
+
+@register(
+    "cdc_time_travel",
+    """
+    WITH ch AS (
+      SELECT user_id, event_id,
+             CASE WHEN event_type = 'error' THEN 'd' ELSE 'u' END AS op,
+             ts, event_type, value
+      FROM events),
+    h AS (
+      SELECT user_id, op, ts AS valid_from,
+             lead(ts) OVER w AS valid_to,
+             event_type, ts, value
+      FROM ch
+      WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
+    tm AS (SELECT make_timestamp((epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2)
+                    AS tmid
+           FROM events)
+    SELECT user_id, event_type, ts, value, valid_from
+    FROM h, tm
+    WHERE op <> 'd' AND valid_from <= tmid
+      AND (valid_to IS NULL OR valid_to > tmid)
+    """,
+    "cdc",
+)
+def cdc_time_travel(spark, sf_dir):
+    """Time travel: the table state AS OF the stream's midpoint instant,
+    answered from the SCD2 history (the warehouse pattern: one versioned
+    materialization serves every point-in-time query, no log replay).
+    The probe instant is derived from the data (midpoint of the ts
+    range) so the query is scale-factor agnostic.  Plan: the scd2
+    per-key window shuffle + a 1-row broadcast of the probe timestamp —
+    the interval predicate is a per-row filter, no second exchange."""
+    from creek_spark.operators.cdc import scd2_history
+
+    ev = _t(spark, sf_dir, "events")
+    env = events_envelope(ev)
+    hist = scd2_history(env, key_cols=["user_id"])
+    tm = ev.agg(
+        F.timestamp_micros(
+            F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2")
+        ).alias("tmid")
+    )
+    return (
+        hist.crossJoin(F.broadcast(tm))
+        .where(
+            (F.col("op") != "d")
+            & (F.col("valid_from") <= F.col("tmid"))
+            & (F.col("valid_to").isNull() | (F.col("valid_to") > F.col("tmid")))
+        )
+        .select("user_id", "event_type", "ts", "value", "valid_from")
     )

@@ -1,8 +1,8 @@
-"""Query catalog, part 4: the classic TPC-H query shapes, adapted to the
+"""Catalog domain: the classic TPC-H query shapes, adapted to the
 driver's leaner star schema (no partsupp table; no commit/receipt dates,
 phone, or comment columns — filters are re-targeted onto columns that
-exist).  Together with q1/q3/q5 in queries.py this covers the decision-
-support shapes: exists/not-exists semi-joins, correlated scalar
+exist).  Together with q1/q3/q5 in queries_relational this covers the
+decision-support shapes: exists/not-exists semi-joins, correlated scalar
 subqueries, disjunctive multi-column predicates, left-join histograms,
 having-filtered in-subqueries, ratio-of-sums reports, and argmax rows.
 
@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from creek_spark.plans import broadcast_if_small
 from creek_spark.queries import _t, dec, register
+
 
 def _revenue():
     one = F.lit(1).cast("decimal(4,2)")

@@ -44,6 +44,7 @@ from __future__ import annotations
 import os
 import struct
 import uuid
+from collections import deque
 
 from pyspark.sql import types as T
 
@@ -51,6 +52,11 @@ from creek_spark import fsio
 from creek_spark.sources.pgoutput import PgOutputDecoder, lsn_str
 
 _STATE_FILE = "walsender_lsn"
+
+# frontend messages a transport keeps in ``sent``/``sent_raw``: a session
+# streaming for as long as the primary does holds the latest ones, not
+# one record per standby status forever
+MAX_SENT = 256
 
 
 def parse_lsn(text: str) -> int:
@@ -156,12 +162,12 @@ def check_slot_name(name: str) -> str:
 class TranscriptTransport:
     """Replay a recorded replication session file; collect sent frames.
 
-    ``sent`` holds every frontend message the session wrote:
-    ``("start", lsn)`` markers for START_REPLICATION, ``("status",
-    write, flush, apply, reply)`` for standby status updates, and
-    ``("copydone",)`` — enough for tests to assert protocol behavior
-    without a byte-level frontend codec (the 'r' frame bytes are also
-    kept in ``sent_raw``)."""
+    ``sent`` holds the last ``MAX_SENT`` frontend messages the session
+    wrote: ``("start", lsn)`` markers for START_REPLICATION,
+    ``("status", write, flush, apply, reply)`` for standby status
+    updates, and ``("copydone",)`` — enough for tests to assert protocol
+    behavior without a byte-level frontend codec (the last ``MAX_SENT``
+    'r' frames' bytes are kept in ``sent_raw``)."""
 
     def __init__(self, path: str):
         with open(path) as f:
@@ -170,8 +176,8 @@ class TranscriptTransport:
                 for ln in f
                 if ln.strip() and not ln.strip().startswith("#")
             ]
-        self.sent: list[tuple] = []
-        self.sent_raw: list[bytes] = []
+        self.sent: deque[tuple] = deque(maxlen=MAX_SENT)
+        self.sent_raw: deque[bytes] = deque(maxlen=MAX_SENT)
 
     def frames(self):
         yield from self.lines
@@ -637,8 +643,9 @@ class SocketTransport:
         self.user, self.database = user, database
         self.slot, self.publication = slot, publication
         self.sock = None
-        self.sent: list[tuple] = []  # observability parity with transcripts
-        self.sent_raw: list[bytes] = []
+        # observability parity with transcripts (last MAX_SENT each)
+        self.sent: deque[tuple] = deque(maxlen=MAX_SENT)
+        self.sent_raw: deque[bytes] = deque(maxlen=MAX_SENT)
         # tryConnect parity (replication.go:583-599): on connection loss
         # the client redials with backoff; the reference retries forever,
         # a library bounds it and surfaces the failure

@@ -6,7 +6,7 @@ sinks commit through.
                                     "retain": ["vdir", "vdir/_run", ...],
                                     ...}
     state_dir/v00000000N/part-*.parquet              base files
-    state_dir/v00000000N/_run/part-*.parquet         one delta run
+    state_dir/v00000000N/_run/data/part-*.parquet    one delta run
 
 State is a *base* keyed by one caller-chosen part column ``<col>``,
 plus an ordered list of unpartitioned delta *runs* the caller folds
@@ -28,10 +28,15 @@ Readers resolve files through the manifest only, so a reader sees the
 whole old state or the whole new state, never a mix, and an orphan
 version dir left by a crash between write and publish is invisible.
 Run dirs are underscore-named, which Spark's file listing treats as
-hidden.  Everything the previous manifest named survives one more
-publish (``retain``) so a reader that resolved it can still open its
-files — the vacuum analog.  Sinks add their own keys (a batch-id
-fence, say) beside the layout's.
+hidden, so a base read of a version dir never sees its run.  Every read
+hands Spark directories, never a glob: a lone glob path makes Spark
+probe the glob's literal name for a streaming-sink metadata dir, fail,
+and log the failure with a stack trace.  A run's files sit one level
+down, in ``_run/data``, because Spark also warns about a read whose
+root paths are all hidden-named.  Everything the previous manifest
+named survives one more publish (``retain``) so a reader that resolved
+it can still open its files — the vacuum analog.  Sinks add their own
+keys (a batch-id fence, say) beside the layout's.
 
 GC is manifest-driven and works per version dir: a publish deletes
 each dir the old manifest kept something of (live or retained) and the
@@ -57,6 +62,7 @@ from creek_spark import fsio
 
 MANIFEST = "_manifest.json"
 RUN = "_run"
+RUN_DATA = "data"
 _VDIR = re.compile(r"v\d{9}")
 
 # Driver round-trips in the sinks collect the DISTINCT partition/bucket
@@ -144,22 +150,19 @@ class VersionedStore:
         return df
 
     def _read_dir(self, ver: str) -> DataFrame:
-        """The base files of version dir ``ver``.  A dir holding
-        ``<part_col>=<p>/`` partition dirs instead is state in the older
-        hive layout: it is refused, never read as empty."""
+        """The base files of version dir ``ver``.  recursiveFileLookup
+        keeps partition discovery off, so files under ``<part_col>=<p>/``
+        partition dirs (the older hive layout) read without ``part_col``:
+        such state is refused, never read under made-up part values."""
         path = fsio.join(self.state_dir, ver)
-        try:
-            return self.spark.read.parquet(fsio.join(path, "*.parquet"))
-        except AnalysisException:
-            prefix = self.part_col + "="
-            if any(n.startswith(prefix) for n in fsio.list_names(self.spark, path)):
-                raise ValueError(
-                    f"{path} holds {prefix}<value> partition dirs: state "
-                    "written in an older layout, which this store does not "
-                    "read — delete the state dir and replay from the "
-                    "checkpoint"
-                ) from None
-            raise
+        df = self.spark.read.option("recursiveFileLookup", "true").parquet(path)
+        if self.part_col not in df.columns:
+            raise ValueError(
+                f"{path} holds {self.part_col}=<value> partition dirs: state "
+                "written in an older layout, which this store does not read "
+                "— delete the state dir and replay from the checkpoint"
+            )
+        return df
 
     @staticmethod
     def run_schema(manifest: dict | None) -> T.StructType | None:
@@ -173,22 +176,34 @@ class VersionedStore:
         """The pending runs of ``manifest`` as one DataFrame, in no
         particular row order (the caller's fold orders rows); None when
         there are none.  Read with the stored schema: no footer is
-        opened to infer it.  Spark is handed each run's part files, not
-        its dir: a root path named ``_run`` is hidden from its listing,
-        which it reports as a warning on every read."""
+        opened to infer it.  A run whose files sit directly in its
+        ``_run`` dir was written in the older layout: it is refused,
+        never read as empty."""
         schema = self.run_schema(manifest)
         if schema is None:
             return None
-        return self.spark.read.schema(schema).parquet(
-            *[fsio.join(self.state_dir, r, "*.parquet") for r in manifest["runs"]]
-        )
+        try:
+            return self.spark.read.schema(schema).parquet(
+                *[fsio.join(self.state_dir, r, RUN_DATA) for r in manifest["runs"]]
+            )
+        except AnalysisException:
+            for r in manifest["runs"]:
+                names = fsio.list_names(self.spark, fsio.join(self.state_dir, r))
+                if names and RUN_DATA not in names:
+                    raise ValueError(
+                        f"{self.state_dir}/{r} holds its files outside "
+                        f"{RUN_DATA}/: state written in an older layout, which "
+                        "this store does not read — delete the state dir and "
+                        "replay from the checkpoint"
+                    ) from None
+            raise
 
     def write_run(self, df: DataFrame, manifest: dict | None) -> str:
         """Write ``df`` as one unpartitioned run into the version dir the
         next :meth:`publish` will point at; returns the run's manifest
         entry.  Overwrite clears whatever a crashed attempt left there."""
         run = f"{_vdir(self._next_version(manifest))}/{RUN}"
-        df.write.mode("overwrite").parquet(fsio.join(self.state_dir, run))
+        df.write.mode("overwrite").parquet(fsio.join(self.state_dir, run, RUN_DATA))
         return run
 
     def write(self, df: DataFrame, manifest: dict | None) -> set:

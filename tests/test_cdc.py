@@ -183,10 +183,10 @@ def test_events_envelope_never_emits_truncate(spark, sf_dir):
     (every op on the driver events table is u or d)."""
     import re
 
-    from creek_spark.queries_ext import _events_envelope
+    from creek_spark.query_parts import events_envelope
     from creek_spark.sources import read_table
 
-    env = _events_envelope(read_table(spark, sf_dir, "events"))
+    env = events_envelope(read_table(spark, sf_dir, "events"))
     # expression shape: the op column must be a single two-arm CASE over
     # event_type whose only outcomes are 'd' and 'u' — a truncate arm
     # added behind a condition that happens to never fire on the driver

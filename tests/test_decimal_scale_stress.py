@@ -1,8 +1,8 @@
 """sf1+-regime certification of the >2^53 decimal-sum oracle hardening.
 
 The driver testdata stops at sf0.1, where q1's per-group sums sit below
-2^53 and the VARCHAR-routed decimal→double oracle (queries.py q1,
-queries_r4 profile_correlations) is indistinguishable from DuckDB's
+2^53 and the VARCHAR-routed decimal→double oracle (queries_relational
+q1, queries_pipeline profile_correlations) is indistinguishable from DuckDB's
 direct cast — so the hardening shipped in round 9 rested on analysis,
 not a certificate.  This test synthesizes the regime instead of waiting
 for sf1 parquet: a lineitem-shaped table whose per-group decimal sums
@@ -111,7 +111,7 @@ def test_q1_oracle_exact_beyond_2_53(spark, stress_dir):
 
 
 def test_profile_correlations_oracle_exact_beyond_2_53(spark, stress_dir):
-    """The other VARCHAR-routed oracle (queries_r4 profile_correlations):
+    """The other VARCHAR-routed oracle (queries_pipeline profile_correlations):
     its sum-of-squares terms sit ~2e26 here — far past 2^53 — and every
     correlation must still compare EXACTLY equal, because both engines
     reduce the same exact decimal to the same nearest double via the

@@ -244,6 +244,33 @@ def test_operator_persists_are_registered_and_releasable(spark, sf_dir):
         assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
 
 
+def test_release_caches_leaves_another_sessions_frames_cached(spark):
+    """Two sessions on one SparkContext: release_caches() in one releases
+    its own registered frames and leaves the other's cached, until that
+    session releases them itself."""
+    from creek_spark.operators import cachereg
+
+    def cached(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    def activate(session):  # createDataFrame makes its session the active one
+        return session.createDataFrame([(0,)], "a int")
+
+    other = spark.newSession()
+    try:
+        theirs = cachereg.register_cache(activate(other).selectExpr("a + 1 AS b"))
+        ours = cachereg.register_cache(activate(spark).selectExpr("a + 2 AS b"))
+        assert theirs.count() == ours.count() == 1
+        cachereg.release_caches()
+        assert not cached(ours)
+        assert cached(theirs)
+        activate(other)
+        cachereg.release_caches()
+        assert not cached(theirs)
+    finally:
+        activate(spark)
+
+
 def test_window_distribution_null_values_match_native(spark, tmp_path):
     """NULL values (and whole-NULL groups) must rank exactly as the
     native ntile/cume_dist/percent_rank windows rank them (NULL first) —

@@ -96,7 +96,7 @@ def test_roots_exist_and_reach_the_catalog():
         assert root.is_file(), root
     reached = reached_modules()
     # the walk is not vacuous: the catalog parts and the daemon's sinks
-    assert {"creek_spark.queries_r11", "creek_spark.streaming.tables"} <= reached
+    assert {"creek_spark.queries_graph", "creek_spark.streaming.tables"} <= reached
 
 
 def test_every_module_is_reached_or_public_api():

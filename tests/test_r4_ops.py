@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from creek_spark.operators.cdc import incremental_latest_state, latest_state
 from creek_spark.operators.sketches import histogram_quantiles, histogram_sketch
 from creek_spark.operators.text import bm25_topk
-from creek_spark.queries_ext import _events_envelope
+from creek_spark.query_parts import events_envelope
 from creek_spark.sources import read_table
 
 
@@ -20,7 +20,7 @@ def test_incremental_state_equals_full_recompute(spark, sf_dir):
     """Row-level equality, not just the aggregated MV: for several split
     points (empty batch, mid-stream, everything-in-batch) the maintained
     state is identical to a one-shot latest_state."""
-    env = _events_envelope(read_table(spark, sf_dir, "events"))
+    env = events_envelope(read_table(spark, sf_dir, "events"))
     full = latest_state(env, ["user_id"], handle_toast=False)
     full_rows = sorted(map(tuple, full.collect()))
     for split in (0, 800, 10**9):
@@ -51,7 +51,7 @@ def test_incremental_state_carries_untouched_rows(spark):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    env = _events_envelope(ev)
+    env = events_envelope(ev)
     inc = incremental_latest_state(env, 3, key_cols=["user_id"], handle_toast=False)
     got = {r["user_id"]: r["event_type"] for r in inc.collect()}
     assert got == {10: "view", 20: "click"}
@@ -374,7 +374,7 @@ def test_incremental_scd2_equals_full_recompute(spark, sf_dir):
     split points — including the empty batch and everything-in-batch."""
     from creek_spark.operators.cdc import incremental_scd2, scd2_history
 
-    env = _events_envelope(read_table(spark, sf_dir, "events"))
+    env = events_envelope(read_table(spark, sf_dir, "events"))
     full = sorted(map(tuple, scd2_history(env, ["user_id"]).collect()))
     for split in (0, 800, 10**9):
         inc = incremental_scd2(env, split, key_cols=["user_id"])

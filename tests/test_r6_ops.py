@@ -59,7 +59,7 @@ def test_leakage_split_agrees_with_row_split_for_singletons(spark):
     """A document with no near-dups must get exactly the split that plain
     split_assign would give its own id (rep == own id)."""
     from creek_spark.operators.pipeline import split_assign
-    from creek_spark.queries_r6 import SPLIT_FRACTIONS, SPLIT_SALT
+    from creek_spark.queries_pipeline import SPLIT_FRACTIONS, SPLIT_SALT
 
     df = _catalog()["split_leakage_safe"].fn(spark, SF_DIR)
     singles = df.where(F.col("cluster_rep") == F.col("doc_id"))
@@ -79,7 +79,7 @@ def test_leakage_split_agrees_with_row_split_for_singletons(spark):
 def test_temperature_mix_quotas_exact(spark):
     """Selected per-stratum counts equal the integer quota formula
     computed independently in Python."""
-    from creek_spark.queries_r6 import MIX_BUDGET, MIX_SCALE
+    from creek_spark.queries_pipeline import MIX_BUDGET, MIX_SCALE
 
     docs = read_table(spark, SF_DIR, "documents")
     n_by_lang = dict(docs.groupBy("lang").count().collect())

@@ -359,7 +359,7 @@ def test_cross_source_counts_match_pairs(spark):
     """Matrix cells sum to the candidate-pair count; each cell equals a
     direct recount from the pair list; sources are canonically ordered."""
     from creek_spark.operators import dedup as dd
-    from creek_spark.queries_northstar import BANDS, N_HASHES, SHINGLE_K
+    from creek_spark.query_parts import BANDS, N_HASHES, SHINGLE_K
 
     cells = _catalog()["dedup_cross_source"].fn(spark, SF_DIR).collect()
     docs = read_table(spark, SF_DIR, "documents")

@@ -78,7 +78,7 @@ def test_skyline_frontier_is_monotone(spark):
 def test_triangles_match_bruteforce(spark):
     """Degree-oriented enumeration must count exactly the set-brute-force
     triangles, per corner."""
-    from creek_spark.queries_r6c import TRI_MINSUP
+    from creek_spark.queries_graph import TRI_MINSUP
 
     li = (
         read_table(spark, SF_DIR, "lineitem")
@@ -314,7 +314,7 @@ def test_autocorrelation_matches_numpy_and_bounds(spark):
 
 
 def test_common_neighbors_matches_bruteforce(spark):
-    from creek_spark.queries_r6c import CN_MAX_DEG, TRI_MINSUP
+    from creek_spark.queries_graph import CN_MAX_DEG, TRI_MINSUP
 
     li = (
         read_table(spark, SF_DIR, "lineitem")
@@ -536,7 +536,7 @@ def test_collocations_match_bruteforce(spark):
 
     from collections import Counter
 
-    from creek_spark.queries_r6c import COLLOC_MIN_COUNT
+    from creek_spark.queries_text import COLLOC_MIN_COUNT
 
     docs = read_table(spark, SF_DIR, "documents").select("text").collect()
     uni, big = Counter(), Counter()

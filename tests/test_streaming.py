@@ -266,6 +266,25 @@ def test_cdc_state_in_the_hive_layout_is_refused_with_remedy(spark, tmp_path):
         applier.compact()
 
 
+def test_cdc_run_in_the_older_layout_is_refused_with_remedy(spark, tmp_path):
+    """A pending run whose files sit directly in its ``_run`` dir (the
+    layout before runs moved to ``_run/data``) is refused with its remedy,
+    never read as an empty run."""
+    import json
+    import shutil
+
+    state_dir = tmp_path / "state"
+    applier = CdcApplier(spark, str(state_dir), ["id"], n_buckets=2)
+    _apply_events(spark, applier, [(1, "c", None, (1, "one"), None)], 0)
+    (run,) = json.loads((state_dir / "_manifest.json").read_text())["runs"]
+    data = state_dir / run / "data"
+    for f in data.iterdir():
+        shutil.move(str(f), str(state_dir / run / f.name))
+    data.rmdir()
+    with pytest.raises(ValueError, match="outside data/.*replay from the checkpoint"):
+        applier.current_state()
+
+
 def test_compaction_writes_one_file_per_write_task(spark, tmp_path):
     """A compaction writes data-sized files, not one per bucket: no more
     data files than its write job has tasks (n_buckets here exceeds the
@@ -334,7 +353,7 @@ def test_cdc_truncate_inside_a_pending_run(spark, tmp_path):
 def test_read_runs_hands_spark_no_hidden_root_path(spark, tmp_path, monkeypatch):
     """Spark warns "All paths were ignored" for a root path whose last
     segment starts with "_" or "." — every `vN/_run` dir.  The store
-    hands it each run's part files instead, and the fold still sees
+    hands it each run's `data` subdir instead, and the fold still sees
     every pending run."""
     from pyspark.sql import DataFrameReader
 
@@ -358,6 +377,51 @@ def test_read_runs_hands_spark_no_hidden_root_path(spark, tmp_path, monkeypatch)
     runs = [p for p in seen if "/_run" in p]
     assert len(runs) == 2, seen
     assert not [p for p in seen if p.rstrip("/").rsplit("/", 1)[-1][:1] in "_."], seen
+
+
+def _driver_log(spark, action):
+    """Run ``action`` with a log4j appender on the driver's root logger;
+    returns what it logged as ``<logger>: <message>`` lines, stack traces
+    included."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    out = spark._jvm.java.io.StringWriter()
+    layout = log4j.core.layout.PatternLayout.newBuilder().withPattern("%c{1}: %m%n%ex").build()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        layout, None, out, "store-read-capture", False, True
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        action()
+    finally:
+        root.removeAppender("store-read-capture")
+        ctx.updateLoggers()
+        appender.stop()
+    return out.toString()
+
+
+def test_store_reads_log_no_failed_probe(spark, tmp_path):
+    """A read of one base dir and of one pending run hands Spark no lone
+    glob (Spark probes a glob's literal name for a streaming-sink
+    metadata dir and logs the FileNotFoundException) and no root path
+    that is hidden-named (Spark warns that all paths were ignored)."""
+    from creek_spark.streaming.versioned import VersionedStore
+
+    store = VersionedStore(spark, str(tmp_path / "state"), "b")
+    rows = spark.createDataFrame([(1, "x"), (2, "y")], "id int, b string")
+    m = store.publish(None, set(), store.write(rows, None))
+    m = store.publish(m, set(), set(), runs=[store.write_run(rows, m)],
+                      run_schema=rows.schema)
+    got = {}
+    log = _driver_log(spark, lambda: got.update(
+        base=store.read(m).count(), runs=store.read_runs(m).count()
+    ))
+    assert got == {"base": 2, "runs": 2}
+    for noise in ("FileStreamSink", "FileNotFoundException", "All paths were ignored"):
+        assert noise not in log, log
 
 
 def test_cdc_add_column_between_pending_runs(spark, tmp_path):

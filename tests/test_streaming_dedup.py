@@ -123,7 +123,7 @@ def test_crash_before_manifest_swap_is_invisible(spark, sf_dir, tmp_path):
 
     minhash_index(b1, "text", "doc_id").write.mode("overwrite").parquet(
         os.path.join(
-            str(tmp_path / "xstate"), f"v{committed['version'] + 1:09d}", "_run"
+            str(tmp_path / "xstate"), f"v{committed['version'] + 1:09d}", "_run", "data"
         )
     )
     assert sd._store.manifest() == committed  # crash point: manifest old

@@ -94,6 +94,33 @@ def test_session_protocol_start_cadence_and_reply(tmp_path):
     assert ("status", 0x60, 0x60, 0x60, 0) in t.sent
 
 
+def test_transports_keep_only_the_last_sent_records(tmp_path):
+    """A transport held for as long as the primary streams keeps the last
+    MAX_SENT frontend messages and 'r' frames, not one per status ever
+    sent; the latest status stays visible."""
+    import socket
+
+    from creek_spark.sources.walsender import MAX_SENT, SocketTransport
+
+    transcript = TranscriptTransport(_transcript(tmp_path / "t.hex", _events()))
+    sock = SocketTransport("127.0.0.1", 1)
+    sock.sock, peer = socket.socketpair()
+    sock.sock.setblocking(False)  # nothing reads: a full buffer drops frames
+    try:
+        for t in (transcript, sock):
+            t.send_copydone()
+            n = 2 * MAX_SENT + 5
+            for i in range(1, n + 1):
+                t.send_status(i, i, i, 0, 0)
+            assert len(t.sent) == len(t.sent_raw) == MAX_SENT
+            assert t.sent[-1] == ("status", n, n, n, 0)
+            assert struct.unpack_from(">QQQqB", t.sent_raw[-1], 1) == (n, n, n, 0, 0)
+            assert ("copydone",) not in t.sent
+    finally:
+        sock.sock.close()
+        peer.close()
+
+
 def test_kill_restart_resumes_from_saved_lsn(tmp_path):
     """Consume tx1 only, ack its commit LSN, kill.  Restart with a
     transcript that (like a real slot) re-delivers from the confirmed

@@ -272,7 +272,7 @@ def probes(spark, sf_dir: str):
         # same inflation rationale as triples: baskets AND parts both ×k
         # so edge support semantics hold; the degree-oriented wedge join
         # is the shape under test (Σ out-deg² bounded m^{3/2})
-        from creek_spark.queries_r6c import TRI_MINSUP
+        from creek_spark.queries_graph import TRI_MINSUP
 
         d = inflate(li, k, {"l_orderkey": "remap", "l_partkey": "remap"})
         items = d.select(
