@@ -72,6 +72,7 @@ def main() -> None:
     # untimed warmup at the smallest sf: JIT/codegen compilation and
     # parquet-footer caching otherwise dominate the first (and only)
     # timed execution of each query shape
+    # (codegen: only because get_spark's codegen cache keeps all it compiled)
     # Fault isolation: one broken query must never erase the other
     # timings (round 3 lost the entire bench to a single
     # AnalysisException).  Failures land in an "errors" key instead.

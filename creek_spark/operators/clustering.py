@@ -143,7 +143,9 @@ def kmeans_assignments(
     """(id, cluster, dist_scaled): final Lloyd assignment after ``iters``
     exact (assign → floor-mean update) rounds plus one reporting assign
     under the final centroids.  ``cluster`` is the seed vector's id."""
-    qv = quantize_vectors(df, id_col, vec_col, scale).persist()
+    from creek_spark.operators.cachereg import register_cache
+
+    qv = register_cache(quantize_vectors(df, id_col, vec_col, scale))
     cents = _init_centroids(qv, k)
     for _ in range(iters):
         assigned = _assign(qv, _cent_row(cents))

@@ -70,6 +70,23 @@ def get_spark(
         # events.parquet from nanos to µs-NTZ between rounds, and downstream
         # functions (unix_seconds, window) reject NTZ input.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Spark keeps at most this many Janino-compiled classes per JVM
+        # (default 100, LRU).  One pass of the 16 headline queries
+        # generates ~320 classes and the whole 168-query catalog ~2,720
+        # (sf0.01), so at the default every pass recompiled ~318 of its
+        # classes, even right after a warm-up that built the same code.
+        # 4096 is the smallest power of two >= 1.5x the catalog's set.
+        # A full catalog pass (2,711 compiles, all kept; default JVM
+        # options) grew metaspace 111 -> 205 MB and class space 15 -> 26
+        # MB, ~35 KB per class, so the bound lets the kept classes reach
+        # ~140 MB of metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # A killed task still incomplete after this long has its Python
+        # worker destroyed, even one it already handed back to the pool
+        # for a task of the NEXT job; at the default 2 s, tasks of a
+        # failed job waiting on worker start-up (local[32] on 4 cores)
+        # broke the next job with a CancelledKeyException.
+        .config("spark.python.task.killTimeout", "30s")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -79,6 +79,7 @@ def check(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> str | None:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entrymod
+    from creek_spark.operators.cachereg import release_caches
     from creek_spark.session import get_spark
 
     spark = get_spark()
@@ -97,6 +98,10 @@ def main() -> int:
             err = check(spark_pdf, duck.execute(q.oracle).fetchdf())
         except Exception as e:  # noqa: BLE001 — per-query fault isolation
             err = f"ERR {type(e).__name__}: {e}"
+        finally:
+            # each query runs with no other query's frames persisted, as
+            # bench.py and tools/plan_audit.py run them
+            release_caches()
         if err:
             bad.append({"query": name, "err": str(err)[:500]})
             print(f"FAIL {name}: {err}")
